@@ -41,8 +41,9 @@ class T:
 
 
 def profile_triple(spark, sf_dir):
-    """The TripleSampler pipeline, stage by stage, mirroring bench.py."""
-    from pacasam_spark.operators.union import union_dedup_priority
+    """The TripleSampler pipeline, stage by stage, mirroring bench.py:
+    each leg collects its selection as a driver-side Arrow table."""
+    from pacasam_spark.operators.union import union_first_wins
     from pacasam_spark.samplers.diversity import DiversitySampler
     from pacasam_spark.samplers.spatial import SpatialSampler
     from pacasam_spark.samplers.targetted import TargettedSampler
@@ -75,27 +76,25 @@ def profile_triple(spark, sf_dir):
     t = T()
     print("  [triple] stage decomposition (1 run, warm cache)")
     t_all0 = time.perf_counter()
-    with t("targetted: build+count"):
+    with t("targetted: build+collect"):
         ts = TargettedSampler(
             db, cfg, seed=42, complete_with_spatial_sampling=False
         )
-        targetted = ts.get_patches().persist()
-        n_targetted = targetted.count()
-    num_diverse = diversity_budget(20000, n_targetted)
+        targetted = ts.get_selection()
+    num_diverse = diversity_budget(20000, targetted.num_rows)
     ds = DiversitySampler(db, cfg, seed=43)
-    with t(f"diversity({num_diverse}): build+finalize"):
-        diverse = ds.get_patches(num_to_sample=num_diverse)
-    with t("union(t,d)+count"):
-        selection = union_dedup_priority([targetted, diverse]).persist()
-        n_selection = selection.count()
+    with t(f"diversity({num_diverse}): build+collect"):
+        diverse = ds.get_selection(num_to_sample=num_diverse)
+    with t("union(t,d) on the driver"):
+        selection = union_first_wins([targetted, diverse])
     with t("spatial completion"):
         ss = SpatialSampler(db, cfg, seed=44)
-        others = ss.get_patches(
-            num_to_sample=20000 - n_selection, current_selection_ids=selection
+        others = ss.get_selection(
+            num_to_sample=20000 - selection.num_rows,
+            current_selection_ids=selection,
         )
-        final = union_dedup_priority([selection, others])
-    with t("final count"):
-        n = final.count()
+        final = union_first_wins([selection, others])
+    n = final.num_rows
     print(f"    TOTAL {time.perf_counter() - t_all0:7.3f}s  n={n}")
     db.unpersist()
     spark.catalog.clearCache()
@@ -123,9 +122,8 @@ def profile_triple_sub(spark, sf_dir):
         sel = sample_with_stratification(matching, 1000, keys="file_id", seed=42)
     with t("stratified sample: noop run"):
         noop(sel)
-    with t("assign_split: construct+run"):
-        split = assign_split(sel, 0.1, keys="file_id", seed=43)
-        noop(split)
+    with t("collect + assign_split on the driver"):
+        assign_split(sel.toArrow(), 0.1, keys="file_id", seed=43)
     spark.catalog.clearCache()
     db.cache().count()
     print("  [triple-sub] diversity internals (n=8000)")
@@ -138,8 +136,8 @@ def profile_triple_sub(spark, sf_dir):
         )
     with t("fps_sample: noop run (carve+trim)"):
         noop(fps)
-    with t("assign_split over fps sel"):
-        noop(assign_split(fps.select("patch_id", "file_id"), 0.1, seed=44))
+    with t("collect fps sel + assign_split on the driver"):
+        assign_split(fps.select("patch_id", "file_id").toArrow(), 0.1, seed=44)
     db.unpersist()
     spark.catalog.clearCache()
 

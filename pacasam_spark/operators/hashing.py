@@ -30,6 +30,7 @@ For string keys, both engines agree on md5() hex output, so
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -71,6 +72,25 @@ def det_hash_py(key: int, seed: int = 0) -> int:
     b = a ^ (a // 8192)
     c = (b * MINSTD) % MERSENNE31
     return c ^ (c // 131072)
+
+
+# largest |key| whose Knuth product plus the seed term fits in int64, the
+# bound past which Spark's ANSI arithmetic raises instead of wrapping
+_NP_KEY_LIMIT = (2**63 - 1 - MERSENNE31) // KNUTH
+
+
+def det_hash_np(keys, seed: int = 0) -> np.ndarray:
+    """Vectorised numpy twin of :func:`det_hash` (same values bit for
+    bit) for driver-side work on collected selections. Keys beyond
+    ``_NP_KEY_LIMIT`` raise, as Spark's ANSI overflow does, instead of
+    wrapping."""
+    k = np.asarray(keys, dtype=np.int64)
+    if k.size and (k.max() > _NP_KEY_LIMIT or k.min() < -_NP_KEY_LIMIT):
+        raise OverflowError(f"det_hash key outside +-{_NP_KEY_LIMIT}")
+    a = (k * KNUTH + int(seed) * SEED_MIX % MERSENNE31) % MERSENNE31
+    b = a ^ (a >> 13)
+    c = (b * MINSTD) % MERSENNE31
+    return c ^ (c >> 17)
 
 
 def det_int_py(key: int, lo: int, hi: int, seed: int = 0) -> int:

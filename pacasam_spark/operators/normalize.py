@@ -310,6 +310,7 @@ def standardize(
             stats = row
         counts = per_file.select(file_counts_key, "count")
         counts._pacasam_totals = (int(row["__total"] or 0), int(row["__mx"] or 0))
+        counts._pacasam_cache = per_file
 
     if check_nan:
         bad = [c for c in columns if stats[f"nan_{c}"]]
@@ -335,6 +336,15 @@ def standardize(
             F.coalesce((masked[c] - F.lit(mean)) / F.lit(std + EPSILON), F.lit(fill)),
         )
     return normed if counts is None else (normed, counts)
+
+
+def release_counts(counts: DataFrame | None) -> None:
+    """Unpersist the per-file aggregate a fused pass's ``counts`` table
+    is projected from; call it once every pipeline that reads ``counts``
+    has been collected. A no-op for any other table."""
+    cached = getattr(counts, "_pacasam_cache", None)
+    if cached is not None:
+        cached.unpersist()
 
 
 def interp_expr(v, grid: list[float], refs: list[float]):
@@ -436,6 +446,7 @@ def quantile_transform(
             int(mins_row["__total"] or 0),
             int(mins_row["__mx"] or 0),
         )
+        counts._pacasam_cache = per_file
     for c in columns:
         fill = mins_row[f"min_{c}"]
         normed = normed.withColumn(

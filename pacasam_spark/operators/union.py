@@ -5,10 +5,13 @@ The reference unions sampler outputs with ``pd.concat`` and relies on
 precedence (reference: samplers/triple.py:16,29-38, sampler.py:46). Spark's
 ``dropDuplicates`` keeps an arbitrary row, so precedence is made explicit:
 a priority column + row_number over (priority, tiebreak hash).
+:func:`union_first_wins` is the driver-side twin for collected selections.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,3 +36,13 @@ def union_dedup_priority(
         .filter(F.col("__rn") == 1)
         .drop("__rn", _PRIO)
     )
+
+
+def union_first_wins(tables: list[pa.Table], key: str = S.PATCH_ID) -> pa.Table:
+    """U2 on the driver: concat Arrow tables and keep the FIRST row of
+    each ``key``, exactly ``pd.concat(...).drop_duplicates(key)``. For
+    sampler selections, which are capped by their target; data-sized
+    inputs use :func:`union_dedup_priority`."""
+    out = pa.concat_tables(tables, promote_options="default")
+    _, first = np.unique(out[key].to_numpy(), return_index=True)
+    return out.take(np.sort(first))

@@ -7,9 +7,15 @@ constructed with ``(catalogue: DataFrame, sampling_config: dict)`` and
 (configs/Synthetic.yml): target_total_num_patches, frac_validation_set,
 and per-sampler blocks.
 
-Driver-side actions (``count()``) happen only where the reference has the
-same materialization barrier — a ``len()`` feeding the next stage's quota
-(SURVEY.md §3.2).
+Every sampler collects its selection once (``toArrow()``) and does the
+selection-sized work on that driver-side table, as the reference does in
+pandas: split assignment, first-wins merges of composite samplers' legs,
+and the ``len()`` counts that set the next leg's quota (SURVEY.md §3.2).
+A selection is capped by the sampler's target, so the driver holds at
+most ``target_total_num_patches`` rows; only data-sized work (catalogue
+scans, per-file rank windows, the FPS carve) runs as Spark jobs.
+``get_selection()`` returns that table, ``get_patches()`` the same rows
+as a DataFrame.
 """
 
 from pacasam_spark.samplers.base import SAMPLER_REGISTRY, Sampler  # noqa: F401

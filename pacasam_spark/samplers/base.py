@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -14,8 +15,17 @@ SAMPLER_REGISTRY: dict[str, type] = {}
 
 
 class Sampler:
-    """Abstract sampler. Subclasses implement get_patches() returning a
-    DataFrame with columns (patch_id, split, sampler)."""
+    """Abstract sampler. Subclasses implement ``get_selection()``, which
+    returns the selection as a driver-side ``pyarrow.Table`` with columns
+    (patch_id, split, sampler), and ``get_patches()``, the public API,
+    which returns the same rows as a DataFrame (``_as_dataframe``).
+
+    A selection is capped by the sampler's target, so the driver holds
+    at most ``target_total_num_patches`` rows of (patch_id, strata keys,
+    split) — the bound joins.py already accepts for a broadcast
+    selection. Composite samplers merge and count their legs' tables on
+    the driver; only the data-sized work (catalogue scans, per-file rank
+    windows, the FPS carve) runs as Spark jobs."""
 
     def __init__(
         self,
@@ -33,27 +43,35 @@ class Sampler:
     def get_patches(self, **kwargs) -> DataFrame:
         raise NotImplementedError
 
+    def get_selection(self, **kwargs) -> pa.Table:
+        raise NotImplementedError
+
     # --- shared helpers -------------------------------------------------
 
-    def _tag(self, selection: DataFrame) -> DataFrame:
-        return selection.withColumn(S.SAMPLER, F.lit(self.name))
+    def _as_dataframe(self, selection: pa.Table) -> DataFrame:
+        return self.db.sparkSession.createDataFrame(selection)
 
     def _finalize(
         self, selection: DataFrame, split_keys: str | list[str] = S.FILE_ID, seed_offset: int = 0
-    ) -> DataFrame:
-        """Tag sampler name, assign split (P8), project to sampling schema.
+    ) -> pa.Table:
+        """Collect the selection with its strata keys (one job), assign
+        the split on the driver (P8), tag the sampler name and project to
+        the sampling schema.
 
         Mirrors ``_set_validation_patches_with_stratification``
         (reference: samplers/sampler.py:53-65): frac applies to the size of
         THIS selection.
         """
-        sel = assign_split(
-            selection,
+        keys = [split_keys] if isinstance(split_keys, str) else list(split_keys)
+        table = assign_split(
+            selection.select(S.PATCH_ID, *keys).toArrow(),
             self.cf.get("frac_validation_set"),
-            keys=split_keys,
+            keys=keys,
             seed=self.seed + seed_offset,
+        ).select([S.PATCH_ID, S.SPLIT])
+        return table.append_column(
+            S.SAMPLER, pa.array([self.name] * table.num_rows, pa.string())
         )
-        return self._tag(sel).select(S.PATCH_ID, S.SPLIT, S.SAMPLER)
 
     def log_attrition(self, n_before: int, n_after: int) -> None:
         """A9 (reference: samplers/sampler.py:42-51)."""
@@ -175,11 +193,28 @@ class Sampler:
                 pass
             self._writer_lock = None
 
-    def _stage(self, name: str, build) -> DataFrame:
-        """Run ``build()`` with an atomic parquet checkpoint: if this
-        stage already committed, LOAD it instead of recomputing — a
-        killed run resumes from its last finished stage with
-        bitwise-identical state (selections are deterministic, so
+    def _committed_fingerprint(self, path: str) -> str | None:
+        """The fingerprint in a stage's ``_meta`` commit marker, or None
+        when the stage never committed."""
+        try:
+            meta = self.db.sparkSession.read.parquet(f"{path}/_meta").first()
+        except Exception:
+            return None  # no committed stage here
+        return None if meta is None else meta["fingerprint"]
+
+    def _will_resume(self, name: str) -> bool:
+        """True when :meth:`_stage` would load stage ``name`` instead of
+        building it, so a caller can skip work only the build needs."""
+        return bool(self.checkpoint_dir) and (
+            self._committed_fingerprint(f"{self.checkpoint_dir}/{name}")
+            == self._run_fingerprint()
+        )
+
+    def _stage(self, name: str, build) -> pa.Table:
+        """Run ``build()`` (a selection table) with an atomic parquet
+        checkpoint: if this stage already committed, LOAD it instead of
+        recomputing — a killed run resumes from its last finished stage
+        with bitwise-identical state (selections are deterministic, so
         downstream stages see exactly what the first run saw).
 
         Commit protocol: stage parquet first, then a ``<path>/_meta``
@@ -193,31 +228,29 @@ class Sampler:
         commit also appends a lineage row (stage, rows, wall seconds,
         seed) to ``<dir>/_lineage`` — the Iceberg-snapshot-metadata
         analogue on plain parquet. Without a checkpoint_dir this is just
-        persist()."""
+        ``build()``."""
         if not self.checkpoint_dir:
-            return build().persist()
+            return build()
         import time
 
         self._acquire_writer_lock()
         spark = self.db.sparkSession
         path = f"{self.checkpoint_dir}/{name}"
         fp = self._run_fingerprint()
-        try:
-            meta = spark.read.parquet(f"{path}/_meta").first()
-        except Exception:
-            meta = None  # no committed stage here
-        if meta is not None:
-            if meta["fingerprint"] == fp:
-                df = spark.read.parquet(path)
+        committed = self._committed_fingerprint(path)
+        if committed is not None:
+            if committed == fp:
+                table = spark.read.parquet(path).toArrow()
                 self.log.info(f"{self.name}: stage {name!r} resumed from {path}")
-                return df
+                return table
             self.log.warning(
                 f"{self.name}: stage {name!r} at {path} was written by a "
-                f"different run (fingerprint {meta['fingerprint']} != {fp}) "
+                f"different run (fingerprint {committed} != {fp}) "
                 f"— recomputing"
             )
         t0 = time.perf_counter()
-        build().write.mode("overwrite").parquet(path)
+        table = build()
+        spark.createDataFrame(table).write.mode("overwrite").parquet(path)
         out = spark.read.parquet(path)
         spark.createDataFrame([(fp,)], "fingerprint string").coalesce(1).write.mode(
             "overwrite"
@@ -245,4 +278,4 @@ class Sampler:
             "stage string, n_rows long, wall_sec double, seed long",
         )
         lineage.write.mode("append").parquet(f"{self.checkpoint_dir}/_lineage")
-        return out
+        return table

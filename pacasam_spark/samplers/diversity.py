@@ -12,11 +12,16 @@ exactly the fraction that caps single-box scaling."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.fps import fps_sample
-from pacasam_spark.operators.normalize import quantile_transform, standardize
+from pacasam_spark.operators.normalize import (
+    quantile_transform,
+    release_counts,
+    standardize,
+)
 from pacasam_spark.samplers.base import Sampler
 
 
@@ -29,10 +34,19 @@ class DiversitySampler(Sampler):
         this from a thread while the targetted leg runs, and the stats
         scan hides under the targetted windows instead of serializing
         after them). Idempotent; ``get_patches`` reuses the result.
-        Values are identical either way — same jobs, different order."""
+        Values are identical either way — same jobs, different order.
+        :meth:`get_selection` releases the result; a caller that prepares
+        and then skips the leg calls :meth:`release`."""
         if getattr(self, "_prepared", None) is None:
             self._prepared = self._normalized_inputs()
         return self
+
+    def release(self) -> None:
+        """Drop the prepared inputs and unpersist the per-file aggregate
+        the statistics pass cached for the FPS carve."""
+        prepared, self._prepared = getattr(self, "_prepared", None), None
+        if prepared is not None:
+            release_counts(prepared[1])
 
     def _normalized_inputs(self):
         dcf = self.cf["DiversitySampler"]
@@ -75,21 +89,22 @@ class DiversitySampler(Sampler):
         return db, counts
 
     def get_patches(self, num_to_sample: int | None = None) -> DataFrame:
+        return self._as_dataframe(self.get_selection(num_to_sample))
+
+    def get_selection(self, num_to_sample: int | None = None) -> pa.Table:
         if num_to_sample is None:
             num_to_sample = self.cf["target_total_num_patches"]
         dcf = self.cf["DiversitySampler"]
         cols = list(dcf["columns"])
-        db, counts = (
-            self._prepared
-            if getattr(self, "_prepared", None) is not None
-            else self._normalized_inputs()
-        )
-
-        sel = fps_sample(
-            db,
-            num_to_sample,
-            feature_cols=cols,
-            max_chunk_size=dcf.get("max_chunk_size_for_fps", 5000),
-            counts=counts,
-        ).select(S.PATCH_ID, S.FILE_ID)
-        return self._finalize(sel, split_keys=S.FILE_ID)
+        db, counts = self.prepare()._prepared
+        try:
+            sel = fps_sample(
+                db,
+                num_to_sample,
+                feature_cols=cols,
+                max_chunk_size=dcf.get("max_chunk_size_for_fps", 5000),
+                counts=counts,
+            ).select(S.PATCH_ID, S.FILE_ID)
+            return self._finalize(sel, split_keys=S.FILE_ID)
+        finally:
+            self.release()

@@ -11,6 +11,7 @@ it the sampler keeps the cheaper chunk-local kNN-density scorer
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -21,12 +22,15 @@ from pacasam_spark.operators.outliers import (
     glosh_outlier_scores,
     knn_outlier_scores,
 )
-from pacasam_spark.operators.normalize import standardize
+from pacasam_spark.operators.normalize import release_counts, standardize
 from pacasam_spark.samplers.base import Sampler
 
 
 class OutliersSampler(Sampler):
     def get_patches(self, num_to_sample: int | None = None) -> DataFrame:
+        return self._as_dataframe(self.get_selection(num_to_sample))
+
+    def get_selection(self, num_to_sample: int | None = None) -> pa.Table:
         if num_to_sample is None:
             num_to_sample = self.cf["target_total_num_patches"]
         ocf = self.cf["OutliersSampler"]
@@ -83,4 +87,7 @@ class OutliersSampler(Sampler):
             .limit(num_to_sample)
             .select(S.PATCH_ID, S.FILE_ID, CLUSTER_ID)
         )
-        return self._finalize(sel, split_keys=[CLUSTER_ID, S.FILE_ID])
+        try:
+            return self._finalize(sel, split_keys=[CLUSTER_ID, S.FILE_ID])
+        finally:
+            release_counts(counts)

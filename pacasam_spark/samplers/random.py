@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from pacasam_spark import schemas as S
@@ -16,6 +17,15 @@ class RandomSampler(Sampler):
         num_to_sample: int | None = None,
         current_selection_ids: DataFrame | None = None,
     ) -> DataFrame:
+        return self._as_dataframe(
+            self.get_selection(num_to_sample, current_selection_ids)
+        )
+
+    def get_selection(
+        self,
+        num_to_sample: int | None = None,
+        current_selection_ids: DataFrame | None = None,
+    ) -> pa.Table:
         if not num_to_sample:
             num_to_sample = self.cf["target_total_num_patches"]
         patches = project_patch_info(self.db)

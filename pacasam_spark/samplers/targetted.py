@@ -1,8 +1,9 @@
 """TargettedSampler (reference: samplers/targetted.py:13-105).
 
 For each boolean target (ascending quota order, reference
-targetted.py:85-96): filter -> stratified exact-n sample -> split
-assignment; union with first-wins precedence; optionally complete with
+targetted.py:85-96): filter -> stratified exact-n sample (Spark) ->
+collect + split assignment (driver); union with first-wins precedence on
+the driver's tables; optionally complete with
 SpatialSampler, rebalancing the validation fraction so the FINAL val count
 is floor(frac * target_total) (reference targetted.py:46-51 — replicated
 as arithmetic, not as the reference's in-place config mutation).
@@ -13,13 +14,15 @@ from __future__ import annotations
 import warnings
 from math import floor
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.filters import filter_by_boolean_descriptor
 from pacasam_spark.operators.sampling import sample_with_stratification
-from pacasam_spark.operators.union import union_dedup_priority
+from pacasam_spark.operators.union import union_first_wins
 from pacasam_spark.samplers.base import Sampler
 from pacasam_spark.samplers.spatial import SpatialSampler
 
@@ -37,6 +40,9 @@ class TargettedSampler(Sampler):
         )
 
     def get_patches(self) -> DataFrame:
+        return self._as_dataframe(self.get_selection())
+
+    def get_selection(self) -> pa.Table:
         target_total = self.cf["target_total_num_patches"]
         targets = self.sorted_targets(self.cf["TargettedSampler"]["targets"])
 
@@ -82,7 +88,7 @@ class TargettedSampler(Sampler):
         # overlap their latency and the merged plan adds a persist
         # materialization before the per-target cuts.
 
-        def build_target(i: int, name: str, objectives: dict) -> DataFrame:
+        def build_target(i: int, name: str, objectives: dict) -> pa.Table:
             matching = filter_by_boolean_descriptor(self.db, name).select(
                 S.PATCH_ID, S.FILE_ID
             )
@@ -97,9 +103,9 @@ class TargettedSampler(Sampler):
             )
             return self._finalize(sel, seed_offset=7 * i + 1)
 
-        # The per-target pipelines are independent; their driver-side
-        # barriers (counts in split assignment) run concurrently so the
-        # Spark scheduler overlaps the jobs instead of serializing latency.
+        # The per-target pipelines are independent; their collects run
+        # concurrently so the Spark scheduler overlaps the jobs instead of
+        # serializing latency.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=max(1, len(targets))) as pool:
@@ -107,11 +113,11 @@ class TargettedSampler(Sampler):
                 pool.submit(build_target, i, name, objectives)
                 for i, (name, objectives) in enumerate(targets.items())
             ]
-            selections: list[DataFrame] = [f.result() for f in futures]
+            selections = [f.result() for f in futures]
 
         # first-wins precedence on dedup, like concat order in the reference
-        selection = union_dedup_priority(selections).persist()
-        n_selected = selection.count()
+        selection = union_first_wins(selections)
+        n_selected = selection.num_rows
         self.log.info(f"{self.name}: N={n_selected} distinct patches for targets.")
 
         if n_selected > target_total:
@@ -127,18 +133,18 @@ class TargettedSampler(Sampler):
         # floor(frac * target_total) (reference: targetted.py:46-51).
         num_to_add = target_total - n_selected
         final_val = floor(self.cf["frac_validation_set"] * target_total)
-        val_so_far = selection.filter(F.col(S.SPLIT) == "val").count()
+        val_so_far = selection.filter(pc.equal(selection[S.SPLIT], "val")).num_rows
         frac_for_completion = max(0.0, (final_val - val_so_far) / num_to_add)
 
         completion_cf = dict(self.cf)
         completion_cf["frac_validation_set"] = frac_for_completion
         ss = SpatialSampler(self.db, completion_cf, log=self.log, seed=self.seed + 991)
-        completion = ss.get_patches(
+        completion = ss.get_selection(
             num_to_sample=num_to_add,
             current_selection_ids=selection,
             salt=salt_for_max_stratum(self.stratum_max_bound),
         )
-        return selection.unionByName(completion)
+        return pa.concat_tables([selection, completion])
 
 
 def targetted_sampler_sql(

@@ -3,17 +3,20 @@ completion) -> diversity on half the remainder -> spatial completion, with
 first-wins dedup precedence targetted > diversity > spatial
 (SURVEY.md §4.3-3).
 
-The two quota computations are driver-side counts — the same
-materialization barriers the reference has via len() (SURVEY.md §3.2).
+Each leg hands back its selection as a driver-side Arrow table, so the
+two quota computations are ``num_rows`` and the merges are driver-side
+first-wins concats, like the reference's len() and
+concat + drop_duplicates — no Spark job between the legs.
 """
 
 from __future__ import annotations
 
 import warnings
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from pacasam_spark.operators.union import union_dedup_priority
+from pacasam_spark.operators.union import union_first_wins
 from pacasam_spark.samplers.base import Sampler
 from pacasam_spark.samplers.diversity import DiversitySampler
 from pacasam_spark.samplers.spatial import SpatialSampler
@@ -30,6 +33,9 @@ def diversity_budget(target_total: int, n_targetted: int) -> int:
 
 class TripleSampler(Sampler):
     def get_patches(self) -> DataFrame:
+        return self._as_dataframe(self.get_selection())
+
+    def get_selection(self) -> pa.Table:
         target_total = self.cf["target_total_num_patches"]
 
         ts = TargettedSampler(
@@ -42,15 +48,18 @@ class TripleSampler(Sampler):
         # not on the targetted count — submit it from a thread so it
         # back-fills executors while the targetted windows run, instead
         # of serializing after them. Same jobs, same values, less wall.
+        # A committed targetted_plus_diverse stage never runs the
+        # diversity leg, so its statistics scan is not submitted at all.
         from concurrent.futures import ThreadPoolExecutor
 
+        resume_diverse = self._will_resume("targetted_plus_diverse")
         with ThreadPoolExecutor(max_workers=1) as pool:
-            prep = pool.submit(ds.prepare)
-            targetted = self._stage("targetted", ts.get_patches)
-            n_targetted = targetted.count()
-            prep.result()
+            prep = None if resume_diverse else pool.submit(ds.prepare)
+            targetted = self._stage("targetted", ts.get_selection)
+            if prep is not None:
+                prep.result()
 
-        num_diverse = diversity_budget(target_total, n_targetted)
+        num_diverse = diversity_budget(target_total, targetted.num_rows)
         if num_diverse < 0:
             # reference warns (with a typo crash, triple.py:21 — not
             # replicated) and returns the targetted selection alone.
@@ -59,17 +68,17 @@ class TripleSampler(Sampler):
                 "targetted sampling single-handedly: the SUM OF CONSTRAINTS IS "
                 "ABOVE 100%."
             )
+            ds.release()
             return targetted
 
         selection = self._stage(
             "targetted_plus_diverse",
-            lambda: union_dedup_priority(
-                [targetted, ds.get_patches(num_to_sample=num_diverse)]
+            lambda: union_first_wins(
+                [targetted, ds.get_selection(num_to_sample=num_diverse)]
             ),
         )
-        n_selection = selection.count()
 
-        num_to_complete = target_total - n_selection
+        num_to_complete = target_total - selection.num_rows
         ss = SpatialSampler(self.db, self.cf, log=self.log, seed=self.seed + 2)
         # reuse the targetted leg's catalogue-wide stratum bound (its
         # fused probe) for the completion draw's salt choice: the draw
@@ -80,9 +89,9 @@ class TripleSampler(Sampler):
         from pacasam_spark.operators.sampling import salt_for_max_stratum
 
         bound = getattr(ts, "stratum_max_bound", None)
-        others = ss.get_patches(
+        others = ss.get_selection(
             num_to_sample=num_to_complete,
             current_selection_ids=selection,
             salt="auto" if bound is None else salt_for_max_stratum(bound),
         )
-        return union_dedup_priority([selection, others])
+        return union_first_wins([selection, others])

@@ -50,6 +50,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Pinned, not left to the version default or spark-defaults:
+        # integer/decimal overflow must raise. normalize.standardize's fast
+        # statistics path relies on it to fall back to the exact decimal
+        # path loudly; with ANSI off an overflowing cast returns NULL and
+        # rows silently drop out of the sums.
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Spark 4.1's arrow.maxBytesPerBatch DEFAULT (Int.MaxValue - 1)

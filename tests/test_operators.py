@@ -22,7 +22,7 @@ from pacasam_spark.operators.sampling import (
     sample_randomly,
     sample_with_stratification,
 )
-from pacasam_spark.operators.union import union_dedup_priority
+from pacasam_spark.operators.union import union_dedup_priority, union_first_wins
 
 
 def test_sample_randomly_distributed_trim_identity(spark):
@@ -143,6 +143,10 @@ def test_union_dedup_priority_first_wins(spark):
     b = spark.createDataFrame([(2, "b"), (3, "b")], ["patch_id", "tag"])
     out = {r["patch_id"]: r["tag"] for r in union_dedup_priority([a, b]).collect()}
     assert out == {1: "a", 2: "a", 3: "b"}
+    # the driver-side twin on the same inputs, as Arrow tables
+    t = union_first_wins([a.toArrow(), b.toArrow()])
+    assert t["patch_id"].to_pylist() == [1, 2, 3]
+    assert t["tag"].to_pylist() == ["a", "a", "b"]
 
 
 def test_asof_nearest(spark):

@@ -146,10 +146,12 @@ def test_determinism_partitioning_independent(catalogue, config):
 def test_triple_sampler_checkpoint_resume(spark, catalogue, tmp_path):
     """North rule: resumable mid-job. A checkpointed run equals the plain
     run; a restart loads finished stages instead of recomputing (gated by
-    making the stage-1 sampler raise); lineage rows are appended."""
+    making the stage-1 sampler raise); a full restart runs no
+    normalization-statistics job (gated by making the statistics pass
+    raise); lineage rows are appended."""
     import shutil
 
-    from pacasam_spark.samplers import TargettedSampler, TripleSampler
+    from pacasam_spark.samplers import DiversitySampler, TargettedSampler, TripleSampler
     from tests.conftest import SAMPLING_CONFIG
 
     ckpt = str(tmp_path / "ckpt")
@@ -165,32 +167,36 @@ def test_triple_sampler_checkpoint_resume(spark, catalogue, tmp_path):
     )
     assert first == plain
 
-    # restart: finished stages must LOAD — stage-1 recompute would raise
+    # restart: finished stages must LOAD — stage-1 recompute would raise,
+    # and so would the diversity leg's statistics scan
     def boom(self, **kwargs):
         raise AssertionError("stage recomputed despite checkpoint")
 
-    orig = TargettedSampler.get_patches
-    TargettedSampler.get_patches = boom
+    orig = TargettedSampler.get_selection
+    orig_stats = DiversitySampler._normalized_inputs
+    TargettedSampler.get_selection = boom
+    DiversitySampler._normalized_inputs = boom
     try:
         resumed = sorted(
             (r["patch_id"], r["split"], r["sampler"])
             for r in TripleSampler(catalogue, cfg_ck).get_patches().collect()
         )
     finally:
-        TargettedSampler.get_patches = orig
+        DiversitySampler._normalized_inputs = orig_stats
+        TargettedSampler.get_selection = orig
     assert resumed == plain
 
     # mid-job resume: drop stage 2, keep stage 1 — stage 1 loads (sampler
     # still patched out would raise), stage 2 recomputes deterministically
     shutil.rmtree(f"{ckpt}/targetted_plus_diverse")
-    TargettedSampler.get_patches = boom
+    TargettedSampler.get_selection = boom
     try:
         mid = sorted(
             (r["patch_id"], r["split"], r["sampler"])
             for r in TripleSampler(catalogue, cfg_ck).get_patches().collect()
         )
     finally:
-        TargettedSampler.get_patches = orig
+        TargettedSampler.get_selection = orig
     assert mid == plain
 
     lineage = spark.read.parquet(f"{ckpt}/_lineage")
@@ -304,3 +310,61 @@ def test_checkpoint_partition_lineage(spark, catalogue, tmp_path):
     }
     for r in lineage.collect():
         assert per_stage[r["stage"]] == r["n_rows"]
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_samplers_leave_no_cached_dataset(spark, config):
+    """Every persist a sampler makes is released by the time
+    get_patches() returns: nothing accumulates across calls, also when an
+    over-constrained TripleSampler skips its prepared diversity leg. The
+    test owns its catalogue: a persist whose plan another test already
+    left cached would reuse that entry and hide the leak."""
+    from pacasam_spark.sources.synthetic import synthetic_catalogue
+
+    db = synthetic_catalogue(spark, db_size=300, seed=17).cache()
+    db.count()  # the catalogue's own cache is not the sampler's
+    before = _persisted(spark)
+    try:
+        TripleSampler(db, config).get_patches().collect()
+        assert _persisted(spark) == before
+        rows = TargettedSampler(db, config).get_patches().collect()
+        assert {r[S.SAMPLER] for r in rows} == {"TargettedSampler", "SpatialSampler"}
+        assert _persisted(spark) == before
+        config["TargettedSampler"]["targets"] = {
+            "C3": {"target_min_samples_proportion": 3.0},
+        }
+        with pytest.warns(UserWarning):
+            rows = TripleSampler(db, config).get_patches().collect()
+        assert {r[S.SAMPLER] for r in rows} == {"TargettedSampler"}
+        assert _persisted(spark) == before
+    finally:
+        db.unpersist()
+
+
+def _job_ids(spark) -> set[int]:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_triple_sampler_job_budget(spark):
+    """TripleSampler.get_patches() + collect() on the benchmark's 10k-row
+    catalogue and config submits at most 26 Spark jobs (it was 52 while
+    split assignment, merges and quota counts ran as Spark jobs).
+    Counted in the app status store, so jobs from the sampler's worker
+    threads count too."""
+    from perfbench.workloads import SIZES, sampling_config
+    from pacasam_spark.sources.synthetic import synthetic_catalogue
+
+    db = synthetic_catalogue(spark, db_size=10_000, seed=5, exact_counts=False).cache()
+    db.count()
+    try:
+        last = max(_job_ids(spark), default=-1)
+        rows = TripleSampler(db, sampling_config(SIZES["full"])).get_patches().collect()
+        jobs = len({j for j in _job_ids(spark) if j > last})
+    finally:
+        db.unpersist()
+    assert len(rows) == SIZES["full"].target
+    assert jobs <= 26, f"{jobs} Spark jobs"

@@ -158,13 +158,22 @@ def profile_q49(spark, sf_dir):
     ).select(F.col("doc_id").alias("id_a"), (F.col("doc_id") + 40).alias("id_b"))
     pairs = chains.unionByName(links)
 
-    # instrument the round loop by timing connected_components wholesale
-    # plus a manual round replay
+    # time connected_components wholesale on each path, plus a manual
+    # round replay: the pair table is far below DRIVER_EDGES, so the
+    # default bound finishes on the driver; a bound of 0 runs the Spark
+    # rounds to their fixed point
     t = T()
-    with t("connected_components end-to-end"):
-        out = C.connected_components(pairs)
-        n = out.count()
-    print(f"    rows={n}")
+    n_pairs = pairs.count()
+    default = C.DRIVER_EDGES
+    try:
+        for bound in (default, 0):
+            C.DRIVER_EDGES = bound
+            path = "driver finish" if n_pairs <= bound else "Spark rounds"
+            with t(f"connected_components end-to-end ({path}, bound {bound})"):
+                n = C.connected_components(pairs).count()
+            print(f"    pairs={n_pairs} rows={n}")
+    finally:
+        C.DRIVER_EDGES = default
 
     raw = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).persist()
     edges = raw.filter(F.col("u") != F.col("v")).distinct().persist()

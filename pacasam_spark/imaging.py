@@ -12,9 +12,8 @@ Three formats cover the input_hint's lossless + lossy tiers:
   real transform-domain quantization loss (the loss model PIL-backed jpg
   would have), PSNR >= 40 dB at the default quality 95.
 
-Video/audio payloads are opaque binaries with typed metadata; their
-decoders are stubs (libs not in the container) with real Spark-side
-plumbing — see pacasam_spark.extract.images.
+Formats whose codec libraries are absent (webp, mp4) are stubs with
+real Spark-side plumbing — see pacasam_spark.extract.images.
 """
 
 from __future__ import annotations
@@ -216,17 +215,15 @@ def encode(arr: np.ndarray, fmt: str) -> bytes:
 
 def decode(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "wav":
-        # PCM WAV decodes for real, but not to a pixel array — route
-        # audio payloads through pacasam_spark.audio.decode_wav
-        raise NotImplementedError(
-            "wav is an audio payload: use pacasam_spark.audio.decode_wav"
-        )
+        # an audio payload has no pixel array; pacasam_spark reads
+        # images and point clouds only
+        raise NotImplementedError("wav is an audio payload, not an image")
     if fmt in ("webp", "mp4"):
         # Codecs that still need libs absent from this container; the
         # Spark-side plumbing (schema, batching, UDF signatures) is
         # identical — swap the codec table entry on a cluster with PIL /
-        # ffmpeg available. jpg/jpeg (jpegbase) and las (pointcloud) and
-        # wav (audio) decode for real since round 7.
+        # ffmpeg available. jpg/jpeg (jpegbase) and las (pointcloud)
+        # decode for real since round 7.
         raise NotImplementedError(f"codec {fmt!r} stubbed in this environment")
     return CODECS[fmt][1](data)
 

@@ -4,31 +4,44 @@ pipeline runs after LSH candidate generation. pacasam itself never
 clusters (reference README.md:198 — per-patch decisions only); this is
 engine surface the training-data axes require.
 
-Algorithm: alternating large-star / small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14) — the
-MapReduce-native algorithm, re-expressed as DataFrame aggregations:
+Two phases, split by the edge count:
 
-- large-star: every node connects its LARGER neighbors to its smallest
-  neighbor (or itself); small-star: connects its smaller-or-equal
-  neighbors likewise. Each phase is one groupBy(min) + one equi-join —
-  no cartesian, no driver-side graph.
-- converges in O(log^2 n) rounds on ANY graph shape (vs O(diameter)
-  for naive min-label propagation — a 10^6-long chain of boilerplate
-  docs would need 10^6 full-shuffle rounds under propagation, ~40
-  here), and intermediate edge counts never exceed O(n + m).
-- the driver loop only compares two scalar counts per round (the same
-  bounded-barrier shape as the samplers' quota loops).
+- **Spark rounds**, only while the edge set holds more than
+  ``DRIVER_EDGES`` rows: alternating large-star / small-star (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SOCC'14), each
+  phase one groupBy(min) + one equi-join. It converges in O(log^2 n)
+  rounds on ANY graph shape (vs O(diameter) for naive min-label
+  propagation) and the edge count never exceeds O(n + m). Every round
+  preserves connectivity, so any round's edge set has the components
+  of the input.
+- **Driver finish**, once the edge set holds at most ``DRIVER_EDGES``
+  rows: the edges are collected as Arrow and labelled by a vectorised
+  numpy union-find (hook-to-min plus pointer jumping) over the ids
+  factorised in sorted order, so the smallest index is the smallest id
+  in Spark's order (binary UTF-8 for strings). A pair table that small
+  from the start — a near-dup graph over a few thousand images — costs
+  one collect of the pairs plan and a ``createDataFrame``, no round at
+  all; the round's signature job already yields the count that decides
+  the hand-off.
 
-Result contract: (id, component) for every node that appears in the
-pair table, component = MIN node id reachable — deterministic at any
-partitioning, so it is DuckDB-oracle-checkable with a recursive CTE
-(driver q48).
+Result contract: (id, component) for every non-null id that appears in
+the pair table, component = MIN id reachable, with the id's type —
+deterministic at any partitioning, so it is DuckDB-oracle-checkable with
+a recursive CTE (driver q48/q49).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Edge sets up to this many rows finish on the driver: 2^20 pairs of
+# 64-bit ids are 16 MB of Arrow plus a few int64 work arrays.
+DRIVER_EDGES = 1 << 20
 
 
 def _large_star(sym: DataFrame, dedup: bool = True) -> DataFrame:
@@ -74,29 +87,81 @@ def _small_star(edges: DataFrame, oriented: bool = False) -> DataFrame:
     )
 
 
+def _min_labels(edges: pa.Table) -> pa.Table:
+    """(id, component) for every non-null id in the Arrow edge table
+    ``edges(u, v)``, component = min id reachable.
+
+    The ids are factorised in sorted order (Arrow sorts strings by their
+    UTF-8 bytes, as Spark does), so a smaller index is a smaller id.
+    Union-find by hook-to-min: every edge whose endpoints sit in
+    different trees hooks the larger root under the smaller one, then
+    pointer jumping flattens every tree onto its root. Roots only ever
+    hook under smaller roots, so a root is the minimum of its tree, and
+    once no edge crosses two trees the trees are the components."""
+    ends = pa.chunked_array(edges["u"].chunks + edges["v"].chunks, edges["u"].type)
+    ids = pc.unique(ends).drop_null()
+    ids = ids.take(pc.array_sort_indices(ids))
+    pos = pc.fill_null(pc.index_in(ends, value_set=ids), -1).to_numpy()
+    a, b = np.split(pos, 2)
+    keep = (a >= 0) & (b >= 0)  # an edge with a null end links nothing
+    a, b = a[keep], b[keep]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    return pa.table({"id": ids, "component": ids.take(pa.array(parent))})
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 50,
 ) -> DataFrame:
-    """(id, component) for every node in ``pairs`` — including nodes
-    that only ever appear in self-pairs (u = v), which form singleton
-    components; component is the min reachable id. Alternates
-    large-star/small-star until the edge set is a fixed point (checked
-    by count + order-independent checksum — two scalars per round, no
-    driver-side data).
+    """(id, component) for every id in ``pairs`` — including ids that
+    only ever appear in self-pairs (u = v), which form singleton
+    components; component is the min reachable id.
 
-    The result is materialized (eager localCheckpoint) before returning:
-    the iterative chain is never recomputed on reuse, and every
-    intermediate persist/checkpoint block is released here — nothing
-    leaks into long-lived sessions running many dedup batches (the
-    result's own blocks are reclaimed by the ContextCleaner when the
-    caller drops the DataFrame)."""
+    A pair table of at most ``DRIVER_EDGES`` rows is collected once and
+    finished on the driver (:func:`_min_labels`); the result is a
+    ``createDataFrame`` of the driver's table and nothing is persisted.
+    A larger one runs large-star/small-star rounds until the edge count
+    falls to the bound (then that round's edges finish on the driver) or
+    the edge set is a fixed point (checked by count + order-independent
+    checksum — two scalars per round). That result is materialized
+    (eager localCheckpoint) before returning and every intermediate
+    persist is released here — nothing leaks into long-lived sessions
+    running many dedup batches (the result's own blocks are reclaimed by
+    the ContextCleaner when the caller drops the DataFrame)."""
+    spark = pairs.sparkSession
+    raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    id_type = raw.schema["u"].dataType
+    schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
+    )
+
+    def on_driver(edges: pa.Table) -> DataFrame:
+        return spark.createDataFrame(_min_labels(edges), schema)
+
+    # one collect reads the whole pair table when it fits the bound (a
+    # count first would cost jobs of its own)
+    head = raw.limit(DRIVER_EDGES + 1).toArrow()
+    if head.num_rows <= DRIVER_EDGES:
+        return on_driver(head)
+
     # the upstream pairs plan (often a full LSH candidate pipeline) is
     # read twice — once for edges, once for nodes — so pin it rather
     # than recompute it
-    raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
+    raw = raw.persist()
     edges = (
         raw.filter(F.col("u") != F.col("v"))
         .distinct()
@@ -107,6 +172,7 @@ def connected_components(
     nodes = (
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id")))
+        .filter(F.col("id").isNotNull())
         .distinct()
         .persist()
     )
@@ -124,6 +190,9 @@ def connected_components(
 
     sig = signature(edges)
     for _ in range(max_rounds):
+        if sig[0] <= DRIVER_EDGES:
+            assign = on_driver(edges.toArrow())
+            break
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -153,6 +222,10 @@ def connected_components(
         edges.unpersist()
         edges = nxt
         if nxt_sig == sig:
+            # fixed point is a forest of stars (child -> component min)
+            assign = edges.select(
+                F.col("u").alias("id"), F.col("v").alias("component")
+            )
             break
         sig = nxt_sig
     else:
@@ -160,9 +233,8 @@ def connected_components(
             f"connected_components did not converge in {max_rounds} rounds"
         )
 
-    # fixed point is a forest of stars (child -> component min); roots
-    # have no outgoing edge and are their own component
-    assign = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    # ids outside the last edge set (roots of the star forest, self-pair
+    # only ids) are their own component
     out = (
         nodes.join(assign, "id", "left")
         .select("id", F.coalesce("component", "id").alias("component"))

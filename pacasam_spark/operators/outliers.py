@@ -37,15 +37,27 @@ CLUSTER_ID = "cluster_id"
 KNN_BLOCK_ROWS = 512  # rows-per-block: peak extra memory = block * n doubles
 
 
+def _gram(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b.T`` summed feature by feature in a fixed order. Only
+    elementwise products and adds, so every entry is the same float
+    whichever rows a block holds; a BLAS matmul picks its kernel, and
+    with it the summation order, by shape. Features are few (<= 9)."""
+    g = np.zeros((len(a), len(b)))
+    for f in range(a.shape[1]):
+        g += np.multiply.outer(a[:, f], b[:, f])
+    return g
+
+
 def _blockwise_knn_mean(x: np.ndarray, kk: int) -> np.ndarray:
     """Mean squared distance to the kk nearest neighbours of each row,
-    computed block-at-a-time (never the full n x n matrix)."""
+    computed block-at-a-time (never the full n x n matrix); the result
+    does not depend on the block size."""
     n = len(x)
     norms = np.einsum("ij,ij->i", x, x)
     out = np.empty(n)
     for i0 in range(0, n, KNN_BLOCK_ROWS):
         i1 = min(i0 + KNN_BLOCK_ROWS, n)
-        d2b = norms[i0:i1, None] - 2.0 * (x[i0:i1] @ x.T) + norms[None, :]
+        d2b = norms[i0:i1, None] - 2.0 * _gram(x[i0:i1], x) + norms[None, :]
         d2b[np.arange(i1 - i0), np.arange(i0, i1)] = np.inf  # exclude self
         part = np.partition(d2b, kk - 1, axis=1)[:, :kk]
         # ascending-order summation: deterministic regardless of the

@@ -26,7 +26,7 @@ class RandomSampler(Sampler):
         num_to_sample: int | None = None,
         current_selection_ids: DataFrame | None = None,
     ) -> pa.Table:
-        if not num_to_sample:
+        if num_to_sample is None:
             num_to_sample = self.cf["target_total_num_patches"]
         patches = project_patch_info(self.db)
         if current_selection_ids is not None:

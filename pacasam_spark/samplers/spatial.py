@@ -38,7 +38,7 @@ class SpatialSampler(Sampler):
         the catalogue's max stratum bounds it) pass the precomputed salt
         and skip the auto-detection's count job; output is identical
         either way."""
-        if not num_to_sample:
+        if num_to_sample is None:
             num_to_sample = self.cf["target_total_num_patches"]
         patches = project_patch_info(self.db)
         if isinstance(current_selection_ids, pa.Table):

@@ -77,7 +77,10 @@ def get_spark(
         # row_number()). The Iceberg equivalent at cluster scale is the
         # table's sort-order metadata.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
@@ -114,6 +117,15 @@ def get_spark(
     _quiet_tiny_window_warnings(spark)
     _ship_package(spark)
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the machine's physical RAM, capped at 48g. A fixed 48g heap
+    on a smaller machine lets a long-lived JVM grow past physical memory
+    until the kernel kills it; the other half is left to the Python
+    workers and the JVM's off-heap memory."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
 
 
 def _quiet_tiny_window_warnings(spark: SparkSession) -> None:

@@ -1,15 +1,6 @@
-import os
-
 import pytest
 
 from pacasam_spark.session import get_spark
-
-# get_spark's driver heap defaults to 48g. On a machine with less memory
-# the JVM grows its heap past physical RAM over the long test session and
-# the kernel kills it, failing every later test; half the RAM leaves room
-# for the Python workers. An explicit SPARK_GRAFT_DRIVER_MEM still wins.
-_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(48 * 1024, _RAM_MB // 2)}m")
 from pacasam_spark.sources.synthetic import synthetic_catalogue
 
 # Mirror of the reference e2e config (configs/Synthetic.yml:5-63,

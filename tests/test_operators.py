@@ -269,7 +269,10 @@ def test_fps_sample_spark_deterministic(catalogue):
 
 def test_blockwise_knn_matches_full_matrix():
     """_blockwise_knn_mean (O(n*block) memory) must equal the full n x n
-    matvec computation it replaced — blocking cannot change the result."""
+    computation — blocking cannot change the result. Both sum the Gram
+    matrix feature by feature in a fixed order: no BLAS matmul is
+    block-invariant (the full x @ x.T and a row block of it take
+    different kernels and differ in the last bit)."""
     import numpy as np
 
     from pacasam_spark.operators.outliers import _blockwise_knn_mean
@@ -278,7 +281,8 @@ def test_blockwise_knn_matches_full_matrix():
     x = rng.normal(size=(1300, 4))  # > 2 blocks of 512
     kk = 20
     norms = np.einsum("ij,ij->i", x, x)
-    d2 = norms[:, None] - 2.0 * (x @ x.T) + norms[None, :]
+    gram = sum(np.multiply.outer(x[:, f], x[:, f]) for f in range(x.shape[1]))
+    d2 = norms[:, None] - 2.0 * gram + norms[None, :]
     np.fill_diagonal(d2, np.inf)
     full = np.sort(np.partition(d2, kk - 1, axis=1)[:, :kk], axis=1).mean(axis=1)
     block = _blockwise_knn_mean(x, kk)
@@ -596,6 +600,19 @@ def test_connected_components_matches_union_find(spark):
     assert got == expect
 
 
+@pytest.fixture()
+def spark_rounds(monkeypatch):
+    """Lower the driver hand-off bound so connected_components runs its
+    Spark rounds first and hands the shrunken edge set to the driver."""
+    from pacasam_spark.operators import components
+
+    monkeypatch.setattr(components, "DRIVER_EDGES", 4)
+
+
+def test_connected_components_matches_union_find_spark_rounds(spark, spark_rounds):
+    test_connected_components_matches_union_find(spark)
+
+
 def test_dedup_by_components_keeps_component_minimum(spark):
     from pyspark.sql import functions as F
 
@@ -680,6 +697,10 @@ def test_connected_components_hypothesis_property(spark):
         assert got == expect
 
     run()
+
+
+def test_connected_components_hypothesis_property_spark_rounds(spark, spark_rounds):
+    test_connected_components_hypothesis_property(spark)
 
 
 def test_simhash_band_pairs_match_brute_force(spark):
@@ -770,15 +791,14 @@ def test_connected_components_self_loop_only_nodes(spark):
     assert got == {(7, 7), (2, 2), (3, 2), (9, 2)}
 
 
-def test_connected_components_releases_every_persist(spark, monkeypatch):
-    """Every DataFrame the iteration persists is unpersisted before the
-    (eagerly materialized) result returns — long-lived sessions running
-    many dedup batches must not accumulate executor storage."""
+def test_connected_components_self_loop_only_nodes_spark_rounds(spark, spark_rounds):
+    test_connected_components_self_loop_only_nodes(spark)
+
+
+def _spy_persists(monkeypatch) -> tuple[list[int], list[int]]:
     # patch the concrete class — pyspark 4's pyspark.sql.DataFrame is an
     # abstract facade; instances resolve persist() on classic.DataFrame
     from pyspark.sql.classic.dataframe import DataFrame
-
-    from pacasam_spark.operators.components import connected_components
 
     persisted, unpersisted = [], []
     orig_persist, orig_unpersist = DataFrame.persist, DataFrame.unpersist
@@ -793,6 +813,16 @@ def test_connected_components_releases_every_persist(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "persist", spy_persist)
     monkeypatch.setattr(DataFrame, "unpersist", spy_unpersist)
+    return persisted, unpersisted
+
+
+def test_connected_components_releases_every_persist(spark, monkeypatch, spark_rounds):
+    """Every DataFrame the Spark rounds persist is unpersisted before the
+    (eagerly materialized) result returns — long-lived sessions running
+    many dedup batches must not accumulate executor storage."""
+    from pacasam_spark.operators.components import connected_components
+
+    persisted, unpersisted = _spy_persists(monkeypatch)
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long"
     )
@@ -800,6 +830,128 @@ def test_connected_components_releases_every_persist(spark, monkeypatch):
     assert out.count() == 40
     assert set(persisted) <= set(unpersisted)
     assert len(persisted) >= 3  # raw, edges, nodes all pinned during the run
+
+
+def test_connected_components_driver_path_persists_nothing(spark, monkeypatch):
+    """A pair table within the bound is finished on the driver: no
+    DataFrame is persisted and no RDD block is left pinned."""
+    from pacasam_spark.operators.components import connected_components
+
+    persisted, _ = _spy_persists(monkeypatch)
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long"
+    )
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = connected_components(e)
+    assert out.count() == 40
+    assert persisted == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("bound", [None, 4], ids=["driver", "spark_rounds"])
+def test_connected_components_string_ids(spark, monkeypatch, bound):
+    """String ids keep their type and the component is the minimum in
+    Spark's order (binary UTF-8: 'Z' < 'a' < 'é' < 'Ā')."""
+    from pacasam_spark.operators import components
+
+    if bound is not None:
+        monkeypatch.setattr(components, "DRIVER_EDGES", bound)
+    e = spark.createDataFrame(
+        [("é1", "a2"), ("a2", "Z3"), ("Ā4", "é5"), ("é5", "é6"), ("q", "q"),
+         ("b7", "b8"), ("b8", "b9"), ("b9", "b10")],
+        "id_a string, id_b string",
+    )
+    out = components.connected_components(e)
+    assert out.schema.simpleString() == "struct<id:string,component:string>"
+    got = {(r["id"], r["component"]) for r in out.collect()}
+    assert got == {
+        ("é1", "Z3"), ("a2", "Z3"), ("Z3", "Z3"),
+        ("Ā4", "é5"), ("é5", "é5"), ("é6", "é5"),
+        ("q", "q"),
+        ("b7", "b10"), ("b8", "b10"), ("b9", "b10"), ("b10", "b10"),
+    }
+
+
+def test_connected_components_empty_pairs(spark):
+    from pacasam_spark.operators.components import connected_components
+
+    e = spark.createDataFrame([], "id_a long, id_b long")
+    out = connected_components(e)
+    assert out.schema.simpleString() == "struct<id:bigint,component:bigint>"
+    assert out.collect() == []
+
+
+def test_connected_components_hands_off_after_spark_rounds(spark, monkeypatch):
+    """A graph whose first signature count is above the bound runs Spark
+    rounds, and the first round whose count falls to the bound finishes
+    on the driver: a 1000-node chain plus a dense random blob over 200
+    nodes has ~3,800 distinct edges; one round collapses the blob to a
+    star while the chain keeps ~1,000 edges, below the bound of 1,500."""
+    import random
+
+    from pacasam_spark.operators import components
+
+    rounds, to_driver = [], []
+    large_star, min_labels = components._large_star, components._min_labels
+
+    def counting_large_star(*a, **k):
+        rounds.append(1)
+        return large_star(*a, **k)
+
+    def spy_min_labels(t):
+        to_driver.append(t.num_rows)
+        return min_labels(t)
+
+    monkeypatch.setattr(components, "_large_star", counting_large_star)
+    monkeypatch.setattr(components, "_min_labels", spy_min_labels)
+    monkeypatch.setattr(components, "DRIVER_EDGES", 1500)
+    random.seed(5)
+    edges = [(i, i + 1) for i in range(999)]
+    edges += [
+        (random.randrange(2000, 2200), random.randrange(2000, 2200))
+        for _ in range(3000)
+    ]
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {
+        (r["id"], r["component"])
+        for r in components.connected_components(e).collect()
+    }
+    assert len(rounds) >= 1
+    assert len(to_driver) == 1 and to_driver[0] <= 1500
+    nodes = {n for ab in edges for n in ab}
+    blob = {n for n in nodes if n >= 2000}
+    assert got == {(n, 0) for n in range(1000)} | {(n, min(blob)) for n in blob}
+
+
+def test_dedup_by_components_job_budget(spark):
+    """dedup_by_components over the extract benchmark's near-dup graph
+    (500 synthetic images, phash, Hamming <= 7) submits at most 8 Spark
+    jobs: the pair table is far below the driver bound, so it is one
+    collect of the pairs plan (it was 21 while every graph ran Spark
+    rounds). Counted in the app status store."""
+    from pacasam_spark.extract.images import compute_phash
+    from pacasam_spark.operators.components import dedup_by_components
+    from pacasam_spark.operators.dedup import hamming_near_dup_pairs
+    from pacasam_spark.sources.images import synthetic_images
+
+    def job_ids() -> set[int]:
+        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    hashed = compute_phash(synthetic_images(spark, n=500, size=64, lossy_every=4))
+    hashed = hashed.persist()
+    try:
+        hashed.count()
+        pairs = hamming_near_dup_pairs(
+            hashed, hash_col="phash", id_col="image_id", max_distance=7
+        )
+        last = max(job_ids(), default=-1)
+        survivors = dedup_by_components(hashed, pairs, id_col="image_id")
+        jobs = len({j for j in job_ids() if j > last})
+        assert 0 < survivors.count() < 500
+    finally:
+        hashed.unpersist()
+    assert jobs <= 8, f"{jobs} Spark jobs"
 
 
 def test_gopher_quality_flags_each_rule(spark):

@@ -89,6 +89,20 @@ def test_triple_sampler_exact_total_and_precedence(catalogue, config):
     }
 
 
+def test_triple_sampler_exact_hit_draws_no_completion(catalogue, config):
+    """A constraint of exactly 100% (the catalogue has 140 C3 patches for
+    a target of 50): the targetted leg alone meets the target, the
+    diversity budget is 0 and so is the completion, which must draw
+    nothing rather than a whole target's worth more."""
+    config["TargettedSampler"]["targets"] = {
+        "C3": {"target_min_samples_proportion": 1.0},
+    }
+    rows = TripleSampler(catalogue, config).get_patches().collect()
+    assert len(rows) == config["target_total_num_patches"]
+    assert len({r[S.PATCH_ID] for r in rows}) == len(rows)
+    assert {r[S.SAMPLER] for r in rows} == {"TargettedSampler"}
+
+
 def test_random_sampler_exact_n_resampling(spark, catalogue, config):
     """reference: test_run_sampling.py:61-73 — re-sampling n=2 from a tiny
     previous sampling gives exactly 2."""

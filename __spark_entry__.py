@@ -292,18 +292,24 @@ def q06_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_dist", F.abs(F.datediff("l_shipdate", "o_orderdate") - F.lit(45))
     )
     # rank-1 == lexicographic min of (day_dist, l_linenumber), packed into
-    # ONE long (l_linenumber is 1..7 < 8, so numeric order == lexicographic
-    # order): min(long) runs as a HashAggregate with MAP-SIDE partial min —
-    # min(struct) would plan a SortAggregate (sort + exchange + sort over
-    # every joined row), and the post-join shuffle carries one packed long
-    # per order, not every lineitem.
+    # ONE long: day_dist (>= 0) times 2^32 plus l_linenumber offset by
+    # 2^31 into [0, 2^32), so numeric order == lexicographic order for any
+    # int line number (ANSI mode raises on an overflowing day_dist rather
+    # than wrapping). min(long) runs as a HashAggregate with MAP-SIDE
+    # partial min — min(struct) would plan a SortAggregate (sort +
+    # exchange + sort over every joined row), and the post-join shuffle
+    # carries one packed long per order, not every lineitem.
     best = joined.groupBy("o_orderkey").agg(
-        F.min(F.col("day_dist").cast("long") * 8 + F.col("l_linenumber")).alias("__p")
+        F.min(
+            F.col("day_dist").cast("long") * 2**32
+            + F.col("l_linenumber").cast("long")
+            + 2**31
+        ).alias("__p")
     )
     return best.select(
         "o_orderkey",
-        F.pmod("__p", F.lit(8)).cast("int").alias("l_linenumber"),
-        (F.col("__p") / 8).cast("int").alias("day_dist"),
+        (F.pmod("__p", F.lit(2**32)) - 2**31).cast("int").alias("l_linenumber"),
+        F.shiftright("__p", 32).cast("int").alias("day_dist"),
     )
 
 

@@ -76,7 +76,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--checkpoint-dir", default=None,
                    help="stage-checkpoint dir: a killed run resumes from "
-                        "its last committed stage (bitwise-identical)")
+                        "its last committed stage (bitwise-identical). "
+                        "Each stage is <dir>/<stage>/data.parquet plus a "
+                        "_meta.json fingerprint marker written after it "
+                        "(no marker or another run's fingerprint: the "
+                        "stage is rebuilt); every commit appends a row "
+                        "to <dir>/_lineage. Plain files, no Spark jobs")
     p.add_argument("--snapshot-dir", default=None,
                    help="versioned snapshot table: each run commits the "
                         "selection as the next snapshot (atomic manifest, "

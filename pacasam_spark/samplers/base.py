@@ -2,11 +2,19 @@
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import json
 import logging
+import os
+import shutil
+import tempfile
+import time
+import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.split import assign_split
@@ -93,9 +101,6 @@ class Sampler:
         resume against a checkpoint_dir written by a DIFFERENT run
         (other seed/target/config) recomputes instead of silently loading
         stale state — the 'bitwise-identical resume' contract."""
-        import hashlib
-        import json
-
         payload = json.dumps(
             {"sampler": self.name, "seed": self.seed, "cf": self.cf},
             sort_keys=True,
@@ -117,11 +122,6 @@ class Sampler:
         multi-host deployment would use a table-format catalog commit
         instead; this is the engine-level single-host guard, like the
         snapshot module's single-writer note."""
-        import atexit
-        import json
-        import os
-        import time
-
         if getattr(self, "_writer_lock", None):
             return
         path = os.path.join(self.checkpoint_dir, "_writer.lock")
@@ -183,8 +183,6 @@ class Sampler:
         )
 
     def _release_writer_lock(self) -> None:
-        import os
-
         path = getattr(self, "_writer_lock", None)
         if path:
             try:
@@ -194,88 +192,98 @@ class Sampler:
             self._writer_lock = None
 
     def _committed_fingerprint(self, path: str) -> str | None:
-        """The fingerprint in a stage's ``_meta`` commit marker, or None
-        when the stage never committed."""
+        """The fingerprint in a stage's ``_meta.json`` commit marker, or
+        None when the stage never committed (no marker, an unreadable
+        one, or a stage directory in an older layout)."""
         try:
-            meta = self.db.sparkSession.read.parquet(f"{path}/_meta").first()
-        except Exception:
-            return None  # no committed stage here
-        return None if meta is None else meta["fingerprint"]
+            with open(os.path.join(path, "_meta.json")) as f:
+                return json.load(f)["fingerprint"]
+        except (OSError, ValueError, KeyError, TypeError):
+            return None
 
     def _will_resume(self, name: str) -> bool:
         """True when :meth:`_stage` would load stage ``name`` instead of
         building it, so a caller can skip work only the build needs."""
         return bool(self.checkpoint_dir) and (
-            self._committed_fingerprint(f"{self.checkpoint_dir}/{name}")
+            self._committed_fingerprint(os.path.join(self.checkpoint_dir, name))
             == self._run_fingerprint()
         )
 
     def _stage(self, name: str, build) -> pa.Table:
-        """Run ``build()`` (a selection table) with an atomic parquet
-        checkpoint: if this stage already committed, LOAD it instead of
-        recomputing — a killed run resumes from its last finished stage
-        with bitwise-identical state (selections are deterministic, so
+        """Run ``build()`` (a selection table) with an atomic checkpoint:
+        if this stage already committed, LOAD it instead of recomputing —
+        a killed run resumes from its last finished stage with
+        bitwise-identical state (selections are deterministic, so
         downstream stages see exactly what the first run saw).
 
-        Commit protocol: stage parquet first, then a ``<path>/_meta``
-        fingerprint table LAST (the commit marker — Spark's file listing
-        ignores ``_``-prefixed children, so it is invisible to the stage
-        read). Resume requires BOTH a readable marker and a matching
-        fingerprint of (sampler, seed, config); a mismatch logs a
-        warning and recomputes, and a missing marker (killed mid-write)
-        recomputes — stage-read errors after a valid marker are genuine
-        and propagate instead of masquerading as cache misses. Each
-        commit also appends a lineage row (stage, rows, wall seconds,
-        seed) to ``<dir>/_lineage`` — the Iceberg-snapshot-metadata
-        analogue on plain parquet. Without a checkpoint_dir this is just
+        A stage is a driver table capped by the sample target, so the
+        checkpoint is plain files written with ``pyarrow.parquet`` and
+        costs no Spark job. Layout under the checkpoint_dir:
+
+        - ``<name>/data.parquet``: the stage table;
+        - ``<name>/_meta.json``: the commit marker ``{"fingerprint": ...}``;
+        - ``_lineage/part-<uuid>.parquet``: one row per commit
+          (stage string, n_rows long, wall_sec double, seed long),
+          readable as one table with ``spark.read.parquet``.
+
+        Commit order: a rebuild first removes ``<name>/`` (the old
+        marker goes with it), then writes the data, then the marker
+        LAST. Each file is written under a ``.``-prefixed temporary
+        name in its target directory and moved into place with
+        ``os.replace``. Resume requires a readable marker whose
+        fingerprint matches (sampler, seed, config); a mismatch logs a
+        warning and rebuilds, and a missing marker (a run killed between
+        the two writes) rebuilds — data-read errors after a valid marker
+        are genuine and propagate. Without a checkpoint_dir this is just
         ``build()``."""
         if not self.checkpoint_dir:
             return build()
-        import time
-
         self._acquire_writer_lock()
-        spark = self.db.sparkSession
-        path = f"{self.checkpoint_dir}/{name}"
+        path = os.path.join(self.checkpoint_dir, name)
         fp = self._run_fingerprint()
         committed = self._committed_fingerprint(path)
+        if committed == fp:
+            table = pq.read_table(os.path.join(path, "data.parquet"))
+            self.log.info(f"{self.name}: stage {name!r} resumed from {path}")
+            return table
         if committed is not None:
-            if committed == fp:
-                table = spark.read.parquet(path).toArrow()
-                self.log.info(f"{self.name}: stage {name!r} resumed from {path}")
-                return table
             self.log.warning(
                 f"{self.name}: stage {name!r} at {path} was written by a "
                 f"different run (fingerprint {committed} != {fp}) "
                 f"— recomputing"
             )
+        shutil.rmtree(path, ignore_errors=True)
         t0 = time.perf_counter()
         table = build()
-        spark.createDataFrame(table).write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-        spark.createDataFrame([(fp,)], "fingerprint string").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/_meta")
-        # per-PARTITION lineage (north rule): one row per task of the
-        # committed stage — rows + bytes actually read back, keyed by
-        # stage and fingerprint, so skew in a resumed run is diagnosable
-        # from the checkpoint dir alone. One cheap count-shuffle over the
-        # already-written stage, and the stage total is derived from it
-        # (no second count job).
-        parts = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .withColumnRenamed("count", "n_rows")
-            .withColumn("stage", F.lit(name))
-            .withColumn("fingerprint", F.lit(fp))
-        ).persist()
-        n_rows = parts.agg(F.sum("n_rows")).first()[0] or 0
-        parts.write.mode("append").parquet(
-            f"{self.checkpoint_dir}/_lineage_partitions"
+        os.makedirs(path)
+        _replace_into(path, "data.parquet", lambda f: pq.write_table(table, f))
+        _replace_into(
+            path, "_meta.json", lambda f: f.write(json.dumps({"fingerprint": fp}).encode())
         )
-        parts.unpersist()
-        lineage = spark.createDataFrame(
-            [(name, n_rows, time.perf_counter() - t0, self.seed)],
-            "stage string, n_rows long, wall_sec double, seed long",
+        lineage = pa.table(
+            {
+                "stage": pa.array([name], pa.string()),
+                "n_rows": pa.array([table.num_rows], pa.int64()),
+                "wall_sec": pa.array([time.perf_counter() - t0], pa.float64()),
+                "seed": pa.array([self.seed], pa.int64()),
+            }
         )
-        lineage.write.mode("append").parquet(f"{self.checkpoint_dir}/_lineage")
+        lineage_dir = os.path.join(self.checkpoint_dir, "_lineage")
+        os.makedirs(lineage_dir, exist_ok=True)
+        _replace_into(
+            lineage_dir,
+            f"part-{uuid.uuid4().hex}.parquet",
+            lambda f: pq.write_table(lineage, f),
+        )
         return table
+
+
+def _replace_into(directory: str, name: str, write) -> None:
+    """Write a file atomically: ``write(f)`` fills a ``.``-prefixed
+    temporary file in ``directory`` (invisible to Spark's listing), which
+    ``os.replace`` then moves to ``name``. A reader sees the whole file
+    or none of it."""
+    fd, tmp = tempfile.mkstemp(dir=directory, prefix=".", suffix=".tmp")
+    with os.fdopen(fd, "wb") as f:
+        write(f)
+    os.replace(tmp, os.path.join(directory, name))

@@ -6,8 +6,10 @@ On a real cluster the same builder applies; only master/memory change.
 
 from __future__ import annotations
 
+import atexit
 import os
 import pathlib
+import shutil
 import tempfile
 import zipfile
 
@@ -92,8 +94,8 @@ def get_spark(
         # same settings hold on a cluster): let the planner pick a
         # shuffled-hash join when a side's per-partition build fits
         # (sort-merge pays two full sorts it doesn't need) and let AQE
-        # rewrite SMJ->SHJ at runtime under the same bound. Both are
-        # env-overridable for deployments with tighter executor memory.
+        # rewrite SMJ->SHJ at runtime under the same bound. Deployments
+        # with tighter executor memory override both through extra_conf.
         # Measured dead end, do not retry: raising
         # autoBroadcastJoinThreshold to 64m made q06 2.1x SLOWER — a
         # 1.5M-row build side costs more to hash-relation-ify per query
@@ -101,14 +103,8 @@ def get_spark(
         # 1.14s vs sort-merge 1.20s, interleaved A/B with the harness
         # checksum); Spark's default 10m threshold already broadcasts
         # the genuinely small sides (q03/q33/q41 plan gates).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "134217728"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -160,10 +156,20 @@ def _ship_package(spark: SparkSession) -> None:
     """
     if getattr(spark, "_pacasam_pyfiles_shipped", False):
         return
+    spark.sparkContext.addPyFile(str(_build_pyfiles_zip()))
+    spark._pacasam_pyfiles_shipped = True
+
+
+def _build_pyfiles_zip() -> pathlib.Path:
+    """Zip the package into a fresh per-session temp directory, removed
+    at exit. A shared fixed path would let two sessions started at once
+    overwrite each other's zip, and Spark fails tasks whose py-file
+    "exists and does not match contents"."""
+    tmp_dir = tempfile.mkdtemp(prefix="pacasam_pyfiles_")
+    atexit.register(shutil.rmtree, tmp_dir, True)
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    zip_path = pathlib.Path(tempfile.gettempdir()) / "pacasam_spark_pyfiles.zip"
+    zip_path = pathlib.Path(tmp_dir) / "pacasam_spark_pyfiles.zip"
     with zipfile.ZipFile(zip_path, "w") as zf:
         for py in sorted(pkg_dir.rglob("*.py")):
             zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
-    spark.sparkContext.addPyFile(str(zip_path))
-    spark._pacasam_pyfiles_shipped = True
+    return zip_path

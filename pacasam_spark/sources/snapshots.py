@@ -246,11 +246,10 @@ def write_snapshot(
     new version number. One extra aggregation over the written files
     collects the per-FILE lineage (rows per committed part-file — the
     writer's task layout, since each write task commits exactly the
-    part-files it produced) and the total — the same single
-    count-shuffle samplers/base._stage pays. Grouping by
-    spark_partition_id() of the re-read would instead record READ
-    splits, which depend on maxPartitionBytes packing, not on how the
-    snapshot was written.
+    part-files it produced) and the total, in a single count-shuffle.
+    Grouping by spark_partition_id() of the re-read would instead
+    record READ splits, which depend on maxPartitionBytes packing, not
+    on how the snapshot was written.
 
     ``stats_columns`` folds per-file min/max for the named columns into
     the SAME aggregation (no extra pass) and records them in the
@@ -632,19 +631,23 @@ def read_snapshot(
                 sort_keys=tuple(layout["sort_keys"]),
             )
             # bound the session's registration footprint: remember the
-            # registration THIS reader path created per table dir and drop
-            # the previous one when a newer (version, committed_at) of the
-            # same dir supersedes it — long sessions reading many versions
-            # no longer accrete catalog entries, and registrations for
-            # OTHER dirs (or made by other code) are never touched
+            # newest registration THIS reader path created per table dir,
+            # keyed by (version, committed_at), and drop it only when a
+            # strictly newer one supersedes it — long sessions reading
+            # many versions no longer accrete catalog entries, a read of
+            # an OLDER version never drops the newer registration another
+            # reader may be using, and registrations for OTHER dirs (or
+            # made by other code) are never touched
             mine = getattr(spark, "_pacasam_snap_registrations", None)
             if mine is None:
                 mine = {}
                 spark._pacasam_snap_registrations = mine
+            key = (version, chain[0].get("committed_at", 0.0))
             prev = mine.get(os.path.abspath(table_dir))
-            if prev and prev != name:
-                spark.sql(f"DROP TABLE IF EXISTS {prev}")
-            mine[os.path.abspath(table_dir)] = name
+            if prev is None or key > prev[0]:
+                if prev is not None:
+                    spark.sql(f"DROP TABLE IF EXISTS {prev[1]}")
+                mine[os.path.abspath(table_dir)] = (key, name)
             return out
         return spark.read.parquet(data_dir)
     # explicit file list: the version's live files (own + — through

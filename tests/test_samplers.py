@@ -3,6 +3,7 @@
 tests/tests_pacasam/samplers/test_targetted.py:8-33) on Spark outputs."""
 
 import math
+import os
 
 import pytest
 
@@ -303,27 +304,118 @@ def test_checkpoint_single_writer_lock(spark, catalogue, tmp_path):
         assert json.load(f)["pid"] == os.getpid()
 
 
-def test_checkpoint_partition_lineage(spark, catalogue, tmp_path):
-    """Each committed stage appends per-partition row counts keyed by
-    stage + fingerprint; totals agree with the stage lineage."""
+def test_checkpoint_lineage_matches_committed_stages(spark, catalogue, tmp_path):
+    """Each commit appends one ``_lineage`` row whose n_rows is the row
+    count of the stage's committed data.parquet; the lineage keeps its
+    Spark-readable schema, and no per-partition lineage is written."""
+    import pyarrow.parquet as pq
+
     from pacasam_spark.samplers import TripleSampler
     from tests.conftest import SAMPLING_CONFIG
-
-    from pyspark.sql import functions as F
 
     ckpt = str(tmp_path / "ckpt")
     cfg = {**SAMPLING_CONFIG, "checkpoint_dir": ckpt}
     TripleSampler(catalogue, cfg, seed=42).get_patches().collect()
 
-    parts = spark.read.parquet(f"{ckpt}/_lineage_partitions")
     lineage = spark.read.parquet(f"{ckpt}/_lineage")
-    assert set(parts.columns) == {"partition_id", "n_rows", "stage", "fingerprint"}
-    per_stage = {
-        r["stage"]: r["total"]
-        for r in parts.groupBy("stage").agg(F.sum("n_rows").alias("total")).collect()
-    }
-    for r in lineage.collect():
-        assert per_stage[r["stage"]] == r["n_rows"]
+    assert lineage.schema.simpleString() == (
+        "struct<stage:string,n_rows:bigint,wall_sec:double,seed:bigint>"
+    )
+    rows = lineage.collect()
+    assert sorted(r["stage"] for r in rows) == ["targetted", "targetted_plus_diverse"]
+    for r in rows:
+        data = os.path.join(ckpt, r["stage"], "data.parquet")
+        assert pq.read_metadata(data).num_rows == r["n_rows"]
+    assert not os.path.exists(os.path.join(ckpt, "_lineage_partitions"))
+
+
+# --- _stage without Spark: the checkpoint is plain driver files ----------
+
+
+def _stage_sampler(ckpt, seed=42):
+    from pacasam_spark.samplers.base import Sampler
+
+    return Sampler(None, {"checkpoint_dir": str(ckpt)}, seed=seed)
+
+
+def _counting_build(table):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return table
+
+    return build, calls
+
+
+def _stage_table():
+    import pyarrow as pa
+
+    # unsorted ids and a null split: resume must keep both as built
+    return pa.table(
+        {
+            S.PATCH_ID: pa.array([7, 3, 11, 5], pa.int64()),
+            S.SPLIT: pa.array(["train", None, "val", "train"], pa.string()),
+            S.SAMPLER: pa.array(["A", "A", "B", "B"], pa.string()),
+        }
+    )
+
+
+def test_stage_resume_returns_the_built_table(tmp_path):
+    table = _stage_table()
+    build, calls = _counting_build(table)
+    assert _stage_sampler(tmp_path)._stage("s", build).equals(table)
+    resumed = _stage_sampler(tmp_path)._stage("s", build)
+    assert len(calls) == 1
+    assert resumed.schema == table.schema
+    assert resumed.equals(table)
+    assert sorted(os.listdir(tmp_path / "s")) == ["_meta.json", "data.parquet"]
+
+
+def test_stage_without_marker_rebuilds(tmp_path):
+    """A run killed between the data write and the marker write left
+    data.parquet alone: the next run rebuilds and commits the marker."""
+    table = _stage_table()
+    build, calls = _counting_build(table)
+    _stage_sampler(tmp_path)._stage("s", build)
+    os.remove(tmp_path / "s" / "_meta.json")
+    assert not _stage_sampler(tmp_path)._will_resume("s")
+    assert _stage_sampler(tmp_path)._stage("s", build).equals(table)
+    assert len(calls) == 2
+    assert (tmp_path / "s" / "_meta.json").exists()
+
+
+def test_stage_fingerprint_mismatch_rebuilds(tmp_path, caplog):
+    table = _stage_table()
+    build, calls = _counting_build(table)
+    _stage_sampler(tmp_path, seed=1)._stage("s", build)
+    with caplog.at_level("WARNING"):
+        _stage_sampler(tmp_path, seed=2)._stage("s", build)
+    assert len(calls) == 2
+    assert "different run" in caplog.text
+    _stage_sampler(tmp_path, seed=2)._stage("s", build)
+    assert len(calls) == 2  # the seed-2 commit resumes
+
+
+def test_stage_old_spark_layout_is_rebuilt_and_replaced(tmp_path):
+    """A stage directory in the former Spark layout (part files and a
+    ``_meta/`` directory, no ``_meta.json``) is not resumed: it is
+    removed and replaced by the new layout."""
+    import pyarrow.parquet as pq
+
+    table = _stage_table()
+    old = tmp_path / "s"
+    (old / "_meta").mkdir(parents=True)
+    pq.write_table(table, old / "part-00000.snappy.parquet")
+    (old / "_SUCCESS").touch()
+    (old / "_meta" / "part-00000.snappy.parquet").touch()
+    build, calls = _counting_build(table)
+    assert not _stage_sampler(tmp_path)._will_resume("s")
+    _stage_sampler(tmp_path)._stage("s", build)
+    assert len(calls) == 1
+    assert sorted(os.listdir(old)) == ["_meta.json", "data.parquet"]
+    assert _stage_sampler(tmp_path)._stage("s", build).equals(table)
+    assert len(calls) == 1
 
 
 def _persisted(spark) -> int:
@@ -382,3 +474,34 @@ def test_triple_sampler_job_budget(spark):
         db.unpersist()
     assert len(rows) == SIZES["full"].target
     assert jobs <= 26, f"{jobs} Spark jobs"
+
+
+def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
+    """A checkpoint costs no Spark job: on the benchmark's 10k-row
+    catalogue and config, a checkpointed TripleSampler call on a fresh
+    dir submits no more jobs than the same call without one (at most
+    26; the Spark-written checkpoints took 42), and a full resume runs
+    only the completion leg (at most 8; it was 17). All three
+    selections are identical."""
+    from perfbench.workloads import SIZES, sampling_config
+    from pacasam_spark.sources.synthetic import synthetic_catalogue
+
+    db = synthetic_catalogue(spark, db_size=10_000, seed=5, exact_counts=False).cache()
+    db.count()
+    cfg = sampling_config(SIZES["full"])
+
+    def run(cfg):
+        last = max(_job_ids(spark), default=-1)
+        rows = sorted(tuple(r) for r in TripleSampler(db, cfg).get_patches().collect())
+        return rows, len({j for j in _job_ids(spark) if j > last})
+
+    try:
+        plain, plain_jobs = run(cfg)
+        ck_cfg = {**cfg, "checkpoint_dir": str(tmp_path / "ckpt")}
+        fresh, fresh_jobs = run(ck_cfg)
+        resumed, resume_jobs = run(ck_cfg)
+    finally:
+        db.unpersist()
+    assert fresh == plain and resumed == plain
+    assert fresh_jobs <= min(plain_jobs, 26), (fresh_jobs, plain_jobs)
+    assert resume_jobs <= 8, f"{resume_jobs} Spark jobs"

@@ -603,3 +603,31 @@ def test_bucketed_snapshot_rejects_append_mode(spark, tmp_path):
     write_snapshot(df, d)
     with pytest.raises(ValueError, match="overwrite commits only"):
         write_snapshot(df, d, mode="append", bucket_by=("file_id", 2))
+
+
+def test_bucketed_registration_kept_when_older_version_is_read(spark, tmp_path, monkeypatch):
+    """Reading an older version never drops the newer version's bucketed
+    registration: after v2, v1, v2 the v2 registration still exists and
+    the second v2 read reuses it instead of registering again."""
+    from pacasam_spark.sources import bucketed
+
+    d = str(tmp_path / "tbl")
+    df = spark.range(40).select(
+        F.col("id").alias("patch_id"), (F.col("id") % 4).alias("file_id")
+    )
+    v1 = write_snapshot(df, d, bucket_by=("file_id", 4))
+    v2 = write_snapshot(df.where("patch_id < 20"), d, bucket_by=("file_id", 4))
+    registered = []
+    real = bucketed.register_bucketed_catalogue
+
+    def counting(spark, name, *args, **kwargs):
+        registered.append(name)
+        return real(spark, name, *args, **kwargs)
+
+    monkeypatch.setattr(bucketed, "register_bucketed_catalogue", counting)
+    assert read_snapshot(spark, d, version=v2).count() == 20
+    name_v2 = registered[-1]
+    assert read_snapshot(spark, d, version=v1).count() == 40
+    assert spark.catalog.tableExists(name_v2)
+    assert read_snapshot(spark, d, version=v2).count() == 20
+    assert len(registered) == 2 and registered[0] == name_v2

@@ -17,6 +17,8 @@ import zipfile
 import duckdb
 import pyspark
 
+from pacasam_spark import session
+
 
 def _build_pyfiles_zip(dest: pathlib.Path) -> str:
     pkg_dir = pathlib.Path(__file__).resolve().parents[1] / "pacasam_spark"
@@ -25,6 +27,17 @@ def _build_pyfiles_zip(dest: pathlib.Path) -> str:
         for py in sorted(pkg_dir.rglob("*.py")):
             zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
     return str(zip_path)
+
+
+def test_pyfiles_zip_is_per_session():
+    """Each build of the py-files zip lands at its own path, so two
+    sessions started at once never overwrite each other's zip (Spark
+    fails tasks whose py-file "exists and does not match contents")."""
+    a, b = session._build_pyfiles_zip(), session._build_pyfiles_zip()
+    assert a != b
+    for path in (a, b):
+        with zipfile.ZipFile(path) as zf:
+            assert "pacasam_spark/session.py" in zf.namelist()
 
 
 def test_spark_submit_py_files_sampling(tmp_path):

@@ -254,6 +254,14 @@ def standardize(
     manifests) and this function only builds the transform expressions —
     ZERO scans, the manifest-fed path that makes the Diversity pipeline
     a single-scan job over a snapshot-table catalogue."""
+    if stats is None and df.sparkSession.conf.get("spark.sql.ansi.enabled") != "true":
+        # the split-long sums are exact only because ANSI raises on
+        # overflow; with it off an overflowing cast is NULL and the row
+        # silently drops out of the sums
+        raise ValueError(
+            "standardize needs spark.sql.ansi.enabled=true: its exact "
+            "statistics rely on overflow raising instead of turning NULL"
+        )
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
 

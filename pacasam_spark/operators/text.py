@@ -119,8 +119,8 @@ def gopher_quality_flags(
     - ok_stopwords:     >= min_stopword_hits DISTINCT stopwords appear
     - ok_repetition:    duplicate-line fraction <= max_dup_line_frac
 
-    ``keep`` is their conjunction. Returns the flags too — corpus
-    curation wants per-rule attrition counts, not just the survivor set.
+    ``keep`` is their conjunction. Returns the flags too, so a caller
+    can count how many documents each rule drops.
     """
     w = words_col(F.col(text_col))
     n = F.size(w)

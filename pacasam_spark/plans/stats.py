@@ -139,64 +139,3 @@ def write_comparison_reports(
             write(sizes, f"comparison-sizes-by_{key}")
     return written
 
-
-def gopher_attrition(flags: DataFrame, rules: list[str] | None = None) -> DataFrame:
-    """Per-rule survivor funnel over a quality-flags table (the output of
-    operators/text.gopher_quality_flags): for each rule, how many docs
-    fail it on its own, and how many survive the rules applied so far in
-    order — what corpus curation reads to see which filter costs the
-    most data (the same attrition view samplers/base.py logs per stage).
-
-    ONE aggregation over one scan: every count is a sum of a cast flag
-    conjunction, so the plan is a partial-agg + single-row exchange no
-    matter the corpus size — nothing here grows with N. Output, one row
-    per rule in application order:
-
-        (rule_idx, rule, n_failed, n_survivors, keep_rate)
-
-    where n_failed counts docs failing THAT rule independently,
-    n_survivors counts docs passing rules[0..i] cumulatively, and
-    keep_rate = n_survivors / total. Reference: pacasam logs only a
-    global per-stage attrition (samplers/sampler.py:67-74); the per-rule
-    funnel is the corpus-curation extension of it."""
-    if rules is None:
-        rules = [
-            f.name
-            for f in flags.schema.fields
-            if f.name.startswith("ok_") and isinstance(f.dataType, T.BooleanType)
-        ]
-    if not rules:
-        raise ValueError("no boolean ok_* rule columns found")
-    aggs = [F.count("*").alias("_total")]
-    cum = None
-    for r in rules:
-        cum = F.col(r) if cum is None else cum & F.col(r)
-        aggs.append(F.sum((~F.col(r)).cast("long")).alias(f"_fail_{r}"))
-        aggs.append(F.sum(cum.cast("long")).alias(f"_surv_{r}"))
-    one = flags.agg(*aggs)
-    stack = ", ".join(
-        f"{i}, '{r}', _fail_{r}, _surv_{r}" for i, r in enumerate(rules)
-    )
-    return one.selectExpr(
-        f"stack({len(rules)}, {stack}) as "
-        "(rule_idx, rule, n_failed, n_survivors)",
-        "_total",
-    ).select(
-        "rule_idx",
-        "rule",
-        "n_failed",
-        "n_survivors",
-        F.round(F.col("n_survivors") / F.col("_total"), 6).alias("keep_rate"),
-    )
-
-
-def write_gopher_report(
-    flags: DataFrame, out_dir: str, rules: list[str] | None = None
-) -> str:
-    """The attrition funnel as a single-file CSV directory, same shape
-    as write_comparison_reports' outputs."""
-    name = "gopher-attrition"
-    gopher_attrition(flags, rules).coalesce(1).write.mode("overwrite").option(
-        "header", True
-    ).csv(f"{out_dir}/{name}")
-    return name

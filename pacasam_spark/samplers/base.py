@@ -81,14 +81,6 @@ class Sampler:
             S.SAMPLER, pa.array([self.name] * table.num_rows, pa.string())
         )
 
-    def log_attrition(self, n_before: int, n_after: int) -> None:
-        """A9 (reference: samplers/sampler.py:42-51)."""
-        if n_before:
-            self.log.info(
-                f"{self.name}: {n_before} ids -> {n_after} distinct ids "
-                f"(uniqueness ratio: {n_after / n_before:.03f})"
-            )
-
     # --- stage checkpointing (north rule: resumable mid-job) -----------
 
     @property

@@ -5,8 +5,8 @@ targetted.py:85-96): filter -> stratified exact-n sample (Spark) ->
 collect + split assignment (driver); union with first-wins precedence on
 the driver's tables; optionally complete with
 SpatialSampler, rebalancing the validation fraction so the FINAL val count
-is floor(frac * target_total) (reference targetted.py:46-51 — replicated
-as arithmetic, not as the reference's in-place config mutation).
+is floor(frac * n) for the n rows returned (reference targetted.py:46-51 —
+replicated as arithmetic, not as the reference's in-place config mutation).
 """
 
 from __future__ import annotations
@@ -64,6 +64,7 @@ class TargettedSampler(Sampler):
             )
             .agg(
                 F.max("__all").alias("__all"),
+                F.sum("__all").alias("__rows"),
                 *[F.max(n).alias(n) for n in names],
             )
             .first()
@@ -72,6 +73,8 @@ class TargettedSampler(Sampler):
         # composite samplers (Triple) reuse it for their completion draw
         # instead of re-probing the (anti-joined) remainder
         self.stratum_max_bound = int(maxes["__all"] or 0)
+        # a target above the catalogue size is met by the whole catalogue
+        reachable = min(target_total, int(maxes["__rows"] or 0))
 
         quotas = [
             int(o["target_min_samples_proportion"] * target_total)
@@ -126,13 +129,15 @@ class TargettedSampler(Sampler):
                 "If this is not desired, please reconsider your targets."
             )
             return selection
-        if not self.complete_with_spatial_sampling or n_selected == target_total:
+        if not self.complete_with_spatial_sampling or n_selected == reachable:
             return selection
 
         # Completion: rebalance the val fraction so the final val count is
-        # floor(frac * target_total) (reference: targetted.py:46-51).
-        num_to_add = target_total - n_selected
-        final_val = floor(self.cf["frac_validation_set"] * target_total)
+        # floor(frac * n) (reference: targetted.py:46-51), n being the
+        # target, or the catalogue size when the target is larger.
+        num_to_add = reachable - n_selected
+        frac = self.cf.get("frac_validation_set") or 0.0
+        final_val = floor(frac * reachable)
         val_so_far = selection.filter(pc.equal(selection[S.SPLIT], "val")).num_rows
         frac_for_completion = max(0.0, (final_val - val_so_far) / num_to_add)
 

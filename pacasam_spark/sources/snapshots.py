@@ -322,9 +322,9 @@ def write_snapshot(
         # compare name+type only — parquet round-trips relax nullability.
         # Schema EVOLUTION (Iceberg add-column): an append may introduce
         # new NULLABLE columns — the commit's schema becomes the table
-        # schema, and readers null-backfill older files (read_snapshot /
-        # snapshot_changes read every contributing file with the newest
-        # manifest's schema, and parquet resolves columns by name).
+        # schema, and readers null-backfill older files (read_snapshot
+        # reads every contributing file with the newest manifest's
+        # schema, and parquet resolves columns by name).
         # Dropping or re-typing a column still raises: old manifests are
         # immutable, so time travel to pre-evolution versions is
         # untouched by construction.
@@ -487,8 +487,7 @@ def write_snapshot(
 
 
 def latest_version(table_dir: str) -> int:
-    """Newest committed version number (the checkpoint an incremental
-    consumer stores after a :func:`snapshot_changes` poll)."""
+    """Newest committed version number."""
     committed = _committed_versions(table_dir)
     if not committed:
         raise FileNotFoundError(f"no committed snapshots under {table_dir}")
@@ -753,74 +752,6 @@ def snapshot_fps_inputs(
         max(key_totals.values(), default=0),
     )
     return stats, counts
-
-
-def snapshot_changes(
-    spark: SparkSession,
-    table_dir: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Incremental read (Iceberg's append scan): the rows ADDED by the
-    commits AFTER ``from_version`` up to and including ``to_version``
-    (default: latest) — exactly each version's own files, no full-table
-    scan, so a downstream consumer polling a growing table does O(new
-    rows) work per poll (checkpoint = the last version it processed).
-
-    Only APPEND commits have pure added-rows semantics; an overwrite or
-    upsert in the range raises (like Iceberg's incremental scan —
-    rewritten rows are not 'changes' and silently re-emitting them
-    would double-process), and the caller falls back to a full read."""
-    committed = _committed_versions(table_dir)
-    if to_version is None:
-        to_version = committed[-1] if committed else from_version
-    if from_version == to_version:
-        # empty range — nothing committed since the checkpoint. Iceberg's
-        # incremental scan returns EMPTY here (an idle-polling consumer
-        # must not crash); keep the latest manifest's schema so downstream
-        # plans still analyze.
-        if from_version not in committed:
-            raise FileNotFoundError(
-                f"checkpoint v{from_version:05d} of {table_dir} was never "
-                f"committed (committed: {committed})"
-            )
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(
-            _load_manifest(table_dir, from_version)["schema"]
-        )
-        return spark.createDataFrame([], schema)
-    span = [v for v in committed if from_version < v <= to_version]
-    if not span or span[-1] != to_version or from_version not in (
-        0, *committed
-    ):
-        raise FileNotFoundError(
-            f"version range ({from_version}, {to_version}] is not fully "
-            f"committed in {table_dir} (committed: {committed})"
-        )
-    manifests = [_load_manifest(table_dir, v) for v in span]
-    bad = [
-        m["version"]
-        for m in manifests
-        if m.get("commit_type", "overwrite") != "append"
-    ]
-    if bad:
-        raise ValueError(
-            f"incremental read only supports append commits; versions "
-            f"{bad} of {table_dir} are overwrite/upsert — read the "
-            "snapshot fully instead"
-        )
-    from pyspark.sql.types import StructType
-
-    paths = [
-        os.path.join(_vdir(table_dir, m["version"]), "data", f)
-        for m in manifests
-        for f in sorted(m["files"])
-    ]
-    schema = StructType.fromJson(manifests[-1]["schema"])
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def upsert_snapshot(

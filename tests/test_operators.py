@@ -179,6 +179,19 @@ def test_standardize_zero_ignoring_and_min_fill(spark):
     assert out[1] == out[2]
 
 
+def test_standardize_refuses_ansi_off(spark):
+    """The split-long statistics are exact only because ANSI mode raises
+    on overflow; with it off they would silently lose rows."""
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["patch_id", "x"])
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match="spark.sql.ansi.enabled"):
+            standardize(df, ["x"])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    standardize(df, ["x"]).collect()
+
+
 def test_standardize_nan_guard(spark):
     df = spark.createDataFrame([(1, 1.0), (2, None)], ["patch_id", "x"])
     with pytest.raises(UnexpectedNaNValuesError):

@@ -318,187 +318,6 @@ def test_run_sampling_zorder_snapshot(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_run_curation_cli_end_to_end(spark, tmp_path):
-    """run_curation (round-5 verdict #5): documents parquet -> Gopher
-    quality funnel CSV -> minhash near-dedup -> atomic corpus parquet +
-    snapshot version, with the JSON funnel summary. Every doc is planted
-    twice, so exactly half the quality survivors remain after dedup."""
-    from pacasam_spark.run_curation import main as curation_main
-    from pacasam_spark.sources.snapshots import read_snapshot, snapshots
-
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-    )
-    corpus = base.unionByName(
-        base.select((F.col("doc_id") + 5000).alias("doc_id"), "text")
-    )
-    inp = str(tmp_path / "docs.parquet")
-    corpus.write.parquet(inp)
-
-    cfg_path = str(tmp_path / "curation.yml")
-    with open(cfg_path, "w") as fh:
-        fh.write(
-            "quality:\n"
-            "  min_words: 3\n"
-            "  min_stopword_hits: 0\n"
-            "dedup:\n"
-            "  method: minhash\n"
-            "  jaccard_threshold: 0.7\n"
-        )
-
-    out = str(tmp_path / "curated")
-    snap = str(tmp_path / "corpus_tbl")
-    curation_main([
-        "--config", cfg_path,
-        "--input", inp,
-        "--output", out,
-        "--snapshot-dir", snap,
-    ])
-
-    curated = spark.read.parquet(f"{out}/corpus")
-    n_final = curated.count()
-    # identical copies: quality flags agree within each pair, minhash
-    # catches every exact dup -> exactly half the survivors remain, and
-    # the kept id is always the component minimum (the original doc)
-    assert 0 < n_final <= 60
-    assert curated.filter(F.col("doc_id") >= 5000).count() == 0
-    # funnel CSV exists and covers every ok_* rule in order
-    import glob
-
-    csvs = glob.glob(f"{out}/stats/gopher-attrition/*.csv")
-    assert csvs
-    funnel = spark.read.option("header", True).csv(csvs[0])
-    assert funnel.count() >= 5
-    assert os.path.exists(f"{out}/curation.yml")  # provenance
-
-    # snapshot committed with the funnel counts in its metadata
-    hist = snapshots(snap)
-    assert len(hist) == 1
-    meta = hist[0]["metadata"]
-    assert meta["method"] == "minhash" and meta["n_final"] == n_final
-    assert meta["n_input"] == 120
-    assert read_snapshot(spark, snap).count() == n_final
-
-    # exact-dedup method: removes exactly the planted copies (one per
-    # doc), nothing else; minhash can only remove MORE (it additionally
-    # merges near-but-not-identical docs at jaccard >= 0.7)
-    out2 = str(tmp_path / "curated_exact")
-    curation_main(
-        ["--config", cfg_path, "--input", inp, "--output", out2,
-         "--method", "exact"]
-    )
-    n_exact = spark.read.parquet(f"{out2}/corpus").count()
-    assert n_exact == 60
-    assert n_final <= n_exact
-
-
-def test_run_curation_cosine_method(spark, tmp_path):
-    """--method cosine: embedding near-dups (LSH-bucketed cosine pairs ->
-    components) sink every planted identical-vector copy; the embeddings
-    table is semi-joined to the quality survivors first so a
-    filtered-out doc can never be a component minimum."""
-    from pacasam_spark.run_curation import main as curation_main
-
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-    )
-    corpus = base.unionByName(
-        base.select((F.col("doc_id") + 5000).alias("doc_id"), "text")
-    )
-    inp = str(tmp_path / "docs.parquet")
-    corpus.write.parquet(inp)
-    # deterministic 8-dim embedding per BASE id: planted copies (d and
-    # d+5000) share the exact vector -> cosine 1.0 pairs
-    emb = corpus.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(8)),
-            lambda j: F.cos((F.col("doc_id") % 5000).cast("double") * j.cast("double")).cast("float"),
-        ).alias("embedding"),
-    )
-    emb_path = str(tmp_path / "emb.parquet")
-    emb.write.parquet(emb_path)
-
-    cfg_path = str(tmp_path / "cosine.yml")
-    with open(cfg_path, "w") as fh:
-        fh.write(
-            "quality:\n"
-            "  min_words: 3\n"
-            "  min_stopword_hits: 0\n"
-            "dedup:\n"
-            "  method: cosine\n"
-            "  threshold: 0.95\n"
-            "  dim: 8\n"
-        )
-
-    out = str(tmp_path / "curated_cos")
-    curation_main(
-        ["--config", cfg_path, "--input", inp, "--output", out,
-         "--embeddings", emb_path]
-    )
-    curated = spark.read.parquet(f"{out}/corpus")
-    assert curated.filter(F.col("doc_id") >= 5000).count() == 0
-    assert 0 < curated.count() <= 60
-
-
-def test_run_curation_incremental_over_snapshot_table(spark, tmp_path):
-    """The ingest->curate increment loop: batch B lands as an append on
-    the input snapshot table; run_curation --since-version curates ONLY
-    batch B (O(new docs)) and appends its survivors onto the curated
-    corpus table, whose latest version is the cumulative corpus."""
-    from pacasam_spark.run_curation import build_parser, run
-    from pacasam_spark.sources.snapshots import (
-        read_snapshot,
-        snapshots,
-        write_snapshot,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") < 80)
-        .select("doc_id", "text")
-        .cache()
-    )
-    batch_a = docs.filter(F.col("doc_id") < 40)
-    # batch B: 40 docs planted twice -> exact dedup halves it
-    batch_b0 = docs.filter(F.col("doc_id") >= 40)
-    batch_b = batch_b0.unionByName(
-        batch_b0.select((F.col("doc_id") + 5000).alias("doc_id"), "text")
-    )
-    intbl = str(tmp_path / "docs_tbl")
-    outtbl = str(tmp_path / "corpus_tbl")
-    write_snapshot(batch_a, intbl)
-
-    # full run over v1
-    common = ["--output", str(tmp_path / "o1"), "--input-table", intbl,
-              "--snapshot-dir", outtbl, "--method", "exact", "--no-quality"]
-    s1 = run(build_parser().parse_args(common))
-    assert (s1["n_input"], s1["input_to_version"]) == (40, 1)
-    assert snapshots(outtbl)[-1]["commit_type"] == "overwrite"
-
-    # batch B arrives; incremental run curates only it
-    write_snapshot(batch_b, intbl, mode="append")
-    s2 = run(build_parser().parse_args(
-        ["--output", str(tmp_path / "o2"), "--input-table", intbl,
-         "--snapshot-dir", outtbl, "--method", "exact", "--no-quality",
-         "--since-version", str(s1["input_to_version"])]
-    ))
-    assert s2["n_input"] == 80  # batch B only, not A again
-    assert s2["n_final"] == 40  # exact dedup collapsed the plants
-    assert s2["input_to_version"] == 2
-    m = snapshots(outtbl)[-1]
-    assert m["commit_type"] == "append"
-    assert m["metadata"]["input_to_version"] == 2
-
-    corpus = read_snapshot(spark, outtbl)
-    got = sorted(r["doc_id"] for r in corpus.select("doc_id").collect())
-    assert got == list(range(80))  # cumulative, min-id survivors only
-
-
 def test_commit_catalogue_cli(spark, tmp_path, capsys):
     """tools/commit_catalogue.py: one ingest commit producing the
     combined layout — bucketed files + manifest stats + key counts —

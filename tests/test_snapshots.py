@@ -121,11 +121,8 @@ def test_append_commits_chain_without_copying(spark, tmp_path):
 
 def test_append_schema_evolution_add_nullable_column(spark, tmp_path):
     """Iceberg add-column: an append may introduce a new nullable
-    column; later reads null-backfill older files, time travel to
-    pre-evolution versions keeps the old schema, and snapshot_changes
-    over the evolution span uses the newest schema in span."""
-    from pacasam_spark.sources.snapshots import snapshot_changes
-
+    column; later reads null-backfill older files, and time travel to
+    pre-evolution versions keeps the old schema."""
     d = str(tmp_path / "etbl")
     write_snapshot(
         spark.range(3).select(F.col("id").alias("patch_id")), d
@@ -144,9 +141,6 @@ def test_append_schema_evolution_add_nullable_column(spark, tmp_path):
     # pre-evolution time travel: old schema, old rows
     v1 = read_snapshot(spark, d, version=1)
     assert v1.columns == ["patch_id"] and v1.count() == 3
-    # incremental scan across the evolution sees the evolved schema
-    inc = snapshot_changes(spark, d, 1, 2).orderBy("patch_id").collect()
-    assert [(r["patch_id"], r["w"]) for r in inc] == [(3, "w3"), (4, "w4")]
     # dropping a column is NOT evolution
     with pytest.raises(ValueError, match="missing columns"):
         write_snapshot(
@@ -228,26 +222,6 @@ def test_append_chain_bounds_pruning_spans_versions(spark, tmp_path):
     assert got == want and len(got) > 0
     files_read = pruned.select(F.input_file_name()).distinct().count()
     assert files_read < 16  # pruning bit on both chain links
-
-
-def test_streaming_sink_append_mode_latest_is_cumulative(spark, tmp_path):
-    """mode='append' in the streaming sink: the LATEST version is the
-    cumulative sessions table (not just the last batch), and time
-    travel shows the table as of each batch."""
-    from pacasam_spark.streaming.snapshot_sink import snapshot_batch_writer
-
-    d = str(tmp_path / "strtbl")
-    writer = snapshot_batch_writer(d, query_id="q-1", mode="append")
-    mk = lambda lo, hi: spark.range(lo, hi).select(F.col("id").alias("user_id"))
-    writer(mk(0, 4), 0)
-    writer(mk(4, 6), 1)
-    writer(mk(4, 6), 1)  # crash replay: no new version
-    writer(mk(6, 7), 2)
-    hist = snapshots(d)
-    assert [m["metadata"]["batch_id"] for m in hist] == [0, 1, 2]
-    assert [m["total_row_count"] for m in hist] == [4, 6, 7]
-    assert read_snapshot(spark, d).count() == 7
-    assert read_snapshot(spark, d, version=2).count() == 6
 
 
 def test_compaction_rewrites_chain_into_one_clustered_version(spark, tmp_path):
@@ -384,53 +358,6 @@ def test_chained_upserts_and_appends_resolve_correctly(spark, tmp_path):
     assert len(got) == 111
     assert got[5] == "v4" and got[6] == "v2" and got[105] == "v4"
     assert got[200] == "v4" and got[0] == "v1" and got[100] == "v3"
-
-
-def test_snapshot_changes_incremental_read(spark, tmp_path):
-    """Incremental (append-scan) read: exactly the rows added after the
-    checkpointed version, no full-table scan; overwrite/upsert commits
-    in the range refuse rather than double-emit rewritten rows."""
-    from pacasam_spark.sources.snapshots import snapshot_changes, upsert_snapshot
-
-    d = str(tmp_path / "inc")
-
-    def rows(lo, hi):
-        return spark.range(lo, hi).select(F.col("id").alias("patch_id"))
-
-    write_snapshot(rows(0, 10), d)                       # v1 overwrite
-    write_snapshot(rows(10, 25), d, mode="append")       # v2
-    write_snapshot(rows(25, 30), d, mode="append")       # v3
-
-    got = sorted(
-        r["patch_id"] for r in snapshot_changes(spark, d, from_version=1).collect()
-    )
-    assert got == list(range(10, 30))
-    got2 = sorted(
-        r["patch_id"]
-        for r in snapshot_changes(spark, d, 1, to_version=2).collect()
-    )
-    assert got2 == list(range(10, 25))
-    # the incremental read touches only the span's files
-    inc = snapshot_changes(spark, d, 2)
-    srcs = {r["f"] for r in inc.select(F.input_file_name().alias("f")).distinct().collect()}
-    assert all("v00003" in s for s in srcs)
-
-    # empty range (idle poll: nothing committed since the checkpoint)
-    # returns EMPTY with the manifest schema — Iceberg's incremental
-    # scan semantics; a scheduled consumer must not crash on a quiet hour
-    idle = snapshot_changes(spark, d, 3)
-    assert idle.count() == 0
-    assert idle.schema.fieldNames() == ["patch_id"]
-    with pytest.raises(FileNotFoundError, match="never committed"):
-        snapshot_changes(spark, d, 7, to_version=7)
-    with pytest.raises(FileNotFoundError, match="not fully committed"):
-        snapshot_changes(spark, d, 1, to_version=9)
-    # an overwrite in the range is not an incremental change stream
-    with pytest.raises(ValueError, match="overwrite/upsert"):
-        snapshot_changes(spark, d, 0, to_version=2)
-    upsert_snapshot(spark, d, rows(5, 7), "patch_id")    # v4 upsert
-    with pytest.raises(ValueError, match="overwrite/upsert"):
-        snapshot_changes(spark, d, 3)
 
 
 def test_upsert_duplicate_source_keys_raise(spark, tmp_path):

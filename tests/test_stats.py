@@ -54,33 +54,3 @@ def test_write_five_reports(spark, catalogue, config, tmp_path):
         assert spark.read.option("header", True).csv(
             str(tmp_path / "stats" / n)
         ).count() > 0
-
-
-def test_gopher_attrition_funnel(spark, tmp_path):
-    """Funnel invariants + an exact pandas recomputation over the sf0.01
-    documents (verdict r4 #3: survivor funnel per rule)."""
-    from pacasam_spark.operators.text import gopher_quality_flags
-    from pacasam_spark.plans.stats import gopher_attrition, write_gopher_report
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    flags = gopher_quality_flags(docs)
-    funnel = gopher_attrition(flags).orderBy("rule_idx").collect()
-    pdf = flags.toPandas()
-    total = len(pdf)
-
-    rules = [r["rule"] for r in funnel]
-    assert len(rules) == 7 and rules[0] == "ok_n_words"
-    surviving = pdf
-    for row in funnel:
-        assert row["n_failed"] == int((~pdf[row["rule"]]).sum())
-        surviving = surviving[surviving[row["rule"]]]
-        assert row["n_survivors"] == len(surviving)
-        assert abs(row["keep_rate"] - len(surviving) / total) < 1e-6
-    # monotone funnel; final survivors == conjunction keep column
-    ns = [r["n_survivors"] for r in funnel]
-    assert ns == sorted(ns, reverse=True)
-    assert ns[-1] == int(pdf["keep"].sum())
-
-    name = write_gopher_report(flags, str(tmp_path / "stats"))
-    out = spark.read.option("header", True).csv(str(tmp_path / "stats" / name))
-    assert out.count() == 7

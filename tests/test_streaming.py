@@ -200,84 +200,3 @@ def test_session_rollup_stream_late_data_cannot_mutate_emitted(spark, tmp_path):
         (1, T0, 2),
         (2, T0 + dt.timedelta(minutes=50), 1),
     ]
-
-
-def test_snapshot_sink_one_version_per_batch_and_resume(spark, tmp_path):
-    """Streaming sessions -> versioned snapshot table (snapshot_sink):
-    one committed version per non-empty micro-batch, batch_id recorded
-    in the manifest, a replayed batch_id commits nothing (crash between
-    snapshot commit and checkpoint advance), resume with the same
-    checkpoint re-reads nothing, and read_snapshot time-travels."""
-    from pacasam_spark.sources.snapshots import read_snapshot, snapshots
-    from pacasam_spark.streaming.snapshot_sink import (
-        committed_stream_commits,
-        sessions_to_snapshots,
-        snapshot_batch_writer,
-    )
-
-    def _utime_tree(path, t):
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-        os.utime(path, (t, t))
-
-    d = str(tmp_path / "ev_snap")
-    tbl = str(tmp_path / "snap_tbl")
-    ckpt = str(tmp_path / "ckpt")
-    # two files -> two micro-batches (maxFilesPerTrigger=1); sessions
-    # close when the watermark passes them, so batch 2's events finalize
-    # batch 1's sessions
-    _write_events(spark, f"{d}/events_a.parquet", [(1, 0), (1, 10), (2, 0)])
-    _utime_tree(f"{d}/events_a.parquet", 1_000_000)
-    _write_events(spark, f"{d}/events_b.parquet", [(1, 100000), (2, 100000)])
-    _utime_tree(f"{d}/events_b.parquet", 2_000_000)
-
-    n = sessions_to_snapshots(spark, f"{d}/*.parquet", tbl, ckpt, gap="30 minutes")
-    hist = snapshots(tbl)
-    assert n == len(hist) >= 1
-    # every committed version carries its batch_id AND the query id read
-    # from the checkpoint (the Iceberg (queryId, batchId) dedupe key);
-    # ids are unique, the query id is one stable uuid
-    ids = [m["metadata"]["batch_id"] for m in hist]
-    assert len(set(ids)) == len(ids)
-    qids = {m["metadata"].get("query_id") for m in hist}
-    assert len(qids) == 1 and None not in qids
-    # all finalized sessions across versions == the two early sessions
-    total = sum(m["row_count"] for m in hist)
-    assert total == 2  # user 1 (2 events) + user 2 (1 event)
-    v1 = read_snapshot(spark, tbl, version=hist[0]["version"])
-    assert v1.count() == hist[0]["row_count"]
-
-    # replayed (query_id, batch_id) — same query crash-replaying an
-    # already-committed batch — commits nothing
-    qid = next(iter(qids))
-    writer = snapshot_batch_writer(tbl, query_id=qid)
-    writer(spark.range(3).selectExpr("id as user_id"), ids[0])
-    assert len(snapshots(tbl)) == len(hist)
-    # legacy mode (no query identity at all) also dedupes on batch_id
-    snapshot_batch_writer(tbl)(spark.range(3).selectExpr("id as user_id"), ids[0])
-    assert len(snapshots(tbl)) == len(hist)
-    assert committed_stream_commits(tbl) == {(qid, b) for b in ids}
-
-    # a DIFFERENT query (fresh checkpoint => batch ids restart at 0) is
-    # NOT a replay: its batch 0 must commit, not be silently skipped
-    other = snapshot_batch_writer(tbl, query_id="other-query-uuid")
-    other(spark.range(2).selectExpr("id as user_id"), ids[0])
-    assert len(snapshots(tbl)) == len(hist) + 1
-    # and the cached committed set dedupes ITS OWN replay without
-    # re-reading manifests (single-writer closure cache)
-    other(spark.range(2).selectExpr("id as user_id"), ids[0])
-    assert len(snapshots(tbl)) == len(hist) + 1
-    hist = snapshots(tbl)
-
-    # resume with the same checkpoint and no new input: no new versions
-    n2 = sessions_to_snapshots(spark, f"{d}/*.parquet", tbl, ckpt)
-    assert n2 == len(hist)
-
-    # new input after resume: exactly the newly finalized sessions land
-    _write_events(spark, f"{d}/events_c.parquet", [(1, 200000)])
-    _utime_tree(f"{d}/events_c.parquet", 3_000_000)
-    n3 = sessions_to_snapshots(spark, f"{d}/*.parquet", tbl, ckpt)
-    assert n3 > n2
-    latest = read_snapshot(spark, tbl)
-    assert latest.count() >= 1

@@ -1,13 +1,12 @@
-"""YAML sampling configs + connector/extractor registries.
+"""YAML sampling configs + the connector registry.
 
 Reference parity: the reference's query IS the config — run_sampling is
 driven by a YAML file naming a connector, a sampler, and per-sampler
 blocks (reference: src/pacasam/run_sampling.py:23-41,
 src/pacasam/utils.py:47-71, configs/Synthetic.yml). This module provides
-``load_sampling_config`` plus the CONNECTORS / EXTRACTORS registries the
-CLIs resolve class names against (the reference's CONNECTORS_LIBRARY /
-EXTRACTORS_LIBRARY, utils.py:55-71). SAMPLER_REGISTRY lives in
-``pacasam_spark.samplers``.
+``load_sampling_config`` plus the CONNECTORS registry run_sampling
+resolves class names against (the reference's CONNECTORS_LIBRARY,
+utils.py:55-71). SAMPLER_REGISTRY lives in ``pacasam_spark.samplers``.
 
 A connector here is a callable ``(spark, **connector_kwargs) -> DataFrame``
 returning the catalogue — lazily, as a DataFrame plan, never a driver-side
@@ -115,23 +114,3 @@ CONNECTORS_REGISTRY = {
     "BucketedConnector": bucketed_connector,
 }
 
-
-def _extractor_registry() -> dict:
-    from pacasam_spark.extract.images import run_extraction as image_extract
-    from pacasam_spark.extract.wms import wms_extract
-
-    return {
-        # the codec-based image extractor is this engine's analogue of the
-        # reference's LAZ/BDOrthoVintage extractors (decode bytes -> crop
-        # -> re-encode); WMS maps to the bounded-retry fetch extractor
-        # (reference: extractors/bd_ortho_today.py:67-77)
-        "ImagePatchExtractor": image_extract,
-        "WmsPatchExtractor": wms_extract,
-    }
-
-
-def get_extractor(name: str):
-    reg = _extractor_registry()
-    if name not in reg:
-        raise ValueError(f"unknown extractor {name!r}; choices: {sorted(reg)}")
-    return reg[name]

@@ -12,8 +12,7 @@ extractor.py:34-39). Spark mapping:
   lazy one-read-per-file, laz.py:106-107, falls out of the groupBy).
 - sink: a ``mapInPandas`` writer emitting {split}/{SPLIT}-{patch_id}.ext
   files (naming: extractor.py:34-39) with atomic tmp-rename per file and
-  existence-skip — the per-file twin of the manifest-based resume in
-  extract/images.py.
+  existence-skip: a file already on disk is reported, not rewritten.
 """
 
 from __future__ import annotations

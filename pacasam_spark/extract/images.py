@@ -1,6 +1,5 @@
 """Extraction pipeline over image bytes (SURVEY.md §2.13 E1-E4 mapped to
-the image+caption table) with resume manifest + per-partition lineage
-metrics (north rule).
+the image+caption table) with a resume manifest.
 
 Reference semantics re-expressed:
 - E1 per-file group-extract (extractors/laz.py:80-128) -> one
@@ -9,29 +8,26 @@ Reference semantics re-expressed:
   Spark.
 - E2/E3 crop to a window + re-encode (extractors/bd_ortho_vintage.py:
   69-117; squares-only assert :76) -> numpy slicing inside the batch.
-- K5 resume guard (extractors/laz.py:103-104, README.md:160) ->
-  LEFT-ANTI JOIN against the manifest of already-extracted ids (never an
-  output-file existence check per row — that is the single-node idiom).
-- Lineage/metrics: each task appends one row (partition id, rows, bytes,
-  wall time) via the TaskContext — the Iceberg-snapshot-metadata analogue
-  on plain parquet.
+- K5 resume guard (extractors/laz.py:103-104, README.md:160) -> an
+  anti-join of the sampling against the manifest of already-extracted
+  ids, on the driver: like the reference, the sampling is small enough
+  to hold in memory, so a resume with nothing left runs no Spark job.
 """
 
 from __future__ import annotations
 
-import time
+import os
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 EXTRACT_SCHEMA = (
     "image_id string, split string, bytes binary, w int, h int, fmt string, "
     "caption string"
-)
-METRICS_SCHEMA = (
-    "partition_id int, n_rows long, n_bytes long, wall_sec double"
 )
 
 
@@ -128,74 +124,11 @@ def compute_phash(images: DataFrame, out_col: str = "phash") -> DataFrame:
     )
 
 
-def resume_filter(sampling: DataFrame, manifest: DataFrame | None) -> DataFrame:
+def resume_filter(sampling: pa.Table, manifest_dir: str) -> pa.Table:
     """K5: drop ids already extracted (idempotent restart). The manifest
-    is the checkpoint table — an anti-join, not a per-row file stat."""
-    if manifest is None:
+    is the checkpoint table — an anti-join on the driver, not a per-row
+    file stat; the directory is read only when it exists."""
+    if not os.path.isdir(manifest_dir):
         return sampling
-    return sampling.join(
-        manifest.select("image_id").distinct(), "image_id", "left_anti"
-    )
-
-
-def run_extraction(
-    images: DataFrame,
-    sampling: DataFrame,
-    out_dir: str,
-    manifest_dir: str,
-    metrics_dir: str | None = None,
-    crop: tuple[int, int, int, int] | None = None,
-    out_fmt: str | None = None,
-) -> dict:
-    """Full extraction with resume + lineage metrics.
-
-    Writes: extracted patches partitioned by split (K3/K4 analogue),
-    appends the processed ids to the manifest (checkpoint), and appends
-    one metrics row per task. Returns summary counts.
-    """
-    spark = images.sparkSession
-    try:
-        manifest = spark.read.parquet(manifest_dir)
-    except Exception:
-        manifest = None
-
-    todo = resume_filter(sampling, manifest)
-    n_todo = todo.count()
-    if n_todo == 0:
-        return {"extracted": 0, "skipped_resume": sampling.count()}
-
-    # persisted: consumed by up to three sinks (data, manifest, metrics) —
-    # one decode pass, not three
-    extracted = extract_patches(
-        images, todo, crop=crop, out_fmt=out_fmt, sampling_rows=n_todo
-    ).persist()
-
-    metrics_rows: DataFrame | None = None
-    if metrics_dir is not None:
-        def with_metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            t0 = time.perf_counter()
-            n, nb = 0, 0
-            for pdf in batches:
-                n += len(pdf)
-                nb += int(pdf["bytes"].map(len).sum()) if len(pdf) else 0
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            yield pd.DataFrame(
-                [(pid, n, nb, time.perf_counter() - t0)],
-                columns=["partition_id", "n_rows", "n_bytes", "wall_sec"],
-            )
-
-        metrics_rows = extracted.mapInPandas(with_metrics, schema=METRICS_SCHEMA)
-
-    # ORDER MATTERS: the manifest append must come LAST. Writing to
-    # manifest_dir makes Spark recache-by-path and invalidate every plan
-    # that read it — including our persisted `extracted` — so any action
-    # issued afterwards would recompute against the UPDATED manifest and
-    # see an empty anti-join.
-    extracted.write.mode("append").partitionBy("split").parquet(out_dir)
-    if metrics_rows is not None:
-        metrics_rows.write.mode("append").parquet(metrics_dir)
-    extracted.select("image_id").write.mode("append").parquet(manifest_dir)
-    extracted.unpersist()
-    return {"extracted": n_todo, "skipped_resume": sampling.count() - n_todo}
+    done = pq.read_table(manifest_dir, columns=["image_id"])["image_id"]
+    return sampling.filter(pc.invert(pc.is_in(sampling["image_id"], done)))

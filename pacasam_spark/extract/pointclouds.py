@@ -52,12 +52,16 @@ def extract_las_patches(
         import pandas as pd
 
         from pacasam_spark import imaging
-        from pacasam_spark.pointcloud import colorize_las, crop_las
+        from pacasam_spark.pointcloud import (
+            colorize_points, crop_points, decode_las, encode_las,
+        )
 
         for pdf in batches:
             out = {k: [] for k in
                    ("patch_id", "file_id", "split", "n_points", "bytes")}
             for _i, row in pdf.iterrows():
+                cloud = decode_las(bytes(row["bytes"]))
+                header = cloud["header"]
                 img = None
                 if has_img and row.get("__img") is not None:
                     img = imaging.decode(bytes(row["__img"]), row["__img_fmt"])
@@ -66,23 +70,20 @@ def extract_las_patches(
                         row["img_xmax"], row["img_ymax"],
                     )
                 for p in row["__patches"]:
-                    data = crop_las(
-                        bytes(row["bytes"]),
+                    points = crop_points(
+                        cloud["points"],
                         (
                             p["geom_xmin"], p["geom_ymin"],
                             p["geom_xmax"], p["geom_ymax"],
                         ),
                     )
                     if img is not None:
-                        data = colorize_las(data, img, ibounds)
-                    from pacasam_spark.pointcloud import decode_las
-
-                    n = len(decode_las(data)["points"]["x"])
+                        points = colorize_points(header, points, img, ibounds)
                     out["patch_id"].append(p["patch_id"])
                     out["file_id"].append(row["file_id"])
                     out["split"].append(p["split"])
-                    out["n_points"].append(n)
-                    out["bytes"].append(data)
+                    out["n_points"].append(len(points["x"]))
+                    out["bytes"].append(encode_las(header, points))
             yield pd.DataFrame(out)
 
     return joined.mapInPandas(extract, OUT_SCHEMA)

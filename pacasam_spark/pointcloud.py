@@ -159,18 +159,54 @@ def encode_las(header: dict, points: dict) -> bytes:
     return bytes(buf) + rec.tobytes()
 
 
-def crop_las(data: bytes, bounds: tuple[float, float, float, float]) -> bytes:
+def crop_points(points: dict, bounds: tuple[float, float, float, float]) -> dict:
     """The reference's patch extraction
-    (``extract_single_patch_from_LasData``, laz.py:132-149): keep points
-    with xmin <= x <= xmax AND ymin <= y <= ymax (INCLUSIVE both ends,
-    exactly as the reference masks), re-encoded under the same header
+    (``extract_single_patch_from_LasData``, laz.py:132-149) on a decoded
+    cloud's points: keep xmin <= x <= xmax AND ymin <= y <= ymax
+    (INCLUSIVE both ends, exactly as the reference masks)."""
+    xmin, ymin, xmax, ymax = bounds
+    x, y = points["x"], points["y"]
+    m = (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
+    return {k: v[m] for k, v in points.items()}
+
+
+def crop_las(data: bytes, bounds: tuple[float, float, float, float]) -> bytes:
+    """``crop_points`` on LAS bytes, re-encoded under the same header
     grid so surviving records are bit-identical."""
     cloud = decode_las(data)
-    p = cloud["points"]
-    xmin, ymin, xmax, ymax = bounds
-    m = (p["x"] >= xmin) & (p["x"] <= xmax) & (p["y"] >= ymin) & (p["y"] <= ymax)
-    cropped = {k: v[m] for k, v in p.items()}
-    return encode_las(cloud["header"], cropped)
+    return encode_las(cloud["header"], crop_points(cloud["points"], bounds))
+
+
+def colorize_points(
+    header: dict,
+    points: dict,
+    image: np.ndarray,
+    image_bounds: tuple[float, float, float, float],
+) -> dict:
+    """J10 for point clouds (reference pdal Filter.colorization with
+    ``Red:2:256.0, Green:3:256.0, Blue:4:256.0`` — laz.py:117-121):
+    sample the ortho image at each point's nearest pixel and store
+    8-bit*256 into the 16-bit RGB dims. The cloud must be an RGB-bearing
+    format (2/3/7/8)."""
+    fmt = header["point_format"]
+    if fmt not in (2, 3, 7, 8):
+        raise ValueError(f"point format {fmt} has no RGB dimensions")
+    xmin, ymin, xmax, ymax = image_bounds
+    h, w = image.shape[:2]
+    ix = np.clip(
+        ((points["x"] - xmin) / max(xmax - xmin, 1e-12) * w).astype(np.int64),
+        0, w - 1,
+    )
+    iy = np.clip(
+        ((ymax - points["y"]) / max(ymax - ymin, 1e-12) * h).astype(np.int64),
+        0, h - 1,
+    )
+    px = image[iy, ix]
+    rgb = {
+        name: px[:, band].astype(np.uint16) * 256
+        for band, name in enumerate(("red", "green", "blue"))
+    }
+    return {**points, **rgb}
 
 
 def colorize_las(
@@ -178,27 +214,9 @@ def colorize_las(
     image: np.ndarray,
     image_bounds: tuple[float, float, float, float],
 ) -> bytes:
-    """J10 for point clouds (reference pdal Filter.colorization with
-    ``Red:2:256.0, Green:3:256.0, Blue:4:256.0`` — laz.py:117-121):
-    sample the ortho image at each point's nearest pixel and store
-    8-bit*256 into the 16-bit RGB dims. The cloud must be an RGB-bearing
-    format (2/3/7/8)."""
+    """``colorize_points`` on LAS bytes."""
     cloud = decode_las(data)
-    fmt = cloud["header"]["point_format"]
-    if fmt not in (2, 3, 7, 8):
-        raise ValueError(f"point format {fmt} has no RGB dimensions")
-    p = cloud["points"]
-    xmin, ymin, xmax, ymax = image_bounds
-    h, w = image.shape[:2]
-    ix = np.clip(
-        ((p["x"] - xmin) / max(xmax - xmin, 1e-12) * w).astype(np.int64),
-        0, w - 1,
+    header = cloud["header"]
+    return encode_las(
+        header, colorize_points(header, cloud["points"], image, image_bounds)
     )
-    iy = np.clip(
-        ((ymax - p["y"]) / max(ymax - ymin, 1e-12) * h).astype(np.int64),
-        0, h - 1,
-    )
-    px = image[iy, ix]
-    for band, name in enumerate(("red", "green", "blue")):
-        p[name] = px[:, band].astype(np.uint16) * 256
-    return encode_las(cloud["header"], p)

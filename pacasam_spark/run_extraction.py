@@ -1,26 +1,31 @@
 """Dataset extraction entrypoint (reference: src/pacasam/run_extraction.py).
 
-sampling parquet -> resume anti-join -> decode/crop/re-encode
-(extractor from the registry) -> one {SPLIT}-{id}.{ext} file per patch
-under dataset_root/split/, plus a manifest (checkpoint) and per-task
-lineage metrics.
+sampling parquet -> resume anti-join -> decode/crop/re-encode -> one
+{SPLIT}-{id}.{ext} file per patch under dataset_root/split/, plus a
+manifest of the extracted ids (checkpoint) under dataset_root/_manifest.
 
   python -m pacasam_spark.run_extraction \
       --sampling_path /tmp/s/sampling --images_path /tmp/images.parquet \
       --dataset_root_path /tmp/dataset --extractor_class ImagePatchExtractor
 
 The reference parallelizes with --num_jobs processes
-(run_extraction.py:43); here parallelism is the cluster itself —
---num-partitions controls task fan-out (spark-submit scales it to
-executors).
+(run_extraction.py:43); here parallelism is the cluster itself — task
+fan-out follows the images scan.
+
+The sampling (capped by the sample target) and the manifest are read on
+the driver, as the reference loads its sampling into memory
+(extractor.py:45-49): a resume with nothing left to extract submits no
+Spark job.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
+import uuid
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
 
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.files import load_sampling
@@ -39,53 +44,41 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--crop", default=None, help="x0,y0,w,h crop window")
     p.add_argument("--resize", default=None,
                    help="w,h bilinear/block-mean resample after the crop")
-    p.add_argument("--num-partitions", type=int, default=0,
-                   help="repartition the work (0 = leave to the source/AQE)")
     return p
 
 
 def run(args: argparse.Namespace) -> dict:
     from pacasam_spark.extract.filesink import write_patch_files
     from pacasam_spark.extract.images import extract_patches, resume_filter
+    from pacasam_spark.samplers.base import _replace_into
 
-    spark = get_spark(app_name=f"run_extraction_{args.extractor_class}")
-    sampling = load_sampling(spark, args.sampling_path)
-    if "image_id" not in sampling.columns:  # catalogue samplings key on patch_id
-        sampling = sampling.withColumn(
-            "image_id", F.col("patch_id").cast("string")
+    manifest_dir = os.path.join(args.dataset_root_path, "_manifest")
+    todo = resume_filter(load_sampling(args.sampling_path), manifest_dir)
+    n_written = n_files = 0
+    if todo.num_rows:
+        spark = get_spark(app_name=f"run_extraction_{args.extractor_class}")
+        crop = tuple(int(v) for v in args.crop.split(",")) if args.crop else None
+        resize = tuple(int(v) for v in args.resize.split(",")) if args.resize else None
+        extracted = extract_patches(
+            spark.read.parquet(args.images_path), spark.createDataFrame(todo),
+            crop=crop, resize=resize, out_fmt=args.out_fmt,
+            sampling_rows=todo.num_rows,
         )
-    images = spark.read.parquet(args.images_path)
-
-    manifest_dir = f"{args.dataset_root_path}/_manifest"
-    try:
-        manifest = spark.read.parquet(manifest_dir)
-    except Exception:
-        manifest = None
-    todo = resume_filter(sampling.select("image_id", "split"), manifest)
-    if args.num_partitions:
-        todo = todo.repartition(args.num_partitions, "image_id")
-    n_todo = todo.count()
-
-    crop = tuple(int(v) for v in args.crop.split(",")) if args.crop else None
-    resize = tuple(int(v) for v in args.resize.split(",")) if args.resize else None
-    extracted = extract_patches(
-        images, todo, crop=crop, resize=resize, out_fmt=args.out_fmt,
-        sampling_rows=n_todo,
-    ).persist()
-
-    ext = args.out_fmt or "bin"
-    files = write_patch_files(extracted, args.dataset_root_path, ext=ext)
-    # ONE action for both metrics: `files` is a side-effecting writer —
-    # two separate counts would run the write pass twice (the second one
-    # finding every file already on disk and reporting written=0)
-    row = files.agg(
-        F.sum(F.col("written").cast("int")).alias("w"), F.count("*").alias("n")
-    ).first()
-    n_written, n_files = int(row["w"] or 0), int(row["n"])
-    # manifest append LAST: writing to its path invalidates cached plans
-    # that read it (recache-by-path)
-    extracted.select("image_id").write.mode("append").parquet(manifest_dir)
-    extracted.unpersist()
+        # ONE action: the writer is side-effecting, so a second action
+        # would run it again and find every file already on disk
+        files = write_patch_files(
+            extracted, args.dataset_root_path, ext=args.out_fmt or "bin"
+        ).toArrow()
+        n_written = sum(files["written"].to_pylist())
+        n_files = files.num_rows
+        if n_files:
+            os.makedirs(manifest_dir, exist_ok=True)
+            done = files.select(["image_id"])
+            _replace_into(
+                manifest_dir,
+                f"part-{uuid.uuid4().hex}.parquet",
+                lambda f: pq.write_table(done, f),
+            )
 
     summary = {
         "extractor": args.extractor_class,
@@ -94,7 +87,7 @@ def run(args: argparse.Namespace) -> dict:
         # sampling rows whose image_id has no catalogue match never reach
         # the manifest (inner join) — surfaced here instead of silently
         # re-attempted on every resume forever
-        "unmatched_ids": n_todo - n_files,
+        "unmatched_ids": todo.num_rows - n_files,
         "dataset_root": args.dataset_root_path,
     }
     print(json.dumps(summary))

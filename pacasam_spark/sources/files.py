@@ -5,7 +5,7 @@ Reference parity:
   source, dropping stale ``split``/``sampler`` columns so the catalogue
   can be re-sampled.
 - load_sampling + check_sampling_format (extractors/extractor.py:45-73):
-  schema-validated sampling input for extraction.
+  schema-validated sampling input for extraction, read on the driver.
 - save_sampling (samplers/sampler.py:68-85): the reference writes to a
   tmp file then copies for atomicity on Samba; Spark's file-commit
   protocol (write to _temporary, atomic job commit) provides the same
@@ -14,8 +14,10 @@ Reference parity:
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from pacasam_spark import schemas as S
 
@@ -42,28 +44,36 @@ class SamplingFormatError(ValueError):
     pass
 
 
-def check_sampling_format(df: DataFrame) -> None:
+def check_sampling_format(schema: pa.Schema) -> None:
     """S4: sampling must carry patch_id + a string split (+ geometry box
     columns when destined for extraction)
     (reference: extractors/extractor.py:51-73)."""
-    fields = {f.name: f.dataType for f in df.schema.fields}
     # patch_id for catalogue samplings; image_id for the image+caption
     # table (BASELINE.json input_hint) — either identifies the patch
-    if S.PATCH_ID not in fields and "image_id" not in fields:
+    if S.PATCH_ID not in schema.names and "image_id" not in schema.names:
         raise SamplingFormatError(f"missing column {S.PATCH_ID!r} (or image_id)")
-    if S.SPLIT not in fields:
+    if S.SPLIT not in schema.names:
         raise SamplingFormatError(f"missing column {S.SPLIT!r}")
-    if not isinstance(fields[S.SPLIT], T.StringType):
-        raise SamplingFormatError(
-            f"column {S.SPLIT!r} must be string, got {fields[S.SPLIT]}"
-        )
+    split_type = schema.field(S.SPLIT).type
+    if not (pa.types.is_string(split_type) or pa.types.is_large_string(split_type)):
+        raise SamplingFormatError(f"column {S.SPLIT!r} must be string, got {split_type}")
 
 
-def load_sampling(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """S4: read + validate a sampling (reference: extractor.py:45-49)."""
-    df = spark.read.format(fmt).load(path)
-    check_sampling_format(df)
-    return df
+def load_sampling(path: str) -> pa.Table:
+    """S4: read + validate a sampling on the driver (reference:
+    extractor.py:45-49 loads it into memory too — a selection is capped
+    by the sample target). Returns (image_id string, split): a catalogue
+    sampling's patch_id becomes the string image_id the extraction names
+    its files by."""
+    dataset = pq.ParquetDataset(path)
+    check_sampling_format(dataset.schema)
+    if "image_id" in dataset.schema.names:
+        return dataset.read(columns=["image_id", S.SPLIT])
+    table = dataset.read(columns=[S.PATCH_ID, S.SPLIT])
+    return pa.table({
+        "image_id": pc.cast(table[S.PATCH_ID], pa.string()),
+        S.SPLIT: table[S.SPLIT],
+    })
 
 
 def save_sampling(df: DataFrame, path: str, fmt: str = "parquet") -> None:

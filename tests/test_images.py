@@ -1,13 +1,11 @@
 """Image layer tests: codec round-trips, PSNR >= 40 dB lossy invariant,
-caption equality, extraction join + resume manifest + lineage metrics
-(BASELINE.json input_hint; reference extraction contract
-tests/tests_pacasam/test_run_extraction.py:33-34, extractors/laz.py:103-104)."""
+caption equality, extraction join (BASELINE.json input_hint); the
+extraction CLI and its resume manifest are tested in test_run_cli.py."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pacasam_spark.extract.images import run_extraction
 from pacasam_spark.imaging import decode, decode_png, encode_png, psnr, synth_pixels
 from pacasam_spark.sources.images import synthetic_images
 
@@ -174,43 +172,6 @@ def test_image_catalogue_schema_and_decode(images):
         assert r.caption == (
             f"synthetic scene {r.image_id} mean={int(ref.mean())} fmt={r.fmt}"
         )
-
-
-def test_extraction_resume_and_metrics(spark, images, tmp_path):
-    out = str(tmp_path / "out")
-    man = str(tmp_path / "manifest")
-    met = str(tmp_path / "metrics")
-    sampling = images.select("image_id").limit(20).withColumn(
-        "split", F.lit("train")
-    )
-
-    r1 = run_extraction(images, sampling, out, man, met, crop=(4, 4, 16, 16))
-    assert r1 == {"extracted": 20, "skipped_resume": 0}
-    got = spark.read.parquet(out)
-    assert got.count() == 20  # one output per sampling row
-    row = got.first()
-    assert (row.w, row.h) == (16, 16)  # crop extent honored
-    arr = decode(bytes(row.bytes), row.fmt)
-    ref = synth_pixels(row.image_id, 32, 32)[4:20, 4:20]
-    assert psnr(ref, arr) >= 40.0
-
-    # resume: second run skips everything
-    r2 = run_extraction(images, sampling, out, man, met, crop=(4, 4, 16, 16))
-    assert r2 == {"extracted": 0, "skipped_resume": 20}
-    assert spark.read.parquet(out).count() == 20  # no duplicates
-
-    # incremental: 10 new ids -> only those extracted
-    sampling30 = images.select("image_id").limit(30).withColumn(
-        "split", F.lit("val")
-    )
-    r3 = run_extraction(images, sampling30, out, man, met, crop=(4, 4, 16, 16))
-    assert r3 == {"extracted": 10, "skipped_resume": 20}
-    assert spark.read.parquet(out).count() == 30
-
-    metrics = spark.read.parquet(met)
-    agg = metrics.agg(F.sum("n_rows").alias("n"), F.sum("n_bytes").alias("b")).first()
-    assert agg["n"] == 30
-    assert agg["b"] > 0
 
 
 def test_jl_codec_real_quantization_loss_above_40db():

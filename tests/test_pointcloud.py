@@ -103,7 +103,7 @@ def test_laz_compression_is_an_honest_stub():
 
 def test_extract_las_patches_spark_e2e(spark):
     from pacasam_spark.extract.pointclouds import extract_las_patches
-    from pacasam_spark.imaging import encode, synth_pixels
+    from pacasam_spark.imaging import decode, encode, synth_pixels
 
     clouds_rows, img_rows, patch_rows = [], [], []
     for fi in range(3):
@@ -144,3 +144,17 @@ def test_extract_las_patches_spark_e2e(spark):
     # patch counts sum to the inclusive-mask union per file (no loss)
     total = sum(r["n_points"] for r in rows.values())
     assert total > 0
+    # each cloud is decoded once per file, yet every payload is byte for
+    # byte the per-patch crop (+ colorization) of the whole file
+    cloud_bytes = dict(clouds_rows)
+    ortho = {f: (decode(b, fmt), bounds) for f, b, fmt, *bounds in img_rows}
+    plain = {
+        r["patch_id"]: bytes(r["bytes"])
+        for r in extract_las_patches(clouds, sampling).collect()
+    }
+    assert len(plain) == 12
+    for pid, fid, _split, *bounds in patch_rows:
+        want = crop_las(cloud_bytes[fid], tuple(bounds))
+        assert plain[pid] == want
+        img, ibounds = ortho[fid]
+        assert bytes(rows[pid]["bytes"]) == colorize_las(want, img, tuple(ibounds))

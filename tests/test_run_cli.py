@@ -4,6 +4,10 @@ extraction with {SPLIT}-{id} files + resume."""
 
 import json
 import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +15,8 @@ from pyspark.sql import functions as F
 from pacasam_spark.config import load_sampling_config
 from pacasam_spark.extract.wms import fetch_with_retry, wms_extract
 
-CONFIG = "/root/repo/configs/synthetic.yml"
+ROOT = Path(__file__).resolve().parents[1]
+CONFIG = str(ROOT / "configs" / "synthetic.yml")
 
 
 def test_run_sampling_config_driven(spark, tmp_path):
@@ -128,6 +133,103 @@ def test_run_extraction_reports_unmatched_ids(spark, tmp_path, sampling_and_imag
     ]))
     assert summary["written"] == 20
     assert summary["unmatched_ids"] == 2
+
+
+def _extract(sampling_path, images_path, root, *extra):
+    from pacasam_spark.run_extraction import build_parser, run
+
+    return run(build_parser().parse_args([
+        "-s", sampling_path, "--images_path", images_path, "-d", root, *extra,
+    ]))
+
+
+def _patch_files(root) -> list[str]:
+    return sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(root)
+        if "_manifest" not in d
+        for f in fs
+    )
+
+
+def test_run_extraction_crop_resume_and_incremental(spark, tmp_path):
+    """--crop writes crop-sized files within the lossy tier's 40 dB of
+    the source pixels; a resume writes nothing and commits no manifest
+    part; new ids extract only themselves; a manifest that Spark wrote
+    (older dataset roots) is honoured the same way."""
+    from pacasam_spark.imaging import decode, psnr, synth_pixels
+    from pacasam_spark.sources.images import synthetic_images
+
+    images_path = str(tmp_path / "images.parquet")
+    synthetic_images(spark, n=64, size=32).write.parquet(images_path)
+    ids = spark.read.parquet(images_path).select("image_id").orderBy("image_id")
+    s20, s30 = str(tmp_path / "s20"), str(tmp_path / "s30")
+    ids.limit(20).withColumn("split", F.lit("train")).write.parquet(s20)
+    ids.limit(30).withColumn("split", F.lit("val")).write.parquet(s30)
+    crop = ["--crop", "4,4,16,16", "--out_fmt", "png"]
+
+    root = str(tmp_path / "dataset")
+    r1 = _extract(s20, images_path, root, *crop)
+    assert (r1["written"], r1["unmatched_ids"]) == (20, 0)
+    files = _patch_files(root)
+    assert len(files) == 20
+    for path in files:
+        image_id = os.path.basename(path)[len("TRAIN-"):-len(".png")]
+        arr = decode(open(path, "rb").read(), "png")
+        assert arr.shape[:2] == (16, 16)
+        assert psnr(synth_pixels(image_id, 32, 32)[4:20, 4:20], arr) >= 40.0
+
+    manifest = sorted(os.listdir(os.path.join(root, "_manifest")))
+    r2 = _extract(s20, images_path, root, *crop)
+    assert (r2["written"], r2["skipped_existing_files"]) == (0, 0)
+    assert _patch_files(root) == files
+    assert sorted(os.listdir(os.path.join(root, "_manifest"))) == manifest
+
+    r3 = _extract(s30, images_path, root, *crop)
+    assert (r3["written"], r3["skipped_existing_files"]) == (10, 0)
+    new = sorted(set(_patch_files(root)) - set(files))
+    assert len(new) == 10 and all(os.path.basename(p).startswith("VAL-") for p in new)
+
+    spark_root = str(tmp_path / "spark_written")
+    ids.limit(20).write.parquet(os.path.join(spark_root, "_manifest"))
+    r4 = _extract(s30, images_path, spark_root, *crop)
+    assert (r4["written"], r4["skipped_existing_files"]) == (10, 0)
+    assert [os.path.basename(p) for p in _patch_files(spark_root)] == [
+        os.path.basename(p) for p in new
+    ]
+
+
+def test_run_extraction_job_budget(spark, tmp_path):
+    """On the extract benchmark's shape (250 of 500 64-px images), a
+    fresh extraction submits at most 4 Spark jobs (it was 9 while the
+    resume check and the manifest ran through Spark) and a resume with
+    nothing left submits none. Counted in the app status store."""
+    from perfbench.workloads import CROP, RESIZE
+    from pacasam_spark.sources.images import synthetic_images
+
+    def job_ids() -> set[int]:
+        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    images_path = str(tmp_path / "images.parquet")
+    synthetic_images(spark, n=500, size=64).write.parquet(images_path)
+    sampling_path = str(tmp_path / "sampling")
+    spark.read.parquet(images_path).select("image_id").orderBy("image_id").limit(
+        250
+    ).withColumn("split", F.lit("train")).write.parquet(sampling_path)
+    argv = [
+        "--crop", ",".join(map(str, CROP)), "--resize", ",".join(map(str, RESIZE)),
+        "--out_fmt", "png",
+    ]
+    root = str(tmp_path / "dataset")
+    jobs = []
+    for _ in range(2):
+        last = max(job_ids(), default=-1)
+        summary = _extract(sampling_path, images_path, root, *argv)
+        jobs.append(len({j for j in job_ids() if j > last}))
+    assert summary["written"] == 0 and len(_patch_files(root)) == 250
+    assert jobs[0] <= 4, f"fresh run: {jobs[0]} Spark jobs"
+    assert jobs[1] == 0, f"resume run: {jobs[1]} Spark jobs"
 
 
 def test_wms_fetch_bounded_retry(spark):
@@ -326,7 +428,7 @@ def test_commit_catalogue_cli(spark, tmp_path, capsys):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "commit_catalogue", "/root/repo/tools/commit_catalogue.py"
+        "commit_catalogue", ROOT / "tools" / "commit_catalogue.py"
     )
     cc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cc)
@@ -365,3 +467,30 @@ def test_commit_catalogue_cli(spark, tmp_path, capsys):
     cc.main(["--input", g, "--table", tbl2])
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["rows"] == 100 and out2["layout"] is None
+
+
+def test_tools_run_their_own_checkout(spark, tmp_path):
+    """A tool loads the package from the checkout it sits in, not from
+    another one on the path: a copy whose package fails to import makes
+    the copy's commit_catalogue.py fail, even with this checkout on
+    PYTHONPATH."""
+    copy = tmp_path / "checkout"
+    for name in ("pacasam_spark", "tools", "configs"):
+        shutil.copytree(
+            ROOT / name, copy / name, ignore=shutil.ignore_patterns("__pycache__")
+        )
+    (copy / "pacasam_spark" / "__init__.py").write_text(
+        "raise ImportError('package of the copied checkout')\n"
+    )
+    src = str(tmp_path / "src.parquet")
+    spark.range(10).withColumnRenamed("id", "patch_id").write.parquet(src)
+    out = subprocess.run(
+        [
+            sys.executable, str(copy / "tools" / "commit_catalogue.py"),
+            "--input", src, "--table", str(tmp_path / "table"),
+        ],
+        capture_output=True, text=True, cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(ROOT)},
+    )
+    assert out.returncode != 0
+    assert "package of the copied checkout" in out.stderr

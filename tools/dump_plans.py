@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def plan_of(df) -> str:
@@ -37,7 +38,7 @@ HEADLINE = [
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    out_dir = "/root/repo/plans/r08"
+    out_dir = os.path.join(ROOT, "plans", "r08")
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as E

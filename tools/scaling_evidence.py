@@ -15,13 +15,14 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Parquet-backed like the Diversity twin: an in-JVM CACHED image table
 # (900k x ~10 KB bytes ≈ GBs pinned in heap) re-creates the round-1
 # "heap wall" — cache + broadcast + Python I/O sharing one JVM heap.
 # Both levels scan the SAME on-disk files (identical input bytes).
 EXTRACT_WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, n_images, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -68,7 +69,6 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 # so the measured shape is scan -> Python decode+DCT -> tiny agg.
 TILE_WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, n_images, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -104,7 +104,6 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 
 PREPARE_IMAGES = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 n_images, path = int(sys.argv[1]), sys.argv[2]
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.images import synthetic_images
@@ -117,7 +116,6 @@ print("prepared", path)
 
 PREPARE_PARQUET = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 db_size, path = int(sys.argv[1]), sys.argv[2]
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -137,7 +135,6 @@ print("prepared", path)
 # parquet scan streams instead of pinning the heap.
 PARQUET_WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, db_size, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -195,7 +192,6 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 # ingest instead of per sampling run.
 BUCKETED_WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, db_size, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -253,7 +249,6 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 # (same result_md5), proving the manifest merge is exact at scale.
 SNAPSHOT_WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, db_size, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -300,7 +295,6 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 
 PREPARE_SNAPSHOT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 db_size, path = int(sys.argv[1]), sys.argv[2]
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -317,7 +311,6 @@ print("prepared", path)
 
 PREPARE_SNAPBUCKET = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 db_size, path = int(sys.argv[1]), sys.argv[2]
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -339,7 +332,6 @@ print("prepared", path)
 
 PREPARE_BUCKETED = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 db_size, path = int(sys.argv[1]), sys.argv[2]
 from pacasam_spark.session import get_spark
 from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -354,7 +346,6 @@ print("prepared", path)
 
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, db_size, target, sampler_name = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 from pacasam_spark.session import get_spark
@@ -408,11 +399,19 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 """
 
 
+def worker_argv(script: str, *args: str) -> list[str]:
+    """Command line running ``script`` with this checkout first on
+    ``sys.path``, ahead of the current directory. The root travels as
+    argv[1] and is popped before the script reads its own arguments."""
+    boot = "import sys; sys.path.insert(0, sys.argv.pop(1))\n"
+    return [sys.executable, "-c", boot + script, ROOT, *args]
+
+
 def prepare_parquet(db_size: int, path: str, script: str = PREPARE_PARQUET) -> None:
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
     out = subprocess.run(
-        [sys.executable, "-c", script, str(db_size), path],
+        worker_argv(script, str(db_size), path),
         capture_output=True, text=True, env={**os.environ},
     )
     if "prepared" not in out.stdout:
@@ -431,7 +430,7 @@ def run(cores: int, db_size: int, target: int, sampler: str) -> dict:
         "DiversitySnapBucket": SNAPSHOT_WORKER,
     }.get(sampler, WORKER)
     out = subprocess.run(
-        [sys.executable, "-c", worker, str(cores), str(db_size), str(target), sampler],
+        worker_argv(worker, str(cores), str(db_size), str(target), sampler),
         capture_output=True, text=True, env={**os.environ},
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
@@ -491,6 +490,7 @@ def main() -> None:
     report = {
         "job": f"{sampler} {target} of {db_size}",
         "trials": trials,
+        "cpus_available": len(os.sched_getaffinity(0)),
         f"N_local{n}": r_n,
         f"4N_local{4 * n}": r_4n,
         f"all_sec_local{n}": [round(r["sec"], 2) for r in runs_n],

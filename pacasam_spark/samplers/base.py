@@ -81,6 +81,24 @@ class Sampler:
             S.SAMPLER, pa.array([self.name] * table.num_rows, pa.string())
         )
 
+    def _empty_selection(self) -> pa.Table:
+        """A selection of no rows with :meth:`_finalize`'s schema, without
+        a Spark job: ``patch_id`` gets the Arrow type ``toArrow`` gives the
+        catalogue's column, nullable like a drawn selection's."""
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        id_type = to_arrow_type(
+            self.db.schema[S.PATCH_ID].dataType,
+            prefers_large_types=self.db.sparkSession._jconf.arrowUseLargeVarTypes(),
+        )
+        return pa.schema(
+            [
+                pa.field(S.PATCH_ID, id_type),
+                pa.field(S.SPLIT, pa.string()),
+                pa.field(S.SAMPLER, pa.string()),
+            ]
+        ).empty_table()
+
     # --- stage checkpointing (north rule: resumable mid-job) -----------
 
     @property

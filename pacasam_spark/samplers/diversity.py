@@ -94,6 +94,11 @@ class DiversitySampler(Sampler):
     def get_selection(self, num_to_sample: int | None = None) -> pa.Table:
         if num_to_sample is None:
             num_to_sample = self.cf["target_total_num_patches"]
+        if num_to_sample <= 0:
+            # an empty draw (Triple's budget when the targetted leg fills
+            # the target) needs neither the statistics pass nor the carve
+            self.release()
+            return self._empty_selection()
         dcf = self.cf["DiversitySampler"]
         cols = list(dcf["columns"])
         db, counts = self.prepare()._prepared

@@ -505,3 +505,31 @@ def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     assert fresh == plain and resumed == plain
     assert fresh_jobs <= min(plain_jobs, 26), (fresh_jobs, plain_jobs)
     assert resume_jobs <= 8, f"{resume_jobs} Spark jobs"
+
+
+def test_diversity_zero_budget_submits_no_job(spark, config):
+    """A diversity budget of 0 (Triple's when the targetted leg fills the
+    target) is an empty draw: no statistics pass and no FPS carve, so no
+    Spark job (it took 10). A prepared leg's per-file counts are
+    released, and the empty table has the sampling schema."""
+    from pacasam_spark.sources.synthetic import synthetic_catalogue
+
+    db = synthetic_catalogue(spark, db_size=300, seed=23).cache()
+    db.count()
+    before = _persisted(spark)
+    try:
+        last = max(_job_ids(spark), default=-1)
+        empty = DiversitySampler(db, config).get_selection(num_to_sample=0)
+        assert not {j for j in _job_ids(spark) if j > last}
+
+        prepared = DiversitySampler(db, config).prepare()
+        assert _persisted(spark) > before
+        assert prepared.get_selection(num_to_sample=0).num_rows == 0
+        assert _persisted(spark) == before
+
+        drawn = DiversitySampler(db, config).get_selection(num_to_sample=5)
+    finally:
+        db.unpersist()
+    assert empty.num_rows == 0
+    assert empty.schema == drawn.schema
+    assert drawn.num_rows == 5

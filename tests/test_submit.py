@@ -12,6 +12,7 @@ import json
 import os
 import pathlib
 import subprocess
+import sys
 import zipfile
 
 import duckdb
@@ -82,3 +83,40 @@ def test_spark_submit_py_files_sampling(tmp_path):
         f"select count(*), count(distinct patch_id) from read_parquet('{path}')"
     ).fetchone()
     assert n == 100 and n_ids == 100
+
+
+PROBE_JVM_ARGS = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pacasam_spark.session import get_spark
+spark = get_spark(
+    cores=1, extra_conf={"spark.driver.extraJavaOptions": "-Dpacasam.probe=1"}
+)
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+print(json.dumps(list(mx.getRuntimeMXBean().getInputArguments())))
+"""
+
+
+def test_get_spark_keeps_compile_thresholds_with_caller_java_options(tmp_path):
+    """The JVM that get_spark launches runs with the raised C2 compile
+    thresholds, and a caller's own spark.driver.extraJavaOptions is added
+    to them rather than replacing them. A fresh process, because only the
+    call that launches the JVM can set its flags."""
+    proc = subprocess.run(
+        [sys.executable, "-c", PROBE_JVM_ARGS,
+         str(pathlib.Path(__file__).resolve().parents[1])],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    args = json.loads(proc.stdout.strip().splitlines()[-1])
+    for flag in (
+        "-XX:Tier4InvocationThreshold=50000",
+        "-XX:Tier4MinInvocationThreshold=6000",
+        "-XX:Tier4CompileThreshold=150000",
+        "-XX:Tier4BackEdgeThreshold=400000",
+        "-Dpacasam.probe=1",
+    ):
+        assert flag in args, args

@@ -22,7 +22,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # "heap wall" — cache + broadcast + Python I/O sharing one JVM heap.
 # Both levels scan the SAME on-disk files (identical input bytes).
 EXTRACT_WORKER = r"""
-import json, sys, time
+import sys, time
 cores, n_images, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -58,8 +58,7 @@ row = out.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['bsum']}|{row['blen']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
 """
 
 # Tile-fingerprint-index twin (image payload): decode every image, cut
@@ -68,7 +67,7 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 # level dedup index build. Zero shuffles; output bytes are negligible,
 # so the measured shape is scan -> Python decode+DCT -> tiny agg.
 TILE_WORKER = r"""
-import json, sys, time
+import sys, time
 cores, n_images, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -98,8 +97,7 @@ row = idx.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hx']}|{row['cs']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
 """
 
 PREPARE_IMAGES = r"""
@@ -134,7 +132,7 @@ print("prepared", path)
 # GC pressure from cache + shuffle + window sort sharing one heap. A
 # parquet scan streams instead of pinning the heap.
 PARQUET_WORKER = r"""
-import json, sys, time
+import sys, time
 cores, db_size, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -180,8 +178,7 @@ row = sel.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
 """
 
 # Bucketed variant of the parquet worker (verdict r2 item 8): the
@@ -191,7 +188,7 @@ print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
 # exchanges — one of the two full-data shuffles is gone, paid once at
 # ingest instead of per sampling run.
 BUCKETED_WORKER = r"""
-import json, sys, time
+import sys, time
 cores, db_size, target, _ = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 import os
@@ -236,8 +233,7 @@ row = sel.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
 """
 
 # Manifest-fed variant (round-7): the catalogue is a SNAPSHOT TABLE whose
@@ -289,8 +285,7 @@ row = sel.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
 """
 
 PREPARE_SNAPSHOT = r"""
@@ -345,7 +340,7 @@ print("prepared", path)
 """
 
 WORKER = r"""
-import json, sys, time
+import sys, time
 cores, db_size, target, sampler_name = (
     sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
 from pacasam_spark.session import get_spark
@@ -394,17 +389,32 @@ row = sel.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
-print(json.dumps({"cores": int(cores), "sec": dt, "n": row["n"],
-                  "patches_per_sec": row["n"]/dt, "result_md5": h}))
+emit(spark, cores, dt, row["n"], h)
+"""
+
+
+# Prelude of every worker: this checkout first on sys.path, and emit(),
+# which prints a measured run as one JSON line. The line carries the
+# JVM's -XX: input arguments, so a recorded run says which compile
+# policy it measured.
+BOOT = r"""
+import json, sys; sys.path.insert(0, sys.argv.pop(1))
+
+def emit(spark, cores, sec, n, result_md5):
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = mx.getRuntimeMXBean().getInputArguments()
+    print(json.dumps({"cores": int(cores), "sec": sec, "n": n,
+                      "patches_per_sec": n / sec, "result_md5": result_md5,
+                      "jvm_xx_flags": [a for a in args if a.startswith("-XX:")]}))
 """
 
 
 def worker_argv(script: str, *args: str) -> list[str]:
-    """Command line running ``script`` with this checkout first on
-    ``sys.path``, ahead of the current directory. The root travels as
-    argv[1] and is popped before the script reads its own arguments."""
-    boot = "import sys; sys.path.insert(0, sys.argv.pop(1))\n"
-    return [sys.executable, "-c", boot + script, ROOT, *args]
+    """Command line running ``script`` after :data:`BOOT`, with this
+    checkout first on ``sys.path``, ahead of the current directory. The
+    root travels as argv[1] and is popped before the script reads its
+    own arguments."""
+    return [sys.executable, "-c", BOOT + script, ROOT, *args]
 
 
 def prepare_parquet(db_size: int, path: str, script: str = PREPARE_PARQUET) -> None:

@@ -60,19 +60,24 @@ class Sampler:
         return self.db.sparkSession.createDataFrame(selection)
 
     def _finalize(
-        self, selection: DataFrame, split_keys: str | list[str] = S.FILE_ID, seed_offset: int = 0
+        self,
+        selection: DataFrame | pa.Table,
+        split_keys: str | list[str] = S.FILE_ID,
+        seed_offset: int = 0,
     ) -> pa.Table:
-        """Collect the selection with its strata keys (one job), assign
-        the split on the driver (P8), tag the sampler name and project to
-        the sampling schema.
+        """Collect the selection with its strata keys (one job; none when
+        it is already an Arrow table), assign the split on the driver
+        (P8), tag the sampler name and project to the sampling schema.
 
         Mirrors ``_set_validation_patches_with_stratification``
         (reference: samplers/sampler.py:53-65): frac applies to the size of
         THIS selection.
         """
         keys = [split_keys] if isinstance(split_keys, str) else list(split_keys)
+        if isinstance(selection, DataFrame):
+            selection = selection.select(S.PATCH_ID, *keys).toArrow()
         table = assign_split(
-            selection.select(S.PATCH_ID, *keys).toArrow(),
+            selection,
             self.cf.get("frac_validation_set"),
             keys=keys,
             seed=self.seed + seed_offset,
@@ -80,24 +85,6 @@ class Sampler:
         return table.append_column(
             S.SAMPLER, pa.array([self.name] * table.num_rows, pa.string())
         )
-
-    def _empty_selection(self) -> pa.Table:
-        """A selection of no rows with :meth:`_finalize`'s schema, without
-        a Spark job: ``patch_id`` gets the Arrow type ``toArrow`` gives the
-        catalogue's column, nullable like a drawn selection's."""
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        id_type = to_arrow_type(
-            self.db.schema[S.PATCH_ID].dataType,
-            prefers_large_types=self.db.sparkSession._jconf.arrowUseLargeVarTypes(),
-        )
-        return pa.schema(
-            [
-                pa.field(S.PATCH_ID, id_type),
-                pa.field(S.SPLIT, pa.string()),
-                pa.field(S.SAMPLER, pa.string()),
-            ]
-        ).empty_table()
 
     # --- stage checkpointing (north rule: resumable mid-job) -----------
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.fps import fps_sample
@@ -23,6 +24,15 @@ from pacasam_spark.operators.normalize import (
     standardize,
 )
 from pacasam_spark.samplers.base import Sampler
+
+
+def _no_rows(df: DataFrame) -> pa.Table:
+    """No rows, typed as ``df.toArrow()`` types them, without its Spark
+    job (``df.limit(0).toArrow()`` submits one). Every column nullable,
+    as in a drawn selection."""
+    large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes")
+    schema = to_arrow_schema(df.schema, prefers_large_types=large == "true")
+    return pa.schema([f.with_nullable(True) for f in schema]).empty_table()
 
 
 class DiversitySampler(Sampler):
@@ -98,7 +108,7 @@ class DiversitySampler(Sampler):
             # an empty draw (Triple's budget when the targetted leg fills
             # the target) needs neither the statistics pass nor the carve
             self.release()
-            return self._empty_selection()
+            return self._finalize(_no_rows(self.db.select(S.PATCH_ID, S.FILE_ID)))
         dcf = self.cf["DiversitySampler"]
         cols = list(dcf["columns"])
         db, counts = self.prepare()._prepared

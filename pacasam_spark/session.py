@@ -105,25 +105,30 @@ def get_spark(
         # the genuinely small sides (q03/q33/q41 plan gates).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
-        # C2 promotion thresholds at 10x the JDK 17 defaults. A sampling
-        # run's Spark code is lukewarm (each new seed brings newly
-        # generated classes): at the defaults C2 spent ~5 of a Triple
-        # operation's 11-13 JVM CPU-s compiling it. At 10x that code
-        # stays in C1, while loops over millions of rows still cross the
-        # thresholds and reach C2. The price is wall time where C2 used
-        # idle cores (BENCH.md, 4 vCPU: warm bench operations ~13 % and
-        # a 20M-row local[4] DiversitySampler run ~7 % slower). Spark
-        # prepends defaultJavaOptions to extraJavaOptions, so a caller's
-        # extraJavaOptions keeps these. They apply only when this call
-        # launches the JVM.
+        # C2 promotion thresholds: per-method ones at 10x the JDK 17
+        # defaults, the loop (on-stack replacement) one at 3x. At the
+        # defaults C2 spent ~5 of a warm Triple operation's 11-13 JVM
+        # CPU-s compiling lukewarm Spark code, which now stays in C1;
+        # loops over millions of rows still cross the thresholds. That
+        # it is new per seed (seeds inlined as literals in generated
+        # classes) is a guess, not checked. BENCH.md (4 vCPU): a cold
+        # run_sampling CLI run -15 % process CPU, warm bench operations
+        # -27 %, the 20M-row local[4] DiversitySampler run level.
+        # Spark prepends defaultJavaOptions to extraJavaOptions, so a
+        # caller's extraJavaOptions keeps these; but this value replaces
+        # a spark.driver.defaultJavaOptions from spark-defaults.conf, so
+        # site-wide driver options belong in extraJavaOptions. They
+        # apply only when this call launches the JVM.
         # Measured dead ends, do not retry: C1-only
         # (-XX:TieredStopAtLevel=1) cut bench CPU further but made the
         # data-bound 5M-row DiversitySampler run 1.8x slower; 100x
-        # thresholds were worse than 10x on both.
+        # thresholds were worse than 10x on both; all four at 10x made
+        # the 20M-row run ~7 % slower; the loop one at its default, or
+        # all four at 3x, kept less than half the bench CPU saving.
         .config(
             "spark.driver.defaultJavaOptions",
             "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
-            " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000",
+            " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=120000",
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -116,7 +116,7 @@ def test_get_spark_keeps_compile_thresholds_with_caller_java_options(tmp_path):
         "-XX:Tier4InvocationThreshold=50000",
         "-XX:Tier4MinInvocationThreshold=6000",
         "-XX:Tier4CompileThreshold=150000",
-        "-XX:Tier4BackEdgeThreshold=400000",
+        "-XX:Tier4BackEdgeThreshold=120000",
         "-Dpacasam.probe=1",
     ):
         assert flag in args, args

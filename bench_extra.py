@@ -103,7 +103,7 @@ def profile_triple(spark, sf_dir):
 def profile_triple_sub(spark, sf_dir):
     """Sub-stage detail: one targetted branch + diversity internals."""
     from pacasam_spark.operators.fps import fps_sample
-    from pacasam_spark.operators.normalize import standardize
+    from pacasam_spark.operators.normalize import CatalogueProfile, standardize
     from pacasam_spark.operators.sampling import sample_with_stratification
     from pacasam_spark.operators.split import assign_split
     from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -128,16 +128,18 @@ def profile_triple_sub(spark, sf_dir):
     db.cache().count()
     print("  [triple-sub] diversity internals (n=8000)")
     sub = db.select("patch_id", "file_id", *cols)
-    with t("standardize fused pass (stats .first)"):
-        normed, counts = standardize(sub, cols, file_counts_key="file_id")
-    with t("fps_sample: construct (total/max probes)"):
+    profile = CatalogueProfile.of(sub, cols)
+    with t("standardize profile pass (stats .first)"):
+        normed = standardize(sub, cols, stats=profile)
+    with t("fps_sample: construct (profile totals)"):
         fps = fps_sample(
-            normed, 8000, feature_cols=cols, max_chunk_size=20000, counts=counts
+            normed, 8000, feature_cols=cols, max_chunk_size=20000, profile=profile
         )
     with t("fps_sample: noop run (carve+trim)"):
         noop(fps)
     with t("collect fps sel + assign_split on the driver"):
         assign_split(fps.select("patch_id", "file_id").toArrow(), 0.1, seed=44)
+    profile.release()
     db.unpersist()
     spark.catalog.clearCache()
 

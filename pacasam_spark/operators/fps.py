@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pacasam_spark import schemas as S
+from pacasam_spark.operators.normalize import CatalogueProfile
 
 CHUNK_ID = "__chunk_id"
 GLOBAL_RANK = "__global_rank"
@@ -278,7 +279,7 @@ def fps_sample(
     max_chunk_size: int = 5000,
     order_keys: tuple[str, str] = (S.FILE_ID, S.PATCH_ID),
     keep_cols: list[str] | None = None,
-    counts: DataFrame | None = None,
+    profile: CatalogueProfile | None = None,
     skew_threshold: int = SKEW_THRESHOLD_ROWS,
 ) -> DataFrame:
     """M4: chunked FPS selection of ``num_to_sample`` rows.
@@ -286,34 +287,19 @@ def fps_sample(
     Returns keep_cols (default [patch_id, file_id]) + CHUNK_ID + FPS_RANK,
     trimmed to the global quota.
 
-    ``counts``: a precomputed ``(file_key, count)`` table. Callers that
-    already aggregated the catalogue (normalize's fused
-    ``file_counts_key`` pass) hand it in so this function adds NO extra
-    full-data scan; otherwise one ``groupBy(file).count()`` pass runs
-    here. ``skew_threshold`` is forwarded to the hot-file rank guard
-    (parameterized so tests can force the bucketed-rank path on small
-    data)."""
+    ``profile``: the catalogue's :class:`CatalogueProfile` by the file
+    key. Its total (quota arithmetic), largest file (skew-guard
+    decision) and per-file counts (chunk offsets) cost this function NO
+    job when the caller's profile is already built; without one, a plain
+    per-file count is aggregated here. ``skew_threshold`` is forwarded to
+    the hot-file rank guard (parameterized so tests can force the
+    bucketed-rank path on small data)."""
     file_key, id_key = order_keys
     keep = keep_cols or [id_key, file_key]
-    # Both the global total and the chunk offsets derive from the (tiny)
-    # counts table — computed here only if the caller didn't already pay
-    # for a per-file aggregation pass.
-    if counts is None:
-        counts = df.groupBy(file_key).count().persist()
-    # ONE driver barrier for both scalars the pipeline needs (guide §1.2:
-    # fewer jobs): the global total (quota arithmetic) and the max per-file
-    # count (skew-guard decision) ride the same tiny aggregation — or no
-    # job at all when the counts table was built from snapshot manifests,
-    # which stamp the totals on the DataFrame driver-side.
-    totals = getattr(counts, "_pacasam_totals", None)
-    if totals is not None:
-        total, max_count = int(totals[0]), int(totals[1])
-    else:
-        total_row = counts.agg(
-            F.sum("count").alias("n"), F.max("count").alias("mx")
-        ).first()
-        total = int(total_row["n"] or 0)
-        max_count = int(total_row["mx"] or 0)
+    if profile is None:
+        profile = CatalogueProfile.of(df, key=file_key, persist=False)
+    profile.build()
+    total, max_count = profile.total_rows, profile.max_rows_per_file
     if total == 0:
         return df.select(*keep).withColumn(CHUNK_ID, F.lit(0)).withColumn(
             FPS_RANK, F.lit(0)
@@ -324,7 +310,7 @@ def fps_sample(
         df,
         max_chunk_size,
         order_keys,
-        counts=counts,
+        counts=profile.per_file.select(file_key, "count"),
         skew_threshold=skew_threshold,
         keep_rank=True,
         max_count=max_count,

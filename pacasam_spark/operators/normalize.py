@@ -6,21 +6,29 @@ Reference semantics (samplers/algos.py:64-91):
    transform to uniform [0,1],
 3. NaN -> per-column min of the normalized values (0 if all were zero).
 
-Spark design: two aggregate passes (stats, then mins of the normalized
-values) broadcast back as literals — no shuffle of the data itself, all
-column arithmetic stays in whole-stage codegen. The quantile variant builds
-a per-column grid with ``approxQuantile`` (exact at relativeError=0) and
-interpolates with pure fold/element_at expressions (:func:`interp_expr`) —
-also codegen, no Python hop, and text-identical to the DuckDB oracle twin.
+Spark design: one exact aggregation pass gives the statistics, which go
+back into the plan as literals — no shuffle of the data itself, all column
+arithmetic stays in whole-stage codegen. A sampling run takes them from its
+:class:`CatalogueProfile`, the one grouped aggregation by file_id that also
+counts each file's rows and targets; a bare :func:`standardize` aggregates
+globally. The quantile variant builds a per-column grid with
+``approxQuantile`` (exact at relativeError=0), fills with the min of the
+normalized values (a second pass) and interpolates with pure
+fold/element_at expressions (:func:`interp_expr`) — also codegen, no Python
+hop, and text-identical to the DuckDB oracle twin.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pacasam_spark.operators.filters import assert_no_nan
+from pacasam_spark import schemas as S
+from pacasam_spark.operators.filters import UnexpectedNaNValuesError, assert_no_nan
 
 EPSILON = 1e-5  # reference: samplers/algos.py:14 (EPSILON = 10e-6)
 
@@ -31,9 +39,10 @@ _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 def _stat_partial_aggs(types: dict, masked: dict, columns: list[str]) -> list:
     """The per-column aggregation expressions of :func:`standardize` —
     every one is decomposable (sum/count/min), so the same list serves
-    the single global agg AND the per-file grouped agg of the fused
-    pass (whose partials then merge exactly on the tiny per-file
-    table)."""
+    the single global agg AND the per-file grouped agg of
+    :class:`CatalogueProfile` (whose partials then merge exactly on the
+    tiny per-file table). Integral squares are taken after the decimal
+    cast: a long square overflows beyond |x| ~ 3.04e9."""
     aggs = []
     for c in columns:
         x = masked[c]
@@ -46,9 +55,10 @@ def _stat_partial_aggs(types: dict, masked: dict, columns: list[str]) -> list:
         ]
         if types[c] in _INTEGRAL:
             xi = F.nullif(F.col(c).cast("long"), F.lit(0))
+            xd = xi.cast("decimal(38,0)")
             aggs += [
                 F.sum(xi).alias(f"s_{c}"),
-                F.sum((xi * xi).cast("decimal(38,0)")).alias(f"ssq_{c}"),
+                F.sum(xd * xd).alias(f"ssq_{c}"),
             ]
         else:
             dec = "decimal(38,6)"
@@ -138,7 +148,7 @@ def _stat_partials_fast(
 
 
 def _stat_merge_aggs_fast(types: dict, columns: list[str]) -> list:
-    """Merge of :func:`_stat_partial_aggs_fast` partials: every part is a
+    """Merge of :func:`_stat_partials_fast` partials: every part is a
     long sum (re-sum), mins re-min — exact, like the classic merge."""
     aggs = []
     for c in columns:
@@ -215,13 +225,123 @@ def _stat_merge_aggs(columns: list[str]) -> list:
     return aggs
 
 
+def _require_ansi(df: DataFrame) -> None:
+    if df.sparkSession.conf.get("spark.sql.ansi.enabled") != "true":
+        # the split-long sums are exact only because ANSI raises on
+        # overflow; with it off an overflowing cast is NULL and the row
+        # silently drops out of the sums
+        raise ValueError(
+            "standardize needs spark.sql.ansi.enabled=true: its exact "
+            "statistics rely on overflow raising instead of turning NULL"
+        )
+
+
+def _global_stats(df: DataFrame, columns: list[str]):
+    """The merged statistics of ``columns`` from one global aggregation
+    (fast split-long partials, classic decimals on overflow)."""
+    _require_ansi(df)
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
+    proj, fast_aggs = _stat_partials_fast(types, masked, columns)
+    try:
+        return _stats_from_fast(df.select(*proj).agg(*fast_aggs).first(), types, columns)
+    except Exception as e:  # ANSI overflow -> exact decimal fallback
+        if not _is_overflow_error(e):
+            raise
+        return df.agg(*_stat_partial_aggs(types, masked, columns)).first()
+
+
+@dataclass
+class CatalogueProfile:
+    """What a sampling run needs to know about its catalogue, from ONE
+    grouped aggregation by ``key`` (file_id). Per file, the persisted
+    ``per_file`` table holds its rows (``count``), one count per boolean
+    target column and the exact statistics partials of the feature
+    columns; one merge job turns it into ``total_rows``,
+    ``max_rows_per_file``, ``target_max`` (each target's largest
+    per-file count) and ``stats``, the global statistics
+    :func:`standardize` reads. Partials merge exactly, so every value
+    equals its single-pass global aggregation.
+
+    :meth:`of` describes the aggregation without running it; the first
+    :meth:`build` runs it — inside :func:`standardize` when that is the
+    first reader. ``sources.snapshots.snapshot_fps_inputs`` returns a
+    profile built from snapshot manifests, with no scan. Whoever makes a
+    profile calls ``release()`` once its last reader has run."""
+
+    per_file: DataFrame | None = None
+    total_rows: int = 0
+    max_rows_per_file: int = 0
+    target_max: dict[str, int] = field(default_factory=dict)
+    stats: dict | None = None
+    # unpersists the per-file table; a no-op while nothing is cached
+    release: Callable[[], object] = field(default=lambda: None, repr=False)
+    source: tuple | None = field(default=None, repr=False)
+
+    @classmethod
+    def of(
+        cls,
+        df: DataFrame,
+        columns=(),
+        targets=(),
+        key: str = S.FILE_ID,
+        persist: bool = True,
+    ) -> "CatalogueProfile":
+        """The unbuilt profile of ``df``: statistics of ``columns``,
+        counts of the boolean ``targets``. ``persist=False`` for a
+        reader of the merged figures alone, which never re-reads the
+        per-file table."""
+        return cls(source=(df, list(columns), list(targets), key, persist))
+
+    def build(self) -> "CatalogueProfile":
+        """Run the aggregation and its merge (once; later calls return
+        the built profile)."""
+        if self.source is None:
+            return self
+        df, columns, targets, key, persist = self.source
+        if columns:
+            _require_ansi(df)
+        types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
+        per_target = [F.sum(F.col(t).cast("int")).alias(t) for t in targets]
+        merged = [
+            F.sum("count").alias("__rows"),
+            F.max("count").alias("__mx"),
+            *[F.max(t).alias(t) for t in targets],
+        ]
+
+        def grouped(frame, aggs):
+            per_file = frame.groupBy(key).agg(F.count("*").alias("count"), *aggs)
+            if persist:
+                self.release = per_file.persist().unpersist
+            return per_file
+
+        proj, fast_aggs = _stat_partials_fast(types, masked, columns)
+        per_file = grouped(df.select(key, *targets, *proj), per_target + fast_aggs)
+        try:
+            row = per_file.agg(*_stat_merge_aggs_fast(types, columns), *merged).first()
+            stats = _stats_from_fast(row, types, columns)
+        except Exception as e:  # ANSI overflow -> exact decimal fallback
+            if not _is_overflow_error(e):
+                raise
+            self.release()
+            per_file = grouped(df, per_target + _stat_partial_aggs(types, masked, columns))
+            row = stats = per_file.agg(*_stat_merge_aggs(columns), *merged).first()
+        self.per_file = per_file
+        self.total_rows = int(row["__rows"] or 0)
+        self.max_rows_per_file = int(row["__mx"] or 0)
+        self.target_max = {t: int(row[t] or 0) for t in targets}
+        self.stats = stats if columns else None
+        self.source = None
+        return self
+
+
 def standardize(
     df: DataFrame,
     columns: list[str],
     check_nan: bool = True,
-    file_counts_key: str | None = None,
-    stats: dict | None = None,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+    stats: dict | CatalogueProfile | None = None,
+) -> DataFrame:
     """M1: zero-ignoring standardization with min-fill — ONE aggregation
     pass over the data.
 
@@ -230,95 +350,21 @@ def standardize(
     FPS selections vary with cluster size. Exact sums instead:
 
     - integral columns: plain long sum (exact to ~10^12 rows of 32-bit
-      values) + DECIMAL(38,0) sum of exact long squares;
+      values) + DECIMAL(38,0) sum of exact squares;
     - float columns: DECIMAL(38,6) sums (slower but exact).
 
     The NaN guard and the min-fill value ride the same pass: the transform
     is monotonic, so min(normalized) == normalize(min(masked)).
 
-    With ``file_counts_key``, the pass is grouped by that column and
-    returns ``(normalized_df, counts_df)`` where ``counts_df`` is
-    ``(file_counts_key, count)`` — the per-file count table chunked FPS
-    needs. This FUSES the Diversity pipeline's two catalogue scans
-    (normalize stats + groupBy(file).count) into one: the grouped agg
-    is still a partial-agg map-side combine, its output is one row per
-    file (thousands for billions of patches), and the global statistics
-    are merged from those partials with exact arithmetic — bit-identical
-    results, one fewer full-data read (round-5 verdict: the stats agg is
-    the memory-bandwidth-bound stage that caps single-box scaling).
-
-    With ``stats``, the aggregation pass is SKIPPED entirely: the caller
-    supplies the merged statistics (keys ``cnt_<c>/min_<c>/nan_<c>/
-    s_<c>/ssq_<c>``, the shape :func:`_stat_merge_aggs` produces and
-    ``sources.snapshots.snapshot_fps_inputs`` reads back from snapshot
-    manifests) and this function only builds the transform expressions —
-    ZERO scans, the manifest-fed path that makes the Diversity pipeline
-    a single-scan job over a snapshot-table catalogue."""
-    if stats is None and df.sparkSession.conf.get("spark.sql.ansi.enabled") != "true":
-        # the split-long sums are exact only because ANSI raises on
-        # overflow; with it off an overflowing cast is NULL and the row
-        # silently drops out of the sums
-        raise ValueError(
-            "standardize needs spark.sql.ansi.enabled=true: its exact "
-            "statistics rely on overflow raising instead of turning NULL"
-        )
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
-
-    counts = None
-    if stats is not None:
-        if file_counts_key is not None:
-            raise ValueError(
-                "stats= supplies precomputed statistics; the fused "
-                "file_counts_key pass has nothing to aggregate — get the "
-                "counts table from the same source as the stats"
-            )
-    elif file_counts_key is None:
-        proj, fast_aggs = _stat_partials_fast(types, masked, columns)
-        try:
-            row = df.select(*proj).agg(*fast_aggs).first()
-            stats = _stats_from_fast(row, types, columns)
-        except Exception as e:  # ANSI overflow -> exact decimal fallback
-            if not _is_overflow_error(e):
-                raise
-            stats = df.agg(*_stat_partial_aggs(types, masked, columns)).first()
-    else:
-        # the FPS quota/skew scalars (total rows, max per-file count) ride
-        # the same merge job and are stamped on the counts DataFrame, so
-        # fps_sample runs NO aggregation job of its own (same values)
-        fps_totals = [
-            F.sum("count").alias("__total"),
-            F.max("count").alias("__mx"),
-        ]
-        proj, fast_aggs = _stat_partials_fast(types, masked, columns)
-        try:
-            per_file = (
-                df.select(file_counts_key, *proj)
-                .groupBy(file_counts_key)
-                .agg(F.count("*").alias("count"), *fast_aggs)
-                .persist()
-            )
-            row = per_file.agg(
-                *_stat_merge_aggs_fast(types, columns), *fps_totals
-            ).first()
-            stats = _stats_from_fast(row, types, columns)
-        except Exception as e:
-            if not _is_overflow_error(e):
-                raise
-            per_file.unpersist()
-            per_file = (
-                df.groupBy(file_counts_key)
-                .agg(
-                    F.count("*").alias("count"),
-                    *_stat_partial_aggs(types, masked, columns),
-                )
-                .persist()
-            )
-            row = per_file.agg(*_stat_merge_aggs(columns), *fps_totals).first()
-            stats = row
-        counts = per_file.select(file_counts_key, "count")
-        counts._pacasam_totals = (int(row["__total"] or 0), int(row["__mx"] or 0))
-        counts._pacasam_cache = per_file
+    ``stats``: the merged statistics (keys ``cnt_<c>/min_<c>/nan_<c>/
+    s_<c>/ssq_<c>``, the shape :func:`_stat_merge_aggs` produces), or a
+    :class:`CatalogueProfile` holding them — built here when unbuilt, so
+    its grouped aggregation is this function's one pass. With either,
+    no global aggregation runs; without, one does over ``df``."""
+    if isinstance(stats, CatalogueProfile):
+        stats = stats.build().stats
+    elif stats is None:
+        stats = _global_stats(df, columns)
 
     if check_nan:
         bad = [c for c in columns if stats[f"nan_{c}"]]
@@ -327,6 +373,7 @@ def standardize(
                 f"NaN/NULL values in feature columns: {bad}"
             )
 
+    masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
     normed = df
     for c in columns:
         n = stats[f"cnt_{c}"]
@@ -343,16 +390,7 @@ def standardize(
             c,
             F.coalesce((masked[c] - F.lit(mean)) / F.lit(std + EPSILON), F.lit(fill)),
         )
-    return normed if counts is None else (normed, counts)
-
-
-def release_counts(counts: DataFrame | None) -> None:
-    """Unpersist the per-file aggregate a fused pass's ``counts`` table
-    is projected from; call it once every pipeline that reads ``counts``
-    has been collected. A no-op for any other table."""
-    cached = getattr(counts, "_pacasam_cache", None)
-    if cached is not None:
-        cached.unpersist()
+    return normed
 
 
 def interp_expr(v, grid: list[float], refs: list[float]):
@@ -396,8 +434,7 @@ def quantile_transform(
     n_quantiles: int = 50,
     check_nan: bool = True,
     grids: dict[str, list[float]] | None = None,
-    file_counts_key: str | None = None,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """M2: empirical-CDF transform to uniform [0,1], zero-ignoring, min-fill.
 
     Mirrors sklearn's QuantileTransformer grid+interp shape
@@ -407,12 +444,6 @@ def quantile_transform(
     PURE column expressions — whole-stage codegen, no Python hop, and
     ANSI-SQL expressible for the oracle (driver q42). Deterministic — no
     subsample cap needed at our scale (the reference caps at 100k rows).
-
-    With ``file_counts_key``, the min-fill pass is grouped by that column
-    and ``(normalized_df, counts_df)`` is returned — same fusion as
-    :func:`standardize`: the per-file count table chunked FPS needs rides
-    the aggregation this transform already pays for (min of per-file mins
-    is exact, so values are unchanged).
     """
     if check_nan:
         assert_no_nan(df, columns)
@@ -432,32 +463,10 @@ def quantile_transform(
         refs = list(np.linspace(0.0, 1.0, len(grid)))
         normed = normed.withColumn(c, interp_expr(masked[c], grid, refs))
 
-    min_aggs = [F.min(c).alias(f"min_{c}") for c in columns]
-    counts = None
-    if file_counts_key is None:
-        mins_row = normed.agg(*min_aggs).first()
-    else:
-        per_file = (
-            normed.groupBy(file_counts_key)
-            .agg(F.count("*").alias("count"), *min_aggs)
-            .persist()
-        )
-        mins_row = per_file.agg(
-            *[F.min(f"min_{c}").alias(f"min_{c}") for c in columns],
-            F.sum("count").alias("__total"),
-            F.max("count").alias("__mx"),
-        ).first()
-        counts = per_file.select(file_counts_key, "count")
-        # same contract as the standardize fused path: FPS scalars ride
-        # the merge job, fps_sample skips its own aggregation
-        counts._pacasam_totals = (
-            int(mins_row["__total"] or 0),
-            int(mins_row["__mx"] or 0),
-        )
-        counts._pacasam_cache = per_file
+    mins_row = normed.agg(*[F.min(c).alias(f"min_{c}") for c in columns]).first()
     for c in columns:
         fill = mins_row[f"min_{c}"]
         normed = normed.withColumn(
             c, F.coalesce(F.col(c), F.lit(0.0 if fill is None else float(fill)))
         )
-    return normed if counts is None else (normed, counts)
+    return normed

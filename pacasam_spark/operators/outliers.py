@@ -77,9 +77,9 @@ def knn_outlier_scores(
 ) -> DataFrame:
     """Adds (cluster_id, outlier_score in [0,1]) per row, chunk-locally.
 
-    ``counts``: precomputed (file_id, count) table — callers that fused a
-    per-file aggregation (normalize's ``file_counts_key``) hand it in so
-    chunk assignment adds no extra full-data scan. Within-chunk order is
+    ``counts``: precomputed (file_id, count) table — callers with a
+    catalogue profile hand in its persisted per-file table so chunk
+    assignment adds no extra full-data scan. Within-chunk order is
     the single-long GLOBAL_RANK — the same (file_id, patch_id) total
     order FPS's carve stage uses (one order discipline, 8-byte sort-key
     comparisons even when patch ids are strings)."""

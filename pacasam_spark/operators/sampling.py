@@ -46,7 +46,7 @@ def sample_randomly(
 _HASH_BUCKET = 1 << 16  # det_hash range is [0, 2^31) -> 32768 buckets
 
 # single source of truth for the auto-salt skew threshold, so callers that
-# can BOUND their stratum sizes (e.g. TargettedSampler's fused probe) can
+# can BOUND their stratum sizes (e.g. from the catalogue profile) can
 # skip the detection job without duplicating the constant
 _DEFAULT_SALT_THRESHOLD = 2_000_000
 

@@ -15,6 +15,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.split import assign_split
@@ -58,6 +59,35 @@ class Sampler:
 
     def _as_dataframe(self, selection: pa.Table) -> DataFrame:
         return self.db.sparkSession.createDataFrame(selection)
+
+    def _no_selection(self) -> pa.Table:
+        """An empty selection with the sampling schema, typed as
+        ``toArrow`` types a drawn one, without its Spark job
+        (``df.limit(0).toArrow()`` submits one). Every column nullable,
+        as in a drawn selection."""
+        df = self.db.select(S.PATCH_ID, S.FILE_ID)
+        large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes")
+        schema = to_arrow_schema(df.schema, prefers_large_types=large == "true")
+        return self._finalize(
+            pa.schema([f.with_nullable(True) for f in schema]).empty_table()
+        )
+
+    def _manifest_profile(self, block: str):
+        """The catalogue profile of a snapshot-table catalogue whose
+        manifests carry the exact normalization partials + per-file_id
+        counts of ``block``'s columns (write_snapshot(norm_columns=,
+        count_key=)): no statistics scan, bit-identical to the in-scan
+        pass (tests/test_manifest_stats.py)."""
+        from pacasam_spark.sources.snapshots import snapshot_fps_inputs
+
+        bcf = self.cf[block]
+        return snapshot_fps_inputs(
+            self.db.sparkSession,
+            bcf["manifest_stats"]["dir"],
+            list(bcf["columns"]),
+            key=S.FILE_ID,
+            version=bcf["manifest_stats"].get("version"),
+        )
 
     def _finalize(
         self,

@@ -22,7 +22,7 @@ from pacasam_spark.operators.outliers import (
     glosh_outlier_scores,
     knn_outlier_scores,
 )
-from pacasam_spark.operators.normalize import release_counts, standardize
+from pacasam_spark.operators.normalize import CatalogueProfile, standardize
 from pacasam_spark.samplers.base import Sampler
 
 
@@ -36,58 +36,50 @@ class OutliersSampler(Sampler):
         ocf = self.cf["OutliersSampler"]
         cols = list(ocf["columns"])
 
-        db = self.db.select(S.PATCH_ID, S.FILE_ID, *cols)
         # always standardization: "the only one that gives good outliers"
-        # (reference: outliers.py:40-41); the per-file counts chunking
-        # needs ride the same fused aggregation pass — or, over a
-        # snapshot-table catalogue with recorded partials, come straight
-        # from the manifests with no stats scan at all (see
-        # samplers/diversity.py for the manifest_stats contract)
-        snap = ocf.get("manifest_stats")
-        if snap:
-            from pacasam_spark.sources.snapshots import snapshot_fps_inputs
-
-            stats, counts = snapshot_fps_inputs(
-                self.db.sparkSession,
-                snap["dir"],
-                cols,
-                key=S.FILE_ID,
-                version=snap.get("version"),
-            )
-            db = standardize(db, cols, stats=stats)
+        # (reference: outliers.py:40-41); its statistics and the per-file
+        # counts chunking needs come from one catalogue profile — over a
+        # snapshot-table catalogue with recorded partials, from the
+        # manifests with no stats scan at all
+        if ocf.get("manifest_stats"):
+            profile = self._manifest_profile("OutliersSampler")
         else:
-            db, counts = standardize(db, cols, file_counts_key=S.FILE_ID)
-        hk = ocf.get("hdbscan_kwargs")
-        if hk is not None or ocf.get("method") == "glosh":
-            hk = hk or {}
-            if hk.get("cluster_selection_method", "eom") != "eom":
-                raise ValueError(
-                    "only cluster_selection_method='eom' is implemented "
-                    "(the reference's setting, Lipac.yml:58)"
-                )
-            scored = glosh_outlier_scores(
-                db,
-                cols,
-                min_samples=int(hk.get("min_samples", 50)),
-                min_cluster_size=int(hk.get("min_cluster_size", 50)),
-                max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
-                counts=counts,
-            )
-        else:
-            scored = knn_outlier_scores(
-                db,
-                cols,
-                k=int(ocf.get("knn", 50)),
-                max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
-                counts=counts,
-            )
-        # deterministic top-k (TakeOrdered): tiebreak on patch_id
-        sel = (
-            scored.orderBy(F.desc(OUTLIER_SCORE), S.PATCH_ID)
-            .limit(num_to_sample)
-            .select(S.PATCH_ID, S.FILE_ID, CLUSTER_ID)
-        )
+            profile = CatalogueProfile.of(self.db, cols)
         try:
+            db = standardize(
+                self.db.select(S.PATCH_ID, S.FILE_ID, *cols), cols, stats=profile
+            )
+            counts = profile.per_file.select(S.FILE_ID, "count")
+            hk = ocf.get("hdbscan_kwargs")
+            if hk is not None or ocf.get("method") == "glosh":
+                hk = hk or {}
+                if hk.get("cluster_selection_method", "eom") != "eom":
+                    raise ValueError(
+                        "only cluster_selection_method='eom' is implemented "
+                        "(the reference's setting, Lipac.yml:58)"
+                    )
+                scored = glosh_outlier_scores(
+                    db,
+                    cols,
+                    min_samples=int(hk.get("min_samples", 50)),
+                    min_cluster_size=int(hk.get("min_cluster_size", 50)),
+                    max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
+                    counts=counts,
+                )
+            else:
+                scored = knn_outlier_scores(
+                    db,
+                    cols,
+                    k=int(ocf.get("knn", 50)),
+                    max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
+                    counts=counts,
+                )
+            # deterministic top-k (TakeOrdered): tiebreak on patch_id
+            sel = (
+                scored.orderBy(F.desc(OUTLIER_SCORE), S.PATCH_ID)
+                .limit(num_to_sample)
+                .select(S.PATCH_ID, S.FILE_ID, CLUSTER_ID)
+            )
             return self._finalize(sel, split_keys=[CLUSTER_ID, S.FILE_ID])
         finally:
-            release_counts(counts)
+            profile.release()

@@ -33,9 +33,9 @@ class SpatialSampler(Sampler):
         """``current_selection_ids``: ids to exclude, as a DataFrame or a
         driver-side selection table (broadcast: it is target-capped).
         ``salt``: forwarded to the stratified sampler. Callers that
-        already know a per-stratum count bound (TripleSampler's shared
-        probe — the completion draws from a SUBSET of the catalogue, so
-        the catalogue's max stratum bounds it) pass the precomputed salt
+        already know a per-stratum count bound (the catalogue profile's
+        largest file — a completion draws from a SUBSET of the catalogue,
+        so the catalogue's max stratum bounds it) pass the precomputed salt
         and skip the auto-detection's count job; output is identical
         either way."""
         if num_to_sample is None:

@@ -7,6 +7,11 @@ the driver's tables; optionally complete with
 SpatialSampler, rebalancing the validation fraction so the FINAL val count
 is floor(frac * n) for the n rows returned (reference targetted.py:46-51 —
 replicated as arithmetic, not as the reference's in-place config mutation).
+
+One :class:`CatalogueProfile` (per file: rows and a count per target)
+gives the reachable total, each branch's skew salt and the completion's
+salt; TripleSampler passes the profile its three legs share. No targets
+is an empty targetted selection.
 """
 
 from __future__ import annotations
@@ -17,11 +22,14 @@ from math import floor
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pacasam_spark import schemas as S
 from pacasam_spark.operators.filters import filter_by_boolean_descriptor
-from pacasam_spark.operators.sampling import sample_with_stratification
+from pacasam_spark.operators.normalize import CatalogueProfile
+from pacasam_spark.operators.sampling import (
+    salt_for_max_stratum,
+    sample_with_stratification,
+)
 from pacasam_spark.operators.union import union_first_wins
 from pacasam_spark.samplers.base import Sampler
 from pacasam_spark.samplers.spatial import SpatialSampler
@@ -42,45 +50,28 @@ class TargettedSampler(Sampler):
     def get_patches(self) -> DataFrame:
         return self._as_dataframe(self.get_selection())
 
-    def get_selection(self) -> pa.Table:
+    def get_selection(self, profile: CatalogueProfile | None = None) -> pa.Table:
+        """``profile``: a composite's shared catalogue profile, counting
+        this sampler's targets; a standalone run aggregates its own."""
         target_total = self.cf["target_total_num_patches"]
         targets = self.sorted_targets(self.cf["TargettedSampler"]["targets"])
-
-        # ONE fused skew probe for every target (guide §1.2/§2): the
-        # auto-salt detection inside sample_with_stratification would run
-        # a per-strata count scan PER TARGET; the max matching-rows-per-
-        # file of all targets ride a single grouped aggregation instead,
-        # and each branch gets its salt handed in (same formula as the
-        # auto path — output is identical either way, the salt only
-        # selects the skew-guard execution strategy).
-        from pacasam_spark.operators.sampling import salt_for_max_stratum
-
         names = list(targets.keys())
-        maxes = (
-            self.db.groupBy(S.FILE_ID)
-            .agg(
-                F.count("*").alias("__all"),
-                *[F.sum(F.col(n).cast("int")).alias(n) for n in names],
-            )
-            .agg(
-                F.max("__all").alias("__all"),
-                F.sum("__all").alias("__rows"),
-                *[F.max(n).alias(n) for n in names],
-            )
-            .first()
-        )
-        # the catalogue-wide max stratum bounds every SUBSET's strata, so
-        # composite samplers (Triple) reuse it for their completion draw
-        # instead of re-probing the (anti-joined) remainder
-        self.stratum_max_bound = int(maxes["__all"] or 0)
+        # the profile's per-target maxima hand each branch its salt (the
+        # auto-salt detection inside sample_with_stratification would
+        # run a per-strata count scan PER TARGET — same formula, so the
+        # output is identical either way; the salt only selects the
+        # skew-guard execution strategy)
+        if profile is None:
+            profile = CatalogueProfile.of(self.db, targets=names, persist=False)
+        profile.build()
         # a target above the catalogue size is met by the whole catalogue
-        reachable = min(target_total, int(maxes["__rows"] or 0))
+        reachable = min(target_total, profile.total_rows)
 
         quotas = [
             int(o["target_min_samples_proportion"] * target_total)
             for o in targets.values()
         ]
-        salts = [salt_for_max_stratum(int(maxes[n] or 0)) for n in names]
+        salts = [salt_for_max_stratum(profile.target_max[n]) for n in names]
         # Measured dead end, do not retry: merging the four per-target
         # rank windows into ONE window over the tagged union (per-target
         # seed via a tag-indexed premixed-seed column) produced an
@@ -119,7 +110,7 @@ class TargettedSampler(Sampler):
             selections = [f.result() for f in futures]
 
         # first-wins precedence on dedup, like concat order in the reference
-        selection = union_first_wins(selections)
+        selection = union_first_wins(selections) if selections else self._no_selection()
         n_selected = selection.num_rows
         self.log.info(f"{self.name}: N={n_selected} distinct patches for targets.")
 
@@ -144,12 +135,14 @@ class TargettedSampler(Sampler):
         completion_cf = dict(self.cf)
         completion_cf["frac_validation_set"] = frac_for_completion
         ss = SpatialSampler(self.db, completion_cf, log=self.log, seed=self.seed + 991)
+        # the completion draws from a subset of the catalogue, so the
+        # largest file bounds its strata
         completion = ss.get_selection(
             num_to_sample=num_to_add,
             current_selection_ids=selection,
-            salt=salt_for_max_stratum(self.stratum_max_bound),
+            salt=salt_for_max_stratum(profile.max_rows_per_file),
         )
-        return pa.concat_tables([selection, completion])
+        return pa.concat_tables([selection, completion], promote_options="default")
 
 
 def targetted_sampler_sql(

@@ -49,6 +49,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pacasam_spark.operators.normalize import CatalogueProfile, _stat_partial_aggs
+
 _VDIR = re.compile(r"^v(\d{5})$")
 
 # column types whose min/max survive a JSON round-trip (natively or via
@@ -392,8 +394,6 @@ def write_snapshot(
         aggs.append(F.min(c).alias(f"__min_{c}"))
         aggs.append(F.max(c).alias(f"__max_{c}"))
     if norm_columns:
-        from pacasam_spark.operators.normalize import _stat_partial_aggs
-
         types = {f.name: f.dataType.simpleString() for f in written.schema.fields}
         masked = {
             c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in norm_columns
@@ -676,19 +676,18 @@ def snapshot_fps_inputs(
     columns: list[str],
     key: str,
     version: int | None = None,
-) -> tuple[dict, DataFrame]:
-    """The two inputs the Diversity/Outliers stats pass exists to
-    produce — merged global normalization statistics for ``columns``
-    and the per-``key`` row-count table chunked FPS needs — read from
+) -> CatalogueProfile:
+    """The catalogue profile the Diversity/Outliers legs read — merged
+    global normalization statistics for ``columns``, the per-``key``
+    row-count table chunked FPS needs and its total and maximum — from
     the snapshot MANIFESTS alone, no data scan (the Iceberg idiom of
-    planning from manifest stats). Returns ``(stats, counts)`` where
-    ``stats`` feeds ``standardize(stats=...)`` and ``counts`` feeds
-    ``fps_sample(counts=...)``.
+    planning from manifest stats). A built profile without target
+    counts: it feeds ``standardize(stats=...)`` and ``fps_sample(profile=...)``.
 
     The merge is exact (integer/Decimal arithmetic over the per-file
     partials the writer recorded), so sampler selections are
-    bit-identical to the in-scan fused pass — verified by
-    tests/test_manifest_stats.py against the two-scan pipeline.
+    bit-identical to the in-scan profile pass — verified by
+    tests/test_manifest_stats.py.
 
     Raises ``ValueError`` when any live file of the resolved version
     lacks partials for ``columns`` or key counts for ``key`` (table
@@ -741,17 +740,14 @@ def snapshot_fps_inputs(
         for fld in chain[0]["schema"]["fields"]
         if fld["name"] == key
     )
-    counts = spark.createDataFrame(
-        sorted(key_totals.items()), schema=f"{key} {key_type}, count long"
+    return CatalogueProfile(
+        per_file=spark.createDataFrame(
+            sorted(key_totals.items()), schema=f"{key} {key_type}, count long"
+        ),
+        total_rows=sum(key_totals.values()),
+        max_rows_per_file=max(key_totals.values(), default=0),
+        stats=stats,
     )
-    # the totals the FPS quota/skew arithmetic needs are already known
-    # driver-side; ride them on the DataFrame object so fps_sample skips
-    # its one remaining aggregation job over this table (same values)
-    counts._pacasam_totals = (
-        sum(key_totals.values()),
-        max(key_totals.values(), default=0),
-    )
-    return stats, counts
 
 
 def upsert_snapshot(

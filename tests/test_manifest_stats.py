@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pacasam_spark.operators.normalize import (
+    CatalogueProfile,
     _stat_merge_aggs,
     _stat_partial_aggs,
     standardize,
@@ -48,11 +49,23 @@ def test_manifest_stats_match_inscan_agg(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     cat = synthetic_catalogue(spark, db_size=3000)
     write_snapshot(cat, tbl, norm_columns=COLS, count_key="file_id")
-    stats, counts = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    stats, counts = profile.stats, profile.per_file
     _assert_stats_equal(stats, _global_stats(cat, COLS), COLS)
     got = {r["file_id"]: r["count"] for r in counts.collect()}
     exp = {r["file_id"]: r["count"] for r in cat.groupBy("file_id").count().collect()}
     assert got == exp
+    assert (profile.total_rows, profile.max_rows_per_file) == (3000, max(exp.values()))
+    # the in-scan profile pass merges to the same statistics and totals
+    scanned = CatalogueProfile.of(cat, COLS).build()
+    try:
+        _assert_stats_equal(scanned.stats, _global_stats(cat, COLS), COLS)
+        assert (scanned.total_rows, scanned.max_rows_per_file) == (
+            profile.total_rows,
+            profile.max_rows_per_file,
+        )
+    finally:
+        scanned.release()
     # the lineage row counts stay per PART-FILE even with the extra
     # count_key grouping (resume/attrition consumers rely on them)
     m = snapshots(tbl)[-1]
@@ -118,7 +131,8 @@ def test_append_chain_and_upsert_merge_exactly(spark, tmp_path):
                    stats_columns=["patch_id"])
     write_snapshot(b, tbl, norm_columns=COLS, count_key="file_id",
                    stats_columns=["patch_id"], mode="append")
-    stats, counts = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    stats, counts = profile.stats, profile.per_file
     _assert_stats_equal(stats, _global_stats(cat, COLS), COLS)
     assert counts.agg(F.sum("count")).first()[0] == 3000
 
@@ -131,7 +145,8 @@ def test_append_chain_and_upsert_merge_exactly(spark, tmp_path):
                     stats_columns=["patch_id"],
                     norm_columns=COLS, count_key="file_id")
     merged = read_snapshot(spark, tbl)
-    stats2, counts2 = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    stats2, counts2 = profile.stats, profile.per_file
     _assert_stats_equal(stats2, _global_stats(merged, COLS), COLS)
     assert counts2.agg(F.sum("count")).first()[0] == 3000
 
@@ -160,26 +175,25 @@ def test_norm_column_validation(spark, tmp_path):
 
 
 def test_standardize_stats_param(spark, tmp_path):
-    """standardize(stats=...) must produce the same columns as the
-    in-scan pass, and reject the contradictory fused-pass request."""
+    """standardize(stats=...) — the merged statistics or the profile
+    holding them — must produce the same columns as the in-scan pass."""
     tbl = str(tmp_path / "tbl")
     cat = synthetic_catalogue(spark, db_size=1000).select(
         "patch_id", "file_id", *COLS
     )
     write_snapshot(cat, tbl, norm_columns=COLS, count_key="file_id")
-    stats, _ = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
+    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
     a = standardize(cat, COLS).orderBy("patch_id").collect()
-    b = standardize(cat, COLS, stats=stats).orderBy("patch_id").collect()
+    b = standardize(cat, COLS, stats=profile.stats).orderBy("patch_id").collect()
     assert a == b
-    with pytest.raises(ValueError, match="stats="):
-        standardize(cat, COLS, stats=stats, file_counts_key="file_id")
+    assert standardize(cat, COLS, stats=profile).orderBy("patch_id").collect() == a
 
 
 def test_combined_bucketed_manifest_layout(spark, tmp_path):
     """Round-7 combined layout: a snapshot written bucketed AND with
     stats serves Diversity with ZERO stats scan (manifest-fed), ZERO
     file_id exchanges (bucketed scan), and a selection bit-identical to
-    the plain two-scan pipeline."""
+    the plain pipeline."""
     tbl = str(tmp_path / "tbl")
     plain = synthetic_catalogue(spark, db_size=4000)
     write_snapshot(

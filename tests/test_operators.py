@@ -196,6 +196,47 @@ def test_standardize_nan_guard(spark):
     df = spark.createDataFrame([(1, 1.0), (2, None)], ["patch_id", "x"])
     with pytest.raises(UnexpectedNaNValuesError):
         assert_no_nan(df, ["x"])
+    with pytest.raises(UnexpectedNaNValuesError):
+        standardize(df, ["x"])
+
+
+@pytest.mark.parametrize("column", ["big", "dbl"])
+def test_exact_decimal_fallback_matches_python_oracle(spark, column):
+    """Features whose fast split-long partials overflow take the exact
+    decimal fallback: a bigint beyond |x| ~ 3.04e9 (its square overflows
+    a long) and a double beyond 1e6 (its square overflows decimal(18,6)).
+    The global statistics and the catalogue profile's per-file merge
+    both equal a Python Decimal oracle. The doubles and their squares
+    have short exact decimal forms, so the decimal cast does not round."""
+    from decimal import Decimal
+
+    from pacasam_spark.operators.normalize import CatalogueProfile, _global_stats
+
+    values, sql_type = {
+        "big": ([4_000_000_001, -5_000_000_000, 0, 7_000_000_000_000, 4_000_000_001], "bigint"),
+        "dbl": ([1500000.5, 0.0, -2500000.5, 3000000.0, 2000000.5], "double"),
+    }[column]
+    df = spark.createDataFrame(
+        [(i, i % 2, v) for i, v in enumerate(values)],
+        f"patch_id long, file_id long, {column} {sql_type}",
+    )
+    nonzero = [v for v in values if v != 0]
+    exact = Decimal if column == "big" else (lambda v: Decimal(repr(v)))
+    want = {
+        "cnt": len(nonzero),
+        "min": min(float(v) for v in nonzero),
+        "nan": 0,
+        "s": sum(exact(v) for v in nonzero),
+        "ssq": sum(exact(v * v) for v in nonzero),
+    }
+    profile = CatalogueProfile.of(df, [column]).build()
+    try:
+        for stats in (_global_stats(df, [column]), profile.stats):
+            assert {k: stats[f"{k}_{column}"] for k in want} == want
+    finally:
+        profile.release()
+    assert profile.total_rows == len(values)
+    assert standardize(df, [column], stats=profile).count() == len(values)
 
 
 def test_quantile_transform_range_and_order(spark):

@@ -29,6 +29,7 @@ EDGE_CONFIGS = {
     "frac_val_none": ({"frac_validation_set": None}, None),
     "frac_val_absent": ({"frac_validation_set": ABSENT}, None),
     "empty_target_leg": ({}, {"C_none": 0.2, "C3": 0.2, "C1": 0.1}),
+    "no_targets": ({}, {}),
 }
 
 

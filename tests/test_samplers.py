@@ -2,6 +2,7 @@
 (tests/tests_pacasam/test_run_sampling.py:29-41,
 tests/tests_pacasam/samplers/test_targetted.py:8-33) on Spark outputs."""
 
+import copy
 import math
 import os
 
@@ -166,7 +167,8 @@ def test_triple_sampler_checkpoint_resume(spark, catalogue, tmp_path):
     raise); lineage rows are appended."""
     import shutil
 
-    from pacasam_spark.samplers import DiversitySampler, TargettedSampler, TripleSampler
+    from pacasam_spark.operators.normalize import CatalogueProfile
+    from pacasam_spark.samplers import TargettedSampler, TripleSampler
     from tests.conftest import SAMPLING_CONFIG
 
     ckpt = str(tmp_path / "ckpt")
@@ -183,21 +185,21 @@ def test_triple_sampler_checkpoint_resume(spark, catalogue, tmp_path):
     assert first == plain
 
     # restart: finished stages must LOAD — stage-1 recompute would raise,
-    # and so would the diversity leg's statistics scan
-    def boom(self, **kwargs):
+    # and so would the catalogue profile pass (the statistics scan)
+    def boom(self, *args, **kwargs):
         raise AssertionError("stage recomputed despite checkpoint")
 
     orig = TargettedSampler.get_selection
-    orig_stats = DiversitySampler._normalized_inputs
+    orig_build = CatalogueProfile.build
     TargettedSampler.get_selection = boom
-    DiversitySampler._normalized_inputs = boom
+    CatalogueProfile.build = boom
     try:
         resumed = sorted(
             (r["patch_id"], r["split"], r["sampler"])
             for r in TripleSampler(catalogue, cfg_ck).get_patches().collect()
         )
     finally:
-        DiversitySampler._normalized_inputs = orig_stats
+        CatalogueProfile.build = orig_build
         TargettedSampler.get_selection = orig
     assert resumed == plain
 
@@ -424,10 +426,12 @@ def _persisted(spark) -> int:
 
 def test_samplers_leave_no_cached_dataset(spark, config):
     """Every persist a sampler makes is released by the time
-    get_patches() returns: nothing accumulates across calls, also when an
-    over-constrained TripleSampler skips its prepared diversity leg. The
-    test owns its catalogue: a persist whose plan another test already
-    left cached would reuse that entry and hide the leak."""
+    get_patches() returns: nothing accumulates across calls, standalone
+    Diversity and Outliers legs included, also when an over-constrained
+    TripleSampler skips its diversity leg or the diversity leg uses
+    quantilization. The test owns its catalogue: a persist whose plan
+    another test already left cached would reuse that entry and hide
+    the leak."""
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
     db = synthetic_catalogue(spark, db_size=300, seed=17).cache()
@@ -438,6 +442,15 @@ def test_samplers_leave_no_cached_dataset(spark, config):
         assert _persisted(spark) == before
         rows = TargettedSampler(db, config).get_patches().collect()
         assert {r[S.SAMPLER] for r in rows} == {"TargettedSampler", "SpatialSampler"}
+        assert _persisted(spark) == before
+        for leg in (DiversitySampler, OutliersSampler):
+            rows = leg(db, config).get_patches().collect()
+            assert len(rows) == config["target_total_num_patches"]
+            assert _persisted(spark) == before
+        quantile = copy.deepcopy(config)
+        quantile["DiversitySampler"]["normalization"] = "quantilization"
+        rows = TripleSampler(db, quantile).get_patches().collect()
+        assert len(rows) == config["target_total_num_patches"]
         assert _persisted(spark) == before
         config["TargettedSampler"]["targets"] = {
             "C3": {"target_min_samples_proportion": 3.0},
@@ -457,8 +470,9 @@ def _job_ids(spark) -> set[int]:
 
 def test_triple_sampler_job_budget(spark):
     """TripleSampler.get_patches() + collect() on the benchmark's 10k-row
-    catalogue and config submits at most 26 Spark jobs (it was 52 while
-    split assignment, merges and quota counts ran as Spark jobs).
+    catalogue and config submits at most 21 Spark jobs (it was 52 while
+    split assignment, merges and quota counts ran as Spark jobs, and 24
+    with a targetted probe besides the statistics pass).
     Counted in the app status store, so jobs from the sampler's worker
     threads count too."""
     from perfbench.workloads import SIZES, sampling_config
@@ -473,14 +487,14 @@ def test_triple_sampler_job_budget(spark):
     finally:
         db.unpersist()
     assert len(rows) == SIZES["full"].target
-    assert jobs <= 26, f"{jobs} Spark jobs"
+    assert jobs <= 21, f"{jobs} Spark jobs"
 
 
 def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     """A checkpoint costs no Spark job: on the benchmark's 10k-row
     catalogue and config, a checkpointed TripleSampler call on a fresh
     dir submits no more jobs than the same call without one (at most
-    26; the Spark-written checkpoints took 42), and a full resume runs
+    21; the Spark-written checkpoints took 42), and a full resume runs
     only the completion leg (at most 8; it was 17). All three
     selections are identical."""
     from perfbench.workloads import SIZES, sampling_config
@@ -503,15 +517,15 @@ def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     finally:
         db.unpersist()
     assert fresh == plain and resumed == plain
-    assert fresh_jobs <= min(plain_jobs, 26), (fresh_jobs, plain_jobs)
+    assert fresh_jobs <= min(plain_jobs, 21), (fresh_jobs, plain_jobs)
     assert resume_jobs <= 8, f"{resume_jobs} Spark jobs"
 
 
 def test_diversity_zero_budget_submits_no_job(spark, config):
     """A diversity budget of 0 (Triple's when the targetted leg fills the
-    target) is an empty draw: no statistics pass and no FPS carve, so no
-    Spark job (it took 10). A prepared leg's per-file counts are
-    released, and the empty table has the sampling schema."""
+    target) is an empty draw: no profile pass and no FPS carve, so no
+    Spark job (it took 10) and nothing persisted; the empty table has
+    the sampling schema."""
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
     db = synthetic_catalogue(spark, db_size=300, seed=23).cache()
@@ -521,10 +535,6 @@ def test_diversity_zero_budget_submits_no_job(spark, config):
         last = max(_job_ids(spark), default=-1)
         empty = DiversitySampler(db, config).get_selection(num_to_sample=0)
         assert not {j for j in _job_ids(spark) if j > last}
-
-        prepared = DiversitySampler(db, config).prepare()
-        assert _persisted(spark) > before
-        assert prepared.get_selection(num_to_sample=0).num_rows == 0
         assert _persisted(spark) == before
 
         drawn = DiversitySampler(db, config).get_selection(num_to_sample=5)

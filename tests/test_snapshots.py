@@ -495,9 +495,10 @@ def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, tmp_path):
     # manifest stats recorded alongside the layout (the combined win)
     from pacasam_spark.sources.snapshots import snapshot_fps_inputs
 
-    stats, counts = snapshot_fps_inputs(spark, d, ["nb_sol"], "file_id")
-    assert stats["cnt_nb_sol"] > 0
-    assert counts.agg(F.sum("count")).first()[0] == 2000
+    profile = snapshot_fps_inputs(spark, d, ["nb_sol"], "file_id")
+    assert profile.stats["cnt_nb_sol"] > 0
+    assert profile.per_file.agg(F.sum("count")).first()[0] == 2000
+    assert profile.total_rows == 2000
 
 
 def test_bucketed_snapshot_append_falls_back_to_plain_read(spark, tmp_path):

@@ -88,7 +88,7 @@ def main() -> None:
     # plans of its dominant lazy sub-stages: one targetted-leg selection
     # and the diversity FPS carve input.
     from pacasam_spark.operators.fps import add_deterministic_chunk_ids
-    from pacasam_spark.operators.normalize import standardize
+    from pacasam_spark.operators.normalize import CatalogueProfile, standardize
     from pacasam_spark.operators.sampling import sample_with_stratification
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
@@ -100,9 +100,9 @@ def main() -> None:
     with open(f"{out_dir}/triple_targetted_leg_{tag}.txt", "w") as f:
         f.write(plan_of(sel))
     cols = ["nb_sol", "nb_bati", "nb_vegetation_basse"]
-    normed, counts = standardize(
-        db.select("patch_id", "file_id", *cols), cols, file_counts_key="file_id"
-    )
+    profile = CatalogueProfile.of(db, cols)
+    normed = standardize(db.select("patch_id", "file_id", *cols), cols, stats=profile)
+    counts = profile.per_file.select("file_id", "count")
     chunked = add_deterministic_chunk_ids(normed, 20000, counts=counts, keep_rank=True)
     with open(f"{out_dir}/triple_fps_chunked_{tag}.txt", "w") as f:
         f.write(plan_of(chunked))

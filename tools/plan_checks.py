@@ -130,21 +130,23 @@ def main() -> int:
     )
     spark.sql("DROP TABLE IF EXISTS plan_check_bucketed")
 
-    # fused Diversity pipeline (round-6): normalize stats + per-file
-    # counts ride ONE grouped aggregation, so the end-to-end FPS plan
-    # reads the catalogue exactly twice — the fused stats/counts scan
+    # fused Diversity pipeline: normalize stats + per-file counts ride
+    # ONE grouped aggregation (the catalogue profile), so the end-to-end
+    # FPS plan reads the catalogue exactly twice — the profile scan
     # (cached; offsets window reuses it via InMemoryTableScan) and the
     # main window->carve pass. A third scan = the fusion regressed.
     from pacasam_spark.operators.fps import fps_sample
-    from pacasam_spark.operators.normalize import standardize
+    from pacasam_spark.operators.normalize import CatalogueProfile, standardize
 
     fp = "/tmp/plan_check_fused.parquet"
     synthetic_catalogue(spark, db_size=5000).select(
         "patch_id", "file_id", "nb_sol", "nb_bati"
     ).write.mode("overwrite").parquet(fp)
     cat = spark.read.parquet(fp)
-    normed, counts = standardize(cat, ["nb_sol", "nb_bati"], file_counts_key="file_id")
-    p = plan_of(fps_sample(normed, 100, ["nb_sol", "nb_bati"], counts=counts))
+    profile = CatalogueProfile.of(cat, ["nb_sol", "nb_bati"])
+    normed = standardize(cat, ["nb_sol", "nb_bati"], stats=profile)
+    p = plan_of(fps_sample(normed, 100, ["nb_sol", "nb_bati"], profile=profile))
+    profile.release()
     n_scans = len(re.findall(r"\(\d+\) Scan parquet", p))
     ok &= check(
         "fused diversity: two catalogue scans",

@@ -1,16 +1,16 @@
 """Minimal image codecs + metrics — stdlib/numpy only (no PIL in the
 image; SURVEY.md §7 environment facts).
 
-Three formats cover the input_hint's lossless + lossy tiers:
+Four formats cover the input_hint's lossless + lossy tiers:
 
 - ``png``: real PNG (RGB8, filter 0, zlib IDAT) — spec-compliant enough
   for any external reader; decode is exact (lossless round-trip).
 - ``q6``:  6-bit-per-channel quantized + zlib — the deterministic lossy
   tier. Max channel error is 2/255 => PSNR >= 10*log10(255^2 / E[e^2])
   ≈ 47 dB, comfortably above the 40 dB invariant.
-- ``jl``:  "jpeg-lite" — 8x8 DCT + JPEG-style quantization table + zlib:
-  real transform-domain quantization loss (the loss model PIL-backed jpg
-  would have), PSNR >= 40 dB at the default quality 95.
+- ``jpg``/``jpeg``: baseline JFIF (``pacasam_spark.jpegbase``) — real
+  DCT quantization loss, PSNR >= 40 dB at quality 98.
+- ``tif``/``tiff``: lossless deflate TIFF (``pacasam_spark.geotiff``).
 
 Formats whose codec libraries are absent (webp, mp4) are stubs with
 real Spark-side plumbing — see pacasam_spark.extract.images.
@@ -96,80 +96,6 @@ def decode_q6(data: bytes) -> np.ndarray:
     return ((q << 2) + 2).astype(np.uint8)  # mid-rise reconstruction
 
 
-# --- "jl" (jpeg-lite): 8x8 DCT + JPEG-style quantization + zlib ---------
-# Real transform-domain quantization loss (unlike q6's bit truncation):
-# the standard JPEG luminance table scaled by a quality factor, applied
-# per channel. No entropy-coding stage (zlib stands in for Huffman), so
-# it is not wire-compatible jpeg — it is the same LOSS model, which is
-# what the lossy-tier invariant (PSNR >= 40 dB) needs to exercise.
-
-_JL_QTABLE = np.array(
-    [
-        [16, 11, 10, 16, 24, 40, 51, 61],
-        [12, 12, 14, 19, 26, 58, 60, 55],
-        [14, 13, 16, 24, 40, 57, 69, 56],
-        [14, 17, 22, 29, 51, 87, 80, 62],
-        [18, 22, 37, 56, 68, 109, 103, 77],
-        [24, 35, 55, 64, 81, 104, 113, 92],
-        [49, 64, 78, 87, 103, 121, 120, 101],
-        [72, 92, 95, 98, 112, 100, 103, 99],
-    ],
-    dtype=np.float64,
-)
-
-
-def _jl_quant(quality: int) -> np.ndarray:
-    """libjpeg quality scaling: 5000/q below 50, 200-2q above."""
-    scale = 5000.0 / quality if quality < 50 else 200.0 - 2.0 * quality
-    return np.clip(np.floor((_JL_QTABLE * scale + 50.0) / 100.0), 1.0, 255.0)
-
-
-def _dct_matrix() -> np.ndarray:
-    k = np.arange(8)[:, None]
-    n = np.arange(8)[None, :]
-    d = np.cos(np.pi * (2 * n + 1) * k / 16.0) * np.sqrt(2.0 / 8.0)
-    d[0] = np.sqrt(1.0 / 8.0)
-    return d
-
-
-_DCT = _dct_matrix()
-
-
-def _to_blocks(ch: np.ndarray) -> tuple[np.ndarray, int, int]:
-    h, w = ch.shape
-    ph, pw = (-h) % 8, (-w) % 8
-    ch = np.pad(ch, ((0, ph), (0, pw)), mode="edge")
-    hb, wb = ch.shape[0] // 8, ch.shape[1] // 8
-    return ch.reshape(hb, 8, wb, 8).transpose(0, 2, 1, 3), hb, wb
-
-
-def encode_jl(arr: np.ndarray, quality: int = 95) -> bytes:
-    """Lossy DCT tier. Header: (w, h, channels, quality)."""
-    h, w, c = arr.shape
-    qt = _jl_quant(quality)
-    planes = []
-    for ci in range(c):
-        blocks, _, _ = _to_blocks(arr[:, :, ci].astype(np.float64) - 128.0)
-        coef = np.einsum("ij,bcjk,lk->bcil", _DCT, blocks, _DCT)
-        q = np.round(coef / qt).astype(np.int16)
-        planes.append(q.tobytes())
-    return struct.pack(">IIBB", w, h, c, quality) + zlib.compress(b"".join(planes), 6)
-
-
-def decode_jl(data: bytes) -> np.ndarray:
-    w, h, c, quality = struct.unpack(">IIBB", data[:10])
-    qt = _jl_quant(quality)
-    hb, wb = -(-h // 8), -(-w // 8)
-    raw = np.frombuffer(zlib.decompress(data[10:]), np.int16).reshape(c, hb, wb, 8, 8)
-    out = np.empty((h, w, c), np.uint8)
-    for ci in range(c):
-        coef = raw[ci].astype(np.float64) * qt
-        blocks = np.einsum("ji,bcjk,kl->bcil", _DCT, coef, _DCT)
-        plane = blocks.transpose(0, 2, 1, 3).reshape(hb * 8, wb * 8) + 128.0
-        out[:, :, ci] = np.clip(np.round(plane[:h, :w]), 0, 255).astype(np.uint8)
-    return out
-
-
 def _encode_jpeg(arr: np.ndarray) -> bytes:
     # quality 98: the synthetic catalogue's hash-derived pixels are
     # near-noise — the DCT worst case — and still clear the PSNR>=40
@@ -201,7 +127,6 @@ def _decode_tiff(data: bytes) -> np.ndarray:
 CODECS = {
     "png": (encode_png, decode_png),
     "q6": (encode_q6, decode_q6),
-    "jl": (encode_jl, decode_jl),
     "jpg": (_encode_jpeg, _decode_jpeg),
     "jpeg": (_encode_jpeg, _decode_jpeg),
     "tif": (_encode_tiff, _decode_tiff),

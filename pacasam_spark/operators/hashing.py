@@ -103,10 +103,6 @@ def det_uniform(key: Column | str, seed: int = 0) -> Column:
     return det_hash(key, seed).cast("double") / F.lit(float(MERSENNE31))
 
 
-def det_uniform_sql(key_expr: str, seed: int = 0) -> str:
-    return f"(({det_hash_sql(key_expr, seed)}) / {float(MERSENNE31)})"
-
-
 def det_int(key: Column | str, lo: int, hi: int, seed: int = 0) -> Column:
     """Deterministic uniform integer in [lo, hi)."""
     return (F.pmod(det_hash(key, seed), F.lit(hi - lo)) + F.lit(lo)).cast("long")
@@ -124,7 +120,3 @@ def det_hash_str(key: Column | str, seed: int = 0) -> Column:
     """
     k = F.col(key) if isinstance(key, str) else key
     return F.md5(F.concat(k.cast("string"), F.lit(f"#{seed}")))
-
-
-def det_hash_str_sql(key_expr: str, seed: int = 0) -> str:
-    return f"md5(concat(cast({key_expr} as varchar), '#{seed}'))"

@@ -255,13 +255,11 @@ def _global_stats(df: DataFrame, columns: list[str]):
 class CatalogueProfile:
     """What a sampling run needs to know about its catalogue, from ONE
     grouped aggregation by ``key`` (file_id). Per file, the persisted
-    ``per_file`` table holds its rows (``count``), one count per boolean
-    target column and the exact statistics partials of the feature
-    columns; one merge job turns it into ``total_rows``,
-    ``max_rows_per_file``, ``target_max`` (each target's largest
-    per-file count) and ``stats``, the global statistics
-    :func:`standardize` reads. Partials merge exactly, so every value
-    equals its single-pass global aggregation.
+    ``per_file`` table holds its rows (``count``) and the exact
+    statistics partials of the feature columns; one merge job turns it
+    into ``total_rows``, ``max_rows_per_file`` and ``stats``, the global
+    statistics :func:`standardize` reads. Partials merge exactly, so
+    every value equals its single-pass global aggregation.
 
     :meth:`of` describes the aggregation without running it; the first
     :meth:`build` runs it — inside :func:`standardize` when that is the
@@ -272,7 +270,6 @@ class CatalogueProfile:
     per_file: DataFrame | None = None
     total_rows: int = 0
     max_rows_per_file: int = 0
-    target_max: dict[str, int] = field(default_factory=dict)
     stats: dict | None = None
     # unpersists the per-file table; a no-op while nothing is cached
     release: Callable[[], object] = field(default=lambda: None, repr=False)
@@ -283,32 +280,25 @@ class CatalogueProfile:
         cls,
         df: DataFrame,
         columns=(),
-        targets=(),
         key: str = S.FILE_ID,
         persist: bool = True,
     ) -> "CatalogueProfile":
-        """The unbuilt profile of ``df``: statistics of ``columns``,
-        counts of the boolean ``targets``. ``persist=False`` for a
-        reader of the merged figures alone, which never re-reads the
-        per-file table."""
-        return cls(source=(df, list(columns), list(targets), key, persist))
+        """The unbuilt profile of ``df``: per-file rows and the
+        statistics of ``columns``. ``persist=False`` for a reader of the
+        merged figures alone, which never re-reads the per-file table."""
+        return cls(source=(df, list(columns), key, persist))
 
     def build(self) -> "CatalogueProfile":
         """Run the aggregation and its merge (once; later calls return
         the built profile)."""
         if self.source is None:
             return self
-        df, columns, targets, key, persist = self.source
+        df, columns, key, persist = self.source
         if columns:
             _require_ansi(df)
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         masked = {c: F.nullif(F.col(c).cast("double"), F.lit(0.0)) for c in columns}
-        per_target = [F.sum(F.col(t).cast("int")).alias(t) for t in targets]
-        merged = [
-            F.sum("count").alias("__rows"),
-            F.max("count").alias("__mx"),
-            *[F.max(t).alias(t) for t in targets],
-        ]
+        merged = [F.sum("count").alias("__rows"), F.max("count").alias("__mx")]
 
         def grouped(frame, aggs):
             per_file = frame.groupBy(key).agg(F.count("*").alias("count"), *aggs)
@@ -317,7 +307,7 @@ class CatalogueProfile:
             return per_file
 
         proj, fast_aggs = _stat_partials_fast(types, masked, columns)
-        per_file = grouped(df.select(key, *targets, *proj), per_target + fast_aggs)
+        per_file = grouped(df.select(key, *proj), fast_aggs)
         try:
             row = per_file.agg(*_stat_merge_aggs_fast(types, columns), *merged).first()
             stats = _stats_from_fast(row, types, columns)
@@ -325,12 +315,11 @@ class CatalogueProfile:
             if not _is_overflow_error(e):
                 raise
             self.release()
-            per_file = grouped(df, per_target + _stat_partial_aggs(types, masked, columns))
+            per_file = grouped(df, _stat_partial_aggs(types, masked, columns))
             row = stats = per_file.agg(*_stat_merge_aggs(columns), *merged).first()
         self.per_file = per_file
         self.total_rows = int(row["__rows"] or 0)
         self.max_rows_per_file = int(row["__mx"] or 0)
-        self.target_max = {t: int(row[t] or 0) for t in targets}
         self.stats = stats if columns else None
         self.source = None
         return self

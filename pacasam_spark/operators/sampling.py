@@ -123,7 +123,6 @@ def sample_with_stratification(
     distributed_trim_threshold: int = 20000,
     salt: int | str = "auto",
     salt_threshold: int = _DEFAULT_SALT_THRESHOLD,
-    counts: DataFrame | None = None,
 ) -> DataFrame:
     """M7: exact-n sample stratified by ``keys``
     (reference: samplers/algos.py:23-56).
@@ -138,10 +137,9 @@ def sample_with_stratification(
     Physical plan: one shuffle for the per-stratum window (partitioned by
     the strata keys). A hot stratum would sort in ONE task, so with
     ``salt="auto"`` (default) the per-strata counts are aggregated (one
-    cheap partial-agg job — pass ``counts`` to reuse an existing table,
-    as fps.add_deterministic_chunk_ids does) and the exact salted
-    two-level rank kicks in automatically when the largest stratum
-    exceeds ``salt_threshold`` rows; output is IDENTICAL either way
+    cheap partial-agg job) and the exact salted two-level rank kicks in
+    automatically when the largest stratum exceeds ``salt_threshold``
+    rows; output is IDENTICAL either way
     (test-gated). Explicit ``salt=0`` skips detection; an explicit int
     forces that many sub-buckets. The global cut is TakeOrdered(n) for
     small n; for large n that merge is a serial driver bottleneck, so
@@ -152,9 +150,7 @@ def sample_with_stratification(
         keys = [keys]
     h = det_hash(id_key, seed)
     if salt == "auto":
-        if counts is None:
-            counts = df.groupBy(*keys).count()
-        mx = int(counts.agg(F.max("count")).first()[0] or 0)
+        mx = int(df.groupBy(*keys).count().agg(F.max("count")).first()[0] or 0)
         salt = salt_for_max_stratum(mx, salt_threshold)
     if salt > 1:
         df = _salted_rank_candidates(df, num_to_sample, keys, h, id_key, seed, salt)
@@ -267,9 +263,3 @@ def stratified_sample_sql(
     order by __rk, {h}, {id_key}
     limit {num_to_sample}
     """
-
-
-def top_k(df: DataFrame, order_col, k: int) -> DataFrame:
-    """O3: global top-k (reference: samplers/outliers.py:46).
-    Physical plan: TakeOrdered — no global sort."""
-    return df.orderBy(F.desc(order_col) if isinstance(order_col, str) else order_col).limit(k)

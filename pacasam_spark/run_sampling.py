@@ -124,10 +124,8 @@ def run(args: argparse.Namespace) -> dict:
         split_name = "any"
         # auto-wire manifest-fed statistics: when the table was written
         # with norm_columns covering a sampler's feature columns (and
-        # count_key=file_id), that sampler plans ZERO stats scans —
-        # checked against the LATEST manifest only (an append chain whose
-        # older links lack stats fails loudly in snapshot_fps_inputs
-        # rather than silently rescanning)
+        # count_key=file_id), that sampler plans ZERO stats scans (the
+        # latest version's manifest describes its whole table)
         latest = snapshots(args.catalogue_table)[-1]
         have = set(latest.get("norm_stats", {}) and next(
             iter(latest["norm_stats"].values())

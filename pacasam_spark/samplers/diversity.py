@@ -26,32 +26,27 @@ from pacasam_spark.samplers.base import Sampler
 
 
 class DiversitySampler(Sampler):
-    def profile(self, targets=()) -> CatalogueProfile:
-        """The (unbuilt) catalogue profile this leg reads, with the
-        per-file counts of the boolean ``targets`` a composite's other
-        legs need. It carries the statistics partials for
+    def profile(self) -> CatalogueProfile:
+        """The catalogue profile this leg reads, which a composite's
+        other legs share. It carries the statistics partials for
         standardization; with ``manifest_stats`` the manifests supply
-        them, and the whole profile when no target is counted."""
+        the whole profile, built with no scan, else it is unbuilt."""
         dcf = self.cf["DiversitySampler"]
-        snap = dcf.get("manifest_stats")
-        if snap and not targets:
+        if dcf.get("manifest_stats"):
             return self._manifest_profile("DiversitySampler")
         standardized = dcf.get("normalization", "standardization") == "standardization"
-        columns = dcf["columns"] if standardized and not snap else ()
-        return CatalogueProfile.of(self.db, columns, targets)
+        return CatalogueProfile.of(self.db, dcf["columns"] if standardized else ())
 
     def prepare(self, profile: CatalogueProfile) -> DataFrame:
         """The normalized feature table (idempotent). Standardization
         reads the statistics of ``profile`` — whose aggregation then runs
-        here, inside ``standardize``, when this is its first reader — or
-        of the snapshot manifests."""
+        here, inside ``standardize``, when this is its first reader."""
         if getattr(self, "_normalized", None) is None:
             dcf = self.cf["DiversitySampler"]
             cols = list(dcf["columns"])
             db = self.db.select(S.PATCH_ID, S.FILE_ID, *cols)
-            snap = dcf.get("manifest_stats")
             if dcf.get("normalization", "standardization") != "standardization":
-                if snap:
+                if dcf.get("manifest_stats"):
                     raise ValueError(
                         "manifest_stats feeds standardization partials; the "
                         "quantile grid is not manifest-expressible — drop "
@@ -61,12 +56,7 @@ class DiversitySampler(Sampler):
                     db, cols, n_quantiles=dcf.get("n_quantiles", 50)
                 )
             else:
-                # a composite's profile counts targets in a scan and
-                # carries no partials: the manifests supply them
-                stats = profile
-                if snap and profile.stats is None:
-                    stats = self._manifest_profile("DiversitySampler")
-                db = standardize(db, cols, stats=stats)
+                db = standardize(db, cols, stats=profile)
             self._normalized = db
         return self._normalized
 

@@ -8,10 +8,10 @@ SpatialSampler, rebalancing the validation fraction so the FINAL val count
 is floor(frac * n) for the n rows returned (reference targetted.py:46-51 —
 replicated as arithmetic, not as the reference's in-place config mutation).
 
-One :class:`CatalogueProfile` (per file: rows and a count per target)
-gives the reachable total, each branch's skew salt and the completion's
-salt; TripleSampler passes the profile its three legs share. No targets
-is an empty targetted selection.
+One :class:`CatalogueProfile` (rows per file) gives the reachable
+total and the skew salt of every branch and of the completion;
+TripleSampler passes the profile its three legs share. No targets is an
+empty targetted selection.
 """
 
 from __future__ import annotations
@@ -51,18 +51,12 @@ class TargettedSampler(Sampler):
         return self._as_dataframe(self.get_selection())
 
     def get_selection(self, profile: CatalogueProfile | None = None) -> pa.Table:
-        """``profile``: a composite's shared catalogue profile, counting
-        this sampler's targets; a standalone run aggregates its own."""
+        """``profile``: a composite's shared catalogue profile; a
+        standalone run aggregates its own."""
         target_total = self.cf["target_total_num_patches"]
         targets = self.sorted_targets(self.cf["TargettedSampler"]["targets"])
-        names = list(targets.keys())
-        # the profile's per-target maxima hand each branch its salt (the
-        # auto-salt detection inside sample_with_stratification would
-        # run a per-strata count scan PER TARGET — same formula, so the
-        # output is identical either way; the salt only selects the
-        # skew-guard execution strategy)
         if profile is None:
-            profile = CatalogueProfile.of(self.db, targets=names, persist=False)
+            profile = CatalogueProfile.of(self.db, persist=False)
         profile.build()
         # a target above the catalogue size is met by the whole catalogue
         reachable = min(target_total, profile.total_rows)
@@ -71,7 +65,12 @@ class TargettedSampler(Sampler):
             int(o["target_min_samples_proportion"] * target_total)
             for o in targets.values()
         ]
-        salts = [salt_for_max_stratum(profile.target_max[n]) for n in names]
+        # a branch and the completion draw from subsets of the catalogue,
+        # so its largest file bounds their strata: one salt for all (the
+        # auto-salt detection would run a per-strata count scan PER
+        # TARGET; the salt only selects the skew-guard execution
+        # strategy, the output is identical for any salt)
+        salt = salt_for_max_stratum(profile.max_rows_per_file)
         # Measured dead end, do not retry: merging the four per-target
         # rank windows into ONE window over the tagged union (per-target
         # seed via a tag-indexed premixed-seed column) produced an
@@ -93,7 +92,7 @@ class TargettedSampler(Sampler):
                 quotas[i],
                 keys=S.FILE_ID,
                 seed=self.seed + 7 * i,
-                salt=salts[i],
+                salt=salt,
             )
             return self._finalize(sel, seed_offset=7 * i + 1)
 
@@ -135,12 +134,10 @@ class TargettedSampler(Sampler):
         completion_cf = dict(self.cf)
         completion_cf["frac_validation_set"] = frac_for_completion
         ss = SpatialSampler(self.db, completion_cf, log=self.log, seed=self.seed + 991)
-        # the completion draws from a subset of the catalogue, so the
-        # largest file bounds its strata
         completion = ss.get_selection(
             num_to_sample=num_to_add,
             current_selection_ids=selection,
-            salt=salt_for_max_stratum(profile.max_rows_per_file),
+            salt=salt,
         )
         return pa.concat_tables([selection, completion], promote_options="default")
 

@@ -53,11 +53,12 @@ class TripleSampler(Sampler):
         # and FPS totals, the completion's salt. A full resume (both
         # selection stages committed) reads none of it.
         full_resume = self._will_resume("targetted_plus_diverse")
-        profile = ds.profile(targets=list(self.cf["TargettedSampler"]["targets"]))
+        profile = ds.profile()
         try:
             if not full_resume:
                 # over a flat catalogue, the diversity leg's standardize
-                # runs the profile's aggregation
+                # runs the profile's aggregation; a snapshot catalogue's
+                # manifests hold the whole profile, so none runs
                 ds.prepare(profile)
             targetted = self._stage("targetted", lambda: ts.get_selection(profile))
 

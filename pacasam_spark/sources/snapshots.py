@@ -20,14 +20,16 @@ any historical snapshot is diagnosable from the directory alone.
 `read_snapshot(version=None)` is time travel: latest committed by
 default, any committed version explicitly. `expire_snapshots` drops old
 versions' data but keeps their manifests (history stays inspectable —
-the Iceberg expire-snapshots shape), never touching data a live version
-still references through an append chain.
+the Iceberg expire-snapshots shape).
 
-Commit types (Iceberg's): an OVERWRITE version's files are the whole
-table; an APPEND version adds files on top of its parent, with the
-logical file set resolved by walking manifests at read time — no data
-copied per commit, so a stream of small appends is O(new rows), not
-O(table). Schema is validated against the parent at append time.
+Every commit is an OVERWRITE (Iceberg's commit type): a version's own
+files are the whole table, so a read, the manifest statistics and
+expiry each need that one version's manifest and nothing else. A
+sampling run's output and a catalogue ingest are whole-table writes,
+which is all this module is for. A version that an older writer
+committed as ``append`` or ``upsert`` (a file set layered on its
+parent's) is refused with ``ValueError`` by every reader of its data,
+never read as a partial table.
 
 A real multi-writer deployment would route commits through a table
 format's atomic catalog (Iceberg/Delta); this module is the
@@ -195,40 +197,19 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 
 def _load_manifest(table_dir: str, version: int) -> dict:
+    """The manifest of a committed version, for a reader of its data:
+    a version whose files are not the whole table is refused."""
     with open(_manifest_path(table_dir, version)) as f:
-        return json.load(f)
-
-
-def _resolve_chain(table_dir: str, version: int) -> list[dict]:
-    """Manifests whose data files make up the given version's logical
-    table: the version itself plus, through contiguous APPEND/UPSERT
-    links, its ancestors. An overwrite commit terminates the walk — it
-    replaced the table. Newest first."""
-    chain = [_load_manifest(table_dir, version)]
-    while (
-        chain[-1].get("commit_type", "overwrite") in ("append", "upsert")
-        and chain[-1]["parent_version"] is not None
-    ):
-        chain.append(_load_manifest(table_dir, chain[-1]["parent_version"]))
-    return chain
-
-
-def _live_files(chain: list[dict]) -> list[tuple[dict, str]]:
-    """(owning manifest, file basename) pairs that make up the newest
-    chain member's logical table: every chain member's files, minus
-    files LOGICALLY REMOVED by a newer upsert commit (the manifest's
-    ``removed`` list of [version, file] pairs — removal is metadata
-    only; the bytes stay on disk until the version expires, which is
-    what keeps time travel to pre-upsert versions working)."""
-    removed: set[tuple[int, str]] = set()
-    out = []
-    for m in chain:  # newest first: removals only ever point backwards
-        for f in sorted(m["files"]):
-            if (m["version"], f) not in removed:
-                out.append((m, f))
-        for v, f in m.get("removed", []):
-            removed.add((int(v), f))
-    return out
+        m = json.load(f)
+    kind = m.get("commit_type", "overwrite")
+    if kind != "overwrite":
+        raise ValueError(
+            f"{table_dir} v{version:05d} is an {kind!r} commit, whose files "
+            "are layered on its parent's; snapshot tables are read as "
+            "overwrite commits only — rewrite the table with an overwrite "
+            "commit (write_snapshot of the full table)"
+        )
+    return m
 
 
 def write_snapshot(
@@ -238,17 +219,15 @@ def write_snapshot(
     stats_columns: list[str] | None = None,
     norm_columns: list[str] | None = None,
     count_key: str | None = None,
-    mode: str = "overwrite",
     bucket_by: tuple[str, int] | None = None,
     sort_by: tuple[str, ...] | None = None,
-    _removed: list[tuple[int, str]] | None = None,
-    _removed_rows: int = 0,
 ) -> int:
-    """Commit ``df`` as the next snapshot of ``table_dir``; returns the
-    new version number. One extra aggregation over the written files
-    collects the per-FILE lineage (rows per committed part-file — the
-    writer's task layout, since each write task commits exactly the
-    part-files it produced) and the total, in a single count-shuffle.
+    """Commit ``df`` as the next snapshot of ``table_dir`` — the whole
+    table, an overwrite commit; returns the new version number. One
+    extra aggregation over the written files collects the per-FILE
+    lineage (rows per committed part-file — the writer's task layout,
+    since each write task commits exactly the part-files it produced)
+    and the total, in a single count-shuffle.
     Grouping by spark_partition_id() of the re-read would instead
     record READ splits, which depend on maxPartitionBytes packing, not
     on how the snapshot was written.
@@ -275,18 +254,6 @@ def write_snapshot(
     just gains ``count_key`` and the partials fold per file on the
     driver (exact integer/Decimal arithmetic).
 
-    ``mode`` is the Iceberg commit type. ``"overwrite"`` (default):
-    this version's files ARE the table. ``"append"``: this commit
-    writes ONLY ``df``'s rows; the version's logical table is the
-    parent's table plus these files (resolved by walking the manifest
-    chain at read time — no data is copied, the 100 TB ingest pattern).
-    Appends require ``df``'s schema to equal the parent table's schema
-    (raises ``ValueError`` otherwise, like Iceberg's append validation);
-    an append onto an empty table degrades to an overwrite.
-    ``mode="upsert"`` is internal plumbing for :func:`upsert_snapshot`
-    (which computes ``_removed``/``_removed_rows``) — the commit adds
-    ``df``'s files AND logically removes the listed parent files.
-
     ``bucket_by=(key, n)`` writes the version's data files in Spark's
     bucketed layout — the Iceberg ``bucket(n, key)`` partition transform
     — with exactly one file per bucket, per-file sorted by ``sort_by``
@@ -296,18 +263,7 @@ def write_snapshot(
     it plan ZERO exchanges, so combined with ``norm_columns`` /
     ``count_key`` a Diversity run over the table does ONE data scan and
     ONE shuffle (the FPS chunk exchange) instead of two scans and two
-    shuffles. Layout applies to overwrite commits (appends/upserts add
-    foreign files the bucketed-scan contract can't cover — recover the
-    layout with :func:`compact_snapshots`)."""
-    if mode not in ("overwrite", "append", "upsert"):
-        raise ValueError(f"mode must be overwrite|append|upsert, got {mode!r}")
-    if bucket_by is not None and mode != "overwrite":
-        raise ValueError(
-            "bucket_by applies to overwrite commits only — an append/upsert "
-            "mixes bucketed and foreign files under one version, which the "
-            "bucketed-scan contract cannot honor; compact_snapshots(..., "
-            "bucket_by=...) restores the layout"
-        )
+    shuffles."""
     _check_stats_columns(df, stats_columns)
     _check_norm_columns(df, norm_columns, count_key)
     os.makedirs(table_dir, exist_ok=True)
@@ -316,48 +272,6 @@ def write_snapshot(
     data_dir = os.path.join(vdir, "data")
     committed = _committed_versions(table_dir)
     parent = committed[-1] if committed else None
-    parent_total = 0
-    if mode in ("append", "upsert") and parent is None:
-        mode = "overwrite"  # appending to an empty table creates it
-    if mode in ("append", "upsert"):
-        # validate BEFORE writing any data (Iceberg append validation);
-        # compare name+type only — parquet round-trips relax nullability.
-        # Schema EVOLUTION (Iceberg add-column): an append may introduce
-        # new NULLABLE columns — the commit's schema becomes the table
-        # schema, and readers null-backfill older files (read_snapshot
-        # reads every contributing file with the newest manifest's
-        # schema, and parquet resolves columns by name).
-        # Dropping or re-typing a column still raises: old manifests are
-        # immutable, so time travel to pre-evolution versions is
-        # untouched by construction.
-        parent_manifest = _load_manifest(table_dir, parent)
-        parent_shape = {
-            f["name"]: f["type"] for f in parent_manifest["schema"]["fields"]
-        }
-        new_shape = {
-            f["name"]: f["type"] for f in df.schema.jsonValue()["fields"]
-        }
-        missing = [n for n in parent_shape if n not in new_shape]
-        changed = [
-            n
-            for n, t in parent_shape.items()
-            if n in new_shape and new_shape[n] != t
-        ]
-        if missing or changed:
-            raise ValueError(
-                f"append to {table_dir} v{parent:05d} with a different "
-                f"schema (missing columns: {missing}, type changes: "
-                f"{changed}); appends may only ADD nullable columns — "
-                "use mode='overwrite' to replace the table"
-            )
-        # added columns need no nullability check: the manifest schema is
-        # taken from the parquet RE-READ of the written files, which
-        # relaxes every field to nullable — so older files always
-        # null-backfill under the evolved schema
-        parent_total = parent_manifest.get("total_row_count") or sum(
-            m["files"][f]
-            for m, f in _live_files(_resolve_chain(table_dir, parent))
-        )
     layout = None
     if bucket_by is not None:
         bucket_key, n_buckets = bucket_by
@@ -404,19 +318,14 @@ def write_snapshot(
         group_cols.append(F.col(count_key))
     rows = written.groupBy(*group_cols).agg(*aggs).collect()
     parts = _fold_file_groups(rows, stats_columns, norm_columns, count_key)
+    n_rows = sum(r["count"] for r in parts)
     manifest = {
         "version": version,
         "parent_version": parent,
-        "commit_type": mode,
-        # rows ADDED by this commit (old readers sum these per version);
-        # total_row_count is the logical table size after the commit
-        "row_count": sum(r["count"] for r in parts),
-        "total_row_count": parent_total
-        - _removed_rows
-        + sum(r["count"] for r in parts),
-        # files of ANCESTOR versions this commit logically removes
-        # (upsert's copy-on-write rewrite targets); [[version, file], ...]
-        "removed": [[int(v), f] for v, f in (_removed or [])],
+        "commit_type": "overwrite",
+        # the version's rows are the table's: both counts are the same
+        "row_count": n_rows,
+        "total_row_count": n_rows,
         "schema": written.schema.jsonValue(),
         "files": {os.path.basename(r["file"]): r["count"] for r in parts},
         # per-file column bounds (Iceberg lower_bounds/upper_bounds):
@@ -452,7 +361,6 @@ def write_snapshot(
         else {},
         # per-file row counts grouped by a catalogue column (chunked
         # FPS's per-file_id counts table) — [[key, rows], ...] per file
-        # so upsert's logical file removal keeps the totals correct.
         "key_counts": {
             "column": count_key,
             "by_file": {
@@ -472,8 +380,8 @@ def write_snapshot(
         },
         "metadata": metadata or {},
         # physical data layout of THIS version's files (Iceberg's
-        # bucket(n, key) partition transform); readers that resolve to a
-        # single bucketed commit serve a zero-exchange bucketed scan.
+        # bucket(n, key) partition transform); an unpruned read serves a
+        # zero-exchange bucketed scan.
         "layout": layout,
         # wall-clock commit instant (epoch seconds) — AS OF time travel
         "committed_at": time.time(),
@@ -575,9 +483,9 @@ def read_snapshot(
         if version is not None:
             raise ValueError("pass version OR as_of, not both")
         eligible = [
-            v
-            for v in committed
-            if _load_manifest(table_dir, v).get("committed_at", 0.0) <= as_of
+            m["version"]
+            for m in snapshots(table_dir)
+            if m.get("committed_at", 0.0) <= as_of
         ]
         if not eligible:
             raise FileNotFoundError(
@@ -591,17 +499,15 @@ def read_snapshot(
             f"snapshot v{version:05d} of {table_dir} does not exist or was "
             f"never committed (committed: {committed})"
         )
-    chain = _resolve_chain(table_dir, version)
-    for m in chain:
-        if not os.path.isdir(os.path.join(_vdir(table_dir, m["version"]), "data")):
-            raise FileNotFoundError(
-                f"snapshot v{m['version']:05d} of {table_dir} (contributing "
-                f"files to v{version:05d}) was expired — its manifest "
-                "survives for inspection but the data is gone"
-            )
-    if bounds is None and len(chain) == 1:
-        data_dir = os.path.join(_vdir(table_dir, version), "data")
-        layout = chain[0].get("layout")
+    manifest = _load_manifest(table_dir, version)
+    data_dir = os.path.join(_vdir(table_dir, version), "data")
+    if not os.path.isdir(data_dir):
+        raise FileNotFoundError(
+            f"snapshot v{version:05d} of {table_dir} was expired — its "
+            "manifest survives for inspection but the data is gone"
+        )
+    if bounds is None:
+        layout = manifest.get("layout")
         if layout:
             # Serve the version as a catalog-backed bucketed scan so
             # windows/aggregations on the bucket key plan no Exchange.
@@ -616,7 +522,7 @@ def read_snapshot(
             # stale registration pointing at the old files
             digest = hashlib.md5(
                 f"{os.path.abspath(table_dir)}@{version}"
-                f"@{chain[0].get('committed_at', 0.0)}".encode()
+                f"@{manifest.get('committed_at', 0.0)}".encode()
             ).hexdigest()[:16]
             name = f"snap_bucketed_{digest}"
             if spark.catalog.tableExists(name):
@@ -641,7 +547,7 @@ def read_snapshot(
             if mine is None:
                 mine = {}
                 spark._pacasam_snap_registrations = mine
-            key = (version, chain[0].get("committed_at", 0.0))
+            key = (version, manifest.get("committed_at", 0.0))
             prev = mine.get(os.path.abspath(table_dir))
             if prev is None or key > prev[0]:
                 if prev is not None:
@@ -649,22 +555,11 @@ def read_snapshot(
                 mine[os.path.abspath(table_dir)] = (key, name)
             return out
         return spark.read.parquet(data_dir)
-    # explicit file list: the version's live files (own + — through
-    # append/upsert links — ancestors', minus upsert-removed ones), each
-    # pruned against its OWN manifest's per-file bounds (append/upsert
-    # schemas are validated at commit, so the newest manifest's schema
-    # reads every contributing file)
-    kept_per_version = {
-        m["version"]: set(prune_files(m, bounds)) for m in chain
-    }
-    paths = [
-        os.path.join(_vdir(table_dir, m["version"]), "data", f)
-        for m, f in _live_files(chain)
-        if f in kept_per_version[m["version"]]
-    ]
+    # explicit file list: the version's files that survive pruning
+    paths = [os.path.join(data_dir, f) for f in prune_files(manifest, bounds)]
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(chain[0]["schema"])
+    schema = StructType.fromJson(manifest["schema"])
     if not paths:  # every file pruned — empty result, manifest schema
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*paths)
@@ -681,24 +576,24 @@ def snapshot_fps_inputs(
     global normalization statistics for ``columns``, the per-``key``
     row-count table chunked FPS needs and its total and maximum — from
     the snapshot MANIFESTS alone, no data scan (the Iceberg idiom of
-    planning from manifest stats). A built profile without target
-    counts: it feeds ``standardize(stats=...)`` and ``fps_sample(profile=...)``.
+    planning from manifest stats). A built profile: it feeds every leg
+    of a sampling run, ``standardize(stats=...)`` and
+    ``fps_sample(profile=...)`` included.
 
     The merge is exact (integer/Decimal arithmetic over the per-file
     partials the writer recorded), so sampler selections are
     bit-identical to the in-scan profile pass — verified by
     tests/test_manifest_stats.py.
 
-    Raises ``ValueError`` when any live file of the resolved version
-    lacks partials for ``columns`` or key counts for ``key`` (table
-    written without ``norm_columns``/``count_key``, or rewritten by an
-    upsert/compaction that dropped them) — callers should then fall
+    Raises ``ValueError`` when any file of the resolved version lacks
+    partials for ``columns`` or key counts for ``key`` (table written
+    without ``norm_columns``/``count_key``) — callers should then fall
     back to the in-scan pass or rewrite the table with stats.
     """
     import decimal
 
     v = latest_version(table_dir) if version is None else version
-    chain = _resolve_chain(table_dir, v)
+    m = _load_manifest(table_dir, v)
     stats: dict = {}
     for c in columns:
         stats[f"cnt_{c}"] = 0
@@ -707,18 +602,18 @@ def snapshot_fps_inputs(
         stats[f"s_{c}"] = None
         stats[f"ssq_{c}"] = None
     key_totals: dict = {}
-    for m, f in _live_files(chain):
+    kc = m.get("key_counts") or {}
+    for f in sorted(m["files"]):
         ns = m.get("norm_stats", {}).get(f)
-        kc = m.get("key_counts") or {}
         if ns is None or any(c not in ns for c in columns):
             raise ValueError(
-                f"{table_dir} v{m['version']:05d} has no normalization "
+                f"{table_dir} v{v:05d} has no normalization "
                 f"partials for {columns} (file {f}); write the table with "
                 f"norm_columns={columns} to enable manifest-fed sampling"
             )
         if kc.get("column") != key or f not in kc.get("by_file", {}):
             raise ValueError(
-                f"{table_dir} v{m['version']:05d} has no per-{key!r} row "
+                f"{table_dir} v{v:05d} has no per-{key!r} row "
                 f"counts (file {f}); write the table with count_key={key!r}"
             )
         for c in columns:
@@ -737,7 +632,7 @@ def snapshot_fps_inputs(
             key_totals[k] = key_totals.get(k, 0) + n
     key_type = next(
         fld["type"]
-        for fld in chain[0]["schema"]["fields"]
+        for fld in m["schema"]["fields"]
         if fld["name"] == key
     )
     return CatalogueProfile(
@@ -750,195 +645,19 @@ def snapshot_fps_inputs(
     )
 
 
-def upsert_snapshot(
-    spark: SparkSession,
-    table_dir: str,
-    df: DataFrame,
-    key: str,
-    stats_columns: list[str] | None = None,
-    norm_columns: list[str] | None = None,
-    count_key: str | None = None,
-) -> int:
-    """Copy-on-write MERGE (Iceberg's ``MERGE INTO ... WHEN MATCHED THEN
-    UPDATE WHEN NOT MATCHED THEN INSERT`` with copy-on-write): rows of
-    ``df`` REPLACE table rows sharing their ``key`` and new keys are
-    inserted — rewriting ONLY the files that can contain a matching
-    key, never the whole table.
-
-    The affected-file set comes from the manifests' per-file min/max
-    stats on ``key`` (record them via ``stats_columns=[key]`` at write
-    time — on a key-clustered layout the rewrite touches a handful of
-    files): ``df``'s distinct keys are joined against the tiny
-    broadcast file-range table, so a file is rewritten only if SOME
-    upsert key lands inside its [min, max] (a single lo/hi envelope of
-    the upsert keys would mark everything affected whenever one low
-    update meets one high insert); files without key stats are
-    rewritten conservatively. The commit writes (affected
-    rows with matching keys dropped) ∪ ``df`` as its own files and
-    logically removes the affected ancestor files in the manifest —
-    bytes stay on disk, so time travel to pre-upsert versions still
-    works, and expiry reclaims them when their version leaves every
-    live chain. Atomic like every commit: readers see the old table or
-    the new one, never a half-merge.
-    """
-    # MERGE semantics require the source keys to be unique — Iceberg
-    # raises when several source rows match one target row; silently
-    # inserting both would commit a duplicate-key table (round-6 ADVICE).
-    dup = (
-        df.groupBy(key).count().filter(F.col("count") > 1).limit(1).collect()
-    )
-    if dup:
-        raise ValueError(
-            f"upsert source has duplicate {key!r} values (e.g. "
-            f"{dup[0][key]!r}); MERGE needs one source row per key — "
-            "pre-aggregate the source"
-        )
-    committed = _committed_versions(table_dir)
-    if not committed:
-        return write_snapshot(
-            df,
-            table_dir,
-            stats_columns=stats_columns,
-            norm_columns=norm_columns,
-            count_key=count_key,
-            mode="overwrite",
-        )
-    chain = _resolve_chain(table_dir, committed[-1])
-    from pyspark.sql.types import StructType
-
-    table_schema = StructType.fromJson(chain[0]["schema"])
-    affected: list[tuple[dict, str]] = []
-    ranged: list[tuple[dict, str, object, object]] = []
-    for m, f in _live_files(chain):
-        st = m.get("file_stats", {}).get(f, {}).get(key)
-        if st is None or st[0] is None:
-            # no key stats (or all-null file): rewrite conservatively
-            affected.append((m, f))
-        else:
-            ranged.append((m, f, st[0], st[1]))
-    if ranged:
-        ktype = table_schema[key].dataType.simpleString()
-        # manifest stats may be JSON-coerced (date/timestamp/decimal ->
-        # string); ship them as strings and cast back to the key type —
-        # exact for every _STATS_OK type
-        rdf = spark.createDataFrame(
-            [(m["version"], f, str(lo), str(hi)) for m, f, lo, hi in ranged],
-            "v long, f string, lo string, hi string",
-        ).select(
-            "v", "f",
-            F.col("lo").cast(ktype).alias("lo"),
-            F.col("hi").cast(ktype).alias("hi"),
-        )
-        hits = {
-            (r["v"], r["f"])
-            for r in df.select(F.col(key).alias("__k"))
-            .distinct()
-            .join(
-                F.broadcast(rdf),
-                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-            )
-            .select("v", "f")
-            .distinct()
-            .collect()
-        }
-        affected += [
-            (m, f) for m, f, _lo, _hi in ranged if (m["version"], f) in hits
-        ]
-    removed_rows = sum(m["files"][f] for m, f in affected)
-
-    if affected:
-        old = spark.read.schema(table_schema).parquet(
-            *(
-                os.path.join(_vdir(table_dir, m["version"]), "data", f)
-                for m, f in affected
-            )
-        )
-        # the join moves the key column to the front — restore the table's
-        # column order or the commit-time schema validation rejects any
-        # upsert keyed on a non-first column
-        kept_old = old.join(
-            df.select(key).distinct(), on=key, how="left_anti"
-        ).select(*old.columns)
-        new_data = kept_old.unionByName(df.select(*old.columns))
-    else:
-        new_data = df
-    return write_snapshot(
-        new_data,
-        table_dir,
-        metadata={"upsert_key": key, "files_rewritten": len(affected)},
-        stats_columns=stats_columns,
-        norm_columns=norm_columns,
-        count_key=count_key,
-        mode="upsert",
-        _removed=[(m["version"], f) for m, f in affected],
-        _removed_rows=removed_rows,
-    )
-
-
-def compact_snapshots(
-    spark: SparkSession,
-    table_dir: str,
-    stats_columns: list[str] | None = None,
-    zorder: tuple[str, str] | None = None,
-    n_files: int = 32,
-    norm_columns: list[str] | None = None,
-    count_key: str | None = None,
-    bucket_by: tuple[str, int] | None = None,
-    sort_by: tuple[str, ...] | None = None,
-) -> int:
-    """Rewrite the latest version's append chain into ONE overwrite
-    commit (Iceberg's rewrite_data_files + expire pattern): a long
-    streaming-append history accumulates many small files whose scans
-    pay a task per file; compaction reads the logical table once and
-    commits it as a single well-laid-out version, after which
-    ``expire_snapshots`` can reclaim the chain. ``zorder=(x, y)``
-    clusters the rewrite on the Morton curve (spatial/zorder.py) so the
-    recorded ``stats_columns`` bounds become selective again. The
-    commit is atomic like any snapshot commit — readers see the old
-    chain or the compacted version, never a half state. ``bucket_by``
-    lays the rewrite out bucketed (mutually exclusive with ``zorder`` —
-    two competing physical orders), restoring zero-exchange reads after
-    an append chain diluted the layout."""
-    if bucket_by is not None and zorder is not None:
-        raise ValueError("bucket_by and zorder are competing layouts — pick one")
-    latest = read_snapshot(spark, table_dir)
-    parent = _committed_versions(table_dir)[-1]
-    if zorder is not None:
-        from pacasam_spark.spatial.zorder import cluster_by_zorder
-
-        latest = cluster_by_zorder(latest, zorder[0], zorder[1], n_files)
-        stats_columns = stats_columns or list(zorder)
-    return write_snapshot(
-        latest,
-        table_dir,
-        metadata={"compaction_of": parent},
-        stats_columns=stats_columns,
-        norm_columns=norm_columns,
-        count_key=count_key,
-        mode="overwrite",
-        bucket_by=bucket_by,
-        sort_by=sort_by,
-    )
-
-
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> list[int]:
     """Drop the DATA of committed snapshots older than the newest
-    ``keep_last``, EXCEPT data still referenced by a kept version
-    through an append chain (Iceberg expire semantics: expiry removes
-    unreferenced files, never files a live snapshot reads). Manifests
-    stay — history remains inspectable. Returns the expired version
-    numbers; uncommitted dirs are removed whole."""
+    ``keep_last`` — every version's files are its whole table, so no kept
+    version reads them. Manifests stay — history remains inspectable.
+    Returns the expired version numbers; uncommitted dirs are removed
+    whole."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     committed = _committed_versions(table_dir)
-    kept = set(committed[-keep_last:])
-    referenced = {
-        m["version"] for v in kept for m in _resolve_chain(table_dir, v)
-    }
+    for v in committed[-keep_last:]:
+        _load_manifest(table_dir, v)  # refuses a kept chain version first
     expired = []
     for v in committed[:-keep_last]:
-        if v in referenced:
-            continue
         data_dir = os.path.join(_vdir(table_dir, v), "data")
         if os.path.isdir(data_dir):
             shutil.rmtree(data_dir)

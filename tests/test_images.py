@@ -174,43 +174,24 @@ def test_image_catalogue_schema_and_decode(images):
         )
 
 
-def test_jl_codec_real_quantization_loss_above_40db():
-    """The jpeg-lite tier: real DCT quantization loss (not bit
-    truncation), deterministic, PSNR >= 40 dB at the default quality —
-    the lossy invariant from BASELINE.json input_hint."""
-    import numpy as np
-
-    from pacasam_spark.imaging import decode_jl, encode_jl
-
-    for i in range(5):
-        a = synth_pixels(f"jl-{i}", 33, 47)  # non-multiple-of-8 dims
-        payload = encode_jl(a)
-        b = decode_jl(payload)
-        assert b.shape == a.shape
-        assert psnr(a, b) >= 40.0
-        assert not np.array_equal(a, b)  # genuinely lossy
-        assert payload == encode_jl(a)  # deterministic
-        # decode(encode(decode)) is stable (idempotent loss model)
-        assert psnr(b, decode_jl(encode_jl(b))) > psnr(a, b)
-
-
-def test_extract_reencode_to_jl(spark):
-    """E3 re-encode with the DCT tier through the Spark pipeline."""
+def test_extract_reencode_to_jpg(spark):
+    """E3 re-encode with the DCT (baseline JPEG) tier through the Spark
+    pipeline."""
     from pacasam_spark.extract.images import extract_patches
     from pacasam_spark.sources.images import synthetic_images
 
     images = synthetic_images(spark, n=12, size=16)
     sampling = images.select("image_id").withColumn("split", F.lit("train"))
-    out = extract_patches(images, sampling, out_fmt="jl")
+    out = extract_patches(images, sampling, out_fmt="jpg")
     rows = out.collect()
     assert len(rows) == 12
     for r in rows:
-        arr = decode(bytes(r.bytes), "jl")
+        arr = decode(bytes(r.bytes), "jpg")
         ref = synth_pixels(r.image_id, 16, 16)
         # source may itself be lossy (q6): compare against the decoded
-        # source tier, allowing the jl loss on top
+        # source tier, allowing the jpg loss on top
         assert psnr(ref, arr) >= 38.0
-        assert r.fmt == "jl"
+        assert r.fmt == "jpg"
 
 
 def test_rasterize_mask_halfplane_and_consistency():
@@ -295,7 +276,7 @@ def test_phash64_stable_under_lossy_and_noise():
 
     a = synth_pixels("ph-a", 64, 64)
     h = phash64(a)
-    for fmt in ("q6", "jl"):
+    for fmt in ("q6", "jpg"):
         assert _ham(h, phash64(decode(encode(a, fmt), fmt))) <= 6
     rng = np.random.default_rng(0)
     noisy = np.clip(a.astype(int) + rng.integers(-8, 9, a.shape), 0, 255)
@@ -316,7 +297,7 @@ def test_compute_phash_end_to_end_near_dup(spark):
     from pacasam_spark.sources.images import synthetic_images
 
     images = synthetic_images(spark, n=40, size=32).persist()
-    # planted near-dups: re-encode 10 images in the lossy jl tier
+    # planted near-dups: re-encode 10 images in the lossy jpg tier
     def reencode(batch_iter):
         import pandas as pd
 
@@ -327,7 +308,7 @@ def test_compute_phash_end_to_end_near_dup(spark):
             for r in pdf.itertuples(index=False):
                 arr = decode(bytes(r.bytes), r.fmt)
                 out.append(
-                    ("dup-" + r.image_id, encode(arr, "jl"), r.w, r.h, "jl",
+                    ("dup-" + r.image_id, encode(arr, "jpg"), r.w, r.h, "jpg",
                      r.caption, r.phash)
                 )
             yield pd.DataFrame(

@@ -20,7 +20,6 @@ from pacasam_spark.sources.snapshots import (
     read_snapshot,
     snapshot_fps_inputs,
     snapshots,
-    upsert_snapshot,
     write_snapshot,
 )
 from pacasam_spark.sources.synthetic import synthetic_catalogue
@@ -48,7 +47,8 @@ def _assert_stats_equal(stats, row, cols):
 def test_manifest_stats_match_inscan_agg(spark, tmp_path):
     tbl = str(tmp_path / "tbl")
     cat = synthetic_catalogue(spark, db_size=3000)
-    write_snapshot(cat, tbl, norm_columns=COLS, count_key="file_id")
+    # several part-files, so the manifest merge folds per-file partials
+    write_snapshot(cat.repartition(4), tbl, norm_columns=COLS, count_key="file_id")
     profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
     stats, counts = profile.stats, profile.per_file
     _assert_stats_equal(stats, _global_stats(cat, COLS), COLS)
@@ -70,6 +70,7 @@ def test_manifest_stats_match_inscan_agg(spark, tmp_path):
     # count_key grouping (resume/attrition consumers rely on them)
     m = snapshots(tbl)[-1]
     assert sum(m["files"].values()) == 3000
+    assert len(m["files"]) >= 2
 
 
 def test_manifest_fed_diversity_bit_identical(spark, tmp_path):
@@ -122,33 +123,36 @@ def test_manifest_fed_outliers_bit_identical(spark, tmp_path):
     assert base == fed
 
 
-def test_append_chain_and_upsert_merge_exactly(spark, tmp_path):
-    tbl = str(tmp_path / "tbl")
-    cat = synthetic_catalogue(spark, db_size=3000)
-    a = cat.filter(F.col("patch_id") < 2000)
-    b = cat.filter(F.col("patch_id") >= 2000)
-    write_snapshot(a, tbl, norm_columns=COLS, count_key="file_id",
-                   stats_columns=["patch_id"])
-    write_snapshot(b, tbl, norm_columns=COLS, count_key="file_id",
-                   stats_columns=["patch_id"], mode="append")
-    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
-    stats, counts = profile.stats, profile.per_file
-    _assert_stats_equal(stats, _global_stats(cat, COLS), COLS)
-    assert counts.agg(F.sum("count")).first()[0] == 3000
+def test_manifest_fed_triple_runs_no_profile_scan(spark, tmp_path):
+    """Over a snapshot catalogue with manifest statistics, TripleSampler's
+    one profile comes from the manifests: on the benchmark's 10k-row
+    catalogue and config the call submits at most 12 Spark jobs (15 when
+    the targetted leg's salts needed per-target counts, which took a
+    profile scan of the catalogue), and selects exactly what the same
+    call over the flat catalogue selects."""
+    from perfbench.workloads import FEATURES, SIZES, sampling_config
+    from pacasam_spark.samplers import TripleSampler
 
-    # upsert rewrites some files; the removed files' partials must drop
-    # out and the new files' partials enter — stats track the new table
-    upd = cat.filter(F.col("patch_id") < 50).withColumn(
-        "nb_sol", F.col("nb_sol") + F.lit(7)
+    db = synthetic_catalogue(spark, db_size=10_000, seed=5, exact_counts=False)
+    tbl = str(tmp_path / "tbl")
+    write_snapshot(db, tbl, norm_columns=list(FEATURES), count_key="file_id",
+                   bucket_by=("file_id", 8), sort_by=("file_id", "patch_id"))
+    cfg = sampling_config(SIZES["full"])
+    flat = sorted(tuple(r) for r in TripleSampler(db, cfg).get_patches().collect())
+
+    def job_ids():
+        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    cfg["DiversitySampler"]["manifest_stats"] = {"dir": tbl}
+    last = max(job_ids(), default=-1)
+    fed = sorted(
+        tuple(r)
+        for r in TripleSampler(read_snapshot(spark, tbl), cfg).get_patches().collect()
     )
-    upsert_snapshot(spark, tbl, upd, key="patch_id",
-                    stats_columns=["patch_id"],
-                    norm_columns=COLS, count_key="file_id")
-    merged = read_snapshot(spark, tbl)
-    profile = snapshot_fps_inputs(spark, tbl, COLS, key="file_id")
-    stats2, counts2 = profile.stats, profile.per_file
-    _assert_stats_equal(stats2, _global_stats(merged, COLS), COLS)
-    assert counts2.agg(F.sum("count")).first()[0] == 3000
+    jobs = len({j for j in job_ids() if j > last})
+    assert fed == flat
+    assert jobs <= 12, f"{jobs} Spark jobs"
 
 
 def test_missing_stats_raise(spark, tmp_path):

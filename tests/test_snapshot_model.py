@@ -1,12 +1,11 @@
 """Model-based property test of the snapshot table format: a random
-sequence of overwrite/append/upsert commits must behave exactly like a
-trivial in-memory model — for the LATEST read, for TIME TRAVEL to every
-intermediate version, for total_row_count accounting, for bounds-pruned
-reads, and after refcounted expiry. This is the test that catches
-interaction bugs between chain resolution, logical file removal and
-stats pruning that single-scenario tests miss."""
+sequence of overwrite commits, plain or bucketed, must behave exactly
+like a trivial in-memory model — for the LATEST read, for TIME TRAVEL
+to every intermediate version, for total_row_count accounting, for
+bounds-pruned reads, and after expiry. This is the test that catches
+interaction bugs between the bucketed-scan registration, time travel
+and stats pruning that single-scenario tests miss."""
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -16,57 +15,29 @@ from pacasam_spark.sources.snapshots import (
     read_snapshot,
     snapshots,
     write_snapshot,
-    upsert_snapshot,
 )
 
 KEYS = st.integers(min_value=0, max_value=29)
 
 
 def rows_strategy():
-    # unique keys per op: upsert with an intra-batch duplicate key has no
-    # single-model semantics (both rows land); the engine is tested on
-    # the well-defined surface
     return st.dictionaries(KEYS, st.sampled_from("abcd"), min_size=1, max_size=8)
 
 
-# "evolve" is an APPEND that introduces a new nullable column w (Iceberg
-# add-column): older files must null-backfill on later reads while time
-# travel to pre-evolution versions keeps the old two-column schema.
 # "bucketed" is an OVERWRITE committed in the bucketed layout (round 7):
 # reads of that version go through the catalog-table branch of
 # read_snapshot and must stay row-identical to the model, including
 # time travel after later plain commits.
 ops_strategy = st.lists(
-    st.tuples(
-        st.sampled_from(["overwrite", "append", "upsert", "evolve", "bucketed"]),
-        rows_strategy(),
-    ),
+    st.tuples(st.sampled_from(["overwrite", "bucketed"]), rows_strategy()),
     min_size=2,
     max_size=6,
 )
 
 
-def _df(spark, rows: dict[int, str], evolved: bool):
-    if evolved:
-        return spark.createDataFrame(
-            [(k, v, v.upper()) for k, v in sorted(rows.items())],
-            "patch_id long, v string, w string",
-        ).repartition(2)
-    return spark.createDataFrame(
-        [(k, v) for k, v in sorted(rows.items())], "patch_id long, v string"
-    ).repartition(2)
-
-
-_KEY = lambda t: (t[0], t[1], t[2] or "")  # noqa: E731 — None-safe sort
-
-
 def _table(spark, d, version=None):
     df = read_snapshot(spark, d, version=version)
-    has_w = "w" in df.columns
-    return sorted(
-        ((r["patch_id"], r["v"], r["w"] if has_w else None) for r in df.collect()),
-        key=_KEY,
-    ), has_w
+    return sorted((r["patch_id"], r["v"]) for r in df.collect())
 
 
 @settings(
@@ -77,63 +48,28 @@ def _table(spark, d, version=None):
 @given(ops=ops_strategy)
 def test_commit_sequence_matches_model(spark, tmp_path_factory, ops):
     d = str(tmp_path_factory.mktemp("model") / "tbl")
-    model: list[tuple[int, str, object]] = []  # multiset of (k, v, w) rows
-    states: dict[int, tuple[list, bool]] = {}
-    evolved = False
+    states: dict[int, list] = {}
 
     for op, rows in ops:
-        if op == "evolve":
-            evolved = True  # once added, every later commit carries w
-            op = "append"
-        batch = sorted(
-            (k, v, v.upper() if evolved else None) for k, v in rows.items()
-        )
-        df = _df(spark, rows, evolved)
-        if op == "bucketed":
-            v = write_snapshot(
-                df, d, stats_columns=["patch_id"],
-                bucket_by=("patch_id", 2),
-            )
-            model = batch
-        elif op == "overwrite":
-            v = write_snapshot(df, d, stats_columns=["patch_id"])
-            model = batch
-        elif op == "append":
-            v = write_snapshot(
-                df, d, mode="append", stats_columns=["patch_id"]
-            )
-            model = model + batch  # append NEVER dedupes
-        else:
-            v = upsert_snapshot(
-                spark, d, df, "patch_id", stats_columns=["patch_id"],
-            )
-            model = [r for r in model if r[0] not in rows] + batch
-        model = sorted(model, key=_KEY)
-        states[v] = (model, evolved)
+        model = sorted(rows.items())
+        df = spark.createDataFrame(model, "patch_id long, v string").repartition(2)
+        bucket_by = ("patch_id", 2) if op == "bucketed" else None
+        v = write_snapshot(df, d, stats_columns=["patch_id"], bucket_by=bucket_by)
+        states[v] = model
         assert snapshots(d)[-1]["total_row_count"] == len(model)
 
-    # latest read == model (with null backfill for pre-evolution rows)
-    got, has_w = _table(spark, d)
-    assert got == model and has_w == evolved
-    # time travel: every version reads its recorded state, with the
-    # SCHEMA of its own day — pre-evolution versions have no w column
-    for v, (state, was_evolved) in states.items():
-        got, has_w = _table(spark, d, version=v)
-        assert has_w == was_evolved, f"v{v}"
-        assert got == state, f"v{v}"
-    # bounds-pruned read == model filter (pruning must stay exact across
-    # append/upsert chains)
+    # latest read == model
+    assert _table(spark, d) == model
+    # time travel: every version reads its recorded state
+    for v, state in states.items():
+        assert _table(spark, d, version=v) == state, f"v{v}"
+    # bounds-pruned read == model filter (pruning must stay exact)
     bounds = {"patch_id": (5, 14)}
     pruned = read_snapshot(spark, d, bounds=bounds).filter(
         F.col("patch_id").between(5, 14)
     )
-    got = sorted(
-        ((r["patch_id"], r["v"], r["w"] if evolved else None)
-         for r in pruned.collect()),
-        key=_KEY,
-    )
+    got = sorted((r["patch_id"], r["v"]) for r in pruned.collect())
     assert got == [r for r in model if 5 <= r[0] <= 14]
-    # refcounted expiry never breaks the latest version
-    expire_snapshots(d, keep_last=1)
-    got, _ = _table(spark, d)
-    assert got == model
+    # expiry drops every older version's data, never the latest's
+    assert expire_snapshots(d, keep_last=1) == sorted(states)[:-1]
+    assert _table(spark, d) == model

@@ -31,6 +31,9 @@ def test_snapshot_versions_and_time_travel(spark, tmp_path):
     assert hist[0]["parent_version"] is None
     assert hist[1]["parent_version"] == 1
     assert hist[1]["row_count"] == 25
+    # every version's own files are the whole table
+    assert [m["commit_type"] for m in hist] == ["overwrite", "overwrite"]
+    assert [m["total_row_count"] for m in hist] == [10, 25]
     assert hist[1]["metadata"] == {"seed": 2}
     # per-file lineage: keyed by committed part-file basename, sums to
     # the total (writer-task layout, not read splits)
@@ -82,312 +85,15 @@ def test_snapshot_empty_table_errors(spark, tmp_path):
         read_snapshot(spark, str(tmp_path / "nope"))
 
 
-def test_append_commits_chain_without_copying(spark, tmp_path):
-    """Append versions add files on top of the parent: reads resolve the
-    chain (no data copied per commit), total_row_count tracks the
-    logical table, per-commit row_count stays the delta, and an
-    overwrite resets the chain."""
-    d = str(tmp_path / "atbl")
-
-    def batch(lo, hi):
-        return spark.range(lo, hi).select(F.col("id").alias("patch_id"))
-
-    assert write_snapshot(batch(0, 10), d, mode="append") == 1  # creates
-    assert write_snapshot(batch(10, 15), d, mode="append") == 2
-    assert write_snapshot(batch(15, 35), d, mode="append") == 3
-
-    hist = snapshots(d)
-    assert [m["commit_type"] for m in hist] == ["overwrite", "append", "append"]
-    assert [m["row_count"] for m in hist] == [10, 5, 20]
-    assert [m["total_row_count"] for m in hist] == [10, 15, 35]
-
-    # time travel sees the table AS OF each version
-    assert read_snapshot(spark, d, version=1).count() == 10
-    assert read_snapshot(spark, d, version=2).count() == 15
-    latest = read_snapshot(spark, d)
-    assert sorted(r["patch_id"] for r in latest.collect()) == list(range(35))
-    # v3's own data dir holds only its delta — nothing was rewritten
-    v3_files = os.listdir(str(tmp_path / "atbl" / "v00003" / "data"))
-    assert sum(
-        os.path.getsize(str(tmp_path / "atbl" / "v00003" / "data" / f))
-        for f in v3_files if f.endswith(".parquet")
-    ) < sum(hist[2]["file_bytes"].values()) + 1  # == its manifest bytes
-
-    # overwrite resets: the new table is just the overwrite's rows
-    assert write_snapshot(batch(100, 103), d, mode="overwrite") == 4
-    assert read_snapshot(spark, d).count() == 3
-    assert snapshots(d)[-1]["total_row_count"] == 3
-
-
-def test_append_schema_evolution_add_nullable_column(spark, tmp_path):
-    """Iceberg add-column: an append may introduce a new nullable
-    column; later reads null-backfill older files, and time travel to
-    pre-evolution versions keeps the old schema."""
-    d = str(tmp_path / "etbl")
-    write_snapshot(
-        spark.range(3).select(F.col("id").alias("patch_id")), d
-    )
-    v2 = write_snapshot(
-        spark.range(3, 5).select(
-            F.col("id").alias("patch_id"),
-            F.concat(F.lit("w"), F.col("id")).alias("w"),
-        ),
-        d,
-        mode="append",
-    )
-    assert v2 == 2
-    latest = read_snapshot(spark, d).orderBy("patch_id").collect()
-    assert [r["w"] for r in latest] == [None, None, None, "w3", "w4"]
-    # pre-evolution time travel: old schema, old rows
-    v1 = read_snapshot(spark, d, version=1)
-    assert v1.columns == ["patch_id"] and v1.count() == 3
-    # dropping a column is NOT evolution
-    with pytest.raises(ValueError, match="missing columns"):
-        write_snapshot(
-            spark.range(9, 10).select(F.col("id").alias("patch_id")),
-            d,
-            mode="append",
-        )
-    # re-typing a column is NOT evolution either
-    with pytest.raises(ValueError, match="type changes"):
-        write_snapshot(
-            spark.range(9, 10).select(
-                F.col("id").cast("string").alias("patch_id"),
-                F.concat(F.lit("w"), F.col("id")).alias("w"),
-            ),
-            d,
-            mode="append",
-        )
-
-
-def test_append_schema_mismatch_raises_before_writing(spark, tmp_path):
-    d = str(tmp_path / "stbl")
-    write_snapshot(spark.range(5).select(F.col("id").alias("patch_id")), d)
-    with pytest.raises(ValueError, match="different schema"):
-        write_snapshot(
-            spark.range(5).select(F.col("id").alias("other")), d, mode="append"
-        )
-    # the failed append claimed no version and left no data dir
-    assert [m["version"] for m in snapshots(d)] == [1]
-    assert not os.path.isdir(str(tmp_path / "stbl" / "v00002"))
-
-
-def test_expire_keeps_data_referenced_by_append_chain(spark, tmp_path):
-    """Iceberg expire semantics: v1's data survives expiry while the
-    kept latest version still reads it through the chain; after an
-    overwrite breaks the chain, the old data becomes expirable."""
-    d = str(tmp_path / "etbl")
-    df = spark.range(8).select(F.col("id").alias("patch_id"))
-    write_snapshot(df, d)                                # v1
-    write_snapshot(df.limit(3), d, mode="append")        # v2 -> v1
-    write_snapshot(df.limit(2), d, mode="append")        # v3 -> v2 -> v1
-    assert expire_snapshots(d, keep_last=1) == []        # all referenced
-    assert read_snapshot(spark, d).count() == 13         # chain intact
-
-    write_snapshot(df.limit(1), d, mode="overwrite")     # v4: chain cut
-    assert sorted(expire_snapshots(d, keep_last=1)) == [1, 2, 3]
-    assert read_snapshot(spark, d).count() == 1
-    with pytest.raises(FileNotFoundError, match="expired"):
-        read_snapshot(spark, d, version=3)
-
-
-def test_append_chain_bounds_pruning_spans_versions(spark, tmp_path):
-    """bounds pruning composes with append chains: each contributing
-    manifest prunes its own files, results stay exact."""
-    from pacasam_spark.spatial.zorder import cluster_by_zorder
-
-    d = str(tmp_path / "abtbl")
-
-    def pts(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("patch_id"),
-            (F.pmod(F.xxhash64("id", F.lit(1)), 40_000_000) / 1000.0).alias("x"),
-            (F.pmod(F.xxhash64("id", F.lit(2)), 40_000_000) / 1000.0).alias("y"),
-        )
-
-    write_snapshot(
-        cluster_by_zorder(pts(0, 10_000), "x", "y", 8), d, stats_columns=["x", "y"]
-    )
-    write_snapshot(
-        cluster_by_zorder(pts(10_000, 20_000), "x", "y", 8),
-        d, mode="append", stats_columns=["x", "y"],
-    )
-    box = {"x": (3_000.0, 9_000.0), "y": (11_000.0, 17_000.0)}
-    pred = F.col("x").between(*box["x"]) & F.col("y").between(*box["y"])
-    full = read_snapshot(spark, d)
-    assert full.count() == 20_000
-    want = sorted(r["patch_id"] for r in full.filter(pred).collect())
-    pruned = read_snapshot(spark, d, bounds=box)
-    got = sorted(r["patch_id"] for r in pruned.filter(pred).collect())
-    assert got == want and len(got) > 0
-    files_read = pruned.select(F.input_file_name()).distinct().count()
-    assert files_read < 16  # pruning bit on both chain links
-
-
-def test_compaction_rewrites_chain_into_one_clustered_version(spark, tmp_path):
-    """compact_snapshots folds an append chain into one overwrite commit
-    (same rows), optionally z-ordered so bounds pruning is selective
-    again; the old chain then becomes expirable."""
-    from pacasam_spark.sources.snapshots import compact_snapshots, prune_files
-
-    d = str(tmp_path / "ctbl")
-
-    def pts(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("patch_id"),
-            (F.pmod(F.xxhash64("id", F.lit(1)), 40_000_000) / 1000.0).alias("x"),
-            (F.pmod(F.xxhash64("id", F.lit(2)), 40_000_000) / 1000.0).alias("y"),
-        )
-
-    # a "streaming" history: many small appends, no layout
-    write_snapshot(pts(0, 4000).repartition(4), d, stats_columns=["x", "y"])
-    for i in range(1, 5):
-        write_snapshot(
-            pts(4000 * i, 4000 * (i + 1)).repartition(4),
-            d, mode="append", stats_columns=["x", "y"],
-        )
-    before = read_snapshot(spark, d)
-    want = sorted(r["patch_id"] for r in before.collect())
-    box = {"x": (3_000.0, 9_000.0), "y": (11_000.0, 17_000.0)}
-    # hash placement: nothing prunes
-    kept_before = sum(
-        len(prune_files(m, box)) for m in snapshots(d)
-    )
-    assert kept_before == 20
-
-    v = compact_snapshots(spark, d, zorder=("x", "y"), n_files=16)
-    m = snapshots(d)[-1]
-    assert m["version"] == v and m["commit_type"] == "overwrite"
-    assert m["metadata"]["compaction_of"] == 5
-    after = read_snapshot(spark, d)
-    assert sorted(r["patch_id"] for r in after.collect()) == want
-    # compacted layout prunes again
-    assert len(prune_files(m, box)) < 8
-    # and the chain is now reclaimable without touching the live version
-    expired = expire_snapshots(d, keep_last=1)
-    assert expired == [1, 2, 3, 4, 5]
-    assert read_snapshot(spark, d).count() == 20_000
-
-
-def test_upsert_rewrites_only_key_overlapping_files(spark, tmp_path):
-    """Copy-on-write MERGE: rows with matching keys are replaced, new
-    keys inserted, and with per-file key stats on a key-clustered
-    layout only the overlapping files are rewritten — the rest are
-    carried forward untouched and stay readable from their original
-    version dirs."""
-    from pacasam_spark.sources.snapshots import upsert_snapshot
-
-    d = str(tmp_path / "utbl")
-
-    def rows(lo, hi, val):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("patch_id"), F.lit(val).alias("v")
-        )
-
-    # key-clustered layout: 8 files with disjoint patch_id ranges,
-    # stats recorded on the key
-    write_snapshot(
-        rows(0, 8000, "old").repartitionByRange(8, "patch_id"),
-        d, stats_columns=["patch_id"],
-    )
-    # update keys 100..199, insert keys 9000..9049 — touches ONE file
-    up = rows(100, 200, "new").unionByName(rows(9000, 9050, "new"))
-    v = upsert_snapshot(spark, d, up, key="patch_id", stats_columns=["patch_id"])
-    m = snapshots(d)[-1]
-    assert v == 2 and m["commit_type"] == "upsert"
-    assert m["metadata"] == {"upsert_key": "patch_id", "files_rewritten": 1}
-    assert len(m["removed"]) == 1 and m["removed"][0][0] == 1
-    assert m["total_row_count"] == 8050
-
-    out = read_snapshot(spark, d)
-    assert out.count() == 8050
-    got = {r["patch_id"]: r["v"] for r in out.collect()}
-    assert all(got[i] == "new" for i in range(100, 200))
-    assert all(got[i] == "new" for i in range(9000, 9050))
-    assert got[50] == "old" and got[7999] == "old"
-    # untouched files are served from v1's data dir (no copy)
-    srcs = {
-        r["f"]
-        for r in out.select(F.input_file_name().alias("f")).distinct().collect()
-    }
-    assert sum("v00001" in s for s in srcs) == 7
-    # time travel: the pre-upsert version still reads the OLD values
-    v1 = {r["patch_id"]: r["v"] for r in read_snapshot(spark, d, version=1).collect()}
-    assert v1[150] == "old" and len(v1) == 8000
-
-
-def test_upsert_without_key_stats_is_conservative_but_exact(spark, tmp_path):
-    from pacasam_spark.sources.snapshots import upsert_snapshot
-
-    d = str(tmp_path / "utbl2")
-    df = spark.range(100).select(F.col("id").alias("patch_id"), F.lit("a").alias("v"))
-    write_snapshot(df.repartition(4), d)  # no stats recorded
-    up = spark.range(10, 20).select(F.col("id").alias("patch_id"), F.lit("b").alias("v"))
-    upsert_snapshot(spark, d, up, key="patch_id")
-    m = snapshots(d)[-1]
-    assert m["metadata"]["files_rewritten"] == 4  # all of them
-    got = {r["patch_id"]: r["v"] for r in read_snapshot(spark, d).collect()}
-    assert len(got) == 100
-    assert all(got[i] == ("b" if 10 <= i < 20 else "a") for i in range(100))
-
-
-def test_chained_upserts_and_appends_resolve_correctly(spark, tmp_path):
-    """upsert -> append -> upsert chains: removals accumulate, totals
-    track, and the latest read is exact."""
-    from pacasam_spark.sources.snapshots import upsert_snapshot
-
-    d = str(tmp_path / "utbl3")
-
-    def rows(ids, val):
-        return spark.createDataFrame(
-            [(i, val) for i in ids], "patch_id long, v string"
-        )
-
-    write_snapshot(
-        rows(range(100), "v1").repartitionByRange(4, "patch_id"),
-        d, stats_columns=["patch_id"],
-    )
-    upsert_snapshot(spark, d, rows([5, 6], "v2"), "patch_id",
-                    stats_columns=["patch_id"])
-    write_snapshot(rows(range(100, 110), "v3"), d, mode="append",
-                   stats_columns=["patch_id"])
-    upsert_snapshot(spark, d, rows([5, 105, 200], "v4"), "patch_id",
-                    stats_columns=["patch_id"])
-    assert snapshots(d)[-1]["total_row_count"] == 111
-    got = {r["patch_id"]: r["v"] for r in read_snapshot(spark, d).collect()}
-    assert len(got) == 111
-    assert got[5] == "v4" and got[6] == "v2" and got[105] == "v4"
-    assert got[200] == "v4" and got[0] == "v1" and got[100] == "v3"
-
-
-def test_upsert_duplicate_source_keys_raise(spark, tmp_path):
-    """MERGE needs one source row per key: silently keeping both rows of
-    a duplicate-key source would commit a duplicate-key table (Iceberg
-    raises on multiple matching source rows)."""
-    from pacasam_spark.sources.snapshots import upsert_snapshot
-
-    d = str(tmp_path / "dup")
-    write_snapshot(
-        spark.createDataFrame([(1, "a")], "patch_id long, v string"), d
-    )
-    dup = spark.createDataFrame(
-        [(2, "x"), (2, "y")], "patch_id long, v string"
-    )
-    with pytest.raises(ValueError, match="duplicate 'patch_id'"):
-        upsert_snapshot(spark, d, dup, key="patch_id")
-    # the refused upsert committed nothing
-    assert [m["version"] for m in snapshots(d)] == [1]
-
-
 def test_stats_on_temporal_and_decimal_columns(spark, tmp_path):
     """Per-file min/max on date/timestamp/decimal columns: JSON-coerced
-    in the manifest, still exact for bounds pruning and for upsert's
-    affected-file detection (round-6 ADVICE: json.dump used to raise
-    AFTER the data was written, orphaning the version dir)."""
+    in the manifest, still exact for bounds pruning (round-6 ADVICE:
+    json.dump used to raise AFTER the data was written, orphaning the
+    version dir)."""
     import datetime
     from decimal import Decimal
 
-    from pacasam_spark.sources.snapshots import prune_files, upsert_snapshot
+    from pacasam_spark.sources.snapshots import prune_files
 
     d = str(tmp_path / "temporal")
     df = spark.sql(
@@ -413,17 +119,6 @@ def test_stats_on_temporal_and_decimal_columns(spark, tmp_path):
         m["files"]
     )
 
-    # upsert keyed on a DATE column round-trips through the string stats
-    up = spark.sql(
-        "select date'2026-01-05' as day, timestamp'2030-01-01 00:00:00' as ts, "
-        "cast(9.99 as decimal(12,2)) as price, cast(9999 as bigint) as id"
-    ).select("id", "day", "ts", "price")
-    upsert_snapshot(spark, d, up, key="day", stats_columns=["day", "ts", "price"])
-    m2 = snapshots(d)[-1]
-    assert m2["metadata"]["files_rewritten"] == 1  # only the overlapping file
-    out = read_snapshot(spark, d).filter("day = date'2026-01-05'").collect()
-    assert len(out) == 1 and out[0]["id"] == 9999
-
     # unsupported stats type is rejected BEFORE any data is written
     bad = spark.sql("select id, cast('ab' as binary) as blob from range(3)")
     with pytest.raises(ValueError, match="JSON-safe"):
@@ -431,6 +126,41 @@ def test_stats_on_temporal_and_decimal_columns(spark, tmp_path):
     import os as _os
 
     assert not _os.path.isdir(str(tmp_path / "badstats" / "v00001"))
+
+
+def test_chain_versions_are_refused_not_misread(spark, tmp_path):
+    """Every version's files are its whole table. A version an older
+    writer committed as an append (its files layered on its parent's)
+    is refused by every reader of its data — a read would return only
+    the newest link's rows, expiry would delete parent data it reads —
+    and nothing is removed."""
+    from pacasam_spark.sources.snapshots import snapshot_fps_inputs
+
+    d = str(tmp_path / "tbl")
+    df = spark.range(6).select(
+        F.col("id").alias("patch_id"), (F.col("id") % 2).alias("file_id"),
+        F.col("id").cast("int").alias("nb_sol"),
+    )
+    write_snapshot(df, d, norm_columns=["nb_sol"], count_key="file_id")
+    write_snapshot(df, d, norm_columns=["nb_sol"], count_key="file_id")
+    path = os.path.join(d, "v00002", "manifest.json")
+    with open(path) as f:
+        m = json.load(f)
+    m.update(commit_type="append", parent_version=1)
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    with pytest.raises(ValueError, match="v00002 is an 'append' commit"):
+        read_snapshot(spark, d)
+    with pytest.raises(ValueError, match="rewrite the table with an overwrite"):
+        snapshot_fps_inputs(spark, d, ["nb_sol"], key="file_id")
+    with pytest.raises(ValueError, match="v00002 is an 'append' commit"):
+        expire_snapshots(d, keep_last=1)
+    for v in ("v00001", "v00002"):
+        assert os.path.isdir(os.path.join(d, v, "data"))
+    # the overwrite version before it still reads, and history lists both
+    assert read_snapshot(spark, d, version=1).count() == 6
+    assert [m["commit_type"] for m in snapshots(d)] == ["overwrite", "append"]
 
 
 def test_as_of_timestamp_time_travel(spark, tmp_path):
@@ -501,36 +231,27 @@ def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, tmp_path):
     assert profile.total_rows == 2000
 
 
-def test_bucketed_snapshot_append_falls_back_to_plain_read(spark, tmp_path):
+def test_bucketed_snapshot_bounds_read_falls_back_to_plain_read(spark, tmp_path):
+    """A bounds-pruned read of a bucketed version hands Spark an explicit
+    file list, a plain scan with exactly the table's rows; an unpruned
+    read of the same version is the zero-exchange bucketed scan."""
+    from pacasam_spark.sources.snapshots import prune_files
+
     d = str(tmp_path / "tbl")
     df = spark.range(100).select(
         F.col("id").alias("patch_id"), (F.col("id") % 4).alias("file_id")
     )
-    write_snapshot(df, d, bucket_by=("file_id", 4))
-    more = spark.range(100, 120).select(
-        F.col("id").alias("patch_id"), (F.col("id") % 4).alias("file_id")
-    )
-    write_snapshot(more, d, mode="append")
-    out = read_snapshot(spark, d)
-    assert out.count() == 120  # chain read is correct, just not bucketed
-    # layout-aware reads come back after a bucketed compaction
-    from pacasam_spark.sources.snapshots import compact_snapshots
-
-    v3 = compact_snapshots(spark, d, bucket_by=("file_id", 4))
-    assert snapshots(d)[-1]["layout"]["n_buckets"] == 4
-    grouped = read_snapshot(spark, d, version=v3).groupBy("file_id").count()
+    v = write_snapshot(df, d, bucket_by=("file_id", 4), stats_columns=["file_id"])
+    pruned = read_snapshot(spark, d, bounds={"file_id": (1, 2)})
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "Bucketed: true" not in plan
+    got = sorted(r["patch_id"] for r in pruned.filter("file_id between 1 and 2").collect())
+    assert got == [i for i in range(100) if i % 4 in (1, 2)]
+    kept = prune_files(snapshots(d)[-1], {"file_id": (1, 2)})
+    assert pruned.select(F.input_file_name()).distinct().count() == len(kept)
+    grouped = read_snapshot(spark, d, version=v).groupBy("file_id").count()
     assert _n_exchanges(grouped) == 0
     assert grouped.count() == 4
-
-
-def test_bucketed_snapshot_rejects_append_mode(spark, tmp_path):
-    d = str(tmp_path / "tbl")
-    df = spark.range(10).select(
-        F.col("id").alias("patch_id"), (F.col("id") % 2).alias("file_id")
-    )
-    write_snapshot(df, d)
-    with pytest.raises(ValueError, match="overwrite commits only"):
-        write_snapshot(df, d, mode="append", bucket_by=("file_id", 2))
 
 
 def test_bucketed_registration_kept_when_older_version_is_read(spark, tmp_path, monkeypatch):

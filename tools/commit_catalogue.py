@@ -31,8 +31,6 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--input", required=True, help="parquet dir/file or .gpkg")
     p.add_argument("--table", required=True, help="snapshot table dir")
-    p.add_argument("--mode", default="overwrite",
-                   choices=["overwrite", "append"])
     p.add_argument("--bucket-key", default=None,
                    help="bucket the data files by this column")
     p.add_argument("--buckets", type=int, default=32)
@@ -92,7 +90,6 @@ def main(argv: list[str] | None = None) -> None:
         stats_columns=stats_columns,
         norm_columns=split(args.norm_columns),
         count_key=args.count_key,
-        mode=args.mode,
         bucket_by=bucket_by,
         sort_by=tuple(sort_by) if sort_by else None,
     )

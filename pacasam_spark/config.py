@@ -88,29 +88,10 @@ def jdbc_connector(
     return filter_split(read_jdbc_catalogue(spark, **opts), split)
 
 
-def bucketed_connector(
-    spark: SparkSession,
-    path: str,
-    table: str = "catalogue_bucketed",
-    n_buckets: int = 32,
-    split: str = "any",
-    **extra,
-) -> DataFrame:
-    """file_id-bucketed catalogue (sources/bucketed.py): adopts an
-    existing bucketed directory by DDL, so every sampling run's
-    chunk-rank stage plans zero data shuffles. The scale layout the
-    plain GeopandasConnector path upgrades to at ingest time."""
-    from pacasam_spark.sources.bucketed import register_bucketed_catalogue
-
-    db = register_bucketed_catalogue(spark, table, path, n_buckets=n_buckets)
-    return filter_split(db, split)
-
-
 CONNECTORS_REGISTRY = {
     # reference names kept so reference configs translate 1:1
     "SyntheticConnector": synthetic_connector,
     "GeopandasConnector": file_connector,
     "LiPaCConnector": jdbc_connector,
-    "BucketedConnector": bucketed_connector,
 }
 

@@ -23,9 +23,6 @@ wraps) — discovered by a failing determinism test. Properties that matter:
   lacks);
 - no 64-bit overflow for keys < ~3.4e9 and intermediates < 2^62
   (Spark 4 ANSI mode would raise on overflow rather than wrap).
-
-For string keys, both engines agree on md5() hex output, so
-``det_hash_str`` orders by a substring of the md5 digest.
 """
 
 from __future__ import annotations
@@ -111,12 +108,3 @@ def det_int(key: Column | str, lo: int, hi: int, seed: int = 0) -> Column:
 def det_int_sql(key_expr: str, lo: int, hi: int, seed: int = 0) -> str:
     return f"((({det_hash_sql(key_expr, seed)}) % {hi - lo}) + {lo})"
 
-
-def det_hash_str(key: Column | str, seed: int = 0) -> Column:
-    """Deterministic order key for STRING columns: md5 hex substring.
-
-    Both Spark and DuckDB produce identical lowercase md5 hex, so ordering
-    by this string is portable. Salt with the seed for independent draws.
-    """
-    k = F.col(key) if isinstance(key, str) else key
-    return F.md5(F.concat(k.cast("string"), F.lit(f"#{seed}")))

@@ -30,6 +30,7 @@ from pacasam_spark.operators.fps import (
     carve_chunk_runs,
     fps_numpy,
 )
+from pacasam_spark.operators.normalize import CatalogueProfile
 
 OUTLIER_SCORE = "outlier_score"
 CLUSTER_ID = "cluster_id"
@@ -66,6 +67,37 @@ def _blockwise_knn_mean(x: np.ndarray, kk: int) -> np.ndarray:
     return out
 
 
+def _chunked(
+    df: DataFrame,
+    feature_cols: list[str],
+    max_chunk_size: int,
+    keep: list[str],
+    profile: CatalogueProfile | None,
+) -> tuple[DataFrame, str]:
+    """The scorers' shared input: ``keep`` + features + chunk id + the
+    GLOBAL_RANK order, and the output schema (keep + cluster_id +
+    outlier_score). The chunk offsets and the skew-guard decision come
+    from ``profile`` (built here when unbuilt; a plain per-file count
+    without one), so a built profile costs no job."""
+    if profile is None:
+        profile = CatalogueProfile.of(df, persist=False)
+    profile.build()
+    chunked = add_deterministic_chunk_ids(
+        df,
+        max_chunk_size,
+        counts=profile.per_file.select(S.FILE_ID, "count"),
+        keep_rank=True,
+        max_count=profile.max_rows_per_file,
+    )
+    cols = list(dict.fromkeys(keep + feature_cols + [CHUNK_ID, GLOBAL_RANK]))
+    field_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    out_schema = ", ".join(
+        [f"{c} {field_types[c]}" for c in keep]
+        + [f"{CLUSTER_ID} int", f"{OUTLIER_SCORE} double"]
+    )
+    return chunked.select(*cols), out_schema
+
+
 def knn_outlier_scores(
     df: DataFrame,
     feature_cols: list[str],
@@ -73,28 +105,19 @@ def knn_outlier_scores(
     n_clusters: int = 8,
     max_chunk_size: int = 5000,
     keep_cols: list[str] | None = None,
-    counts: DataFrame | None = None,
+    profile: CatalogueProfile | None = None,
 ) -> DataFrame:
     """Adds (cluster_id, outlier_score in [0,1]) per row, chunk-locally.
 
-    ``counts``: precomputed (file_id, count) table — callers with a
-    catalogue profile hand in its persisted per-file table so chunk
-    assignment adds no extra full-data scan. Within-chunk order is
-    the single-long GLOBAL_RANK — the same (file_id, patch_id) total
-    order FPS's carve stage uses (one order discipline, 8-byte sort-key
-    comparisons even when patch ids are strings)."""
+    ``profile``: the catalogue's :class:`CatalogueProfile` by file_id,
+    as :func:`fps_sample` takes it — a sampler hands in the one its
+    ``standardize`` already built, so chunk assignment runs no count or
+    maximum job of its own. Within-chunk order is the single-long
+    GLOBAL_RANK — the same (file_id, patch_id) total order FPS's carve
+    stage uses (one order discipline, 8-byte sort-key comparisons even
+    when patch ids are strings)."""
     keep = keep_cols or [S.PATCH_ID, S.FILE_ID]
-    chunked = add_deterministic_chunk_ids(
-        df, max_chunk_size, counts=counts, keep_rank=True
-    )
-    cols = list(dict.fromkeys(keep + feature_cols + [CHUNK_ID, GLOBAL_RANK]))
-    chunked = chunked.select(*cols)
-
-    field_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {field_types[c]}" for c in keep]
-        + [f"{CLUSTER_ID} int", f"{OUTLIER_SCORE} double"]
-    )
+    chunked, out_schema = _chunked(df, feature_cols, max_chunk_size, keep, profile)
 
     import pyarrow as pa
 
@@ -142,27 +165,17 @@ def glosh_outlier_scores(
     min_cluster_size: int = 50,
     max_chunk_size: int = 5000,
     keep_cols: list[str] | None = None,
-    counts: DataFrame | None = None,
+    profile: CatalogueProfile | None = None,
 ) -> DataFrame:
     """M5 for real: chunk-local HDBSCAN* labels + GLOSH outlier scores
     (operators/hdbscan_np.py — excess-of-mass selection, noise -1),
     the reference's ``HDBSCAN(**kwargs).fit`` + ``outlier_scores_``
     contract (reference: samplers/outliers.py:58-61; config
     Lipac.yml:55-58 pins min_cluster_size=50, min_samples=50, eom).
-    Same carver framing and chunk assignment as the kNN scorer, so the
-    two are drop-in interchangeable."""
+    Same carver framing, chunk assignment and ``profile`` as the kNN
+    scorer, so the two are drop-in interchangeable."""
     keep = keep_cols or [S.PATCH_ID, S.FILE_ID]
-    chunked = add_deterministic_chunk_ids(
-        df, max_chunk_size, counts=counts, keep_rank=True
-    )
-    cols = list(dict.fromkeys(keep + feature_cols + [CHUNK_ID, GLOBAL_RANK]))
-    chunked = chunked.select(*cols)
-
-    field_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {field_types[c]}" for c in keep]
-        + [f"{CLUSTER_ID} int", f"{OUTLIER_SCORE} double"]
-    )
+    chunked, out_schema = _chunked(df, feature_cols, max_chunk_size, keep, profile)
 
     import pyarrow as pa
 

@@ -21,7 +21,7 @@ def _bool_cols(df: DataFrame) -> list[str]:
     NAME — in the reference it is float/object dtype because of NaN, so
     select_dtypes(include=bool) never picks it up (stats.py:66). A
     nullability test is NOT a usable proxy: any parquet/DDL round-trip
-    (file connectors, the bucketed table) makes every column nullable,
+    (file connectors, a snapshot table) makes every column nullable,
     which silently emptied the descriptor list for file-based
     catalogues."""
     return [
@@ -125,11 +125,8 @@ def write_comparison_reports(
     write(compare_bools(db, sampling_extracted), "comparison-bool_descriptors")
     write(compare_sizes(db, sampling_extracted), "comparison-areas")
     for key in ("sampler", "split"):
-        write(
-            compare_by_key(db, sampling_extracted, key),
-            f"comparison-bool_descriptors-by_{key}",
-        )
         bk = compare_by_key(db, sampling_extracted, key)
+        write(bk, f"comparison-bool_descriptors-by_{key}")
         if bk is not None:
             # sizes by key: counts + area per subset
             sizes = sampling_extracted.groupBy(key).agg(

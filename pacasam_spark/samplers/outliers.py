@@ -49,7 +49,6 @@ class OutliersSampler(Sampler):
             db = standardize(
                 self.db.select(S.PATCH_ID, S.FILE_ID, *cols), cols, stats=profile
             )
-            counts = profile.per_file.select(S.FILE_ID, "count")
             hk = ocf.get("hdbscan_kwargs")
             if hk is not None or ocf.get("method") == "glosh":
                 hk = hk or {}
@@ -64,7 +63,7 @@ class OutliersSampler(Sampler):
                     min_samples=int(hk.get("min_samples", 50)),
                     min_cluster_size=int(hk.get("min_cluster_size", 50)),
                     max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
-                    counts=counts,
+                    profile=profile,
                 )
             else:
                 scored = knn_outlier_scores(
@@ -72,7 +71,7 @@ class OutliersSampler(Sampler):
                     cols,
                     k=int(ocf.get("knn", 50)),
                     max_chunk_size=int(ocf.get("max_chunk_size", 5000)),
-                    counts=counts,
+                    profile=profile,
                 )
             # deterministic top-k (TakeOrdered): tiebreak on patch_id
             sel = (

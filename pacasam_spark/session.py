@@ -72,7 +72,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(2**31 - 1))
         # Report the SORTED BY order of bucketed scans (off by default
         # since Spark 3.0 because it lists files at planning time; our
-        # tables have one file per bucket — see write_bucketed_catalogue
+        # tables have one file per bucket — see write_snapshot(bucket_by=)
         # — so the listing is trivial and the payoff is large: the
         # per-file rank window over a bucketed catalogue plans with NO
         # Sort at all, the scan streams pre-sorted rows straight into

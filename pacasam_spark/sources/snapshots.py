@@ -31,11 +31,25 @@ committed as ``append`` or ``upsert`` (a file set layered on its
 parent's) is refused with ``ValueError`` by every reader of its data,
 never read as a partial table.
 
+``write_snapshot(bucket_by=(key, n))`` is the catalogue's one bucketed
+layout, the plain-parquet analogue of Iceberg's ``bucket(n, key)``
+partition transform. Chunked FPS shuffles the catalogue on ``file_id``
+(the per-file counts and the chunk-rank window) before its chunk
+exchange; a table bucketed by ``file_id`` pays that shuffle once, at
+ingest, and every later ``Window.partitionBy(file_id)`` or
+``groupBy(file_id)`` over its scan plans no exchange. The layout is
+recorded in the version's manifest, and :func:`read_snapshot` adopts
+the files into the session catalog by DDL from that record alone (the
+in-memory catalog forgets tables between JVMs; the files do not), so a
+reader can never declare a bucket count the files were not written
+with. Size ``n`` to the cluster's cores, not to the data: it bounds the
+parallelism of the shuffle-free stages.
+
 A real multi-writer deployment would route commits through a table
 format's atomic catalog (Iceberg/Delta); this module is the
-single-writer engine-level shape, like sources/bucketed.py is for the
-bucket transform. Reference: pacasam writes one flat GeoPackage per run
-(connectors/geopandas.py:24-31) — no history, no resume, no lineage.
+single-writer engine-level shape. Reference: pacasam reads and writes
+one flat GeoPackage (connectors/geopandas.py:24-31) — no history, no
+resume, no lineage, no layout.
 """
 
 from __future__ import annotations
@@ -276,9 +290,14 @@ def write_snapshot(
     if bucket_by is not None:
         bucket_key, n_buckets = bucket_by
         sort_keys = tuple(sort_by) if sort_by else (bucket_key,)
-        # One-file-per-bucket bucketed write (see sources/bucketed.py for
-        # why: >1 file per bucket makes Spark discard the SORTED BY
-        # metadata at scan time). saveAsTable is the only writer that
+        # Pre-shuffle onto the bucket hash (repartition's HashPartitioning
+        # and bucketBy share partitionIdExpression = pmod(murmur3, n)) so
+        # every write task holds exactly ONE bucket and each bucket is
+        # exactly ONE file. With >1 file per bucket Spark discards the
+        # SORTED BY metadata at scan time (the merge order across files
+        # is unknown) and re-sorts under every window; with one file the
+        # scan reports outputOrdering = sort_keys and the per-file rank
+        # window runs sort-free. saveAsTable is the only writer that
         # emits bucket metadata; an external path + DROP keeps the files.
         tmp = f"__snap_write_{hashlib.md5(data_dir.encode()).hexdigest()[:12]}"
         spark0 = df.sparkSession
@@ -458,6 +477,33 @@ def prune_files(
     return kept
 
 
+def _register_bucketed(
+    spark: SparkSession, name: str, data_dir: str, manifest: dict
+) -> DataFrame:
+    """Adopt a bucketed version's files into THIS session's catalog as
+    table ``name`` — a ``CREATE TABLE ... CLUSTERED BY`` DDL, no data
+    rewrite; Spark recovers each file's bucket from the ``_00000``-style
+    suffix it wrote into the file name. Schema, bucket count, bucket key
+    and sort keys come from the manifest alone: a DDL that disagreed
+    with the files would make bucket pruning and the scan's reported
+    partitioning lie, silently dropping rows from per-key reads."""
+    from pyspark.sql.types import StructType
+
+    layout = manifest["layout"]
+    schema_ddl = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in StructType.fromJson(manifest["schema"]).fields
+    )
+    sort_ddl = ", ".join(f"`{k}`" for k in layout["sort_keys"])
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(
+        f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
+        f"CLUSTERED BY (`{layout['bucket_key']}`) SORTED BY ({sort_ddl}) "
+        f"INTO {layout['n_buckets']} BUCKETS LOCATION '{data_dir}'"
+    )
+    return spark.table(name)
+
+
 def read_snapshot(
     spark: SparkSession,
     table_dir: str,
@@ -515,8 +561,6 @@ def read_snapshot(
             # snapshots are immutable, so an existing registration is
             # simply reused (re-running the DDL would needlessly
             # invalidate cached plans over the table).
-            from pacasam_spark.sources.bucketed import register_bucketed_catalogue
-
             # committed_at joins the digest so a table dir that was
             # deleted and re-created in the same session never reuses a
             # stale registration pointing at the old files
@@ -527,14 +571,7 @@ def read_snapshot(
             name = f"snap_bucketed_{digest}"
             if spark.catalog.tableExists(name):
                 return spark.table(name)
-            out = register_bucketed_catalogue(
-                spark,
-                name,
-                data_dir,
-                n_buckets=layout["n_buckets"],
-                bucket_key=layout["bucket_key"],
-                sort_keys=tuple(layout["sort_keys"]),
-            )
+            out = _register_bucketed(spark, name, data_dir, manifest)
             # bound the session's registration footprint: remember the
             # newest registration THIS reader path created per table dir,
             # keyed by (version, committed_at), and drop it only when a

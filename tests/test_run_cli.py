@@ -260,64 +260,47 @@ def test_wms_fetch_bounded_retry(spark):
     assert rows["dead"]["n_attempts"] == 3  # 1 + max_retries
 
 
-def test_run_sampling_bucketed_connector(spark, tmp_path):
-    """BucketedConnector: the scale layout drives the same config
-    workflow — selection identical to the plain-parquet connector run
-    (same seed, same data, different physical layout)."""
-    from pacasam_spark.run_sampling import main
-    from pacasam_spark.sources.bucketed import write_bucketed_catalogue
+def test_run_sampling_catalogue_table_bucketed(spark, tmp_path):
+    """The scale layout through the config workflow: run_sampling
+    --catalogue-table over a snapshot bucketed by file_id selects exactly
+    the rows the plain GeopandasConnector run selects from the same data
+    (same seed, same config, different physical layout)."""
+    from pacasam_spark.run_sampling import build_parser, run
+    from pacasam_spark.sources.snapshots import write_snapshot
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
-    bucket_dir = str(tmp_path / "bucketed_cat")
+    table = str(tmp_path / "bucketed_cat")
     plain_dir = str(tmp_path / "plain_cat")
     db = synthetic_catalogue(spark, db_size=200)
     db.write.mode("overwrite").parquet(plain_dir)
-    write_bucketed_catalogue(db, "cli_bucketed_cat", bucket_dir, n_buckets=4)
-    spark.sql("DROP TABLE IF EXISTS cli_bucketed_cat")
+    write_snapshot(db, table, bucket_by=("file_id", 4))
 
-    cfg = f"""
+    cfg_path = str(tmp_path / "cfg.yml")
+    with open(cfg_path, "w") as fh:
+        fh.write(f"""
 target_total_num_patches: 50
 frac_validation_set: 0.1
 connector_kwargs:
-  path: {bucket_dir}
-  table: cli_bucketed_adopted
-  n_buckets: 4
+  path: {plain_dir}
 DiversitySampler:
   max_chunk_size_for_fps: 100
   normalization: standardization
   columns: [nb_sol, nb_bati, nb_eau]
-"""
-    cfg_path = str(tmp_path / "bucketed.yml")
-    with open(cfg_path, "w") as fh:
-        fh.write(cfg)
-    out = str(tmp_path / "out_bucketed")
-    main([
-        "--config", cfg_path,
-        "--connector_class", "BucketedConnector",
+""")
+    s_b = run(build_parser().parse_args([
+        "--config", cfg_path, "--catalogue-table", table,
         "--sampler_class", "DiversitySampler",
-        "--output", out,
-    ])
-    sel_b = spark.read.parquet(f"{out}/BucketedConnector-DiversitySampler-any")
-    assert sel_b.count() == 50
-
-    cfg_plain = cfg.replace(f"path: {bucket_dir}", f"path: {plain_dir}").replace(
-        "  table: cli_bucketed_adopted\n  n_buckets: 4\n", ""
-    )
-    cfg_plain_path = str(tmp_path / "plain.yml")
-    with open(cfg_plain_path, "w") as fh:
-        fh.write(cfg_plain)
-    out2 = str(tmp_path / "out_plain")
-    main([
-        "--config", cfg_plain_path,
-        "--connector_class", "GeopandasConnector",
+        "--output", str(tmp_path / "out_bucketed"),
+    ]))
+    s_p = run(build_parser().parse_args([
+        "--config", cfg_path, "--connector_class", "GeopandasConnector",
         "--sampler_class", "DiversitySampler",
-        "--output", out2,
-    ])
-    sel_p = spark.read.parquet(f"{out2}/GeopandasConnector-DiversitySampler-any")
-    assert sorted(r["patch_id"] for r in sel_b.collect()) == sorted(
-        r["patch_id"] for r in sel_p.collect()
-    )
-    spark.sql("DROP TABLE IF EXISTS cli_bucketed_adopted")
+        "--output", str(tmp_path / "out_plain"),
+    ]))
+    sel_b = spark.read.parquet(s_b["sampling_path"])
+    sel_p = spark.read.parquet(s_p["sampling_path"])
+    assert s_b["n_sampled"] == 50 and sel_b.count() == 50
+    assert sorted(map(tuple, sel_b.collect())) == sorted(map(tuple, sel_p.collect()))
 
 
 def test_run_sampling_snapshot_dir(spark, tmp_path):

@@ -490,6 +490,22 @@ def test_triple_sampler_job_budget(spark):
     assert jobs <= 21, f"{jobs} Spark jobs"
 
 
+def test_outliers_selection_chunks_from_its_profile(spark, catalogue, config):
+    """OutliersSampler.get_selection() hands the scorer the catalogue
+    profile its standardization built, so chunk assignment aggregates no
+    per-file maximum of its own: on the 200-row test catalogue the call
+    submits at most 9 Spark jobs (11 while the scorer took a bare counts
+    table). Counted in the app status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    last = max(_job_ids(spark), default=-1)
+    sel = OutliersSampler(catalogue, config).get_selection()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = len({j for j in _job_ids(spark) if j > last})
+    assert sel.num_rows == config["target_total_num_patches"]
+    assert jobs <= 9, f"{jobs} Spark jobs"
+
+
 def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     """A checkpoint costs no Spark job: on the benchmark's 10k-row
     catalogue and config, a checkpointed TripleSampler call on a fresh

@@ -191,13 +191,17 @@ def _n_exchanges(df) -> int:
     )
 
 
-def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, tmp_path):
-    from pacasam_spark.operators.fps import add_deterministic_chunk_ids
+@pytest.fixture(scope="module")
+def bucketed_catalogue(spark, tmp_path_factory):
+    """A 2000-row synthetic catalogue committed twice: bucketed by
+    file_id into 8 buckets (with normalization partials and per-file
+    counts), and plain. Returns (bucketed dir, bucketed read, plain read)."""
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
-    d = str(tmp_path / "tbl")
+    root = tmp_path_factory.mktemp("bucketed_catalogue")
     db = synthetic_catalogue(spark, db_size=2000)
-    v = write_snapshot(
+    d = str(root / "bucketed")
+    write_snapshot(
         db,
         d,
         bucket_by=("file_id", 8),
@@ -205,23 +209,50 @@ def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, tmp_path):
         norm_columns=["nb_sol"],
         count_key="file_id",
     )
+    write_snapshot(db, str(root / "plain"))
+    return d, read_snapshot(spark, d), read_snapshot(spark, str(root / "plain"))
+
+
+def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, bucketed_catalogue):
+    """The bucketed read holds the plain read's rows, serves the reads
+    that depend on the bucket layout (a per-file_id equality filter,
+    which bucket-prunes, and a groupBy(file_id)) exactly as the plain
+    read does, and plans the chunk-rank stage with no shuffle (the plain
+    read needs two) while assigning the same chunk ids."""
+    from pacasam_spark.operators.fps import CHUNK_ID, add_deterministic_chunk_ids
+
+    d, tbl, plain = bucketed_catalogue
     m = snapshots(d)[-1]
     assert m["layout"] == {
         "bucket_key": "file_id",
         "n_buckets": 8,
         "sort_keys": ["file_id", "patch_id"],
     }
-    tbl = read_snapshot(spark, d, version=v)
     # content identical to the source
     assert tbl.count() == 2000
     assert (
-        tbl.exceptAll(db).count() == 0 and db.exceptAll(tbl).count() == 0
+        tbl.exceptAll(plain).count() == 0 and plain.exceptAll(tbl).count() == 0
+    )
+    # the two reads a wrong bucket count breaks silently
+    file_ids = sorted(r["file_id"] for r in plain.select("file_id").distinct().collect())
+    assert len(file_ids) > 1
+    for f in file_ids:
+        got = sorted(r["patch_id"] for r in tbl.filter(F.col("file_id") == f).collect())
+        want = sorted(r["patch_id"] for r in plain.filter(F.col("file_id") == f).collect())
+        assert got == want and got, f
+    assert sorted(tbl.groupBy("file_id").count().collect()) == sorted(
+        plain.groupBy("file_id").count().collect()
     )
     # the chunk-rank stage plans no shuffle over the bucketed scan
     chunked = add_deterministic_chunk_ids(tbl.select("patch_id", "file_id"), 100)
     assert _n_exchanges(chunked) == 0
     plan = chunked._jdf.queryExecution().executedPlan().toString()
     assert "Bucketed: true" in plan
+    chunked_plain = add_deterministic_chunk_ids(plain.select("patch_id", "file_id"), 100)
+    assert _n_exchanges(chunked_plain) >= 2  # counts agg + window rank
+    assert sorted(map(tuple, chunked.select("patch_id", CHUNK_ID).collect())) == sorted(
+        map(tuple, chunked_plain.select("patch_id", CHUNK_ID).collect())
+    )
     # manifest stats recorded alongside the layout (the combined win)
     from pacasam_spark.sources.snapshots import snapshot_fps_inputs
 
@@ -229,6 +260,24 @@ def test_bucketed_snapshot_zero_exchange_and_identical_rows(spark, tmp_path):
     assert profile.stats["cnt_nb_sol"] > 0
     assert profile.per_file.agg(F.sum("count")).first()[0] == 2000
     assert profile.total_rows == 2000
+
+
+def test_fps_sample_identical_on_bucketed_snapshot(bucketed_catalogue):
+    """fps_sample over the bucketed read, counting its own per-file
+    rows, selects exactly what it selects over the plain read."""
+    from pacasam_spark.operators.fps import fps_sample
+
+    _, tbl, plain = bucketed_catalogue
+    cols = ["nb_sol", "nb_bati", "nb_eau"]
+    a, b = (
+        sorted(
+            r["patch_id"]
+            for r in fps_sample(df, 50, feature_cols=cols, max_chunk_size=200).collect()
+        )
+        for df in (plain, tbl)
+    )
+    assert len(a) == 50
+    assert a == b
 
 
 def test_bucketed_snapshot_bounds_read_falls_back_to_plain_read(spark, tmp_path):
@@ -257,8 +306,10 @@ def test_bucketed_snapshot_bounds_read_falls_back_to_plain_read(spark, tmp_path)
 def test_bucketed_registration_kept_when_older_version_is_read(spark, tmp_path, monkeypatch):
     """Reading an older version never drops the newer version's bucketed
     registration: after v2, v1, v2 the v2 registration still exists and
-    the second v2 read reuses it instead of registering again."""
-    from pacasam_spark.sources import bucketed
+    the second v2 read reuses it instead of registering again. A catalog
+    without the registration (a fresh session's) adopts the files again
+    by DDL, with no data rewrite, and still plans no exchange."""
+    from pacasam_spark.sources import snapshots as snap
 
     d = str(tmp_path / "tbl")
     df = spark.range(40).select(
@@ -267,16 +318,21 @@ def test_bucketed_registration_kept_when_older_version_is_read(spark, tmp_path, 
     v1 = write_snapshot(df, d, bucket_by=("file_id", 4))
     v2 = write_snapshot(df.where("patch_id < 20"), d, bucket_by=("file_id", 4))
     registered = []
-    real = bucketed.register_bucketed_catalogue
+    real = snap._register_bucketed
 
     def counting(spark, name, *args, **kwargs):
         registered.append(name)
         return real(spark, name, *args, **kwargs)
 
-    monkeypatch.setattr(bucketed, "register_bucketed_catalogue", counting)
+    monkeypatch.setattr(snap, "_register_bucketed", counting)
     assert read_snapshot(spark, d, version=v2).count() == 20
     name_v2 = registered[-1]
     assert read_snapshot(spark, d, version=v1).count() == 40
     assert spark.catalog.tableExists(name_v2)
     assert read_snapshot(spark, d, version=v2).count() == 20
     assert len(registered) == 2 and registered[0] == name_v2
+    spark.sql(f"DROP TABLE {name_v2}")
+    again = read_snapshot(spark, d, version=v2)
+    assert registered == [name_v2, registered[1], name_v2]
+    assert again.count() == 20
+    assert _n_exchanges(again.groupBy("file_id").count()) == 0

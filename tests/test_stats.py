@@ -54,3 +54,44 @@ def test_write_five_reports(spark, catalogue, config, tmp_path):
         assert spark.read.option("header", True).csv(
             str(tmp_path / "stats" / n)
         ).count() > 0
+
+
+def test_write_reports_gate_each_key_once(spark, catalogue, config, tmp_path):
+    """write_comparison_reports runs the by-key gate (a distinct count)
+    once per key: on the 200-row test catalogue the six reports take at
+    most 26 Spark jobs (32 while the gate ran twice per key), and each
+    by-key report holds the rows compare_by_key returns."""
+    sampling = TripleSampler(catalogue, config).get_patches()
+    extracted = catalogue.join(F.broadcast(sampling), "patch_id").cache()
+    extracted.count()
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_ids() -> set[int]:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    try:
+        last = max(job_ids(), default=-1)
+        names = write_comparison_reports(catalogue, extracted, str(tmp_path / "stats"))
+        jobs = len({j for j in job_ids() if j > last})
+        assert names == [
+            "comparison-bool_descriptors",
+            "comparison-areas",
+            "comparison-bool_descriptors-by_sampler",
+            "comparison-sizes-by_sampler",
+            "comparison-bool_descriptors-by_split",
+            "comparison-sizes-by_split",
+        ]
+        for key in ("sampler", "split"):
+            got = spark.read.option("header", True).csv(
+                str(tmp_path / "stats" / f"comparison-bool_descriptors-by_{key}")
+            )
+            want = compare_by_key(catalogue, extracted, key)
+            assert got.columns == want.columns
+            assert sorted((r["descriptor"], str(r[key])) for r in got.collect()) == sorted(
+                (r["descriptor"], str(r[key])) for r in want.collect()
+            )
+    finally:
+        extracted.unpersist()
+    assert jobs <= 26, f"{jobs} Spark jobs"

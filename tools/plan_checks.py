@@ -20,6 +20,30 @@ def plan_of(df) -> str:
     )
 
 
+def parquet_scans_run(spark, action) -> int:
+    """Call ``action()`` and count the parquet scan nodes in the plans of
+    the SQL executions it submitted, as the app status store records
+    them (each execution's formatted plan lists a node once per id)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        sc.listenerBus().waitUntilEmpty()
+        xs = store.executionsList()
+        return {
+            xs.apply(i).executionId(): xs.apply(i).physicalPlanDescription()
+            for i in range(xs.size())
+        }
+
+    before = set(executions())
+    action()
+    return sum(
+        len(set(re.findall(r"\((\d+)\) Scan parquet", plan)))
+        for eid, plan in executions().items()
+        if eid not in before
+    )
+
+
 def check(name: str, cond: bool, detail: str = "") -> bool:
     print(f"{'PASS' if cond else 'FAIL'}: {name}" + (f" — {detail}" if detail else ""))
     return cond
@@ -106,29 +130,27 @@ def main() -> int:
     ok &= check("q50 partial session agg", "partial_count" in p or "partial" in p.lower())
     ok &= check("q50 no window sort", "Window" not in p)
 
-    # bucketed catalogue: the chunk-rank stage plans ZERO exchanges
+    # bucketed snapshot catalogue: the chunk-rank stage plans ZERO exchanges
+    import shutil
+
     from pacasam_spark.operators.fps import add_deterministic_chunk_ids
-    from pacasam_spark.sources.bucketed import write_bucketed_catalogue
+    from pacasam_spark.sources.snapshots import read_snapshot, write_snapshot
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
-    tbl = write_bucketed_catalogue(
-        synthetic_catalogue(spark, db_size=2000),
-        "plan_check_bucketed",
-        "/tmp/plan_check_bucketed",
-        n_buckets=8,
-    )
+    bt = "/tmp/plan_check_bucketed"
+    shutil.rmtree(bt, ignore_errors=True)
+    write_snapshot(synthetic_catalogue(spark, db_size=2000), bt, bucket_by=("file_id", 8))
     # count hash-partitioning exchanges on the EXECUTED plan: the formatted
     # explain also lists the broadcast exchange and the SinglePartition
     # exchange of the tiny distinct-file offsets window (documented driver
     # barrier) — the claim is that no FULL-DATA shuffle remains
-    chunked = add_deterministic_chunk_ids(tbl, 100)
+    chunked = add_deterministic_chunk_ids(read_snapshot(spark, bt), 100)
     ep = chunked._jdf.queryExecution().executedPlan().toString()
     ok &= check(
         "bucketed chunk-rank zero data shuffles",
         ep.count("Exchange hashpartitioning") == 0 and "Bucketed: true" in ep,
         f"{ep.count('Exchange hashpartitioning')} hash exchanges",
     )
-    spark.sql("DROP TABLE IF EXISTS plan_check_bucketed")
 
     # fused Diversity pipeline: normalize stats + per-file counts ride
     # ONE grouped aggregation (the catalogue profile), so the end-to-end
@@ -160,13 +182,12 @@ def main() -> int:
 
     # manifest-fed Diversity over a snapshot-table catalogue (round-7):
     # normalization stats + per-file counts come from the manifests
-    # (write_snapshot(norm_columns=, count_key=)), so the END-TO-END FPS
-    # plan reads the data exactly ONCE — the carve pass. A second scan =
-    # a stats aggregation crept back in.
-    import shutil
-
+    # (write_snapshot(norm_columns=, count_key=)), so the selection reads
+    # the data exactly ONCE — the carve pass. A second scan = a stats
+    # aggregation crept back in. The scans are counted over the SQL
+    # executions get_selection() ran: its result is a collected Arrow
+    # table, whose DataFrame plan holds no scan at all.
     from pacasam_spark.samplers import DiversitySampler
-    from pacasam_spark.sources.snapshots import read_snapshot, write_snapshot
 
     st = "/tmp/plan_check_snapcat"
     shutil.rmtree(st, ignore_errors=True)
@@ -187,12 +208,12 @@ def main() -> int:
             "manifest_stats": {"dir": st},
         },
     }
-    p = plan_of(DiversitySampler(read_snapshot(spark, st), dcfg).get_patches())
-    n_scans = len(re.findall(r"\(\d+\) Scan parquet", p))
+    sampler = DiversitySampler(read_snapshot(spark, st), dcfg)
+    n_scans = parquet_scans_run(spark, sampler.get_selection)
     ok &= check(
         "manifest-fed diversity: ONE catalogue scan",
-        n_scans <= 1,
-        f"{n_scans} parquet scan nodes",
+        n_scans == 1,
+        f"{n_scans} parquet scan nodes executed",
     )
 
     # large-n random sample: the distributed trim must not TakeOrdered n

@@ -5,7 +5,15 @@ throughput at both and the scaling efficiency.
 Each level runs in its own subprocess (one JVM per parallelism level).
 Results go to stdout as JSON; BENCH.md quotes them verbatim.
 
-Usage: python tools/scaling_evidence.py [db_size] [target]
+Usage: python tools/scaling_evidence.py [db_size] [target] [variant]
+
+``variant`` (default TripleSampler) is a sampler name from
+SAMPLER_REGISTRY over a cached synthetic catalogue, or one of
+DiversityParquet (a parquet catalogue), DiversitySnapshot (a snapshot
+table with manifest statistics), DiversitySnapBucket (the same table
+bucketed by file_id), extract or tile (image extraction and tiling
+over a parquet image table). SCALING_N sets N (default 4) and
+SCALING_TRIALS the trials per level (default 3).
 """
 
 from __future__ import annotations
@@ -181,61 +189,6 @@ h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
 emit(spark, cores, dt, row["n"], h)
 """
 
-# Bucketed variant of the parquet worker (verdict r2 item 8): the
-# catalogue is written ONCE bucketed by file_id (32 buckets); each level
-# adopts it by DDL into its own in-memory catalog. The chunk-rank stage
-# (groupBy(file_id) counts + Window.partitionBy(file_id)) then plans ZERO
-# exchanges — one of the two full-data shuffles is gone, paid once at
-# ingest instead of per sampling run.
-BUCKETED_WORKER = r"""
-import sys, time
-cores, db_size, target, _ = (
-    sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
-import os
-path = os.environ["SCALING_BUCKETED"]
-from pacasam_spark.session import get_spark
-from pacasam_spark.sources.bucketed import register_bucketed_catalogue
-from pacasam_spark.samplers import DiversitySampler
-from pyspark.sql import functions as F
-from pacasam_spark.operators.hashing import det_hash
-
-spark = get_spark(app_name=f"scaling_bk_{cores}", cores=int(cores))
-db = register_bucketed_catalogue(spark, "scaling_cat", path, n_buckets=32)
-cfg = {
-    "target_total_num_patches": target,
-    "frac_validation_set": 0.1,
-    "DiversitySampler": {"max_chunk_size_for_fps": 20000,
-        "normalization": "standardization",
-        "columns": ["nb_sol","nb_bati","nb_vegetation_basse",
-                    "nb_vegetation_moyenne","nb_vegetation_haute",
-                    "nb_pont","nb_eau","nb_sursol_perenne","nb_non_classes"]},
-}
-# warm-up on a DIFFERENT quota (CacheManager donates equal plans), then
-# drop any plan caches
-# two warm-up passes, distinct quotas (see PARQUET_WORKER comment)
-for wq in (7, 13):
-    wcfg = dict(cfg); wcfg["target_total_num_patches"] = max(100, target // wq)
-    DiversitySampler(spark.table("scaling_cat"), wcfg, seed=1).get_patches().count()
-    spark.catalog.clearCache()
-    # release the warm-up's shuffle files NOW: ContextCleaner only
-    # deletes them when the JVM GCs the dependency objects, and two
-    # warm-ups + the measured run in one process can otherwise hold
-    # ~3 jobs x ~24 GB of shuffle on disk simultaneously
-    spark.sparkContext._jvm.System.gc()
-
-t0 = time.perf_counter()
-sel = DiversitySampler(spark.table("scaling_cat"), dict(cfg), seed=42).get_patches()
-row = sel.agg(
-    F.count("*").alias("n"),
-    F.sum(det_hash("patch_id", 99)).alias("hsum"),
-    F.sum(F.crc32(F.concat_ws("|", "patch_id", "split"))).alias("csum"),
-).first()
-dt = time.perf_counter() - t0
-import hashlib
-h = hashlib.md5(f"{row['n']}|{row['hsum']}|{row['csum']}".encode()).hexdigest()
-emit(spark, cores, dt, row["n"], h)
-"""
-
 # Manifest-fed variant (round-7): the catalogue is a SNAPSHOT TABLE whose
 # manifests carry the exact normalization partials + per-file_id counts
 # (write_snapshot(norm_columns=, count_key=)), so the sampler's stats
@@ -322,20 +275,6 @@ write_snapshot(db, path, norm_columns=list(S.NB_POINT_COLS),
                sort_by=(S.FILE_ID, "patch_id"))
 import os
 open(os.path.join(path, "_SUCCESS"), "w").close()  # prepare-once marker
-print("prepared", path)
-"""
-
-PREPARE_BUCKETED = r"""
-import sys
-db_size, path = int(sys.argv[1]), sys.argv[2]
-from pacasam_spark.session import get_spark
-from pacasam_spark.sources.synthetic import synthetic_catalogue
-from pacasam_spark.sources.bucketed import write_bucketed_catalogue
-from pacasam_spark import schemas as S
-spark = get_spark(app_name="scaling_prepare_bucketed", cores=32)
-cols = ["patch_id", "file_id"] + list(S.NB_POINT_COLS)
-db = synthetic_catalogue(spark, db_size=db_size, exact_counts=False).select(*cols)
-write_bucketed_catalogue(db, "scaling_cat_prep", path, n_buckets=32)
 print("prepared", path)
 """
 
@@ -433,7 +372,6 @@ def run(cores: int, db_size: int, target: int, sampler: str) -> dict:
         "extract": EXTRACT_WORKER,
         "tile": TILE_WORKER,
         "DiversityParquet": PARQUET_WORKER,
-        "DiversityBucketed": BUCKETED_WORKER,
         "DiversitySnapshot": SNAPSHOT_WORKER,
         # the combined layout reads through the same snapshot worker —
         # read_snapshot auto-detects the bucketed layout in the manifest
@@ -470,11 +408,6 @@ def main() -> None:
             "SCALING_SNAPSHOT", f"/tmp/scaling_catalogue_{db_size}_snapbucket"
         )
         prepare_parquet(db_size, path, script=PREPARE_SNAPBUCKET)
-    elif sampler == "DiversityBucketed":
-        path = os.environ.setdefault(
-            "SCALING_BUCKETED", f"/tmp/scaling_catalogue_{db_size}_bucketed"
-        )
-        prepare_parquet(db_size, path, script=PREPARE_BUCKETED)
     elif sampler in ("extract", "tile"):
         path = os.environ.setdefault(
             "SCALING_IMAGES", f"/tmp/scaling_images_{db_size}.parquet"

@@ -1,6 +1,7 @@
 import pytest
 
 from pacasam_spark.session import get_spark
+from pacasam_spark.sources.snapshots import read_snapshot, write_snapshot
 from pacasam_spark.sources.synthetic import synthetic_catalogue
 
 # Mirror of the reference e2e config (configs/Synthetic.yml:5-63,
@@ -36,6 +37,27 @@ def spark():
 @pytest.fixture(scope="session")
 def catalogue(spark):
     return synthetic_catalogue(spark, db_size=200).cache()
+
+
+@pytest.fixture(scope="module")
+def bucketed_catalogue(spark, tmp_path_factory):
+    """A 2000-row synthetic catalogue committed twice: bucketed by
+    file_id into 8 buckets (with normalization partials and per-file
+    counts), and plain. Returns (bucketed dir, bucketed read, plain read).
+    Module-scoped: a module may drop the bucketed registration."""
+    root = tmp_path_factory.mktemp("bucketed_catalogue")
+    db = synthetic_catalogue(spark, db_size=2000)
+    d = str(root / "bucketed")
+    write_snapshot(
+        db,
+        d,
+        bucket_by=("file_id", 8),
+        sort_by=("file_id", "patch_id"),
+        norm_columns=["nb_sol"],
+        count_key="file_id",
+    )
+    write_snapshot(db, str(root / "plain"))
+    return d, read_snapshot(spark, d), read_snapshot(spark, str(root / "plain"))
 
 
 @pytest.fixture()

@@ -1,20 +1,12 @@
-"""Bucketed catalogue (verdict r2 item 8): storing the catalogue
-bucketed by file_id removes BOTH full-data exchanges feeding the FPS
-chunk-rank stage (the groupBy(file_id) counts and the
-Window.partitionBy(file_id) rank), with chunk assignment identical to
-the plain-parquet path."""
+"""Bucketed catalogue: a snapshot written with bucket_by=("file_id", n)
+removes BOTH full-data exchanges feeding the FPS chunk-rank stage (the
+groupBy(file_id) counts and the Window.partitionBy(file_id) rank), with
+chunk assignment identical to the plain-parquet path."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from pacasam_spark.operators.fps import CHUNK_ID, add_deterministic_chunk_ids, fps_sample
-from pacasam_spark.sources.bucketed import (
-    register_bucketed_catalogue,
-    write_bucketed_catalogue,
-)
-from pacasam_spark.sources.synthetic import synthetic_catalogue
+from pacasam_spark.operators.fps import CHUNK_ID, add_deterministic_chunk_ids
+from pacasam_spark.sources.snapshots import read_snapshot
 
 
 def _n_exchanges(df) -> int:
@@ -23,21 +15,8 @@ def _n_exchanges(df) -> int:
     )
 
 
-@pytest.fixture(scope="module")
-def bucketed(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("bucketed")
-    db = synthetic_catalogue(spark, db_size=2000)
-    plain_path = str(root / "plain.parquet")
-    db.write.mode("overwrite").parquet(plain_path)
-    tbl = write_bucketed_catalogue(
-        db, "test_bucketed_cat", str(root / "bucketed"), n_buckets=8
-    )
-    yield spark.read.parquet(plain_path), tbl, str(root / "bucketed")
-    spark.sql("DROP TABLE IF EXISTS test_bucketed_cat")
-
-
-def test_bucketed_scan_removes_chunk_rank_shuffles(bucketed):
-    plain, tbl, _ = bucketed
+def test_bucketed_scan_removes_chunk_rank_shuffles(bucketed_catalogue):
+    _, tbl, plain = bucketed_catalogue
     chunked_plain = add_deterministic_chunk_ids(plain, 100)
     chunked_tbl = add_deterministic_chunk_ids(tbl, 100)
     assert _n_exchanges(chunked_plain) >= 2  # counts agg + window rank
@@ -46,48 +25,42 @@ def test_bucketed_scan_removes_chunk_rank_shuffles(bucketed):
     assert "Bucketed: true" in plan
 
 
-def test_bucketed_chunk_ids_identical_to_plain(bucketed):
-    plain, tbl, _ = bucketed
-    a = sorted(
-        (r["patch_id"], r[CHUNK_ID])
-        for r in add_deterministic_chunk_ids(plain, 100)
-        .select("patch_id", CHUNK_ID)
-        .collect()
+def test_bucketed_chunk_ids_identical_to_plain(bucketed_catalogue):
+    _, tbl, plain = bucketed_catalogue
+    a, b = (
+        sorted(
+            (r["patch_id"], r[CHUNK_ID])
+            for r in add_deterministic_chunk_ids(df, 100)
+            .select("patch_id", CHUNK_ID)
+            .collect()
+        )
+        for df in (plain, tbl)
     )
-    b = sorted(
-        (r["patch_id"], r[CHUNK_ID])
-        for r in add_deterministic_chunk_ids(tbl, 100)
-        .select("patch_id", CHUNK_ID)
-        .collect()
-    )
+    assert len(a) == 2000
     assert a == b
 
 
-def test_fps_sample_identical_on_bucketed_input(bucketed):
-    plain, tbl, _ = bucketed
-    cols = ["nb_sol", "nb_bati", "nb_eau"]
-    a = sorted(
-        r["patch_id"]
-        for r in fps_sample(plain, 50, feature_cols=cols, max_chunk_size=200).collect()
-    )
-    b = sorted(
-        r["patch_id"]
-        for r in fps_sample(tbl, 50, feature_cols=cols, max_chunk_size=200).collect()
-    )
-    assert len(a) == 50
-    assert a == b
+def test_register_adopts_existing_bucket_layout(spark, bucketed_catalogue):
+    """A catalog without the version's registration (a fresh session's)
+    re-adopts the committed files by DDL from the manifest alone: no data
+    rewrite, and the read still plans zero exchanges. Runs last in the
+    module: it drops the registration the fixture's read uses."""
+    import os
 
-
-def test_register_adopts_existing_bucket_layout(spark, bucketed):
-    """A fresh catalog (new session/JVM) re-adopts the written directory
-    by DDL — no data rewrite — and still plans zero exchanges."""
-    _, tbl, path = bucketed
-    t2 = register_bucketed_catalogue(
-        spark, "test_bucketed_cat_adopted", path, n_buckets=8
+    d, tbl, _ = bucketed_catalogue
+    # the catalog table the fixture's read resolved to
+    plan = tbl._jdf.queryExecution().analyzed().toString()
+    name = next(t.name for t in spark.catalog.listTables() if t.name in plan)
+    files = sorted(
+        os.path.join(root, f) for root, _, fs in os.walk(d) for f in fs
     )
-    try:
-        assert t2.count() == 2000
-        chunked = add_deterministic_chunk_ids(t2, 100)
-        assert _n_exchanges(chunked) == 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS test_bucketed_cat_adopted")
+    spark.sql(f"DROP TABLE {name}")
+    assert not spark.catalog.tableExists(name)
+    t2 = read_snapshot(spark, d)
+    assert spark.catalog.tableExists(name)
+    assert files == sorted(
+        os.path.join(root, f) for root, _, fs in os.walk(d) for f in fs
+    )
+    assert t2.count() == 2000
+    chunked = add_deterministic_chunk_ids(t2, 100)
+    assert _n_exchanges(chunked) == 0

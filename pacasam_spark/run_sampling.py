@@ -111,6 +111,9 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run(args: argparse.Namespace) -> dict:
     spark = get_spark(app_name=f"run_sampling_{args.sampler_class}")
+    # names the output task and the summary's connector: the snapshot
+    # table when the catalogue comes from one, else the connector
+    source_name = args.connector_class
 
     if args.catalogue_table:
         from pacasam_spark.sources.snapshots import read_snapshot, snapshots
@@ -121,6 +124,7 @@ def run(args: argparse.Namespace) -> dict:
             cfg = json.loads(json.dumps(DEFAULT_CONFIG))
             cfg["target_total_num_patches"] = args.target
         db = read_snapshot(spark, args.catalogue_table)
+        source_name = os.path.basename(os.path.normpath(args.catalogue_table))
         split_name = "any"
         # auto-wire manifest-fed statistics: when the table was written
         # with norm_columns covering a sampler's feature columns (and
@@ -165,7 +169,7 @@ def run(args: argparse.Namespace) -> dict:
     from pacasam_spark.operators.joins import selection_join
 
     extracted = selection_join(db, sampling, "patch_id", selection_rows=n)
-    task_name = f"{args.connector_class}-{args.sampler_class}-{split_name}"
+    task_name = f"{source_name}-{args.sampler_class}-{split_name}"
     sampling_path = f"{args.output}/{task_name}"
     save_sampling(extracted, sampling_path)
     reports = write_comparison_reports(db, extracted, f"{args.output}/stats")
@@ -202,7 +206,7 @@ def run(args: argparse.Namespace) -> dict:
 
     summary = {
         "sampler": args.sampler_class,
-        "connector": args.connector_class,
+        "connector": source_name,
         "n_sampled": n,
         "sampling_path": sampling_path,
         "reports": reports,

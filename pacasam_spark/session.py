@@ -25,8 +25,11 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     cores: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS or 32.
-    shuffle_partitions defaults to the core count — right-sized for local
-    mode; on a multi-executor cluster pass ~2-3x total cores instead.
+    Under spark-submit the launcher's master is kept (``--master``, or
+    spark-submit's own default ``local[*]``) and ``cores`` is ignored.
+    shuffle_partitions defaults to the session's defaultParallelism (the
+    core count in local mode, the executors' total cores on a cluster);
+    on a multi-executor cluster pass ~2-3x total cores instead.
     """
     # Pin BLAS to one thread per Python worker BEFORE the JVM forks:
     # Spark already owns the task-level parallelism, and un-pinned
@@ -39,15 +42,9 @@ def get_spark(
 
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = f"local[{cores}]"
-    n_cores = os.cpu_count() or 32 if cores == "*" else int(cores)
-    if shuffle_partitions is None:
-        shuffle_partitions = n_cores
 
     b = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -109,9 +106,12 @@ def get_spark(
         # defaults, the loop (on-stack replacement) one at 3x. At the
         # defaults C2 spent ~5 of a warm Triple operation's 11-13 JVM
         # CPU-s compiling lukewarm Spark code, which now stays in C1;
-        # loops over millions of rows still cross the thresholds. That
-        # it is new per seed (seeds inlined as literals in generated
-        # classes) is a guess, not checked. BENCH.md (4 vCPU): a cold
+        # loops over millions of rows still cross the thresholds. Much
+        # of that code was generated anew each operation: with the
+        # codegen cache below at Spark's default 100 entries, a warm
+        # Triple operation compiled ~10 classes that are new per seed
+        # (seeds inlined as literals) and 20-45 that the cache had
+        # evicted and recompiled. BENCH.md (4 vCPU): a cold
         # run_sampling CLI run -15 % process CPU, warm bench operations
         # -27 %, the 20M-row local[4] DiversitySampler run level.
         # Spark prepends defaultJavaOptions to extraJavaOptions, so a
@@ -130,10 +130,30 @@ def get_spark(
             "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
             " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=120000",
         )
+        # Whole-stage codegen cache, sized for one run's plans: Spark
+        # keeps 100 generated classes by default, and a cold Triple call
+        # compiles ~90, a cold run_sampling CLI run ~150. At 100 a warm
+        # Triple operation on 10k rows evicted its own plans and compiled
+        # 30-57 classes (160-410 ms of Janino, and each recompiled class
+        # warms up in the JIT again); at 1000 it compiles 10, only the
+        # per-seed ones, and a repeated call none (tests/test_session.py).
+        # BENCH.md (4 vCPU): warm triple_flat operations -13 % process
+        # CPU. A cached class costs a few KB of metaspace. A static setting,
+        # but unlike the JVM options above it takes effect under
+        # spark-submit too: it is read when the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
+    # A driver JVM that spark-submit started (pyspark finds its gateway
+    # in PYSPARK_GATEWAY_PORT) already has the launcher's master, and
+    # local[*] when none was given: keep it.
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(f"local[{cores}]")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     _quiet_tiny_window_warnings(spark)
     _ship_package(spark)

@@ -356,6 +356,10 @@ def test_run_sampling_catalogue_table(spark, tmp_path):
         "--output", str(tmp_path / "o1"), "--target", "100",
     ]))
     assert s["n_sampled"] == 100
+    # the output and the summary are named after the table the run read,
+    # not after the default connector, which never ran
+    assert s["connector"] == "cat_tbl"
+    assert s["sampling_path"] == str(tmp_path / "o1" / "cat_tbl-DiversitySampler-any")
 
     # same selection as the plain synthetic-connector run (the snapshot
     # round-trip and the manifest-fed stats change nothing)

@@ -41,23 +41,37 @@ def test_pyfiles_zip_is_per_session():
             assert "pacasam_spark/session.py" in zf.namelist()
 
 
+SUBMITTED_SAMPLING = """
+import json, sys
+from pyspark.sql import SparkSession
+from pacasam_spark import run_sampling
+run_sampling.main(sys.argv[1:])
+spark = SparkSession.getActiveSession()
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+}))
+"""
+
+
 def test_spark_submit_py_files_sampling(tmp_path):
+    """run_sampling under spark-submit keeps the launcher's master (here
+    one that differs from SPARK_GRAFT_CPUS) and sizes its shuffles from
+    it."""
     spark_submit = os.path.join(
         os.path.dirname(pyspark.__file__), "bin", "spark-submit"
     )
-    script = str(
-        pathlib.Path(__file__).resolve().parents[1]
-        / "pacasam_spark" / "run_sampling.py"
-    )
+    script = tmp_path / "submitted_sampling.py"
+    script.write_text(SUBMITTED_SAMPLING)
     out_dir = str(tmp_path / "out")
     env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
     # cwd OUTSIDE the repo: nothing importable except through --py-files
     proc = subprocess.run(
         [
             spark_submit,
-            "--master", "local[4]",
+            "--master", "local[2]",
             "--py-files", _build_pyfiles_zip(tmp_path),
-            script,
+            str(script),
             "--sampler_class", "TargettedSampler",
             "--db-size", "2000",
             "--target", "100",
@@ -76,7 +90,8 @@ def test_spark_submit_py_files_sampling(tmp_path):
         for line in proc.stdout.splitlines()
         if line.startswith("{")
     ]
-    assert summaries and summaries[-1]["n_sampled"] == 100
+    assert summaries[-2]["n_sampled"] == 100
+    assert summaries[-1] == {"master": "local[2]", "shuffle_partitions": "2"}
 
     path = f"{out_dir}/SyntheticConnector-TargettedSampler-train/*.parquet"
     n, n_ids = duckdb.sql(

@@ -7,9 +7,12 @@ Run: python tools/plan_checks.py
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -57,6 +60,9 @@ def main() -> int:
 
     spark = get_spark(cores=8)
     sf = "/root/testdata/sf0.01"
+    # this run's fixture tables, removed at exit
+    tmp = tempfile.mkdtemp(prefix="plan_checks_")
+    atexit.register(shutil.rmtree, tmp, True)
     ok = True
 
     # q02: filters + projection must reach the parquet scan
@@ -131,14 +137,11 @@ def main() -> int:
     ok &= check("q50 no window sort", "Window" not in p)
 
     # bucketed snapshot catalogue: the chunk-rank stage plans ZERO exchanges
-    import shutil
-
     from pacasam_spark.operators.fps import add_deterministic_chunk_ids
     from pacasam_spark.sources.snapshots import read_snapshot, write_snapshot
     from pacasam_spark.sources.synthetic import synthetic_catalogue
 
-    bt = "/tmp/plan_check_bucketed"
-    shutil.rmtree(bt, ignore_errors=True)
+    bt = os.path.join(tmp, "bucketed")
     write_snapshot(synthetic_catalogue(spark, db_size=2000), bt, bucket_by=("file_id", 8))
     # count hash-partitioning exchanges on the EXECUTED plan: the formatted
     # explain also lists the broadcast exchange and the SinglePartition
@@ -160,10 +163,10 @@ def main() -> int:
     from pacasam_spark.operators.fps import fps_sample
     from pacasam_spark.operators.normalize import CatalogueProfile, standardize
 
-    fp = "/tmp/plan_check_fused.parquet"
+    fp = os.path.join(tmp, "fused.parquet")
     synthetic_catalogue(spark, db_size=5000).select(
         "patch_id", "file_id", "nb_sol", "nb_bati"
-    ).write.mode("overwrite").parquet(fp)
+    ).write.parquet(fp)
     cat = spark.read.parquet(fp)
     profile = CatalogueProfile.of(cat, ["nb_sol", "nb_bati"])
     normed = standardize(cat, ["nb_sol", "nb_bati"], stats=profile)
@@ -189,8 +192,7 @@ def main() -> int:
     # table, whose DataFrame plan holds no scan at all.
     from pacasam_spark.samplers import DiversitySampler
 
-    st = "/tmp/plan_check_snapcat"
-    shutil.rmtree(st, ignore_errors=True)
+    st = os.path.join(tmp, "snapcat")
     write_snapshot(
         synthetic_catalogue(spark, db_size=5000).select(
             "patch_id", "file_id", "nb_sol", "nb_bati"

@@ -2,10 +2,12 @@
 the image+caption table) with a resume manifest.
 
 Reference semantics re-expressed:
-- E1 per-file group-extract (extractors/laz.py:80-128) -> one
-  ``mapInPandas`` pass; grouping by cell happens via the upstream
-  partitioner, the decode is batched Arrow, no per-row Python calls into
-  Spark.
+- E1 per-file group-extract (extractors/laz.py:80-128) -> the kernel
+  :func:`extract_batch`, a plain function of one Arrow batch of
+  (selection ⋈ catalogue) rows; ``filesink.write_patch_files`` runs it
+  and writes the files in ONE Python pass, as the reference crops and
+  writes in the same pool worker. :func:`extract_patches` is the
+  DataFrame view of the same kernel.
 - E2/E3 crop to a window + re-encode (extractors/bd_ortho_vintage.py:
   69-117; squares-only assert :76) -> numpy slicing inside the batch.
 - K5 resume guard (extractors/laz.py:103-104, README.md:160) -> an
@@ -31,33 +33,27 @@ EXTRACT_SCHEMA = (
 )
 
 
-def extract_patches(
+def extraction_join(
     images: DataFrame,
     sampling: DataFrame,
-    crop: tuple[int, int, int, int] | None = None,
-    resize: tuple[int, int] | None = None,
-    out_fmt: str | None = None,
     sampling_rows: int | None = None,
     broadcast_threshold: int | None = None,
 ) -> DataFrame:
-    """J1 extraction join + E2/E3 decode-crop-resize-encode.
+    """J1: the selection joined to its catalogue rows — the input of an
+    extraction kernel.
 
     images: the catalogue (image_id, bytes, w, h, fmt, caption, phash).
     sampling: (image_id, split) selection — broadcast only when provably
     small (size-gated; a shuffle-hash join above the threshold, since
     run_extraction accepts arbitrary sampling parquet).
     sampling_rows: pass the count if already known to skip the size probe.
-    crop: (x0, y0, cw, ch) window or None for full frames.
-    resize: (out_w, out_h) bilinear/block-mean resample after the crop,
-        or None to keep dimensions (training-pipeline thumbnail path).
-    out_fmt: target codec (default: keep source format).
     """
     from pacasam_spark.operators.joins import (
         BROADCAST_ROW_THRESHOLD,
         selection_join,
     )
 
-    joined = selection_join(
+    return selection_join(
         images,
         sampling.select("image_id", "split"),
         "image_id",
@@ -69,36 +65,69 @@ def extract_patches(
         ),
     )
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pacasam_spark.imaging import decode, encode, resize_rgb
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = decode(bytes(r.bytes), r.fmt)
-                if crop is not None:
-                    x0, y0, cw, ch = crop
-                    arr = arr[y0 : y0 + ch, x0 : x0 + cw]
-                if resize is not None:
-                    arr = resize_rgb(arr, resize[0], resize[1])
-                fmt = out_fmt or r.fmt
-                rows.append(
-                    (
-                        r.image_id,
-                        r.split,
-                        encode(arr, fmt),
-                        arr.shape[1],
-                        arr.shape[0],
-                        fmt,
-                        r.caption,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "split", "bytes", "w", "h", "fmt", "caption"],
+def extract_batch(
+    pdf: pd.DataFrame,
+    crop: tuple[int, int, int, int] | None = None,
+    resize: tuple[int, int] | None = None,
+    out_fmt: str | None = None,
+) -> pd.DataFrame:
+    """E2/E3 kernel over one Arrow batch of joined rows: decode, crop,
+    resize, encode. Returns the ``EXTRACT_SCHEMA`` columns.
+
+    crop: (x0, y0, cw, ch) window or None for full frames.
+    resize: (out_w, out_h) bilinear/block-mean resample after the crop,
+        or None to keep dimensions (training-pipeline thumbnail path).
+    out_fmt: target codec (default: keep source format).
+    """
+    from pacasam_spark.imaging import decode, encode, resize_rgb
+
+    rows = []
+    for r in pdf.itertuples(index=False):
+        arr = decode(bytes(r.bytes), r.fmt)
+        if crop is not None:
+            x0, y0, cw, ch = crop
+            arr = arr[y0 : y0 + ch, x0 : x0 + cw]
+        if resize is not None:
+            arr = resize_rgb(arr, resize[0], resize[1])
+        fmt = out_fmt or r.fmt
+        rows.append(
+            (
+                r.image_id,
+                r.split,
+                encode(arr, fmt),
+                arr.shape[1],
+                arr.shape[0],
+                fmt,
+                r.caption,
             )
+        )
+    return pd.DataFrame(
+        rows, columns=["image_id", "split", "bytes", "w", "h", "fmt", "caption"]
+    )
 
-    return joined.mapInPandas(work, schema=EXTRACT_SCHEMA)
+
+def extract_patches(
+    images: DataFrame,
+    sampling: DataFrame,
+    crop: tuple[int, int, int, int] | None = None,
+    resize: tuple[int, int] | None = None,
+    out_fmt: str | None = None,
+    sampling_rows: int | None = None,
+    broadcast_threshold: int | None = None,
+) -> DataFrame:
+    """The extracted patches as a DataFrame: :func:`extraction_join`
+    then :func:`extract_batch` over each batch. A dataset is written by
+    ``filesink.write_patch_files``, which runs the same kernel in its
+    own pass."""
+
+    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield extract_batch(pdf, crop, resize, out_fmt)
+
+    return extraction_join(
+        images, sampling, sampling_rows, broadcast_threshold
+    ).mapInPandas(work, schema=EXTRACT_SCHEMA)
 
 
 def compute_phash(images: DataFrame, out_col: str = "phash") -> DataFrame:

@@ -12,6 +12,9 @@ Scale design:
   join on 16-bit bands (4 sub-bands => Hamming distance <= 3 guaranteed
   recall by pigeonhole), capped per bucket, then exact-filtered on the
   true Hamming distance.
+- The bucket cap of every candidate self-join (:func:`bounded_buckets`)
+  is a window count over the bucket key: one shuffle of the banded rows,
+  which the self-join on the same key reuses.
 
 Everything is md5-based, so the DuckDB oracle reproduces signatures
 byte-for-byte (md5 hex is identical across engines).
@@ -36,6 +39,30 @@ def exact_dedup(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def bounded_buckets(
+    banded: DataFrame, keys: list[str], max_bucket_size: int
+) -> DataFrame:
+    """Degenerate-bucket guard of every candidate self-join here: keep
+    the rows of the ``keys`` buckets holding at most ``max_bucket_size``
+    rows. The size is a window count, so the rows are shuffled once on
+    the bucket key and the self-join on the same key reuses that
+    exchange (a grouped count joined back would be planned once per
+    join side)."""
+    size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        banded.withColumn("__bucket_rows", size)
+        .filter(F.col("__bucket_rows") <= max_bucket_size)
+        .drop("__bucket_rows")
+    )
+
+
+def dropped_buckets(
+    banded: DataFrame, keys: list[str], max_bucket_size: int
+) -> DataFrame:
+    """The (``keys``..., count) buckets :func:`bounded_buckets` drops."""
+    return banded.groupBy(*keys).count().filter(F.col("count") > max_bucket_size)
 
 
 def shingle_table(
@@ -99,12 +126,7 @@ def lsh_near_dup_pairs(
     table of guarded buckets — callers can tell 'no pairs' apart from
     'pairs pruned by the guard' (empty when nothing was cut)."""
     sigs = minhash_signatures(df, text_col, id_col, n, bands)
-    bucket_sizes = sigs.groupBy("band", "sig").count()
-    bounded = sigs.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("band", "sig"),
-        on=["band", "sig"],
-        how="left_semi",
-    )
+    bounded = bounded_buckets(sigs, ["band", "sig"], max_bucket_size)
     a = bounded.select(F.col(id_col).alias("id_a"), "band", "sig")
     b = bounded.select(F.col(id_col).alias("id_b"), "band", "sig")
     pairs = (
@@ -115,8 +137,7 @@ def lsh_near_dup_pairs(
         .filter(F.col("n_shared_bands") >= min_shared_bands)
     )
     if return_dropped:
-        dropped = bucket_sizes.filter(F.col("count") > max_bucket_size)
-        return pairs, dropped
+        return pairs, dropped_buckets(sigs, ["band", "sig"], max_bucket_size)
     return pairs
 
 
@@ -208,14 +229,7 @@ def hamming_near_dup_pairs(
         # shift, but the shift varies per band row
         F.expr(f"shiftrightunsigned({hash_col}, band * {band_bits}) & {mask}"),
     )
-    bucket_sizes = banded.groupBy("band", "band_val").count()
-    bounded = banded.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select(
-            "band", "band_val"
-        ),
-        on=["band", "band_val"],
-        how="left_semi",
-    )
+    bounded = bounded_buckets(banded, ["band", "band_val"], max_bucket_size)
     a = bounded.select(
         F.col(id_col).alias("id_a"), F.col(hash_col).alias("hash_a"), "band", "band_val"
     )
@@ -234,8 +248,7 @@ def hamming_near_dup_pairs(
         .select("id_a", "id_b", "hamming")
     )
     if return_dropped:
-        dropped = bucket_sizes.filter(F.col("count") > max_bucket_size)
-        return pairs, dropped
+        return pairs, dropped_buckets(banded, ["band", "band_val"], max_bucket_size)
     return pairs
 
 
@@ -331,14 +344,7 @@ def simhash_band_pairs(
         _simhash64_expr().alias("simhash"),
         F.posexplode(F.array(*band_vals)).alias("band", "band_val"),
     )
-    bucket_sizes = banded.groupBy("band", "band_val").count()
-    bounded = banded.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select(
-            "band", "band_val"
-        ),
-        on=["band", "band_val"],
-        how="left_semi",
-    )
+    bounded = bounded_buckets(banded, ["band", "band_val"], max_bucket_size)
     a = bounded.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "band", "band_val"
     )
@@ -357,6 +363,5 @@ def simhash_band_pairs(
         .select("id_a", "id_b", "hamming")
     )
     if return_dropped:
-        dropped = bucket_sizes.filter(F.col("count") > max_bucket_size)
-        return pairs, dropped
+        return pairs, dropped_buckets(banded, ["band", "band_val"], max_bucket_size)
     return pairs

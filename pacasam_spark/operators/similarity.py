@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pacasam_spark.operators.dedup import bounded_buckets, dropped_buckets
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Exact left-fold double dot product (matches DuckDB list_reduce)."""
@@ -473,12 +475,7 @@ def lsh_cosine_pairs_above(
             62, max(1, math.ceil(math.log2(max(2.0, n / target_bucket_size))))
         )
     tb = lsh_table_buckets(emb, n_planes, n_tables, dim, [id_col, vec_col], vec_col)
-    bucket_sizes = tb.groupBy("tbl", "bucket").count()
-    bounded = tb.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("tbl", "bucket"),
-        on=["tbl", "bucket"],
-        how="left_semi",
-    )
+    bounded = bounded_buckets(tb, ["tbl", "bucket"], max_bucket_size)
     a = bounded.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "tbl", "bucket"
     )
@@ -498,8 +495,7 @@ def lsh_cosine_pairs_above(
         .select("id_a", "id_b", "cos")
     )
     if return_dropped:
-        dropped = bucket_sizes.filter(F.col("count") > max_bucket_size)
-        return pairs, dropped
+        return pairs, dropped_buckets(tb, ["tbl", "bucket"], max_bucket_size)
     return pairs
 
 

@@ -1,8 +1,9 @@
 """Dataset extraction entrypoint (reference: src/pacasam/run_extraction.py).
 
-sampling parquet -> resume anti-join -> decode/crop/re-encode -> one
-{SPLIT}-{id}.{ext} file per patch under dataset_root/split/, plus a
-manifest of the extracted ids (checkpoint) under dataset_root/_manifest.
+sampling parquet -> resume anti-join -> decode/crop/re-encode and write,
+in one Python pass -> one {SPLIT}-{id}.{fmt} file per patch under
+dataset_root/split/ (fmt: the patch's codec), plus a manifest of the
+extracted ids (checkpoint) under dataset_root/_manifest.
 
   python -m pacasam_spark.run_extraction \
       --sampling_path /tmp/s/sampling --images_path /tmp/images.parquet \
@@ -21,6 +22,7 @@ Spark job.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import uuid
@@ -49,7 +51,11 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run(args: argparse.Namespace) -> dict:
     from pacasam_spark.extract.filesink import write_patch_files
-    from pacasam_spark.extract.images import extract_patches, resume_filter
+    from pacasam_spark.extract.images import (
+        extract_batch,
+        extraction_join,
+        resume_filter,
+    )
     from pacasam_spark.samplers.base import _replace_into
 
     manifest_dir = os.path.join(args.dataset_root_path, "_manifest")
@@ -59,16 +65,16 @@ def run(args: argparse.Namespace) -> dict:
         spark = get_spark(app_name=f"run_extraction_{args.extractor_class}")
         crop = tuple(int(v) for v in args.crop.split(",")) if args.crop else None
         resize = tuple(int(v) for v in args.resize.split(",")) if args.resize else None
-        extracted = extract_patches(
+        joined = extraction_join(
             spark.read.parquet(args.images_path), spark.createDataFrame(todo),
-            crop=crop, resize=resize, out_fmt=args.out_fmt,
             sampling_rows=todo.num_rows,
+        )
+        kernel = functools.partial(
+            extract_batch, crop=crop, resize=resize, out_fmt=args.out_fmt
         )
         # ONE action: the writer is side-effecting, so a second action
         # would run it again and find every file already on disk
-        files = write_patch_files(
-            extracted, args.dataset_root_path, ext=args.out_fmt or "bin"
-        ).toArrow()
+        files = write_patch_files(joined, args.dataset_root_path, kernel).toArrow()
         n_written = sum(files["written"].to_pylist())
         n_files = files.num_rows
         if n_files:

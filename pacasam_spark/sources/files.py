@@ -7,12 +7,15 @@ Reference parity:
 - load_sampling + check_sampling_format (extractors/extractor.py:45-73):
   schema-validated sampling input for extraction, read on the driver.
 - save_sampling (samplers/sampler.py:68-85): the reference writes to a
-  tmp file then copies for atomicity on Samba; Spark's file-commit
-  protocol (write to _temporary, atomic job commit) provides the same
-  guarantee natively.
+  tmp file then copies for atomicity on Samba; here the driver collects
+  the target-capped rows once and renames one pyarrow-written parquet
+  file into place, as run_extraction commits its manifest.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -76,9 +79,17 @@ def load_sampling(path: str) -> pa.Table:
     })
 
 
-def save_sampling(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """K1: atomic sampling write — Spark's job-commit protocol stages
-    output under _temporary and renames on success, the distributed
-    equivalent of the reference's tmp-file-then-copy
-    (samplers/sampler.py:68-85)."""
-    df.write.mode("overwrite").format(fmt).save(path)
+def save_sampling(df: DataFrame, path: str) -> None:
+    """K1: write a sampling as ONE parquet file from the driver. A
+    sampling is capped by the sample target, so its rows are collected
+    once (``toArrow``) and written with pyarrow into the cleared
+    directory, through the same tmp-file-then-rename as the reference
+    (samplers/sampler.py:68-85): a reader sees the whole file or no
+    file, and no Spark job or commit protocol runs for the write."""
+    from pacasam_spark.samplers.base import _replace_into
+
+    table = df.toArrow()
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    _replace_into(path, "part-00000.parquet", lambda f: pq.write_table(table, f))

@@ -2,11 +2,13 @@
 reference contract: #outputs == #sampling rows, resume skips existing —
 tests/tests_pacasam/test_run_extraction.py:33-34, extractors/laz.py:103)."""
 
+import functools
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from pacasam_spark.extract.filesink import read_binary_files, write_patch_files
-from pacasam_spark.extract.images import extract_patches
+from pacasam_spark.extract.images import extract_batch, extraction_join
 from pacasam_spark.imaging import decode_png, encode_png, synth_pixels
 from pacasam_spark.sources.images import synthetic_images
 
@@ -34,10 +36,11 @@ def test_patch_file_sink_and_resume(spark, tmp_path):
         .limit(10)
         .withColumn("split", F.when(F.crc32("image_id") % 2 == 0, "train").otherwise("val"))
     )
-    extracted = extract_patches(images, sampling, out_fmt="png")
+    joined = extraction_join(images, sampling)
+    kernel = functools.partial(extract_batch, out_fmt="png")
     root = str(tmp_path / "dataset")
 
-    m1 = write_patch_files(extracted, root).collect()
+    m1 = write_patch_files(joined, root, kernel).collect()
     assert len(m1) == 10 and all(r["written"] for r in m1)
     # one file per sampling row, under split dirs, reference naming
     import glob
@@ -47,6 +50,6 @@ def test_patch_file_sink_and_resume(spark, tmp_path):
     assert all("/train/TRAIN-" in f or "/val/VAL-" in f for f in files)
 
     # resume: second pass writes nothing
-    m2 = write_patch_files(extracted, root).collect()
+    m2 = write_patch_files(joined, root, kernel).collect()
     assert len(m2) == 10 and not any(r["written"] for r in m2)
     assert len(glob.glob(f"{root}/*/*.png")) == 10

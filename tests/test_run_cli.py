@@ -199,17 +199,63 @@ def test_run_extraction_crop_resume_and_incremental(spark, tmp_path):
     ]
 
 
+def test_run_extraction_keep_format_names_files_by_codec(spark, tmp_path):
+    """Without --out_fmt each patch keeps its source codec, and its file
+    is named after it: a mixed png/q6 catalogue extracts to .png and .q6
+    files that decode to the source size; a resume writes nothing."""
+    from pacasam_spark.imaging import decode
+    from pacasam_spark.sources.images import synthetic_images
+
+    images_path = str(tmp_path / "images.parquet")
+    synthetic_images(spark, n=24, size=16, lossy_every=3).write.parquet(images_path)
+    sampling_path = str(tmp_path / "sampling")
+    catalogue = spark.read.parquet(images_path)
+    catalogue.select("image_id").withColumn("split", F.lit("train")).write.parquet(
+        sampling_path
+    )
+    fmts = {r["image_id"]: r["fmt"] for r in catalogue.select("image_id", "fmt").collect()}
+    assert set(fmts.values()) == {"png", "q6"}
+
+    root = str(tmp_path / "dataset")
+    r1 = _extract(sampling_path, images_path, root)
+    assert r1["written"] == 24
+    files = _patch_files(root)
+    assert sorted(os.path.basename(p) for p in files) == sorted(
+        f"TRAIN-{i}.{f}" for i, f in fmts.items()
+    )
+    for path in files:
+        ext = path.rsplit(".", 1)[1]
+        assert decode(open(path, "rb").read(), ext).shape[:2] == (16, 16)
+
+    r2 = _extract(sampling_path, images_path, root)
+    assert r2["written"] == 0 and _patch_files(root) == files
+
+
 def test_run_extraction_job_budget(spark, tmp_path):
     """On the extract benchmark's shape (250 of 500 64-px images), a
     fresh extraction submits at most 4 Spark jobs (it was 9 while the
     resume check and the manifest ran through Spark) and a resume with
-    nothing left submits none. Counted in the app status store."""
+    nothing left submits none. Counted in the app status store. The
+    extraction's executed plan holds exactly one Python node: the kernel
+    and the file writes share one worker per task."""
+    import re
+
     from perfbench.workloads import CROP, RESIZE
     from pacasam_spark.sources.images import synthetic_images
 
+    sc = spark.sparkContext._jsc.sc()
+
     def job_ids() -> set[int]:
-        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        jobs = sc.statusStore().jobsList(None)
         return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    def executions() -> dict[int, str]:
+        sc.listenerBus().waitUntilEmpty()
+        xs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        return {
+            xs.apply(i).executionId(): xs.apply(i).physicalPlanDescription()
+            for i in range(xs.size())
+        }
 
     images_path = str(tmp_path / "images.parquet")
     synthetic_images(spark, n=500, size=64).write.parquet(images_path)
@@ -223,6 +269,7 @@ def test_run_extraction_job_budget(spark, tmp_path):
     ]
     root = str(tmp_path / "dataset")
     jobs = []
+    before = set(executions())
     for _ in range(2):
         last = max(job_ids(), default=-1)
         summary = _extract(sampling_path, images_path, root, *argv)
@@ -230,6 +277,17 @@ def test_run_extraction_job_budget(spark, tmp_path):
     assert summary["written"] == 0 and len(_patch_files(root)) == 250
     assert jobs[0] <= 4, f"fresh run: {jobs[0]} Spark jobs"
     assert jobs[1] == 0, f"resume run: {jobs[1]} Spark jobs"
+    # the tree of the plan that ran: an adaptive plan's final plan
+    ran = [
+        plan.split("== Initial Plan ==")[0].split("\n\n")[0]
+        for eid, plan in executions().items()
+        if eid not in before
+    ]
+    python_nodes = [
+        n for tree in ran
+        for n in re.findall(r"\b(\w*(?:Python|InPandas|InArrow)\w*)\s+\(\d+\)", tree)
+    ]
+    assert python_nodes == ["MapInPandas"], python_nodes
 
 
 def test_wms_fetch_bounded_retry(spark):

@@ -1,6 +1,8 @@
 """File/JDBC connector tests (SURVEY §2.1 S1/S3/S4, §2.2 K1) and the
 ingest parity pipeline shape."""
 
+import os
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -39,6 +41,34 @@ def test_sampling_format_check(spark, tmp_path):
     save_sampling(spark.createDataFrame([(1, "train")], "patch_id long, split string"), path)
     # a catalogue sampling is keyed on the string image_id files are named by
     assert load_sampling(path).to_pydict() == {"image_id": ["1"], "split": ["train"]}
+
+
+def test_save_sampling_one_driver_file(spark, catalogue, tmp_path):
+    """save_sampling writes ONE parquet file from the driver. It replaces
+    a Spark-written sampling, leaving no old part file and no
+    ``_temporary`` of an interrupted Spark commit; Spark and
+    load_sampling read it back equal, with the DataFrame's column
+    types."""
+    path = str(tmp_path / "sampling")
+    catalogue.limit(120).withColumn("split", F.lit("train")).write.parquet(path)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    old = sorted(os.listdir(path))
+    assert any(f.startswith("part-") for f in old) and "_temporary" in old
+
+    sel = catalogue.filter(F.col("patch_id") % 7 == 0).withColumn(
+        "split", F.when(F.col("patch_id") % 2 == 0, "val").otherwise("train")
+    )
+    save_sampling(sel, path)
+    assert os.listdir(path) == ["part-00000.parquet"]
+
+    back = spark.read.parquet(path)
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in sel.schema
+    ]
+    assert back.orderBy("patch_id").collect() == sel.orderBy("patch_id").collect()
+    want = sorted((str(r["patch_id"]), r["split"]) for r in sel.collect())
+    got = load_sampling(path).to_pydict()
+    assert sorted(zip(got["image_id"], got["split"])) == want
 
 
 def test_jdbc_options_partitioned_scan():

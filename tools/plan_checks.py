@@ -23,10 +23,12 @@ def plan_of(df) -> str:
     )
 
 
-def parquet_scans_run(spark, action) -> int:
-    """Call ``action()`` and count the parquet scan nodes in the plans of
-    the SQL executions it submitted, as the app status store records
-    them (each execution's formatted plan lists a node once per id)."""
+def plan_nodes_run(spark, action, node: str) -> int:
+    """Call ``action()`` and count the plan nodes whose name matches the
+    regex ``node`` in the plans of the SQL executions it submitted, as
+    the app status store records them. Only the tree of the plan that
+    ran is read: an adaptive plan also lists its initial plan, whose
+    nodes above a query stage carry new ids."""
     sc = spark.sparkContext._jsc.sc()
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -41,10 +43,21 @@ def parquet_scans_run(spark, action) -> int:
     before = set(executions())
     action()
     return sum(
-        len(set(re.findall(r"\((\d+)\) Scan parquet", plan)))
+        len(set(re.findall(rf"\b(?:{node})\s+\((\d+)\)", ran_tree(plan))))
         for eid, plan in executions().items()
         if eid not in before
     )
+
+
+def ran_tree(plan: str) -> str:
+    """The node tree of the plan that ran, from a formatted or a
+    ``toString`` plan: an adaptive plan's final plan, without the
+    initial plan and the per-node details after it."""
+    return plan.split("== Initial Plan ==")[0].split("\n\n")[0]
+
+
+# physical nodes that hand rows to a Python worker
+PYTHON_NODES = r"\w*(?:Python|InPandas|InArrow)\w*"
 
 
 def check(name: str, cond: bool, detail: str = "") -> bool:
@@ -126,9 +139,36 @@ def main() -> int:
 
     # q48: phash near-dup candidates meet in a (band, band_val) equi-join
     # — no cartesian, everything codegen (no Python UDF)
-    p = plan_of(E.q48_phash_near_dup(spark, sf))
+    q48 = E.q48_phash_near_dup(spark, sf)
+    p = plan_of(q48)
     ok &= check("q48 no cartesian", "Cartesian" not in p and "NestedLoop" not in p)
     ok &= check("q48 no Python UDF", "Python" not in p)
+    # the bucket guard is a window count over (band, band_val): the banded
+    # rows are shuffled once and the self-join's other side reuses that
+    # exchange — no grouped band count joined back per side (LeftSemi)
+    q48.collect()
+    ep = q48._jdf.queryExecution().executedPlan().toString()
+    n_band = len(re.findall(r"^[\s:|+-]*Exchange hashpartitioning\(band#", ran_tree(ep), re.M))
+    ok &= check(
+        "q48 banded rows shuffled once",
+        n_band == 1 and "LeftSemi" not in ep,
+        f"{n_band} band exchanges, LeftSemi {'present' if 'LeftSemi' in ep else 'absent'}",
+    )
+
+    # extraction: decode/crop/encode and the file writes run in ONE
+    # Python node (a second one is a second worker per task)
+    from pacasam_spark.run_extraction import build_parser, run
+    from pacasam_spark.sources.images import synthetic_images
+
+    ip, sp = os.path.join(tmp, "images.parquet"), os.path.join(tmp, "sampling")
+    synthetic_images(spark, n=64, size=32).write.parquet(ip)
+    spark.read.parquet(ip).select("image_id").limit(32).withColumn(
+        "split", F.lit("train")
+    ).write.parquet(sp)
+    argv = ["-s", sp, "--images_path", ip, "-d", os.path.join(tmp, "dataset"),
+            "--crop", "4,4,16,16"]
+    n_py = plan_nodes_run(spark, lambda: run(build_parser().parse_args(argv)), PYTHON_NODES)
+    ok &= check("extraction one Python node", n_py == 1, f"{n_py} Python nodes executed")
 
     # q50: native session_window is a hash aggregation with map-side
     # partial merging — NOT a per-user sort window
@@ -211,7 +251,7 @@ def main() -> int:
         },
     }
     sampler = DiversitySampler(read_snapshot(spark, st), dcfg)
-    n_scans = parquet_scans_run(spark, sampler.get_selection)
+    n_scans = plan_nodes_run(spark, sampler.get_selection, "Scan parquet")
     ok &= check(
         "manifest-fed diversity: ONE catalogue scan",
         n_scans == 1,

@@ -12,8 +12,10 @@ SAMPLER_REGISTRY over a cached synthetic catalogue, or one of
 DiversityParquet (a parquet catalogue), DiversitySnapshot (a snapshot
 table with manifest statistics), DiversitySnapBucket (the same table
 bucketed by file_id), extract or tile (image extraction and tiling
-over a parquet image table). SCALING_N sets N (default 4) and
-SCALING_TRIALS the trials per level (default 3).
+over a parquet image table), or dedup (phash near-dup pairs and
+components over db_size synthetic 64-bit hashes, 10 % planted near-dups;
+target is unused). SCALING_N sets N (default 4) and SCALING_TRIALS the
+trials per level (default 3).
 """
 
 from __future__ import annotations
@@ -105,6 +107,63 @@ row = idx.agg(
 dt = time.perf_counter() - t0
 import hashlib
 h = hashlib.md5(f"{row['n']}|{row['hx']}|{row['cs']}".encode()).hexdigest()
+emit(spark, cores, dt, row["n"], h)
+"""
+
+# Near-dup dedup twin (image payload, no pixels): N synthetic 64-bit
+# fingerprints where every 10th is a 2-bit near-dup of the one before,
+# then hamming_near_dup_pairs (8 byte bands, Hamming <= 7) and
+# dedup_by_components. The band buckets hold about N/256 rows each, so
+# the candidate self-join is the data-bound part. The checksum covers
+# the survivors and the pair set.
+DEDUP_WORKER = r"""
+import sys, time
+cores, n_hashes, _, _ = (
+    sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
+from pacasam_spark.session import get_spark
+from pacasam_spark.operators.components import dedup_by_components
+from pacasam_spark.operators.dedup import hamming_near_dup_pairs
+from pacasam_spark.operators.hashing import det_hash
+from pyspark.sql import functions as F
+
+spark = get_spark(app_name=f"scaling_d_{cores}", cores=int(cores))
+
+def hashes(n, seed):
+    planted = F.pmod("id", F.lit(10)) == 9
+    src = F.when(planted, F.col("id") - 1).otherwise(F.col("id"))
+    h = det_hash(src, seed) * F.lit(1 << 31) + det_hash(src, seed + 1)  # < 2^62
+    return spark.range(n).select(
+        F.col("id").alias("image_id"),
+        F.when(planted, h.bitwiseXOR(F.lit((1 << 40) | 1))).otherwise(h).alias("phash"),
+    )
+
+def dedup(hashed):
+    pairs = hamming_near_dup_pairs(hashed, "phash", "image_id", max_distance=7)
+    return pairs, dedup_by_components(hashed, pairs, id_col="image_id")
+
+# warm-up on other hashes, a quarter of the size
+warm = hashes(max(1000, n_hashes // 4), 5).persist()
+dedup(warm)[1].count()
+warm.unpersist(blocking=True)
+spark.sparkContext._jvm.System.gc()
+
+hashed = hashes(n_hashes, 1).persist()
+hashed.count()
+t0 = time.perf_counter()
+pairs, survivors = dedup(hashed)
+row = survivors.agg(
+    F.count("*").alias("n"),
+    F.sum(det_hash("image_id", 99)).alias("hsum"),
+).first()
+dt = time.perf_counter() - t0
+prow = pairs.agg(
+    F.count("*").alias("n"),
+    F.bit_xor(F.xxhash64("id_a", "id_b", "hamming")).alias("psum"),
+).first()
+import hashlib
+h = hashlib.md5(
+    f"{row['n']}|{row['hsum']}|{prow['n']}|{prow['psum']}".encode()
+).hexdigest()
 emit(spark, cores, dt, row["n"], h)
 """
 
@@ -370,6 +429,7 @@ def prepare_parquet(db_size: int, path: str, script: str = PREPARE_PARQUET) -> N
 def run(cores: int, db_size: int, target: int, sampler: str) -> dict:
     worker = {
         "extract": EXTRACT_WORKER,
+        "dedup": DEDUP_WORKER,
         "tile": TILE_WORKER,
         "DiversityParquet": PARQUET_WORKER,
         "DiversitySnapshot": SNAPSHOT_WORKER,

@@ -42,7 +42,9 @@ def extraction_join(
     """J1: the selection joined to its catalogue rows — the input of an
     extraction kernel.
 
-    images: the catalogue (image_id, bytes, w, h, fmt, caption, phash).
+    images: the catalogue (image_id, bytes, w, h, fmt, caption, phash),
+    projected to the columns a kernel reads: the joined rows are
+    (image_id, bytes, fmt, caption, split).
     sampling: (image_id, split) selection — broadcast only when provably
     small (size-gated; a shuffle-hash join above the threshold, since
     run_extraction accepts arbitrary sampling parquet).
@@ -54,7 +56,7 @@ def extraction_join(
     )
 
     return selection_join(
-        images,
+        images.select("image_id", "bytes", "fmt", "caption"),
         sampling.select("image_id", "split"),
         "image_id",
         selection_rows=sampling_rows,

@@ -11,6 +11,8 @@ configs/Synthetic.yml). This CLI reproduces that workflow Spark-first:
 catalogue (connector) -> sampler -> extraction join back to the
 catalogue -> atomic parquet sampling + comparison reports + a copy of
 the config next to the outputs (provenance, reference run_sampling.py:44).
+After the sampler, Spark runs only the join with its one collect and
+the reports' one catalogue aggregation; the driver does the rest.
 The legacy flag-driven mode (--db-size/--target, no --config) is kept for
 quick synthetic runs.
 """
@@ -82,19 +84,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "(no marker or another run's fingerprint: the "
                         "stage is rebuilt); every commit appends a row "
                         "to <dir>/_lineage. Plain files, no Spark jobs")
-    p.add_argument("--snapshot-dir", default=None,
-                   help="versioned snapshot table: each run commits the "
-                        "selection as the next snapshot (atomic manifest, "
-                        "per-partition lineage, time-travel reads via "
-                        "sources.snapshots.read_snapshot)")
-    p.add_argument("--zorder", default=None, metavar="XCOL,YCOL",
-                   help="cluster the snapshot on a Morton curve of these "
-                        "two coordinate columns (e.g. geom_xmin,geom_ymin) "
-                        "and record per-file min/max stats in the manifest, "
-                        "so later box queries prune whole files via "
-                        "read_snapshot(bounds=...)")
-    p.add_argument("--zorder-files", type=int, default=32,
-                   help="target file count for the z-ordered snapshot")
     p.add_argument("--catalogue-table", default=None,
                    help="read the catalogue from a versioned snapshot "
                         "table instead of a connector; when its manifests "
@@ -171,38 +160,13 @@ def run(args: argparse.Namespace) -> dict:
     extracted = selection_join(db, sampling, "patch_id", selection_rows=n)
     task_name = f"{source_name}-{args.sampler_class}-{split_name}"
     sampling_path = f"{args.output}/{task_name}"
-    save_sampling(extracted, sampling_path)
-    reports = write_comparison_reports(db, extracted, f"{args.output}/stats")
+    # the reports' sampling side reads the rows save_sampling collected
+    collected = save_sampling(extracted, sampling_path)
+    reports = write_comparison_reports(db, collected, f"{args.output}/stats")
 
     if args.config:  # provenance copy (reference run_sampling.py:44-46)
         os.makedirs(args.output, exist_ok=True)
         shutil.copy(args.config, os.path.join(args.output, os.path.basename(args.config)))
-
-    snapshot_version = None
-    if args.snapshot_dir:
-        from pacasam_spark.sources.snapshots import write_snapshot
-
-        to_commit, stats_columns = extracted, None
-        if args.zorder:
-            from pacasam_spark.spatial.zorder import cluster_by_zorder
-
-            xcol, ycol = (c.strip() for c in args.zorder.split(","))
-            to_commit = cluster_by_zorder(
-                extracted, xcol, ycol, n_files=args.zorder_files
-            )
-            stats_columns = [xcol, ycol]
-        snapshot_version = write_snapshot(
-            to_commit,
-            args.snapshot_dir,
-            metadata={
-                "task": task_name,
-                "sampler": args.sampler_class,
-                "seed": args.seed,
-                "config_fingerprint": sampler._run_fingerprint(),
-                "layout": f"zorder({args.zorder})" if args.zorder else "unspecified",
-            },
-            stats_columns=stats_columns,
-        )
 
     summary = {
         "sampler": args.sampler_class,
@@ -210,7 +174,6 @@ def run(args: argparse.Namespace) -> dict:
         "n_sampled": n,
         "sampling_path": sampling_path,
         "reports": reports,
-        "snapshot_version": snapshot_version,
     }
     print(json.dumps(summary))
     return summary

@@ -314,3 +314,12 @@ def _replace_into(directory: str, name: str, write) -> None:
     with os.fdopen(fd, "wb") as f:
         write(f)
     os.replace(tmp, os.path.join(directory, name))
+
+
+def _write_fresh(directory: str, name: str, write) -> None:
+    """Replace ``directory`` with one holding only ``name``, written
+    through :func:`_replace_into`."""
+    if os.path.exists(directory):
+        shutil.rmtree(directory)
+    os.makedirs(directory)
+    _replace_into(directory, name, write)

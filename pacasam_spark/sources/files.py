@@ -14,9 +14,6 @@ Reference parity:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -79,17 +76,16 @@ def load_sampling(path: str) -> pa.Table:
     })
 
 
-def save_sampling(df: DataFrame, path: str) -> None:
+def save_sampling(df: DataFrame, path: str) -> pa.Table:
     """K1: write a sampling as ONE parquet file from the driver. A
     sampling is capped by the sample target, so its rows are collected
     once (``toArrow``) and written with pyarrow into the cleared
     directory, through the same tmp-file-then-rename as the reference
     (samplers/sampler.py:68-85): a reader sees the whole file or no
-    file, and no Spark job or commit protocol runs for the write."""
-    from pacasam_spark.samplers.base import _replace_into
+    file, and no Spark job or commit protocol runs for the write.
+    Returns the collected table, which the comparison reports read."""
+    from pacasam_spark.samplers.base import _write_fresh
 
     table = df.toArrow()
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.makedirs(path)
-    _replace_into(path, "part-00000.parquet", lambda f: pq.write_table(table, f))
+    _write_fresh(path, "part-00000.parquet", lambda f: pq.write_table(table, f))
+    return table

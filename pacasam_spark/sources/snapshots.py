@@ -402,7 +402,8 @@ def write_snapshot(
         # bucket(n, key) partition transform); an unpruned read serves a
         # zero-exchange bucketed scan.
         "layout": layout,
-        # wall-clock commit instant (epoch seconds) — AS OF time travel
+        # wall-clock commit instant (epoch seconds); it keys the
+        # bucketed-scan registration of this version
         "committed_at": time.time(),
     }
     # atomic commit: manifest appears fully written or not at all
@@ -509,12 +510,9 @@ def read_snapshot(
     table_dir: str,
     version: int | None = None,
     bounds: dict[str, tuple] | None = None,
-    as_of: float | None = None,
 ) -> DataFrame:
-    """Time-travel read: the latest committed snapshot, an explicit
-    committed version, or — via ``as_of`` (epoch seconds, Iceberg's
-    ``FOR TIMESTAMP AS OF``) — the newest version committed at or
-    before that instant. Uncommitted (crashed) writes are invisible.
+    """Time-travel read: the latest committed snapshot or an explicit
+    committed version. Uncommitted (crashed) writes are invisible.
 
     ``bounds`` ({col: (lo, hi)} inclusive) prunes files via the
     manifest's per-file min/max stats (:func:`prune_files`) — the
@@ -525,19 +523,6 @@ def read_snapshot(
     committed = _committed_versions(table_dir)
     if not committed:
         raise FileNotFoundError(f"no committed snapshots under {table_dir}")
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass version OR as_of, not both")
-        eligible = [
-            m["version"]
-            for m in snapshots(table_dir)
-            if m.get("committed_at", 0.0) <= as_of
-        ]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no snapshot of {table_dir} committed at or before {as_of}"
-            )
-        version = eligible[-1]
     if version is None:
         version = committed[-1]
     if version not in committed:

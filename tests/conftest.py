@@ -35,6 +35,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def job_ids(spark):
+    """A function returning the ids of every Spark job in the app status
+    store, read once the listener bus has delivered all pending events
+    (so the jobs of the last action, and of any worker thread, are
+    there). Jobs an action submitted: ``{j for j in job_ids() if j > last}``
+    with ``last = max(job_ids(), default=-1)`` taken before it."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def ids() -> set[int]:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    return ids
+
+
+@pytest.fixture(scope="session")
 def catalogue(spark):
     return synthetic_catalogue(spark, db_size=200).cache()
 

@@ -262,6 +262,18 @@ def test_extraction_join_broadcast_size_gate(spark, images):
     assert "ShuffledHashJoin" in plan_big or "SortMergeJoin" in plan_big
 
 
+def test_extraction_join_projects_kernel_columns(spark, images):
+    """The extraction join hands a kernel only the columns it reads: the
+    catalogue's w, h and phash never reach the Python worker."""
+    from pacasam_spark.extract.images import extraction_join
+
+    sampling = images.select("image_id").withColumn("split", F.lit("train"))
+    joined = extraction_join(images, sampling)
+    assert sorted(joined.columns) == sorted(
+        ["image_id", "split", "bytes", "fmt", "caption"]
+    )
+
+
 def _ham(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 

@@ -123,7 +123,7 @@ def test_manifest_fed_outliers_bit_identical(spark, tmp_path):
     assert base == fed
 
 
-def test_manifest_fed_triple_runs_no_profile_scan(spark, tmp_path):
+def test_manifest_fed_triple_runs_no_profile_scan(spark, tmp_path, job_ids):
     """Over a snapshot catalogue with manifest statistics, TripleSampler's
     one profile comes from the manifests: on the benchmark's 10k-row
     catalogue and config the call submits at most 12 Spark jobs (15 when
@@ -139,10 +139,6 @@ def test_manifest_fed_triple_runs_no_profile_scan(spark, tmp_path):
                    bucket_by=("file_id", 8), sort_by=("file_id", "patch_id"))
     cfg = sampling_config(SIZES["full"])
     flat = sorted(tuple(r) for r in TripleSampler(db, cfg).get_patches().collect())
-
-    def job_ids():
-        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-        return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
     cfg["DiversitySampler"]["manifest_stats"] = {"dir": tbl}
     last = max(job_ids(), default=-1)

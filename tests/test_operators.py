@@ -1026,7 +1026,7 @@ def test_connected_components_hands_off_after_spark_rounds(spark, monkeypatch):
     assert got == {(n, 0) for n in range(1000)} | {(n, min(blob)) for n in blob}
 
 
-def test_dedup_by_components_job_budget(spark):
+def test_dedup_by_components_job_budget(spark, job_ids):
     """dedup_by_components over the extract benchmark's near-dup graph
     (500 synthetic images, phash, Hamming <= 7) submits at most 5 Spark
     jobs: the pair table is far below the driver bound, so it is one
@@ -1038,10 +1038,6 @@ def test_dedup_by_components_job_budget(spark):
     from pacasam_spark.operators.components import dedup_by_components
     from pacasam_spark.operators.dedup import hamming_near_dup_pairs
     from pacasam_spark.sources.images import synthetic_images
-
-    def job_ids() -> set[int]:
-        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-        return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
     hashed = compute_phash(synthetic_images(spark, n=500, size=64, lossy_every=4))
     hashed = hashed.persist()

@@ -73,6 +73,32 @@ def sampling_and_images(spark, tmp_path):
     return sampling_path, images_path
 
 
+def test_run_sampling_post_sampler_job_budget(spark, tmp_path, job_ids, monkeypatch):
+    """After the sampler's count, a run_sampling TripleSampler run (500 of
+    10,000) submits at most 4 Spark jobs: the broadcast join and the one
+    collect of the selection (save_sampling), and the reports' one
+    catalogue aggregation. It was 36 while the reports ran as Spark
+    plans on both sides."""
+    from pacasam_spark.operators import joins
+    from pacasam_spark.run_sampling import build_parser, run
+
+    # the join is the first step after sampling.count(): the jobs from
+    # there on are the run's post-sampler work
+    marks = []
+    real_join = joins.selection_join
+
+    def marked_join(*args, **kwargs):
+        marks.append(max(job_ids(), default=-1))
+        return real_join(*args, **kwargs)
+
+    monkeypatch.setattr(joins, "selection_join", marked_join)
+    summary = run(build_parser().parse_args(["--output", str(tmp_path / "out")]))
+    jobs = len({j for j in job_ids() if j > marks[0]})
+    assert summary["n_sampled"] == 500
+    assert len(summary["reports"]) == 6
+    assert jobs <= 4, f"{jobs} Spark jobs"
+
+
 def test_run_extraction_cli_and_resume(spark, tmp_path, sampling_and_images):
     """{SPLIT}-{id}.{ext} files under split dirs; a second run extracts
     nothing (manifest resume) and overwrites no file (existence skip)."""
@@ -231,7 +257,7 @@ def test_run_extraction_keep_format_names_files_by_codec(spark, tmp_path):
     assert r2["written"] == 0 and _patch_files(root) == files
 
 
-def test_run_extraction_job_budget(spark, tmp_path):
+def test_run_extraction_job_budget(spark, tmp_path, job_ids):
     """On the extract benchmark's shape (250 of 500 64-px images), a
     fresh extraction submits at most 4 Spark jobs (it was 9 while the
     resume check and the manifest ran through Spark) and a resume with
@@ -244,10 +270,6 @@ def test_run_extraction_job_budget(spark, tmp_path):
     from pacasam_spark.sources.images import synthetic_images
 
     sc = spark.sparkContext._jsc.sc()
-
-    def job_ids() -> set[int]:
-        jobs = sc.statusStore().jobsList(None)
-        return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
     def executions() -> dict[int, str]:
         sc.listenerBus().waitUntilEmpty()
@@ -361,37 +383,6 @@ DiversitySampler:
     assert sorted(map(tuple, sel_b.collect())) == sorted(map(tuple, sel_p.collect()))
 
 
-def test_run_sampling_snapshot_dir(spark, tmp_path):
-    """--snapshot-dir commits each run as the next version of a
-    snapshot table: atomic manifest, lineage, time-travel reads."""
-    from pacasam_spark.run_sampling import build_parser, run
-    from pacasam_spark.sources.snapshots import read_snapshot, snapshots
-
-    out = str(tmp_path / "out")
-    snap = str(tmp_path / "snaps")
-    argv = [
-        "--output", out, "--snapshot-dir", snap,
-        "--db-size", "400", "--target", "60",
-    ]
-    s1 = run(build_parser().parse_args(argv + ["--seed", "1"]))
-    s2 = run(build_parser().parse_args(argv + ["--seed", "2"]))
-    assert (s1["snapshot_version"], s2["snapshot_version"]) == (1, 2)
-
-    hist = snapshots(snap)
-    assert [m["version"] for m in hist] == [1, 2]
-    assert all(m["row_count"] == 60 for m in hist)
-    assert hist[0]["metadata"]["seed"] == 1
-    assert hist[0]["metadata"]["config_fingerprint"] != \
-        hist[1]["metadata"]["config_fingerprint"]  # seed is in the hash
-    v1 = read_snapshot(spark, snap, version=1)
-    latest = read_snapshot(spark, snap)
-    assert v1.count() == 60 and latest.count() == 60
-    # different seeds really selected different patches
-    ids1 = {r["patch_id"] for r in v1.select("patch_id").collect()}
-    ids2 = {r["patch_id"] for r in latest.select("patch_id").collect()}
-    assert ids1 != ids2
-
-
 def test_run_sampling_catalogue_table(spark, tmp_path):
     """--catalogue-table reads the catalogue from a snapshot table and,
     when the manifests carry normalization partials + file_id counts,
@@ -429,40 +420,6 @@ def test_run_sampling_catalogue_table(spark, tmp_path):
     a = spark.read.parquet(s["sampling_path"]).select("patch_id", "split")
     b = spark.read.parquet(s2["sampling_path"]).select("patch_id", "split")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_run_sampling_zorder_snapshot(spark, tmp_path):
-    """--zorder clusters the committed snapshot on the Morton curve of
-    the geometry columns and records per-file min/max bounds; a box
-    query via read_snapshot(bounds=...) then returns exactly the rows a
-    full scan + filter does (pruning is file-granular and exact)."""
-    from pyspark.sql import functions as F
-
-    from pacasam_spark.run_sampling import build_parser, run
-    from pacasam_spark.sources.snapshots import read_snapshot, snapshots
-
-    snap = str(tmp_path / "zsnaps")
-    s = run(build_parser().parse_args([
-        "--output", str(tmp_path / "out"), "--snapshot-dir", snap,
-        "--db-size", "2000", "--target", "400",
-        "--zorder", "geom_xmin,geom_ymin", "--zorder-files", "8",
-    ]))
-    assert s["snapshot_version"] == 1
-    m = snapshots(snap)[-1]
-    assert m["metadata"]["layout"] == "zorder(geom_xmin,geom_ymin)"
-    assert set(m["file_stats"]) == set(m["files"])
-    assert all(set(st) == {"geom_xmin", "geom_ymin"} for st in m["file_stats"].values())
-
-    full = read_snapshot(spark, snap)
-    lo, hi = full.agg(F.min("geom_xmin"), F.max("geom_xmin")).first()
-    bounds = {"geom_xmin": (lo, lo + (hi - lo) * 0.2)}
-    pred = F.col("geom_xmin").between(*bounds["geom_xmin"])
-    want = sorted(r["patch_id"] for r in full.filter(pred).collect())
-    got = sorted(
-        r["patch_id"]
-        for r in read_snapshot(spark, snap, bounds=bounds).filter(pred).collect()
-    )
-    assert got == want and len(got) > 0
 
 
 def test_commit_catalogue_cli(spark, tmp_path, capsys):

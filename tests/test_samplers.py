@@ -463,12 +463,7 @@ def test_samplers_leave_no_cached_dataset(spark, config):
         db.unpersist()
 
 
-def _job_ids(spark) -> set[int]:
-    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-    return {jobs.apply(i).jobId() for i in range(jobs.size())}
-
-
-def test_triple_sampler_job_budget(spark):
+def test_triple_sampler_job_budget(spark, job_ids):
     """TripleSampler.get_patches() + collect() on the benchmark's 10k-row
     catalogue and config submits at most 21 Spark jobs (it was 52 while
     split assignment, merges and quota counts ran as Spark jobs, and 24
@@ -481,32 +476,29 @@ def test_triple_sampler_job_budget(spark):
     db = synthetic_catalogue(spark, db_size=10_000, seed=5, exact_counts=False).cache()
     db.count()
     try:
-        last = max(_job_ids(spark), default=-1)
+        last = max(job_ids(), default=-1)
         rows = TripleSampler(db, sampling_config(SIZES["full"])).get_patches().collect()
-        jobs = len({j for j in _job_ids(spark) if j > last})
+        jobs = len({j for j in job_ids() if j > last})
     finally:
         db.unpersist()
     assert len(rows) == SIZES["full"].target
     assert jobs <= 21, f"{jobs} Spark jobs"
 
 
-def test_outliers_selection_chunks_from_its_profile(spark, catalogue, config):
+def test_outliers_selection_chunks_from_its_profile(spark, catalogue, config, job_ids):
     """OutliersSampler.get_selection() hands the scorer the catalogue
     profile its standardization built, so chunk assignment aggregates no
     per-file maximum of its own: on the 200-row test catalogue the call
     submits at most 9 Spark jobs (11 while the scorer took a bare counts
     table). Counted in the app status store."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    last = max(_job_ids(spark), default=-1)
+    last = max(job_ids(), default=-1)
     sel = OutliersSampler(catalogue, config).get_selection()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = len({j for j in _job_ids(spark) if j > last})
+    jobs = len({j for j in job_ids() if j > last})
     assert sel.num_rows == config["target_total_num_patches"]
     assert jobs <= 9, f"{jobs} Spark jobs"
 
 
-def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
+def test_triple_sampler_checkpoint_job_budget(spark, tmp_path, job_ids):
     """A checkpoint costs no Spark job: on the benchmark's 10k-row
     catalogue and config, a checkpointed TripleSampler call on a fresh
     dir submits no more jobs than the same call without one (at most
@@ -521,9 +513,9 @@ def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     cfg = sampling_config(SIZES["full"])
 
     def run(cfg):
-        last = max(_job_ids(spark), default=-1)
+        last = max(job_ids(), default=-1)
         rows = sorted(tuple(r) for r in TripleSampler(db, cfg).get_patches().collect())
-        return rows, len({j for j in _job_ids(spark) if j > last})
+        return rows, len({j for j in job_ids() if j > last})
 
     try:
         plain, plain_jobs = run(cfg)
@@ -537,7 +529,7 @@ def test_triple_sampler_checkpoint_job_budget(spark, tmp_path):
     assert resume_jobs <= 8, f"{resume_jobs} Spark jobs"
 
 
-def test_diversity_zero_budget_submits_no_job(spark, config):
+def test_diversity_zero_budget_submits_no_job(spark, config, job_ids):
     """A diversity budget of 0 (Triple's when the targetted leg fills the
     target) is an empty draw: no profile pass and no FPS carve, so no
     Spark job (it took 10) and nothing persisted; the empty table has
@@ -548,9 +540,9 @@ def test_diversity_zero_budget_submits_no_job(spark, config):
     db.count()
     before = _persisted(spark)
     try:
-        last = max(_job_ids(spark), default=-1)
+        last = max(job_ids(), default=-1)
         empty = DiversitySampler(db, config).get_selection(num_to_sample=0)
-        assert not {j for j in _job_ids(spark) if j > last}
+        assert not {j for j in job_ids() if j > last}
         assert _persisted(spark) == before
 
         drawn = DiversitySampler(db, config).get_selection(num_to_sample=5)

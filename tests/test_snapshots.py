@@ -163,24 +163,6 @@ def test_chain_versions_are_refused_not_misread(spark, tmp_path):
     assert [m["commit_type"] for m in snapshots(d)] == ["overwrite", "append"]
 
 
-def test_as_of_timestamp_time_travel(spark, tmp_path):
-    """read_snapshot(as_of=t) picks the newest version committed at or
-    before t (Iceberg FOR TIMESTAMP AS OF); before-first raises,
-    version+as_of together is an error."""
-    d = str(tmp_path / "ts")
-    write_snapshot(spark.range(10).select(F.col("id").alias("patch_id")), d)
-    write_snapshot(spark.range(20).select(F.col("id").alias("patch_id")), d)
-    hist = snapshots(d)
-    t1, t2 = (m["committed_at"] for m in hist)
-    assert t1 <= t2
-    assert read_snapshot(spark, d, as_of=t1).count() == 10
-    assert read_snapshot(spark, d, as_of=t2 + 1.0).count() == 20
-    with pytest.raises(FileNotFoundError, match="at or before"):
-        read_snapshot(spark, d, as_of=t1 - 60.0)
-    with pytest.raises(ValueError, match="not both"):
-        read_snapshot(spark, d, version=1, as_of=t2)
-
-
 # --- bucketed snapshot layout (round 7: combined layout — zero-exchange
 # scan AND manifest-fed stats from one table) -----------------------------
 

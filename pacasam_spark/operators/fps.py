@@ -28,6 +28,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -342,9 +343,14 @@ def fps_sample(
     # arithmetically (chunk lengths are known: consecutive slices of the
     # total order), so the trim is a broadcast-joined FILTER — fully
     # distributed, identical result.
-    spark = df.sparkSession
-    limits = spark.createDataFrame(
-        [(i, k) for i, _q, k in chunk_keep_counts(total, num_to_sample, max_chunk_size)],
+    # an Arrow table plans a LocalRelation; a list of tuples would plan a
+    # scan of a Python RDD, one more Python worker task per execution
+    keep_counts = chunk_keep_counts(total, num_to_sample, max_chunk_size)
+    limits = df.sparkSession.createDataFrame(
+        pa.table({
+            CHUNK_ID: [i for i, _q, _k in keep_counts],
+            "__keep": [k for _i, _q, k in keep_counts],
+        }),
         f"{CHUNK_ID} long, __keep int",
     )
     return (

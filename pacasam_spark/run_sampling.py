@@ -132,7 +132,7 @@ def run(args: argparse.Namespace) -> dict:
         cfg = load_sampling_config(args.config)
         connector_kwargs = dict(cfg.get("connector_kwargs") or {})
         connector = CONNECTORS_REGISTRY[args.connector_class]
-        db = connector(spark, seed=args.seed, **connector_kwargs).cache()
+        db = connector(spark, seed=args.seed, **connector_kwargs)
         split_name = connector_kwargs.get("split", "any")
     else:
         from pacasam_spark.operators.filters import filter_split
@@ -142,41 +142,55 @@ def run(args: argparse.Namespace) -> dict:
         db = filter_split(
             synthetic_catalogue(spark, db_size=args.db_size, exact_counts=False),
             args.split,
-        ).cache()
+        )
         split_name = args.split
+    # a connector or synthetic catalogue is cached for the sampler's legs
+    # and the reports, and released with the sampler output when run ends
+    own_cache = not args.catalogue_table
+    if own_cache:
+        db.cache()
 
     if args.checkpoint_dir:
         cfg["checkpoint_dir"] = args.checkpoint_dir
-    sampler = SAMPLER_REGISTRY[args.sampler_class](db, cfg, seed=args.seed)
-    sampling = sampler.get_patches().persist()
-    n = sampling.count()
+    sampling = None
+    try:
+        sampler = SAMPLER_REGISTRY[args.sampler_class](db, cfg, seed=args.seed)
+        sampling = sampler.get_patches().persist()
+        n = sampling.count()
 
-    # extraction join back to the full catalogue (J1;
-    # reference: connectors/connector.py:48-51, run_sampling.py:58) —
-    # broadcast size-gated: a sampler selection is small by construction,
-    # but the gate keeps the plan safe for arbitrary targets
-    from pacasam_spark.operators.joins import selection_join
+        # extraction join back to the full catalogue (J1;
+        # reference: connectors/connector.py:48-51, run_sampling.py:58) —
+        # broadcast size-gated: a sampler selection is small by construction,
+        # but the gate keeps the plan safe for arbitrary targets
+        from pacasam_spark.operators.joins import selection_join
 
-    extracted = selection_join(db, sampling, "patch_id", selection_rows=n)
-    task_name = f"{source_name}-{args.sampler_class}-{split_name}"
-    sampling_path = f"{args.output}/{task_name}"
-    # the reports' sampling side reads the rows save_sampling collected
-    collected = save_sampling(extracted, sampling_path)
-    reports = write_comparison_reports(db, collected, f"{args.output}/stats")
+        extracted = selection_join(db, sampling, "patch_id", selection_rows=n)
+        task_name = f"{source_name}-{args.sampler_class}-{split_name}"
+        sampling_path = f"{args.output}/{task_name}"
+        # the reports' sampling side reads the rows save_sampling collected
+        collected = save_sampling(extracted, sampling_path)
+        reports = write_comparison_reports(db, collected, f"{args.output}/stats")
 
-    if args.config:  # provenance copy (reference run_sampling.py:44-46)
-        os.makedirs(args.output, exist_ok=True)
-        shutil.copy(args.config, os.path.join(args.output, os.path.basename(args.config)))
+        if args.config:  # provenance copy (reference run_sampling.py:44-46)
+            os.makedirs(args.output, exist_ok=True)
+            shutil.copy(
+                args.config, os.path.join(args.output, os.path.basename(args.config))
+            )
 
-    summary = {
-        "sampler": args.sampler_class,
-        "connector": source_name,
-        "n_sampled": n,
-        "sampling_path": sampling_path,
-        "reports": reports,
-    }
-    print(json.dumps(summary))
-    return summary
+        summary = {
+            "sampler": args.sampler_class,
+            "connector": source_name,
+            "n_sampled": n,
+            "sampling_path": sampling_path,
+            "reports": reports,
+        }
+        print(json.dumps(summary))
+        return summary
+    finally:
+        if sampling is not None:
+            sampling.unpersist()
+        if own_cache:
+            db.unpersist()
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -62,6 +62,7 @@ import shutil
 import tempfile
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -652,14 +653,20 @@ def snapshot_fps_inputs(
                     stats[f"{part}_{c}"] = val if cur is None else cur + val
         for k, n in kc["by_file"][f]:
             key_totals[k] = key_totals.get(k, 0) + n
+    keys = sorted(key_totals)
     key_type = next(
         fld["type"]
         for fld in m["schema"]["fields"]
         if fld["name"] == key
     )
     return CatalogueProfile(
+        # from Arrow: a LocalRelation, which runs no Python worker task
         per_file=spark.createDataFrame(
-            sorted(key_totals.items()), schema=f"{key} {key_type}, count long"
+            pa.table({
+                key: keys,
+                "count": [key_totals[k] for k in keys],
+            }),
+            schema=f"{key} {key_type}, count long",
         ),
         total_rows=sum(key_totals.values()),
         max_rows_per_file=max(key_totals.values(), default=0),

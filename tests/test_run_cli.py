@@ -99,6 +99,22 @@ def test_run_sampling_post_sampler_job_budget(spark, tmp_path, job_ids, monkeypa
     assert jobs <= 4, f"{jobs} Spark jobs"
 
 
+def test_run_sampling_releases_what_it_cached(spark, tmp_path):
+    """run unpersists the sampler output and the catalogue it cached, so
+    repeated runs in one session hold no more cached data than before
+    (two runs with different seeds used to leave one more cached RDD)."""
+    from pacasam_spark.run_sampling import build_parser, run
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    for seed in (1, 2):
+        run(build_parser().parse_args([
+            "--output", str(tmp_path / f"seed{seed}"), "--seed", str(seed),
+            "--db-size", "2000", "--target", "100",
+        ]))
+        assert persistent().size() == before, seed
+
+
 def test_run_extraction_cli_and_resume(spark, tmp_path, sampling_and_images):
     """{SPLIT}-{id}.{ext} files under split dirs; a second run extracts
     nothing (manifest resume) and overwrites no file (existence skip)."""

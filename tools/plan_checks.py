@@ -23,12 +23,18 @@ def plan_of(df) -> str:
     )
 
 
-def plan_nodes_run(spark, action, node: str) -> int:
-    """Call ``action()`` and count the plan nodes whose name matches the
-    regex ``node`` in the plans of the SQL executions it submitted, as
-    the app status store records them. Only the tree of the plan that
-    ran is read: an adaptive plan also lists its initial plan, whose
-    nodes above a query stage carry new ids."""
+def count_nodes(trees: list[str], node: str) -> int:
+    """The plan nodes whose name matches the regex ``node`` in ``trees``."""
+    return sum(
+        len(set(re.findall(rf"\b(?:{node})\s+\((\d+)\)", tree))) for tree in trees
+    )
+
+
+def plans_run(spark, action) -> list[str]:
+    """Call ``action()`` and return the plans of the SQL executions it
+    submitted, as the app status store records them. Only the tree of
+    the plan that ran is kept: an adaptive plan also lists its initial
+    plan, whose nodes above a query stage carry new ids."""
     sc = spark.sparkContext._jsc.sc()
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -42,11 +48,7 @@ def plan_nodes_run(spark, action, node: str) -> int:
 
     before = set(executions())
     action()
-    return sum(
-        len(set(re.findall(rf"\b(?:{node})\s+\((\d+)\)", ran_tree(plan))))
-        for eid, plan in executions().items()
-        if eid not in before
-    )
+    return [ran_tree(plan) for eid, plan in executions().items() if eid not in before]
 
 
 def ran_tree(plan: str) -> str:
@@ -58,6 +60,9 @@ def ran_tree(plan: str) -> str:
 
 # physical nodes that hand rows to a Python worker
 PYTHON_NODES = r"\w*(?:Python|InPandas|InArrow)\w*"
+# the scan of an RDD, such as the Python RDD that createDataFrame builds
+# from a list: each execution runs a Python worker task to read it
+RDD_SCANS = r"Scan \w*RDD"
 
 
 def check(name: str, cond: bool, detail: str = "") -> bool:
@@ -167,7 +172,8 @@ def main() -> int:
     ).write.parquet(sp)
     argv = ["-s", sp, "--images_path", ip, "-d", os.path.join(tmp, "dataset"),
             "--crop", "4,4,16,16"]
-    n_py = plan_nodes_run(spark, lambda: run(build_parser().parse_args(argv)), PYTHON_NODES)
+    trees = plans_run(spark, lambda: run(build_parser().parse_args(argv)))
+    n_py = count_nodes(trees, PYTHON_NODES)
     ok &= check("extraction one Python node", n_py == 1, f"{n_py} Python nodes executed")
 
     # q50: native session_window is a hash aggregation with map-side
@@ -251,11 +257,20 @@ def main() -> int:
         },
     }
     sampler = DiversitySampler(read_snapshot(spark, st), dcfg)
-    n_scans = plan_nodes_run(spark, sampler.get_selection, "Scan parquet")
+    trees = plans_run(spark, sampler.get_selection)
+    n_scans = count_nodes(trees, "Scan parquet")
     ok &= check(
         "manifest-fed diversity: ONE catalogue scan",
         n_scans == 1,
         f"{n_scans} parquet scan nodes executed",
+    )
+    # the driver-built tables (per-file counts, FPS keep counts) are
+    # Arrow LocalRelations: the selection runs no Python task to read them
+    n_rdd = count_nodes(trees, RDD_SCANS)
+    ok &= check(
+        "diversity: driver tables scan no Python RDD",
+        n_rdd == 0,
+        f"{n_rdd} RDD scan nodes executed",
     )
 
     # large-n random sample: the distributed trim must not TakeOrdered n
